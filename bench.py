@@ -1,17 +1,22 @@
-"""Headline benchmark: run representative queries at $SPARK_GRAFT_SF_DIR
-(default /root/testdata/sf0.1) on local[$SPARK_GRAFT_CPUS] and print ONE
-JSON line the driver records as BENCH_r{N}.json.
+"""Per-query plan-drift sweep over the headline registry queries at
+$SPARK_GRAFT_SF_DIR (default /root/testdata/sf0.1).
 
-Each query is forced end-to-end with the "noop" sink (computes every
-output column; no driver-side collect), timed individually after a
-shared warmup that touches the input files once so OS page-cache skew
-doesn't dominate the first query's number.
+``python bench.py`` forces each headline query end-to-end, one at a time,
+with the "noop" sink (computes every output column; no driver-side
+collect) and prints ONE JSON line: per-query seconds and the normalized
+executed-plan fingerprints. ``python bench.py --fingerprints`` builds the
+same plans without executing them and prints only the fingerprint map.
+
+This is a regression sweep, not a performance claim: performance is
+measured by ``perfbench/run.py`` (see ``BENCHMARK.json``).
 """
 
 from __future__ import annotations
 
+import hashlib
 import json
 import os
+import re
 import sys
 import time
 
@@ -19,7 +24,6 @@ sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 
 from providenciasbigdata_spark.io import load_table  # noqa: E402
 from providenciasbigdata_spark.queries import all_queries  # noqa: E402
-from providenciasbigdata_spark import staging  # noqa: E402
 from providenciasbigdata_spark.session import get_spark  # noqa: E402
 
 # Representative slice of SURVEY.md §2: reference-parity (a7/a10),
@@ -220,21 +224,15 @@ HEADLINE = [
 ]
 
 
-import hashlib
-import re
-
 # Bumped whenever the normalization rules below change: fingerprints
-# from different rule versions are incomparable, and the bench records
-# a baseline reset instead of flagging every query as plan drift.
+# from different rule versions are incomparable.
 _FP_NORM_VERSION = 2
 
-# Round 12 (verdict-r11 item 2): per-query EXECUTED-PLAN fingerprints.
-# A raw bench ratio that moves while the plan fingerprint is unchanged
-# is host drift by construction — machine-checkable, no judge
-# adjudication needed (r11 burned one proving a 1.36x window was the
-# container). Normalization strips everything that varies run-to-run
-# without a structural plan change: expression ids (#123), plan ids,
-# file paths/locations, and size statistics.
+# Per-query plan fingerprints: a timing that moves while the plan
+# fingerprint is unchanged is host drift, not a plan change.
+# Normalization strips everything that varies run-to-run without a
+# structural plan change: expression ids (#123), plan ids, file
+# paths/locations, and size statistics.
 _FP_RES = [
     (re.compile(r"#\d+"), "#"),
     (re.compile(r"plan_id=\d+"), "plan_id="),
@@ -244,10 +242,9 @@ _FP_RES = [
     (re.compile(r"cachedrdd_\d+"), "cachedrdd_"),
     # HOF lambda variable counters increment per-SESSION, not per-plan.
     # Scope the strip to the short lambda-parameter bases this codebase
-    # actually uses (1-3 lowercase letters: x/y/acc/idx/...) — ADVICE
-    # r12: the old \b[a-zA-Z]+_\d+ stripped the suffix off EVERY
-    # identifier, so two plans differing only in a real alias like
-    # sum_1 vs sum_2 hashed identical (false-negative drift check).
+    # actually uses (1-3 lowercase letters: x/y/acc/idx/...); stripping
+    # every identifier's suffix would hash a real alias change such as
+    # sum_1 vs sum_2 identical.
     (re.compile(r"\b([a-z]{1,3})_\d+\b"), r"\1_"),
     # localCheckpoint scans (iterative BFS/pagerank state) print the
     # GLOBAL RDD id counter — session history, not plan structure
@@ -257,8 +254,8 @@ _FP_RES = [
 
 def _plan_fingerprint(df) -> str:
     """md5 (16 hex chars) of the NORMALIZED formatted explain string of
-    a query's physical plan. Computed OUTSIDE the timed region (after
-    the pass-0 write) so timings are unaffected."""
+    a query's physical plan. Computed outside the timed region so
+    timings are unaffected."""
     try:
         s = df._sc._jvm.PythonSQLUtils.explainString(
             df._jdf.queryExecution(), "formatted"
@@ -270,11 +267,20 @@ def _plan_fingerprint(df) -> str:
     return hashlib.md5(s.encode()).hexdigest()[:16]
 
 
+def _release(spark) -> None:
+    """Drop what the last query persisted (operator caches and the
+    localCheckpointed loop state of the iterative graph operators) so
+    it cannot evict or slow down the next query's data."""
+    spark.catalog.clearCache()
+    for rdd in list(spark.sparkContext._jsc.getPersistentRDDs().values()):
+        rdd.unpersist()
+
+
 def _fingerprints_only(sf_dir: str) -> None:
     """Plan-only mode (`bench.py --fingerprints`): build every headline
     DataFrame and print the {name: fingerprint} map without executing
-    the writes — cheap enough to run against an old tree (git worktree)
-    to diff plans across rounds."""
+    the writes — cheap enough to run against an older checkout and diff
+    the two maps."""
     spark = get_spark(app_name="bench-fp")
     registry = all_queries()
     fps = {}
@@ -284,15 +290,11 @@ def _fingerprints_only(sf_dir: str) -> None:
             fps[name] = _plan_fingerprint(fn(spark, sf_dir))
         except Exception as exc:
             fps[name] = f"error:{type(exc).__name__}"
-        spark.catalog.clearCache()
-        for rdd in list(spark.sparkContext._jsc.getPersistentRDDs().values()):
-            rdd.unpersist()
+        _release(spark)
     # fp_mode: these fingerprints are PLAN-ONLY (the DataFrame is never
-    # executed), while the full bench records them AFTER execution
+    # executed), while the sweep records them AFTER execution
     # (AQE-finalized plans). The two modes differ for some queries
-    # (cached subtrees finalize differently) — compare like with like;
-    # a round-13 mixed-mode compare flagged minhash_near_dups as a
-    # false positive.
+    # (cached subtrees finalize differently): compare like with like.
     print(json.dumps(
         {"plan_fp": fps, "sf_dir": sf_dir,
          "fp_norm_version": _FP_NORM_VERSION, "fp_mode": "plan_only"},
@@ -300,364 +302,41 @@ def _fingerprints_only(sf_dir: str) -> None:
     ))
 
 
-def _probe(spark) -> float:
-    """Host-calibration probe: a FIXED synthetic Catalyst-only job
-    (range -> hash-mod keys -> two-phase agg) touching no input files,
-    so its wall time moves ONLY with host speed, never with plan or
-    data changes. Recorded as ``probe_sec`` so round-over-round bench
-    deltas can be separated arithmetically into host drift
-    (probe ratio) vs plan drift (query ratio / probe ratio) — r04
-    burned a full judge re-run proving a 1.60x 'regression' was the
-    container slowing down.
-    """
-    from pyspark.sql import functions as F
-
-    t0 = time.perf_counter()
-    (
-        spark.range(50_000_000)
-        .select(
-            (F.col("id") * 2654435761 % 8192).alias("k"),
-            (F.col("id") % 97).alias("v"),
-        )
-        .groupBy("k")
-        .agg(F.sum("v").alias("s"), F.avg("v").alias("a"))
-        .write.format("noop")
-        .mode("overwrite")
-        .save()
-    )
-    return time.perf_counter() - t0
-
-
-def _isolated(name: str, sf_dir: str) -> None:
-    """Re-measure ONE query in a fresh process (fresh JVM -> fresh
-    whole-stage-codegen class cache, empty RDD/cache state, no 100-query
-    context). The first run pays codegen compilation + JIT and is
-    discarded; the min of the next two is the plan's isolated-warm
-    execution cost — the number the in-bench reading should be judged
-    against (verdict-r6 item 1: three consecutive rounds burned judge
-    time re-adjudicating bench-context phantoms like graph_pagerank
-    4.45s in-bench vs 1.44-2.1s isolated)."""
-    spark = get_spark(
-        app_name=f"bench-iso-{name}",
-        extra_conf={"spark.sql.codegen.cache.maxEntries": "5000"},
-    )
-    registry = all_queries()
-    for t in ("lineitem", "orders", "customer", "events", "documents", "embeddings"):
-        load_table(spark, sf_dir, t).count()
-    fn, _sql = registry[name]
-    attempts: list[float] = []
-    for attempt in range(2):
-        t0 = time.perf_counter()
-        fn(spark, sf_dir).write.format("noop").mode("overwrite").save()
-        attempts.append(round(time.perf_counter() - t0, 3))
-        spark.catalog.clearCache()
-        for rdd in list(spark.sparkContext._jsc.getPersistentRDDs().values()):
-            rdd.unpersist()
-    # run 0 = codegen/JIT warmup; run 1 is the isolated-warm reading.
-    # Robustness across host bursts comes from the PARENT's median of 3
-    # fresh subprocesses, not from more repeats inside one burst window.
-    print(
-        json.dumps(
-            {
-                "name": name,
-                "attempts": attempts,
-                "isolated_sec": attempts[-1],
-                "staged": staging.EVENTS,
-            }
-        ),
-        flush=True,
-    )
-
-
 def main() -> None:
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    if len(sys.argv) >= 3 and sys.argv[1] == "--isolated":
-        _isolated(sys.argv[2], sf_dir)
-        return
     if len(sys.argv) >= 2 and sys.argv[1] == "--fingerprints":
         _fingerprints_only(sf_dir)
         return
     sf = float(os.path.basename(sf_dir.rstrip("/")).removeprefix("sf") or "0.1")
-    # Spark's whole-stage-codegen class cache is 100 entries (static
-    # conf) — one entry per generated stage. A 100+ query bench pass
-    # holds ~10x that many codegen units, so by the time a pass loops
-    # back to an iterative query (pagerank: ~20 units/run), every unit
-    # recompiles: measured 4.9s in-bench vs 2.4s isolated-warm for the
-    # SAME plan. Raising the cache turns the bench number back into
-    # execution cost (the thing that scales with data) instead of
-    # compilation cost (fixed, and absent on any long-lived cluster).
+    # Spark's whole-stage-codegen class cache holds 100 entries; a sweep
+    # of 100+ queries would otherwise recompile every stage it revisits.
     spark = get_spark(
         app_name="bench",
         extra_conf={"spark.sql.codegen.cache.maxEntries": "5000"},
     )
     registry = all_queries()
-
-    # Warm JVM + page cache with one cheap pass over each input table,
-    # then one mini-query through the codegen/shuffle/HOF paths so the
-    # first timed query doesn't pay one-time JIT cost (~3s observed).
+    # touch every input once so the first timed query does not pay the
+    # page-cache fill
     for name in ("lineitem", "orders", "customer", "events", "documents", "embeddings"):
         load_table(spark, sf_dir, name).count()
-    warm_fn, _ = registry["a7_text_search"]
-    warm_fn(spark, sf_dir).write.format("noop").mode("overwrite").save()
-    registry["agg_pricing_summary"][0](spark, sf_dir).write.format("noop").mode(
-        "overwrite"
-    ).save()
 
-    # Per-query min over 3 FULL PASSES (not back-to-back repeats): the
-    # sandbox host has bursty multi-second interference windows that
-    # inflate whatever runs inside them 3-10x (observed: same query
-    # 2.5s/5.6s/38s across runs). Back-to-back repeats land in the same
-    # burst; full passes put a query's attempts minutes apart, so the
-    # min recovers the true plan cost unless a burst recurs all 3 times.
-    timings: dict[str, float] = {name: float("inf") for name in HEADLINE}
+    timings: dict[str, float] = {}
     plan_fp: dict[str, str] = {}
-    staged_during: dict[str, list] = {}
-    probe_sec = float("inf")
-    # probe_trace (round 10, verdict-r9 item 4): a probe at pass start
-    # AND every 40 queries, so host-interference windows INSIDE a pass
-    # are visible in the artifact — the r9 "session constant" smear was
-    # adjudicated as host noise between too-sparse probe snapshots
-    # (controlled A/B in STATUS r10: a 10-query panel re-measured after
-    # 110 interleaved queries ran 0.03-0.17s FASTER, so there is no
-    # session-aging cost to reset).
-    probe_trace: list[float] = []
-    for _pass in range(3):
-        p = _probe(spark)
-        probe_sec = min(probe_sec, p)
-        probe_trace.append(round(p, 3))
-        for qi, name in enumerate(HEADLINE):
-            if qi and qi % 40 == 0:
-                p = _probe(spark)
-                probe_sec = min(probe_sec, p)
-                probe_trace.append(round(p, 3))
-            fn, _sql = registry[name]
-            n_ev = len(staging.EVENTS)
-            t0 = time.perf_counter()
-            df = fn(spark, sf_dir)
-            df.write.format("noop").mode("overwrite").save()
-            dt = time.perf_counter() - t0
-            if len(staging.EVENTS) > n_ev:
-                # verdict-r12 item 4: a timed attempt that performed a
-                # one-off /tmp staging build (fixture regeneration
-                # invalidates the vintage-keyed caches) is recorded in
-                # the artifact — min-of-3-passes absorbs it from the
-                # headline number, and any residual mover self-describes
-                # instead of needing timing forensics.
-                staged_during.setdefault(name, []).extend(
-                    {**e, "pass": _pass, "attempt_sec": round(dt, 3)}
-                    for e in staging.EVENTS[n_ev:]
-                )
-            timings[name] = min(timings[name], dt)
-            if _pass == 0:
-                # plan fingerprint: once per run, AFTER the timed write
-                plan_fp[name] = _plan_fingerprint(df)
-            # drop DataFrames persisted inside operators (minhash/ivf/...):
-            # dead cached RDDs from one query otherwise evict the LIVE
-            # cache of later ones mid-measurement (minhash 5.3s dirty
-            # vs 2.2s isolated)
-            spark.catalog.clearCache()
-            # ...and the RDD-level blocks clearCache can NOT reach: the
-            # iterative graph operators localCheckpoint their loop state
-            # (2-3 persistent RDDs per query), which accumulates across
-            # 100+ queries x 3 passes until storage pressure makes later
-            # iterative queries read 4-5x slower (measured: pagerank
-            # 6.9s dirty vs 2.7s clean in the round-6 run). The results
-            # are already materialized at this point, so unpersisting is
-            # safe.
-            for rdd in list(spark.sparkContext._jsc.getPersistentRDDs().values()):
-                rdd.unpersist()
-        print(
-            f"[bench] pass {_pass}: " + ", ".join(f"{n}={timings[n]:.2f}" for n in HEADLINE),
-            file=sys.stderr,
-            flush=True,
-        )
-    timings = {n: round(v, 3) for n, v in timings.items()}
-
-    # Isolated-warm re-measurement of the 10 slowest (verdict-r6 item
-    # 1): each in a FRESH subprocess — fresh JVM means a genuinely fresh
-    # codegen class cache and zero cache/RDD state from the other 100+
-    # queries, so `isolated_sec` is plan execution cost and any gap to
-    # the in-bench number is measurement context, adjudicated by the
-    # artifact itself instead of a judge re-run.
-    import statistics
-    import subprocess
-
-    def _isolated_window(n: str) -> tuple[list[float], list[float]]:
-        # median of 3 FRESH-SUBPROCESS runs (verdict-r7 item 4): a
-        # single isolated reading lands in whatever host-interference
-        # window happens to be open (r7 recorded minhash_near_dups at
-        # 13.0s isolated vs 2.8s in-bench — a burst, not the plan); the
-        # median of three runs minutes apart survives one burst. A
-        # probe rides BEFORE each run and AFTER the last, so any
-        # remaining skew is visible in the artifact itself.
-        runs: list[float] = []
-        probes: list[float] = []
-        for _r in range(3):
-            probes.append(round(_probe(spark), 3))
-            try:
-                out = subprocess.run(
-                    [sys.executable, os.path.abspath(__file__), "--isolated", n],
-                    capture_output=True,
-                    text=True,
-                    timeout=420,
-                    env={**os.environ, "SPARK_GRAFT_SF_DIR": sf_dir},
-                )
-                last = out.stdout.strip().splitlines()[-1]
-                rec = json.loads(last)
-                runs.append(rec["isolated_sec"])
-                if rec.get("staged"):
-                    staged_during.setdefault(f"isolated:{n}", []).extend(
-                        rec["staged"]
-                    )
-            except Exception as exc:  # a broken isolate must not sink the bench
-                print(
-                    f"[bench] isolated {n} run FAILED: {exc}",
-                    file=sys.stderr,
-                    flush=True,
-                )
-        probes.append(round(_probe(spark), 3))
-        return runs, probes
-
-    # prior round's isolated medians, read BEFORE this run overwrites
-    # BENCH_DETAIL.json — the >2x-mover recheck baseline (verdict-r9
-    # item 3)
-    detail_path = os.path.join(
-        os.path.dirname(os.path.abspath(__file__)), "BENCH_DETAIL.json"
-    )
-    prior_isolated: dict[str, float] = {}
-    prior_fp: dict[str, str] = {}
-    prior_fp_version = None
-    try:
-        with open(detail_path) as f:
-            _prior = json.load(f)
-        prior_isolated = _prior.get("isolated_sec", {}) or {}
-        prior_fp = _prior.get("plan_fp", {}) or {}
-        prior_fp_version = _prior.get("fp_norm_version", 1)
-    except (OSError, ValueError):
-        pass
-    # "ratio moved, fingerprint unchanged => host" — the machine check.
-    # Fingerprints are only comparable under the SAME normalization
-    # rules: when the prior artifact was written by an older bench.py
-    # (fp_norm_version differs), every hash moves for rule reasons, so
-    # the comparison is skipped and the artifact says why instead of
-    # flagging the whole headline as plan drift.
-    fp_baseline_reset = prior_fp_version is not None and prior_fp_version != _FP_NORM_VERSION
-    plan_fp_changed = [] if fp_baseline_reset else sorted(
-        n for n, fp in plan_fp.items()
-        if n in prior_fp and prior_fp[n] != fp
-    )
-
-    slow_names = [n for n, _ in sorted(timings.items(), key=lambda kv: -kv[1])[:10]]
-    isolated: dict[str, float] = {}
-    isolated_runs: dict[str, list[float]] = {}
-    isolated_probes: dict[str, list[float]] = {}
-    for n in slow_names:
-        runs, probes = _isolated_window(n)
-        if runs:
-            isolated[n] = round(statistics.median(runs), 3)
-            isolated_runs[n] = runs
-            isolated_probes[n] = probes
-            print(
-                f"[bench] isolated {n}: median {isolated[n]:.2f}s of {runs} "
-                f"(in-bench {timings[n]:.2f}s, probes {probes})",
-                file=sys.stderr,
-                flush=True,
-            )
-
-    # isolated-recheck (round 10, verdict-r9 item 3): any query whose
-    # isolated median moved >2x against the PRIOR round's recorded
-    # median gets a SECOND clean window — re-measured here, minutes
-    # later in wall-clock than its first window, after all other
-    # isolates ran — and BOTH windows are recorded. The headline
-    # isolated_sec takes the min of the two medians: host bursts only
-    # ever inflate a reading, so across two separated clean windows the
-    # smaller median is the better plan-cost estimate (the r9 artifact
-    # recorded dsir at 24.4s median from one burst-hit window; an idle
-    # re-measure found 3.17s).
-    isolated_recheck: dict[str, dict] = {}
-    for n in list(isolated):
-        prev = prior_isolated.get(n)
-        first = isolated[n]
-        if not prev or (first <= 2 * prev and first >= prev / 2):
-            continue
-        runs2, probes2 = _isolated_window(n)
-        if not runs2:
-            continue
-        med2 = round(statistics.median(runs2), 3)
-        isolated_recheck[n] = {
-            "prior_round": prev,
-            "first_median": first,
-            "recheck_median": med2,
-            "recheck_runs": runs2,
-            "recheck_probes": probes2,
-        }
-        isolated[n] = min(first, med2)
-        print(
-            f"[bench] recheck {n}: prior {prev:.2f}s, first window "
-            f"{first:.2f}s, second window {med2:.2f}s -> recording "
-            f"{isolated[n]:.2f}s",
-            file=sys.stderr,
-            flush=True,
-        )
-
-    total = round(sum(timings.values()), 3)
-    full = {
-        "metric": "headline_queries_total_wall",
-        "value": total,
-        "unit": "sec",
-        "queries": timings,
-        "plan_fp": plan_fp,
-        "plan_fp_changed": plan_fp_changed,
-        "fp_norm_version": _FP_NORM_VERSION,
-        "fp_mode": "executed",
-        "fp_baseline_reset": fp_baseline_reset,
-        "isolated_sec": isolated,
-        "isolated_runs": isolated_runs,
-        "isolated_probes": isolated_probes,
-        "isolated_recheck": isolated_recheck,
-        # verdict-r12 item 4: queries whose timed attempt (or isolated
-        # subprocess) performed a one-off /tmp staging build this run —
-        # a mover that appears here is a staging artifact, not a plan
-        # regression. Empty when every staged source was already warm.
-        "staged": staged_during,
-        "probe_trace": probe_trace,
-        "sf": sf,
-        "probe_sec": round(probe_sec, 3),
-        # median of the dense trace: the round-over-round host stat.
-        # probe_sec (the min) is biased low now that 15 probes run per
-        # RUN (5 per pass x 3 passes) instead of 3 — min-of-N falls
-        # with N by sampling alone. (ADVICE-r10 comment fix.)
-        "probe_median": round(statistics.median(probe_trace), 3),
-    }
-    # BENCH_r05.json came back `parsed: null`: the 91-query map made the
-    # one-line JSON overflow the driver's output-TAIL capture, which keeps
-    # the END of stdout and cuts the head — so the line lost its opening
-    # brace and failed to parse. Split the artifact: the FULL per-query map
-    # goes to a committed file (and to an early stdout line, where head
-    # truncation can't hurt anything that matters), and the FINAL stdout
-    # line is a compact summary guaranteed to fit the tail window — the
-    # driver parses that. `queries` in the final line carries only the 10
-    # slowest (the actionable ones); `queries_full` points at the rest.
-    with open(detail_path, "w") as f:
-        json.dump(full, f, indent=1, sort_keys=True)
-        f.write("\n")
-    print(json.dumps(full, separators=(",", ":")), flush=True)
-    slowest = dict(sorted(timings.items(), key=lambda kv: -kv[1])[:10])
-    print(json.dumps({
-        "metric": "headline_queries_total_wall",
-        "value": total,
-        "unit": "sec",
-        "sf": sf,
-        "probe_sec": round(probe_sec, 3),
-        "probe_median": round(statistics.median(probe_trace), 3),
-        "n_queries": len(timings),
-        "queries": slowest,
-        "isolated_sec": isolated,
-        "isolated_recheck": {
-            n: r["recheck_median"] for n, r in isolated_recheck.items()
-        },
-        "queries_full": "BENCH_DETAIL.json",
-    }, separators=(",", ":")))
+    for name in HEADLINE:
+        fn, _sql = registry[name]
+        t0 = time.perf_counter()
+        df = fn(spark, sf_dir)
+        df.write.format("noop").mode("overwrite").save()
+        timings[name] = round(time.perf_counter() - t0, 3)
+        plan_fp[name] = _plan_fingerprint(df)  # after the timed write
+        _release(spark)
+    print(json.dumps(
+        {"metric": "headline_queries_total_wall",
+         "value": round(sum(timings.values()), 3), "unit": "sec", "sf": sf,
+         "queries": timings, "plan_fp": plan_fp,
+         "fp_norm_version": _FP_NORM_VERSION, "fp_mode": "executed"},
+        sort_keys=True,
+    ))
 
 
 if __name__ == "__main__":

@@ -23,6 +23,9 @@ from providenciasbigdata_spark.compat import graph as _graph
 from providenciasbigdata_spark.io import load_table
 from providenciasbigdata_spark.operators import dedup, similarity
 
+# schema of a rulings mongodump read through the mongodump DataSource
+_DUMP_SCHEMA = "_id string, providencia string, tipo string, anio int, texto string"
+
 
 class ProvidenciasEngine:
     """Facade over the document + graph query surfaces.
@@ -70,9 +73,7 @@ class ProvidenciasEngine:
             datasources.register(self.spark)
             docs = (
                 self.spark.read.format(datasources.FORMAT_NAME)
-                .schema(
-                    "_id string, providencia string, tipo string, anio int, texto string"
-                )
+                .schema(_DUMP_SCHEMA)
                 .load(self._dump_dir)
             )
             return docs.select(
@@ -247,9 +248,7 @@ class ProvidenciasEngine:
         datasources.register(self.spark)
         return (
             self.spark.readStream.format(datasources.FORMAT_NAME)
-            .schema(
-                "_id string, providencia string, tipo string, anio int, texto string"
-            )
+            .schema(_DUMP_SCHEMA)
             .load(target)
         )
 

@@ -577,7 +577,8 @@ def _oph_signature_batch(batch, k: int):
     formulation in ``_signature_from_sets(impl="jvm")`` — hash each
     element (xxhash64 replay), signed-min per pmod(h, k) bucket,
     circular densification — bit-identical by construction and pinned
-    in tests/test_dedup.py. Docs with null/empty sets emit no row."""
+    in tests/test_dedup.py. Docs with null/empty sets emit no row; null
+    elements hash like the JVM path's ``xxhash64(null)``."""
     import numpy as np
     import pyarrow as pa
     import pyarrow.compute as pc
@@ -597,10 +598,15 @@ def _oph_signature_batch(batch, k: int):
         )
     # flatten() concatenates the sub-lists in order (null/empty lists
     # contribute nothing), so values align with the kept rows
-    values = np.asarray(sets.flatten(), dtype=np.int64)
+    flat = sets.flatten()
+    n_null = flat.null_count
+    values = np.asarray(flat.fill_null(0) if n_null else flat, dtype=np.int64)
     doc_idx = np.repeat(np.arange(n_out, dtype=np.int64), lengths[keep])
 
     h = _xxh64_long_np(values)
+    if n_null:
+        # a null element hashes as Spark's xxhash64(null): the seed
+        h[np.asarray(flat.is_null())] = 42
     b = np.mod(h, k)  # numpy mod sign follows the (positive) divisor == pmod
     slot = doc_idx * k + b
     bm = np.full(n_out * k, np.iinfo(np.int64).max, dtype=np.int64)

@@ -479,6 +479,12 @@ def pagerank(
         .distinct().persist()
     )
     n = nodes.count()
+    out_schema = edges.select(F.col(src).alias("id"), F.lit(0.0).alias("rank")).schema
+    if n == 0:
+        # no edges, no nodes: empty ranking rather than a 1/0 below
+        e.unpersist()
+        nodes.unpersist()
+        return edges.sparkSession.createDataFrame([], out_schema)
     if small_cutover and e.count() <= small_cutover:
         # small-subproblem finisher (the SCC/CC/k-means pattern): the
         # SAME power-iteration arithmetic in numpy — each distributed
@@ -508,10 +514,7 @@ def pagerank(
             rank = base + damping * inflow
         spark = edges.sparkSession
         return spark.createDataFrame(
-            list(zip(ids, [float(x) for x in rank])),
-            schema=edges.select(
-                F.col(src).alias("id"), F.lit(0.0).alias("rank")
-            ).schema,
+            list(zip(ids, [float(x) for x in rank])), schema=out_schema
         )
     out_deg = e.groupBy("u").agg(F.sum("w").alias("deg")).persist()
     ranks = nodes.withColumn("rank", F.lit(1.0 / n))

@@ -243,24 +243,20 @@ def build_bm25_index(
 
 
 def bm25_search(
-    index: BM25Index | DataFrame = None,
-    terms: list[str] = None,
+    index: BM25Index,
+    terms: list[str],
     k: int = 10,
     k1: float = 1.2,
     b: float = 0.75,
     round_digits: int = 6,
-    term_freqs: DataFrame = None,
 ) -> DataFrame:
-    """Okapi BM25 top-k over the term-frequency index.
+    """Okapi BM25 top-k over a prebuilt :class:`BM25Index` (zero driver
+    actions here; build it with :func:`build_bm25_index`).
 
     score(d, q) = sum over query terms t of
         idf(t) * tf(t,d) * (k1+1) / (tf(t,d) + k1 * (1 - b + b*|d|/avgdl))
     with idf(t) = ln((N - df(t) + 0.5) / (df(t) + 0.5) + 1)  (Lucene form,
     always positive).
-
-    ``index``: a prebuilt :class:`BM25Index` (service posture — zero
-    driver actions here), or a raw (doc_id, token, tf) frame for
-    one-shot use (stats derived on the spot, one aggregate action).
 
     Everything derives from the index — no corpus rescan at query
     time. The per-term slice is tiny, so the scoring join broadcasts;
@@ -268,26 +264,6 @@ def bm25_search(
     sort. Ties broken by doc_id ascending for a total order. Empty
     term list or empty index => empty (doc_id, score) frame.
     """
-    if term_freqs is not None:  # deprecated r02 keyword, kept one round
-        import warnings
-
-        if index is not None:
-            raise TypeError("pass either index or term_freqs, not both")
-        warnings.warn(
-            "bm25_search(term_freqs=...) is deprecated; pass the frame (or a "
-            "prebuilt BM25Index) as the first argument `index`",
-            DeprecationWarning,
-            stacklevel=2,
-        )
-        index = term_freqs
-    if index is None or terms is None:
-        raise TypeError("bm25_search requires an index (or term_freqs) and terms")
-    if isinstance(index, DataFrame):
-        doc_lens = index.groupBy("doc_id").agg(F.sum("tf").alias("dl"))
-        row = doc_lens.agg(
-            F.count("*").alias("n"), F.avg("dl").alias("avgdl")
-        ).first()
-        index = BM25Index(index, doc_lens, int(row["n"]), row["avgdl"])
     spark = index.term_freqs.sparkSession
     terms = sorted(set(terms))
     if not terms or index.n_docs == 0 or index.avgdl is None:

@@ -48,109 +48,16 @@ _MODULES = (
 )
 
 
-def _gate_history():
-    """(round_salt, last-green-round-map, red-name-set) from the
-    driver's own ``CORRECTNESS_r*.json`` artifacts committed at the
-    repo root. All values are deterministic WITHIN a round (the gate
-    and any judge re-run see identical files) and advance only when
-    the driver lands the next round's artifact.
-
-    A record is *clean* if it has no ``err`` and no explicit False
-    among rows/schema/hash matches. Classification is LATEST-WINS
-    (ADVICE-r10): a name's most recent gated record decides — a query
-    that was green in round 3 but failed in round 9 is *red* and
-    re-verifies first; a query that failed once and was later fixed is
-    green. ``err == "no_oracle"`` records are excluded from the red
-    set (verdict-r10 item 6): the driver cannot hash rows-only
-    entries, so that err can never drain and is not a failure.
-    ``last_green`` maps each green name to the latest round whose gate
-    verified it, for stalest-green-first rotation (verdict-r10 item 2).
-    """
-    import glob
-    import json
-    import os
-
-    root = os.path.dirname(os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
-    last_green: dict[str, int] = {}
-    latest: dict[str, tuple[int, bool, bool]] = {}  # name -> (round, clean, no_oracle)
-    files = sorted(glob.glob(os.path.join(root, "CORRECTNESS_r*.json")))
-    for rnd, path in enumerate(files, start=1):
-        try:
-            with open(path) as f:
-                rows = json.load(f)
-        except (OSError, ValueError):
-            continue
-        for name, rec in rows.items():
-            checks = (rec.get("rows_match"), rec.get("schema_match"), rec.get("hash_match"))
-            clean = not rec.get("err") and False not in checks
-            latest[name] = (rnd, clean, rec.get("err") == "no_oracle")
-            if clean:
-                last_green[name] = rnd
-    red = {
-        n for n, (_r, clean, no_oracle) in latest.items()
-        if not clean and not no_oracle
-    }
-    # latest-wins: a post-green failure re-enters the red set and its
-    # stale green round no longer counts as current verification
-    green = {
-        n: r for n, r in last_green.items()
-        if n not in red and latest[n][1]
-    }
-    return len(files), green, red
-
-
 def all_queries():
-    """Merge every module's QUERIES: oracle-backed entries first, then
-    rows-only — oracle-backed entries that the external gate has NEVER
-    value-hash verified (per the committed CORRECTNESS_r*.json history)
-    sort before already-verified ones, each group internally ordered by
-    a per-round-salted md5(name).
-
-    Ordering disclosure: the external correctness gate samples the
-    first N registry entries and value-hashes only oracle-backed ones.
-    Round 2 pinned a hand-curated PRIORITY prefix (biased: the same 50
-    re-proved each round); round 3 md5-shuffled the whole registry
-    (unbiased, but admitted hash-uncheckable rows-only entries into the
-    audited window); round 4 restricted the sampled prefix to
-    oracle-backed entries. Round 6 closes the remaining audit gap the
-    r05 verdict flagged (stable md5 order rotated only 9/50 entries):
-    the window now *prioritizes never-externally-verified* oracle
-    queries and salts the shuffle with the round count, so each round's
-    50-entry gate covers fresh queries until the whole oracle-backed
-    registry has been externally hash-verified (cumulative coverage is
-    tracked in STATUS.md). Round 10 (verdict-r9 item 1): previously-RED
-    names — whose LATEST gated record is a failure — sort ahead of even
-    the never-gated ones, so a fixed failure is the first thing the
-    next gate re-verifies. Round 11 (verdict-r10 item 2): with every
-    oracle-backed name externally verified once, already-green names
-    order STALEST-GREEN-FIRST (ascending last-green round, salted md5
-    within a round) so a regression in a round-1-era operator
-    resurfaces within ~ceil(344/50) rounds instead of hiding behind a
-    one-time green. Rows-only entries follow, each carrying a
-    machine-readable reason in ``why_no_oracle()``.
-    """
-    import hashlib
-
+    """Merge every module's QUERIES in ``_MODULES`` order; a name
+    declared by two modules is a ``ValueError``."""
     merged = {}
     for mod in _MODULES:
         overlap = merged.keys() & mod.QUERIES.keys()
         if overlap:
             raise ValueError(f"duplicate query names: {overlap}")
         merged.update(mod.QUERIES)
-
-    salt, green, red = _gate_history()
-
-    def key(n):
-        last = green.get(n)
-        return (
-            merged[n][1] is None,   # oracle-backed window first
-            n not in red,           # latest-failure names first
-            last is not None,       # then never-green
-            last or 0,              # then stalest green round first
-            hashlib.md5(f"r{salt}:{n}".encode()).hexdigest(),
-        )
-
-    return {n: merged[n] for n in sorted(merged, key=key)}
+    return merged
 
 
 def why_no_oracle():

@@ -30,7 +30,6 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from providenciasbigdata_spark.compat.graph import build_similarity_edges
-from providenciasbigdata_spark import staging
 from providenciasbigdata_spark.io import load_table
 from providenciasbigdata_spark.queries.modern import _sf_tag, _source_fingerprint
 
@@ -50,22 +49,21 @@ def staged_similarity_edges(
     )
     done = os.path.join(out, "_SUCCESS")
     if not os.path.exists(done):
-        with staging.stage(out):
-            # a dir without _SUCCESS is a crashed build: clear it
-            if os.path.exists(out):
-                shutil.rmtree(out, ignore_errors=True)
-            emb = (
-                load_table(spark, sf_dir, "embeddings")
-                .filter(F.col("vec_id") < int(bound))
-                .repartition(16)  # the bounded slice is one input split
-            )
-            tmp = f"{out}.tmp-{os.getpid()}"
-            build_similarity_edges(emb).write.mode("overwrite").parquet(tmp)
-            try:
-                os.rename(tmp, out)
-            except OSError:
-                # lost a concurrent race — reuse the winner's copy
-                shutil.rmtree(tmp, ignore_errors=True)
-                if not os.path.exists(done):
-                    raise
+        # a dir without _SUCCESS is a crashed build: clear it
+        if os.path.exists(out):
+            shutil.rmtree(out, ignore_errors=True)
+        emb = (
+            load_table(spark, sf_dir, "embeddings")
+            .filter(F.col("vec_id") < int(bound))
+            .repartition(16)  # the bounded slice is one input split
+        )
+        tmp = f"{out}.tmp-{os.getpid()}"
+        build_similarity_edges(emb).write.mode("overwrite").parquet(tmp)
+        try:
+            os.rename(tmp, out)
+        except OSError:
+            # lost a concurrent race — reuse the winner's copy
+            shutil.rmtree(tmp, ignore_errors=True)
+            if not os.path.exists(done):
+                raise
     return spark.read.parquet(out)

@@ -28,7 +28,7 @@ import tempfile
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from providenciasbigdata_spark import datasources, staging
+from providenciasbigdata_spark import datasources
 from providenciasbigdata_spark.compat.documents import rulings_view, tokenize
 from providenciasbigdata_spark.io import load_table
 from providenciasbigdata_spark.operators.sketch import cms_build, cms_estimate
@@ -62,11 +62,10 @@ def _ensure_dump(spark: SparkSession, sf_dir: str) -> str:
         f"pbd_mongodump_{_sf_tag(sf_dir)}_{_source_fingerprint(sf_dir, 'documents')}",
     )
     if not os.path.exists(os.path.join(out, "_SUCCESS")):
-        with staging.stage(out):
-            docs = rulings_view(load_table(spark, sf_dir, "documents")).select(
-                "doc_id", "providencia", "tipo", "anio", "texto"
-            )
-            datasources.export_mongodump(docs, out)
+        docs = rulings_view(load_table(spark, sf_dir, "documents")).select(
+            "doc_id", "providencia", "tipo", "anio", "texto"
+        )
+        datasources.export_mongodump(docs, out)
     return out
 
 
@@ -290,17 +289,16 @@ def _preflight_tws(spark: SparkSession) -> None:
 
     src = os.path.join(tempfile.gettempdir(), "pbd_tws_preflight_src")
     if not os.path.exists(os.path.join(src, "_SUCCESS")):
-        with staging.stage(src):
-            spark.createDataFrame(
-                [
-                    (1, "2024-01-01 00:00:00", 1, "click", 1.0, "{}"),
-                    (2, "2024-01-01 00:00:01", 2, "view", 2.0, "{}"),
-                ],
-                "event_id long, ts string, user_id long, event_type string,"
-                " value double, props string",
-            ).withColumn("ts", F.col("ts").cast("timestamp")).coalesce(1).write.mode(
-                "overwrite"
-            ).parquet(src)
+        spark.createDataFrame(
+            [
+                (1, "2024-01-01 00:00:00", 1, "click", 1.0, "{}"),
+                (2, "2024-01-01 00:00:01", 2, "view", 2.0, "{}"),
+            ],
+            "event_id long, ts string, user_id long, event_type string,"
+            " value double, props string",
+        ).withColumn("ts", F.col("ts").cast("timestamp")).coalesce(1).write.mode(
+            "overwrite"
+        ).parquet(src)
     conf_key = "spark.sql.streaming.stateStore.providerClass"
     prev = spark.conf.get(conf_key, None)
     spark.conf.set(conf_key, _ROCKSDB)
@@ -352,10 +350,9 @@ def q_stream_user_totals_live(spark: SparkSession, sf_dir: str) -> DataFrame:
         f"pbd_tws_src_{_sf_tag(sf_dir)}_{_source_fingerprint(sf_dir, 'events')}",
     )
     if not os.path.exists(os.path.join(src, "_SUCCESS")):
-        with staging.stage(src):
-            load_table(spark, sf_dir, "events").repartition(4).write.mode(
-                "overwrite"
-            ).parquet(src)
+        load_table(spark, sf_dir, "events").repartition(4).write.mode(
+            "overwrite"
+        ).parquet(src)
 
     stream = st.events_stream(spark, src)
     # applyInPandasWithState: the per-key state lives IN the Arrow
@@ -391,10 +388,9 @@ def q_stream_user_totals_tws(spark: SparkSession, sf_dir: str) -> DataFrame:
         f"pbd_tws_src_{_sf_tag(sf_dir)}_{_source_fingerprint(sf_dir, 'events')}",
     )
     if not os.path.exists(os.path.join(src, "_SUCCESS")):
-        with staging.stage(src):
-            load_table(spark, sf_dir, "events").repartition(4).write.mode(
-                "overwrite"
-            ).parquet(src)
+        load_table(spark, sf_dir, "events").repartition(4).write.mode(
+            "overwrite"
+        ).parquet(src)
 
     if not has_tws_runtime(spark):  # pragma: no cover - shim makes this unreachable
         raise RuntimeError(
@@ -542,10 +538,9 @@ def _staged_format(spark: SparkSession, sf_dir: str, fmt: str) -> str:
         f"pbd_{fmt}_{_sf_tag(sf_dir)}_{_source_fingerprint(sf_dir, 'nation')}",
     )
     if not os.path.exists(os.path.join(out, "_SUCCESS")):
-        with staging.stage(out):
-            load_table(spark, sf_dir, "nation").write.mode("overwrite").format(
-                fmt
-            ).option("header", "true").save(out)
+        load_table(spark, sf_dir, "nation").write.mode("overwrite").format(
+            fmt
+        ).option("header", "true").save(out)
     return out
 
 
@@ -852,15 +847,14 @@ def _staged_log_lines(spark: SparkSession, sf_dir: str) -> str:
         f"pbd_textlog_{_sf_tag(sf_dir)}_{_source_fingerprint(sf_dir, 'events')}",
     )
     if not os.path.exists(os.path.join(out, "_SUCCESS")):
-        with staging.stage(out):
-            load_table(spark, sf_dir, "events").select(
-                F.format_string(
-                    'user%d - [%s] "GET /%s" 200',
-                    F.col("user_id"),
-                    F.date_format("ts", "yyyy-MM-dd'T'HH:mm:ss"),
-                    F.col("event_type"),
-                ).alias("value")
-            ).write.mode("overwrite").text(out)
+        load_table(spark, sf_dir, "events").select(
+            F.format_string(
+                'user%d - [%s] "GET /%s" 200',
+                F.col("user_id"),
+                F.date_format("ts", "yyyy-MM-dd'T'HH:mm:ss"),
+                F.col("event_type"),
+            ).alias("value")
+        ).write.mode("overwrite").text(out)
     return out
 
 
@@ -1068,10 +1062,9 @@ def q_stream_dedup_index(spark: SparkSession, sf_dir: str) -> DataFrame:
         f"pbd_docs_src_{_sf_tag(sf_dir)}_{_source_fingerprint(sf_dir, 'documents')}",
     )
     if not os.path.exists(os.path.join(src, "_SUCCESS")):
-        with staging.stage(src):
-            load_table(spark, sf_dir, "documents").repartition(4).write.mode(
-                "overwrite"
-            ).parquet(src)
+        load_table(spark, sf_dir, "documents").repartition(4).write.mode(
+            "overwrite"
+        ).parquet(src)
 
     docs = load_table(spark, sf_dir, "documents")
     index = docs.filter(F.col("doc_id") % 7 == 0).select(

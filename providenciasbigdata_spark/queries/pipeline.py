@@ -429,10 +429,7 @@ def q_ivf_index_exact_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     emb = load_table(spark, sf_dir, "embeddings")
     if not os.path.exists(os.path.join(out, "vectors", "_SUCCESS")):
-        from providenciasbigdata_spark import staging
-
-        with staging.stage(out):
-            similarity.build_ivf_index(emb, out, n_clusters=8, max_iter=4)
+        similarity.build_ivf_index(emb, out, n_clusters=8, max_iter=4)
     idx = similarity.load_ivf_index(spark, out)
     qvec = emb.filter(F.col("vec_id") == 0).select("embedding").first().embedding
     return similarity.ivf_index_topk(idx, [float(x) for x in qvec], k=10, nprobe=8)

@@ -61,59 +61,6 @@ def test_dedup_and_ann_extensions(engine):
     assert top_approx.count() <= 5
 
 
-def test_registry_order_is_coverage_maximizing_rotation():
-    """The external gate samples the first N registry entries. Round-2
-    advice rejected a hand-curated priority prefix (biased sample);
-    round-3 advice rejected a whole-registry shuffle (hash-uncheckable
-    rows-only entries in the audited window); round-4 settled on
-    oracle-backed-first + md5 shuffle; round 6 closed the last audit
-    gap (stable order re-sampled the same 50 every round): within the
-    oracle-backed group, entries the gate has NEVER externally
-    verified (per committed CORRECTNESS_r*.json) sort first, and the
-    md5 shuffle is salted with the round count — so each round's
-    window verifies fresh names until the registry is exhausted.
-    Round 10 (verdict-r9 item 1): previously-RED names — whose LATEST
-    gated record is a failure — sort ahead of even the never-gated
-    ones, so a fixed failure is the first thing the next gate
-    re-verifies. Round 11 (verdict-r10 item 2): with the whole
-    oracle-backed registry verified once, already-green names order
-    stalest-green-first so round-1-era regressions resurface within
-    ~7 rounds. Deterministic within a round; every sampled entry
-    value-hash-verifiable."""
-    import hashlib
-
-    from providenciasbigdata_spark.queries import _gate_history, all_queries
-
-    reg = all_queries()
-    names = list(reg.keys())
-    salt, green, red = _gate_history()
-    assert names == sorted(
-        names,
-        key=lambda n: (
-            reg[n][1] is None,
-            n not in red,
-            green.get(n) is not None,
-            green.get(n) or 0,
-            hashlib.md5(f"r{salt}:{n}".encode()).hexdigest(),
-        ),
-    )
-    assert names == list(all_queries().keys())  # deterministic
-    n_oracle = sum(1 for _fn, sql in reg.values() if sql is not None)
-    assert n_oracle >= 50  # the driver's window stays fully hash-checked
-    assert all(reg[n][1] is not None for n in names[:n_oracle])
-    # red-first: every oracle-backed red name precedes every non-red
-    red_oracle_pos = [i for i, n in enumerate(names[:n_oracle]) if n in red]
-    if red_oracle_pos:
-        assert max(red_oracle_pos) == len(red_oracle_pos) - 1
-    # coverage maximization: while unverified oracle queries remain,
-    # the 50-entry window contains ONLY unverified ones
-    unverified_oracle = [
-        n for n in names[:n_oracle] if n not in green
-    ]
-    if len(unverified_oracle) >= 50:
-        assert all(n not in green for n in names[:50])
-
-
 def test_engine_mongo_aggregate_and_cursor(spark):
     from providenciasbigdata_spark.engine import ProvidenciasEngine
 

@@ -633,6 +633,18 @@ def test_pagerank_cutover_agrees_with_distributed(spark, toy_edges):
     assert all(abs(dist_p[k] - drv_p[k]) < 1e-12 for k in dist_p)
 
 
+@pytest.mark.parametrize("weight_col", [None, "w"])
+def test_pagerank_empty_edge_set_is_empty_ranking(spark, weight_col):
+    """No edges => no nodes => an empty (id, rank) frame, on both the
+    driver finisher and the distributed loop (small_cutover=0)."""
+    edges = spark.createDataFrame([], "src string, dst string, w double")
+    for cutover in (200_000, 0):
+        out = pagerank(edges, weight_col=weight_col, small_cutover=cutover)
+        assert out.collect() == []
+        assert out.columns == ["id", "rank"]
+        assert [f.dataType.simpleString() for f in out.schema] == ["string", "double"]
+
+
 def test_ktruss_matches_python_reference(spark):
     """The set-at-a-time distributed peeling == a pure-Python k-truss
     on a known graph AND the bounded fixture graph (the truss is

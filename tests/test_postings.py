@@ -69,11 +69,11 @@ def test_bm25_ranks_rarer_terms_higher(spark):
     of a common term (idf monotonicity), and k bounds the result."""
     from providenciasbigdata_spark.operators.postings import (
         bm25_search,
-        build_term_freqs,
+        build_bm25_index,
     )
 
-    docs = _rulings(spark)
-    tfs = build_term_freqs(docs)
+    idx = build_bm25_index(_rulings(spark))
+    tfs = idx.term_freqs
     # pick a rare and a common token from the corpus itself
     freqs = (
         tfs.groupBy("token")
@@ -84,7 +84,7 @@ def test_bm25_ranks_rarer_terms_higher(spark):
     rare = freqs[0]["token"]
     common = freqs[-1]["token"]
     assert freqs[0]["df"] < freqs[-1]["df"]
-    top = bm25_search(tfs, [rare, common], k=5).collect()
+    top = bm25_search(idx, [rare, common], k=5).collect()
     assert len(top) <= 5
     # the top hit must contain the rare term
     rare_docs = {r["doc_id"] for r in tfs.where(F.col("token") == rare).collect()}
@@ -125,7 +125,6 @@ def test_bm25_and_search_degenerate_inputs(spark):
     of failing analysis (ADVICE r2: F.array() with zero elements /
     float(None) avgdl)."""
     from providenciasbigdata_spark.operators.postings import (
-        BM25Index,
         bm25_search,
         build_bm25_index,
         build_postings,
@@ -145,35 +144,6 @@ def test_bm25_and_search_degenerate_inputs(spark):
     assert empty_idx.n_docs == 0 and empty_idx.avgdl is None
     out = bm25_search(empty_idx, ["merge"])
     assert out.collect() == [] and out.columns == ["doc_id", "score"]
-    # one-shot DataFrame path still works
-    from providenciasbigdata_spark.operators.postings import build_term_freqs
-
-    assert bm25_search(build_term_freqs(empty_docs), ["merge"]).collect() == []
-
-
-def test_bm25_search_accepts_deprecated_term_freqs_keyword(spark):
-    """r02 keyword callers keep working for one round (DeprecationWarning),
-    and mixing both spellings raises."""
-    import warnings
-
-    import pytest
-
-    from providenciasbigdata_spark.operators.postings import (
-        bm25_search,
-        build_term_freqs,
-    )
-
-    tfs = build_term_freqs(_rulings(spark))
-    with warnings.catch_warnings(record=True) as w:
-        warnings.simplefilter("always")
-        old = bm25_search(term_freqs=tfs, terms=["merge"], k=3).collect()
-        assert any(issubclass(x.category, DeprecationWarning) for x in w)
-    new = bm25_search(tfs, ["merge"], k=3).collect()
-    assert [tuple(r) for r in old] == [tuple(r) for r in new]
-    with pytest.raises(TypeError, match="not both"):
-        bm25_search(tfs, ["merge"], term_freqs=tfs)
-    with pytest.raises(TypeError, match="requires"):
-        bm25_search(terms=["merge"])
 
 
 def test_search_fuzzy_expansion_contract(spark):

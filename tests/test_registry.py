@@ -1,21 +1,10 @@
-"""Registry invariants: the external gate samples the first N entries
-of ``all_queries()``, so ordering and metadata are contracts, not
-conveniences."""
+"""Registry invariants: ``all_queries()`` is a deterministic merge of
+the query modules, and every rows-only entry says why it has no
+oracle."""
 
 from __future__ import annotations
 
 from providenciasbigdata_spark.queries import all_queries, why_no_oracle
-
-
-def test_oracle_backed_entries_precede_rows_only():
-    """The gate's sampled prefix must be 100% value-hash-verifiable:
-    every oracle-backed entry sorts before every rows-only entry."""
-    flags = [sql is None for _, (_fn, sql) in all_queries().items()]
-    first_rows_only = flags.index(True) if True in flags else len(flags)
-    assert all(flags[first_rows_only:]), (
-        "rows-only entries interleaved with oracle-backed ones — the gate "
-        "window would sample hash-uncheckable queries"
-    )
 
 
 def test_every_rows_only_entry_has_a_reason():
@@ -34,68 +23,23 @@ def test_registry_order_is_deterministic():
     assert a == b
 
 
-def test_gate_rotation_staleness_is_computed_and_bounded():
-    """Verdict r12 item 1: the rotation bookkeeping drifted once by
-    hand (STATUS claimed 'oldest green becomes r5'; recomputing the
-    committed artifacts showed two round-4 names). Pin the invariants
-    mechanically so the claim can never be hand-written again:
+def test_duplicate_query_name_raises(monkeypatch):
+    import types
 
-    (a) among externally-green oracle-backed entries, registry order is
-        stalest-green-first — their last-green rounds are non-decreasing
-        (red and never-green names sort even earlier by design);
-    (b) max staleness never exceeds one full rotation cycle
-        ceil(n_oracle / 50) plus one round of slack for a red window —
-        if this trips, gate coverage genuinely regressed.
-    """
-    import math
+    import pytest
 
-    from providenciasbigdata_spark.queries import _gate_history
+    from providenciasbigdata_spark import queries
 
-    n_rounds, green, red = _gate_history()
-    if n_rounds == 0:
-        return  # fresh checkout without artifacts: nothing to pin
-    q = all_queries()
-    oracle = [n for n, (_fn, sql) in q.items() if sql is not None]
-
-    greens_in_order = [green[n] for n in oracle if n in green and n not in red]
-    assert greens_in_order == sorted(greens_in_order), (
-        "registry order is not stalest-green-first: a regression in an "
-        "old operator could hide behind a one-time green"
-    )
-
-    staleness = {n: n_rounds - green[n] for n in oracle if n in green}
-    cycle = math.ceil(len(oracle) / 50)
-    worst = max(staleness.values(), default=0)
-    assert worst <= cycle + 1, (
-        f"stalest green is {worst} rounds old (> cycle bound {cycle}+1): "
-        f"{sorted(n for n, s in staleness.items() if s == worst)[:5]}"
-    )
+    twin = types.SimpleNamespace(QUERIES={next(iter(all_queries())): (None, None)})
+    monkeypatch.setattr(queries, "_MODULES", queries._MODULES + (twin,))
+    with pytest.raises(ValueError, match="duplicate query names"):
+        all_queries()
 
 
-def test_gate_staleness_distribution_matches_status_note():
-    """The per-round latest-green distribution STATUS reports must be
-    the COMPUTED one. This test prints it (pytest -s) and asserts the
-    two names the r12 verdict flagged as 8-rounds-stale lead the
-    current window whenever they are still the global minimum — i.e.
-    the self-correction actually engaged."""
-    from collections import Counter
+def test_every_headline_name_resolves():
+    """bench.py sweeps HEADLINE through the registry; a renamed or
+    removed query must fail here, not midway through a sweep."""
+    import bench
 
-    from providenciasbigdata_spark.queries import _gate_history
-
-    n_rounds, green, red = _gate_history()
-    if n_rounds == 0:
-        return
-    q = all_queries()
-    oracle = [n for n, (_fn, sql) in q.items() if sql is not None]
-    dist = Counter(green[n] for n in oracle if n in green)
-    print("latest-green distribution:", dict(sorted(dist.items())))
-    if not dist:
-        return
-    oldest = min(dist)
-    stalest = sorted(n for n in oracle if green.get(n) == oldest and n not in red)
-    window = set(oracle[:50])
-    missing = [n for n in stalest[:50] if n not in window]
-    assert not missing, (
-        f"stalest greens (round {oldest}) not all inside the 50-name "
-        f"gate window: {missing}"
-    )
+    missing = [n for n in bench.HEADLINE if n not in all_queries()]
+    assert not missing, f"bench.HEADLINE names not in the registry: {missing}"
