@@ -55,15 +55,11 @@ def tokenize(col: Column) -> Column:
     return F.filter(toks, lambda t: t != F.lit(""))
 
 
-def rulings_view(documents: DataFrame, with_stems: bool = False) -> DataFrame:
+def rulings_view(documents: DataFrame) -> DataFrame:
     """Project the fixture ``documents`` table into the reference's
     ruling fields (FIXTURES.md §1 pinned mapping) + a ``tokens`` column
-    (ingest-time tokenization, SURVEY.md §4.3). ``with_stems=True``
-    additionally materializes the full-Snowball stemmed tokens
-    (compat.stemming → compat.snowball, one pure-Catalyst expression
-    per token) — the ingest-time shape a stemmed search index
-    wants at scale (stem once per document, not per query)."""
-    out = documents.select(
+    (ingest-time tokenization, SURVEY.md §4.3)."""
+    return documents.select(
         F.col("doc_id"),
         F.concat(F.lit("P-"), F.col("doc_id").cast("string")).alias("providencia"),
         F.col("source").alias("tipo"),
@@ -71,37 +67,6 @@ def rulings_view(documents: DataFrame, with_stems: bool = False) -> DataFrame:
         F.col("text").alias("texto"),
         tokenize(F.col("text")).alias("tokens"),
     )
-    if with_stems:
-        # dictionary stemming (round 7): stem each DISTINCT token once
-        # — a vocabulary-sized job — then map tokens -> stems through a
-        # broadcast literal map. The full-Snowball Catalyst expression
-        # is interpreter-bound (too large for whole-stage codegen), so
-        # evaluating it per token OCCURRENCE costs ~0.5 ms/token;
-        # per distinct token it is noise. Vocabularies past the
-        # literal-map bound fall back to the per-occurrence expression
-        # (at that scale you materialize the dictionary as a table and
-        # join, the stem_postings shape).
-        from providenciasbigdata_spark.compat.stemming import (
-            stem_py,
-            stem_tokens,
-        )
-
-        vocab = [
-            r["t"]
-            for r in out.select(F.explode("tokens").alias("t")).distinct().collect()
-        ]
-        if len(vocab) <= 20_000:
-            pairs: list[Column] = []
-            for t in vocab:
-                pairs.append(F.lit(t))
-                pairs.append(F.lit(stem_py(t)))
-            m = F.create_map(*pairs) if pairs else F.create_map()
-            out = out.withColumn(
-                "stems", F.transform(F.col("tokens"), lambda t: m[t])
-            )
-        else:
-            out = out.withColumn("stems", stem_tokens(F.col("tokens")))
-    return out
 
 
 def distinct_values(df: DataFrame, field: str) -> DataFrame:
@@ -129,57 +94,26 @@ def stem_vocab_preimages(
     stemmed_terms: list[str],
     tokens_col: str,
     language: str,
-    collect_cutover: int = 100_000,
 ) -> list[str]:
     """Corpus-restricted preimage set of stemmed query terms — the
     dictionary trick every stemmed search index uses: stem the
-    DISTINCT-token vocabulary (one explode+distinct agg; vocabulary-
-    sized work however big the corpus), keep the tokens whose stem key
-    is in the query's stem set. The stem expression evaluates once per
-    distinct token instead of once per corpus token occurrence — the
-    full-Snowball Catalyst expression is interpreter-bound (too large
-    for whole-stage codegen), so per-occurrence evaluation is the
-    difference between a vocabulary-sized job and minutes of scan
-    (measured: ~0.5 ms/token interpreted).
+    DISTINCT-token vocabulary (one explode+distinct aggregate;
+    vocabulary-sized work however big the corpus) and keep the tokens
+    whose stem is in the query's stem set. The stem UDF
+    (compat.stemming.stem_col) and the filter run inside the job, so
+    only the matching preimages — bounded by the corpus forms of the
+    query terms — reach the driver.
 
     Returns a sorted literal list for a plain ``arrays_overlap`` scan
     predicate — the SAME plan shape as the unstemmed B1 search. Costs
-    one vocabulary job at query build (at scale you materialize the
-    dictionary once, as ``stem_postings`` does for the index path).
+    one vocabulary job at query build; an empty stem set costs none."""
+    from providenciasbigdata_spark.compat.stemming import stem_col
 
-    Two regimes (verdict-r8 item 4 — a 100 TB web corpus has 10^8-10^9
-    distinct tokens, so an unconditional full-vocab collect is a driver
-    OOM on the query path):
-
-    - vocabulary <= ``collect_cutover``: collect the distinct tokens
-      and stem through the PYTHON reference (microseconds per distinct
-      token) — building the generated Catalyst expression costs
-      thousands of py4j calls and would dominate a small-vocab job;
-    - above it: stem the vocabulary DISTRIBUTIVELY with the pure-
-      Catalyst Snowball expression and filter against the (tiny) query
-      stem set INSIDE the job — only the matching preimages (bounded
-      by the corpus forms of the query terms) ever reach the driver.
-      The ~20 s py4j expression-build cost is the right trade against
-      collecting 10^8 tokens."""
-    from providenciasbigdata_spark.compat.stemming import stem_col, stem_py
-
-    want = set(stemmed_terms)
+    want = sorted(set(stemmed_terms))
     if not want:
         return []
-    vocab_df = df.select(F.explode(F.col(tokens_col)).alias("t")).distinct()
-    # ONE job decides the regime AND serves the small path: limit
-    # cutover+1 returns the FULL vocabulary when it fits (no separate
-    # count job — the r9 bench showed the extra vocab aggregate on this
-    # hot query path), and exactly one sentinel row more when it
-    # doesn't.
-    probe = vocab_df.limit(collect_cutover + 1).collect()
-    if len(probe) <= collect_cutover:
-        return sorted(
-            r["t"] for r in probe if stem_py(r["t"], language) in want
-        )
-    matched = vocab_df.filter(
-        stem_col(F.col("t"), language).isin(*sorted(want))
-    )
+    vocab = df.select(F.explode(F.col(tokens_col)).alias("t")).distinct()
+    matched = vocab.filter(stem_col(F.col("t"), language).isin(*want))
     return sorted(r["t"] for r in matched.collect())
 
 
@@ -187,7 +121,6 @@ def text_match_condition(
     query: str,
     tokens_col: str = "tokens",
     stem: bool | str = False,
-    has_stems_col: bool = False,
     vocab_df: DataFrame | None = None,
 ) -> Column:
     """Mongo ``$text.$search`` matching as ONE composable Column — the
@@ -207,14 +140,14 @@ def text_match_condition(
       query with no positive part (only negations / empty) matches
       nothing, as in Mongo.
 
-    Stemming (``stem=True``) applies to bare and negated terms — via
-    the materialized ``stems`` column when present, else by stemming
-    the document tokens on the fly INSIDE the scan predicate (full
-    Snowball as one pure-Catalyst expression, compat/snowball.py) —
-    never to phrases: Mongo matches phrases against the raw (folded)
-    token stream. Both stemmed plans are one scan with a pushed
-    filter; the ingest-time ``stems`` column and the dictionary-
-    stemmed postings index are the scale paths.
+    Stemming (``stem=True`` = Spanish, or a language name) applies to
+    bare and negated terms, never to phrases: Mongo matches phrases
+    against the raw (folded) token stream. It is dictionary
+    expansion: each query stem is replaced by its preimage tokens in
+    the vocabulary of ``vocab_df`` (see ``stem_vocab_preimages``), so
+    the scan predicate stays a plain token overlap. A stemmed
+    condition needs that frame: ``stem`` without ``vocab_df`` raises
+    ``ValueError``, as does a language with no stemmer.
 
     The phrase predicate stays JVM-side with the same single-scan
     shape: ``' '||concat_ws(' ',tokens)||' ' CONTAINS ' p q '`` —
@@ -222,6 +155,21 @@ def text_match_condition(
     """
     import re
 
+    if stem:
+        from providenciasbigdata_spark.compat.stemming import (
+            normalize_language,
+            stem_py,
+        )
+
+        if vocab_df is None:
+            raise ValueError(
+                "a stemmed $text condition needs vocab_df, the frame "
+                "whose token vocabulary the query stems expand over"
+            )
+        # stem may be the legacy bool (True = the reference collection's
+        # Spanish) or a language name ("english" = Mongo's own default
+        # text-index language)
+        lang = "spanish" if stem is True else normalize_language(stem)
     terms, phrases, negated = parse_search_query(query)
     # a phrase that folds to zero tokens (pure punctuation) cannot
     # constrain anything — drop it before deciding if a positive
@@ -231,41 +179,16 @@ def text_match_condition(
     ]
     if not terms and not phrase_toks:
         return F.lit(False)
-    doc_side = F.col(tokens_col)
     if stem:
-        from providenciasbigdata_spark.compat.stemming import (
-            normalize_language,
-            stem_py,
-            stem_tokens,
+        terms = stem_vocab_preimages(
+            vocab_df, [stem_py(t, lang) for t in terms], tokens_col, lang
         )
-
-        # stem may be the legacy bool (True = the reference collection's
-        # Spanish) or a language name ("english" = Mongo's own default
-        # text-index language, verdict-r5 item 7)
-        lang = "spanish" if stem is True else normalize_language(stem)
-        terms = [stem_py(t, lang) for t in terms]
-        negated = [stem_py(t, lang) for t in negated]
-        if has_stems_col and lang == "spanish":
-            # the materialized ingest-time stems column is Spanish-
-            # stemmed (rulings_view)
-            doc_side = F.col("stems")
-        elif vocab_df is not None:
-            # no materialized stems: dictionary expansion — stem the
-            # distinct-token VOCABULARY once and replace each query
-            # stem by its corpus preimage tokens; the scan predicate
-            # stays a plain token overlap (the unstemmed B1 plan
-            # shape), and stem work is vocabulary-sized, never
-            # per-occurrence (see stem_vocab_preimages)
-            terms = stem_vocab_preimages(vocab_df, terms, tokens_col, lang)
-            negated = stem_vocab_preimages(vocab_df, negated, tokens_col, lang)
-        else:
-            # last resort (no df in scope, e.g. a bare composable
-            # condition): stem the document tokens inside the scan
-            # predicate — correct but interpreter-bound per token;
-            # callers with a frame should pass vocab_df
-            doc_side = stem_tokens(F.col(tokens_col), lang)
+        negated = stem_vocab_preimages(
+            vocab_df, [stem_py(t, lang) for t in negated], tokens_col, lang
+        )
+    tokens = F.col(tokens_col)
     if phrase_toks:
-        padded = F.concat(F.lit(" "), F.concat_ws(" ", F.col(tokens_col)), F.lit(" "))
+        padded = F.concat(F.lit(" "), F.concat_ws(" ", tokens), F.lit(" "))
         cond = F.lit(True)
         for ptoks in phrase_toks:
             cond = cond & padded.contains(" " + " ".join(ptoks) + " ")
@@ -274,10 +197,10 @@ def text_match_condition(
         # token stems to any query stem) — match nothing, like Mongo
         return F.lit(False)
     else:
-        cond = F.arrays_overlap(doc_side, F.array(*[F.lit(t) for t in terms]))
+        cond = F.arrays_overlap(tokens, F.array(*[F.lit(t) for t in terms]))
     if negated:
         cond = cond & ~F.arrays_overlap(
-            doc_side, F.array(*[F.lit(t) for t in negated])
+            tokens, F.array(*[F.lit(t) for t in negated])
         )
     return cond
 
@@ -286,7 +209,9 @@ def search_text(
     df: DataFrame, query: str, tokens_col: str = "tokens", stem: bool | str = False
 ) -> DataFrame:
     """A7/B1: keyword search — match ANY query term (OR),
-    case/diacritic-insensitively; unranked (SURVEY.md B6).
+    case/diacritic-insensitively; unranked (SURVEY.md B6). The full
+    ``$search`` grammar (quoted phrases, -negation) applies; see
+    ``text_match_condition``.
 
     ``{"$text": {"$search": q}}`` (reference streamlit_app.py:147).
     Query terms fold client-side into an array literal; the predicate
@@ -294,19 +219,14 @@ def search_text(
 
     ``stem=True`` reproduces the Spanish-stemmed matching of the
     reference's Mongo text index (language-default index on Spanish
-    legal text): query terms stem client-side, documents via the
-    materialized ``stems`` column when present, else by DICTIONARY
-    expansion (stem the distinct-token vocabulary once, replace each
-    query stem with its corpus preimage tokens — vocabulary-sized
-    work, scan predicate stays a plain token overlap) — all through
+    legal text): query terms stem client-side and expand to their
+    preimage tokens in ``df``'s vocabulary — vocabulary-sized work,
+    and the scan predicate stays a plain token overlap — all through
     the SAME full-Snowball algorithm (compat.snowball), so
     "providencias" matches "providencia". The unstemmed contract stays
     the default (B1 pin)."""
     return df.filter(
-        text_match_condition(
-            query, tokens_col, stem=stem, vocab_df=df,
-            has_stems_col="stems" in df.columns
-        )
+        text_match_condition(query, tokens_col, stem=stem, vocab_df=df)
     )
 
 
@@ -334,26 +254,6 @@ def parse_search_query(query: str) -> tuple[list[str], list[str], list[str]]:
         else:
             terms.extend(t for t in re.split(r"\W+", _fold(raw)) if t)
     return terms, phrases, negated
-
-
-def search_text_extended(
-    df: DataFrame, query: str, text_col: str = "texto", tokens_col: str = "tokens"
-) -> DataFrame:
-    """Mongo's full ``$search`` grammar — quoted phrases and -term
-    negation — over the compat search surface. Since round 5 this is
-    just ``search_text`` without stemming: the full grammar lives in
-    ``text_match_condition`` itself (so the MQL ``$text`` path gets it
-    too); this wrapper is kept for API stability. ``text_col`` is
-    unused (phrases match the token SEQUENCE, not a raw substring) and
-    retained only for signature compatibility.
-
-    match = (every quoted phrase present as a contiguous token run,
-             bare terms ignored for matching — Mongo's phrase rule;
-             else ANY bare term present)
-            AND no negated term present
-    """
-    del text_col  # phrases are token-sequence matches; see docstring
-    return df.filter(text_match_condition(query, tokens_col))
 
 
 def text_score_column(query: str, tokens_col: str = "tokens") -> Column:
@@ -423,31 +323,25 @@ def search_text_ranked(
     weighting: str = "overlap",
 ) -> DataFrame:
     """B6 extension (SURVEY §2.5 C-X4): relevance score + optional
-    top-k. Default ``weighting="overlap"`` = number of DISTINCT query
-    terms present (the round-2 pinned contract); ``weighting="tf"`` =
-    the Mongo-shaped tf score of ``text_score_tf_column``. Ties broken
-    by providencia for a total order. The compat search stays
-    unranked — ranking is opt-in."""
-    import re
-
-    terms = [t for t in re.split(r"\W+", _fold(query)) if t]
-    if not terms:
-        return df.filter(F.lit(False)).withColumn("score", F.lit(0).cast("long"))
+    top-k. The match follows the full ``$search`` grammar
+    (``text_match_condition``: phrases, -negation); the score is the
+    ``$meta: textScore`` one. Default ``weighting="overlap"`` = number
+    of DISTINCT positive bare terms present (``text_score_column``,
+    the round-2 pinned contract); ``weighting="tf"`` = the
+    Mongo-shaped tf score of ``text_score_tf_column``. Ties broken by
+    providencia for a total order. The compat search stays unranked —
+    ranking is opt-in."""
     if weighting == "tf":
-        scored = df.withColumn(
-            "score", text_score_tf_column(query, tokens_col)
-        ).filter(F.col("score") > 0)
+        score = text_score_tf_column(query, tokens_col)
     elif weighting == "overlap":
-        qarr = F.array(*[F.lit(t) for t in terms])
-        scored = df.withColumn(
-            "score",
-            F.size(
-                F.array_intersect(F.array_distinct(F.col(tokens_col)), qarr)
-            ).cast("long"),
-        ).filter(F.col("score") > 0)
+        score = text_score_column(query, tokens_col)
     else:
         raise ValueError(f"unknown weighting {weighting!r}; use 'overlap' or 'tf'")
-    ranked = scored.orderBy(F.desc("score"), F.asc("providencia"))
+    ranked = (
+        df.filter(text_match_condition(query, tokens_col))
+        .withColumn("score", score)
+        .orderBy(F.desc("score"), F.asc("providencia"))
+    )
     return ranked.limit(k) if k else ranked
 
 

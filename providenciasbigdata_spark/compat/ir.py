@@ -320,11 +320,10 @@ def _elem_condition(e: Column, spec: dict) -> Column:
 def _query_condition(
     query: dict, default_language: str = "none", frame: DataFrame | None = None
 ) -> Column:
-    """``frame`` (when the caller has it) enables the stemmed $text
-    dictionary path: the materialized ``stems`` column if present,
-    else vocabulary-preimage expansion — both vocabulary-sized stem
-    work (compat/documents.py::stem_vocab_preimages) instead of the
-    interpreter-bound per-occurrence strip expression."""
+    """``frame`` is the collection being filtered. A stemmed ``$text``
+    clause expands its query stems over that frame's token vocabulary
+    (compat/documents.py::stem_vocab_preimages); without a frame it
+    raises ``ValueError``."""
     conds: list[Column] = []
     for key, value in query.items():
         if key == "$text":
@@ -341,10 +340,9 @@ def _query_condition(
             # algorithm for them) inside normalize_language.
             lang = str(value.get("$language", default_language)).lower()
             stem: bool | str = False if lang == "none" else lang
-            conds.append(text_match_condition(
-                value["$search"], stem=stem, vocab_df=frame,
-                has_stems_col=frame is not None and "stems" in frame.columns,
-            ))
+            conds.append(
+                text_match_condition(value["$search"], stem=stem, vocab_df=frame)
+            )
         elif key == "$expr":
             # aggregation expressions inside find() (round 7): the full
             # _agg_expr grammar evaluated as a boolean predicate —

@@ -1,30 +1,26 @@
-"""Full Snowball stemmers (Spanish + English/Porter2), three agreeing
-evaluators per language.
+"""Full Snowball stemmers (Spanish + English/Porter2): a Python
+reference and a DuckDB SQL generator per language.
 
 Mongo's ``$text`` stems server-side with real Snowball (the reference
 relies on it at streamlit_app.py:147 — its ``transcripciones``
 collection is Spanish legal text; English is Mongo's text-index
-default). This module replaces the round-5 "Snowball-lite" rule tables
-with the FULL published algorithms (public spec:
-snowballstem.org/algorithms/{spanish,english}/stemmer.html), keeping
-the engine's three-surfaces architecture:
+default). This module implements the FULL published algorithms
+(public spec: snowballstem.org/algorithms/{spanish,english}/stemmer.html)
+as two evaluators:
 
   * ``stem_es_py`` / ``stem_en_py`` — pure-Python reference
-    implementations (query-term side, and the authority the other two
-    are pinned against);
-  * ``stem_word_col`` — ONE Catalyst Column expression per token: the
-    whole multi-step algorithm runs as ``F.aggregate`` over a literal
-    step list with a struct accumulator ``(w, r1, r2, rv, f)``.
-    Regions are computed once (they are absolute positions; every step
-    edits only the tail, so they stay valid), and each step is a
-    generated CASE whose branches reference only the lambda variables
-    — expression size stays LINEAR in the rule count (a naive
-    step-after-step inlining is exponential). No UDF: corpus-side
-    stemming is JVM-side and ingest-time, never per-query Python.
-  * ``stem_list_sql`` — the identical reduce, as DuckDB SQL
-    (``list_transform`` + ``list_reduce`` over the same step markers),
-    so stemmed queries stay DuckDB-oracle-checkable end to end
-    (document tokens AND the literal query terms both stem in SQL).
+    implementations. They stem query terms, and the engine runs them
+    over Spark data as one Arrow UDF (compat/stemming.py::stem_col);
+  * ``stem_list_sql`` — the same algorithm as DuckDB SQL
+    (``list_transform`` + ``list_reduce`` over a literal step list with
+    a struct accumulator ``(w, r1, r2, rv, f)``), so stemmed queries
+    stay DuckDB-oracle-checkable end to end (document tokens AND the
+    literal query terms both stem in SQL). Regions are computed once
+    (they are absolute positions; every step edits only the tail, so
+    they stay valid), and each step is a generated CASE whose branches
+    reference only the lambda variables — expression size stays LINEAR
+    in the rule count (a naive step-after-step inlining is
+    exponential).
 
 Divergence from Mongo, documented: the engine tokenizes with accent
 FOLDING before stemming (B1 contract, compat/documents.py), while
@@ -52,9 +48,6 @@ lite tables and are pinned in tests/test_snowball.py):
 from __future__ import annotations
 
 from functools import lru_cache
-
-from pyspark.sql import Column
-from pyspark.sql import functions as F
 
 # ---------------------------------------------------------------------------
 # shared character data
@@ -164,7 +157,7 @@ ES_STEP3_DELETE = _folded("os", "a", "o", "á", "í", "ó")
 ES_STEP3_E = _folded("e", "é")
 
 # English suffix maps (Porter2). Conditions beyond the region are coded
-# in the evaluators; the data here is shared by all three.
+# in the evaluators; the data here is shared by both.
 EN_EXCEPTIONS = {
     "skis": "ski", "skies": "sky", "dying": "die", "lying": "lie",
     "tying": "tie", "idly": "idl", "gently": "gentl", "ugly": "ugli",
@@ -485,131 +478,15 @@ def stem_word_py(token: str, language: str = "spanish") -> str:
 
 
 # ---------------------------------------------------------------------------
-# generated backends (Catalyst Column / DuckDB SQL) — ONE generator per
-# language step, two expression backends. Every step is a CASE whose
-# branches reference only the reduce lambda's accumulator, so the whole
-# stemmer is a single linear-size expression (see module docstring).
+# generated DuckDB SQL — ONE generator per language step over an
+# expression backend. Every step is a CASE whose branches reference
+# only the reduce lambda's accumulator, so the whole stemmer is a
+# single linear-size expression (see module docstring).
 # ---------------------------------------------------------------------------
-
-
-class _ColB:
-    """Catalyst expression backend."""
-
-    is_sql = False
-
-    def lit_s(self, s):
-        return F.lit(s)
-
-    def lit_i(self, n):
-        return F.lit(n)
-
-    def lit_b(self, b):
-        return F.lit(b)
-
-    def if_(self, c, a, b):
-        return F.when(c, a).otherwise(b)
-
-    def case(self, pairs, else_):
-        out = None
-        for c, v in pairs:
-            out = F.when(c, v) if out is None else out.when(c, v)
-        return else_ if out is None else out.otherwise(else_)
-
-    def and_(self, *cs):
-        out = cs[0]
-        for c in cs[1:]:
-            out = out & c
-        return out
-
-    def or_(self, *cs):
-        out = cs[0]
-        for c in cs[1:]:
-            out = out | c
-        return out
-
-    def not_(self, c):
-        return ~c
-
-    def eq(self, a, b):
-        return a == b
-
-    def ge(self, a, b):
-        return a >= b
-
-    def gt(self, a, b):
-        return a > b
-
-    def add(self, a, b):
-        return a + b
-
-    def sub(self, a, b):
-        return a - b
-
-    def length(self, w):
-        return F.length(w)
-
-    def endswith(self, w, s):
-        return w.endswith(s)
-
-    def startswith(self, w, s):
-        return w.startswith(s)
-
-    def in_strs(self, w, options):
-        return w.isin(*options)
-
-    def drop_end(self, w, k):
-        return w.substr(F.lit(1), F.length(w) - F.lit(k))
-
-    def drop_first(self, w):
-        return w.substr(F.lit(2), F.lit(512))
-
-    def append(self, w, s):
-        return F.concat(w, F.lit(s))
-
-    def char_before_suffix(self, w, k):
-        return w.substr(F.length(w) - F.lit(k), F.lit(1))
-
-    def char_at(self, w, i):
-        return w.substr(F.lit(i), F.lit(1))
-
-    def char_in(self, c, chars):
-        return c.isin(*chars)
-
-    def rlike(self, w, pat):
-        return w.rlike(pat)
-
-    def regexp_extract_len(self, w, pat):
-        return F.length(F.regexp_extract(w, pat, 0))
-
-    def substr_from(self, w, pos):
-        return w.substr(pos, F.lit(512))
-
-    def replace_all(self, w, frm, to):
-        return F.regexp_replace(w, frm, to)
-
-    def mark_y(self, w):
-        return F.regexp_replace(
-            F.regexp_replace(w, "^y", "Y"), "([aeiouy])y", "$1Y"
-        )
-
-    def fold_lower(self, t):
-        # the Python twin folds via _FOLD after .lower(); same table
-        return F.translate(F.lower(t), _FOLD_SRC, _FOLD_DST)
-
-    def struct5(self, w, r1, r2, rv, f):
-        return F.struct(
-            w.alias("w"), r1.alias("r1"), r2.alias("r2"),
-            rv.alias("rv"), f.alias("f"),
-        )
-
-    def get(self, acc, field):
-        return acc[field]
 
 
 class _SqlB:
     """DuckDB SQL expression backend (strings)."""
-
-    is_sql = True
 
     @staticmethod
     def _q(s):
@@ -695,9 +572,6 @@ class _SqlB:
 
     def substr_from(self, w, pos):
         return f"substr({w}, {pos})"
-
-    def replace_all(self, w, frm, to):
-        return f"regexp_replace({w}, {self._q(frm)}, {self._q(to)}, 'g')"
 
     def mark_y(self, w):
         inner = f"regexp_replace({w}, '^y', 'Y')"
@@ -925,9 +799,10 @@ _ES_STEPS = [_es_step0_g, _es_step1_g, _es_step2a_g, _es_step2b_g, _es_step3_g]
 
 
 def _init_en(B, t):
+    # the short-word and exception tests see the token BEFORE the
+    # initial apostrophe is removed (stem_en_py's order)
     t = B.fold_lower(t)
-    t = B.if_(B.startswith(t, "'"), B.drop_first(t), t)
-    w = B.mark_y(t)
+    w = B.mark_y(B.if_(B.startswith(t, "'"), B.drop_first(t), t))
     r1_std, _ = _r1r2(B, w, V_EN)
     r1 = B.case(
         [
@@ -1119,25 +994,7 @@ def _steps_for(language: str):
     return _EN_STEPS, _init_en, True
 
 
-# -- public generated surfaces ---------------------------------------------
-
-
-def stem_word_col(t: Column, language: str = "spanish") -> Column:
-    """Full Snowball over one (already folded, lowercase) token as a
-    single pure-Catalyst expression — the reduce-over-steps form."""
-    steps, init, unmark = _steps_for(language)
-    B = _ColB()
-    marker = F.array(*[F.lit(i) for i in range(len(steps))])
-
-    def merge(acc, s):
-        pairs = [(s == i, gen(B, acc)) for i, gen in enumerate(steps)]
-        return B.case(pairs, acc)
-
-    def finish(acc):
-        w = acc["w"]
-        return F.regexp_replace(w, "Y", "y") if unmark else w
-
-    return F.aggregate(marker, init(B, t), merge, finish)
+# -- public generated surface ---------------------------------------------
 
 
 def stem_word_sql(token_expr: str, language: str = "spanish") -> str:

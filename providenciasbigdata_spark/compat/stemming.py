@@ -1,42 +1,38 @@
-"""Stemming facade for the $text surface — FULL Snowball since round 7.
+"""Stemming facade for the $text surface — full Snowball.
 
 The reference's Mongo text index stems per-language server-side
 (reference streamlit_app.py:147 — db `transcripciones` holds Spanish
 legal text), so "providencias" finds documents containing
-"providencia". Rounds 3–6 shipped "Snowball-lite" two-step rule
-tables; round 7 (verdict-r6 item 3) replaces them with the FULL
-published Snowball algorithms — see compat/snowball.py for the
-implementation and the three-surfaces architecture:
+"providencia". The algorithms (Spanish, English/Porter2) live in
+compat/snowball.py; this module exposes them on two surfaces:
 
-  * ``stem_py``     — Python (query terms, client-side);
-  * ``stem_col`` /
-    ``stem_tokens`` — ONE pure-Catalyst Column expression per token
-                      (``F.aggregate`` over step markers with a struct
-                      accumulator) — corpus-side stemming is JVM-only
-                      and ingest-time, never a per-query UDF;
-  * ``stems_sql``   — the identical reduce as DuckDB SQL, so stemmed
-                      queries stay oracle-checkable end to end (the
-                      oracle stems BOTH document tokens and the
-                      literal query terms in SQL).
+  * ``stem_py``   — the Python reference: query terms client-side, and
+                    the function every other surface is pinned to;
+  * ``stem_col``  — the ONLY code that stems Spark data: ``stem_py``
+                    as one scalar Arrow (pandas) UDF, null in, null
+                    out;
+  * ``stems_sql`` — the identical algorithm as DuckDB SQL, generated
+                    from the same step tables, so stemmed queries stay
+                    oracle-checkable end to end (the oracle stems BOTH
+                    document tokens and the literal query terms).
 
-All three are pinned mutually equal over adversarial suffix-biased
-corpora (tests/test_snowball.py, tests/test_properties.py Hypothesis
-property with conjugation-biased generators).
+Corpus-side stemming always runs at VOCABULARY size: stemmed search
+expands each query stem into its corpus preimage tokens by stemming
+the distinct-token vocabulary (compat/documents.py::
+stem_vocab_preimages), and the stemmed postings index stems the
+token dictionary (operators/postings.py::stem_postings). The scan
+predicate stays a plain token overlap.
 
-Round-5's ``stem_preimages`` query-expansion device is gone: full
-Snowball is not compositionally invertible (replacement rules like
-encia→ente mean a stem is not a prefix of its preimages, and English
-1b e-restoration is many-to-one). A corpus with no materialized
-``stems`` column instead stems tokens on the fly inside the scan
-predicate — still one scan, still JVM-only (compat/documents.py);
-the scale paths are the ingest-time ``stems`` column
-(``rulings_view(with_stems=True)``) and the dictionary-stemmed
-postings index (operators/postings.py::stem_postings — the strip runs
-once per DISTINCT token, vocabulary-sized work).
+``stem_py`` == ``stems_sql`` and ``stem_col`` == ``stem_py`` are
+pinned over adversarial suffix-biased word lists
+(tests/test_snowball.py) and a Hypothesis property with
+conjugation-biased generators (tests/test_properties.py).
 """
 
 from __future__ import annotations
 
+import pandas as pd  # module-level: pandas_udf resolves the stringized
+                     # 'pd.Series' hints (future-annotations) via module globals
 from pyspark.sql import Column
 from pyspark.sql import functions as F
 
@@ -54,7 +50,8 @@ LANGUAGES = ("spanish", "english")
 
 def normalize_language(language) -> str:
     """Mongo ``$language`` value -> canonical algorithm key; unknown
-    languages raise (no algorithm — never silently unstemmed)."""
+    languages raise ``ValueError`` (no algorithm — never silently
+    unstemmed)."""
     key = _ALIASES.get(str(language).lower())
     if key is None:
         raise ValueError(
@@ -70,15 +67,17 @@ def stem_py(token: str, language: str = "spanish") -> str:
 
 
 def stem_col(t: Column, language: str = "spanish") -> Column:
-    """Full Snowball over one token Column as a single pure-Catalyst
-    expression (no UDF)."""
-    return snowball.stem_word_col(t, normalize_language(language))
-
-
-def stem_tokens(tokens: Column, language: str = "spanish") -> Column:
-    """Element-wise stem of a tokens array Column."""
+    """``stem_py`` over a string Column as one scalar Arrow UDF
+    (Arrow-batched; null tokens stay null)."""
     lang = normalize_language(language)
-    return F.transform(tokens, lambda t: snowball.stem_word_col(t, lang))
+
+    @F.pandas_udf("string")
+    def _stem(tokens: pd.Series) -> pd.Series:
+        return tokens.map(
+            lambda w: snowball.stem_word_py(w, lang), na_action="ignore"
+        )
+
+    return _stem(t)
 
 
 def stems_sql(list_expr: str, var: str = "snowtok", language: str = "spanish") -> str:

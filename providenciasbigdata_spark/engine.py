@@ -49,7 +49,12 @@ class ProvidenciasEngine:
         datasources.py) — the reference's production data path
         (streamlit_app.py:19-22) without a live server. Document
         queries run against the dump; graph queries still need the
-        embeddings table, so pass ``data_dir`` if you use them."""
+        embeddings table, so pass ``data_dir`` if you use them. The
+        mongodump format is registered here, once; requests never touch
+        the session configuration."""
+        from providenciasbigdata_spark import datasources
+
+        datasources.register(spark)
         eng = cls(spark, data_dir)
         eng._dump_dir = dump_dir
         return eng
@@ -70,7 +75,6 @@ class ProvidenciasEngine:
 
             from providenciasbigdata_spark import datasources
 
-            datasources.register(self.spark)
             docs = (
                 self.spark.read.format(datasources.FORMAT_NAME)
                 .schema(_DUMP_SCHEMA)
@@ -245,7 +249,9 @@ class ProvidenciasEngine:
             )
         from providenciasbigdata_spark import datasources
 
-        datasources.register(self.spark)
+        if self._dump_dir is None:
+            # a from_mongodump engine registered the format at construction
+            datasources.register(self.spark)
         return (
             self.spark.readStream.format(datasources.FORMAT_NAME)
             .schema(_DUMP_SCHEMA)

@@ -60,46 +60,24 @@ def build_postings(
     return postings
 
 
-def stem_postings(postings: DataFrame, dict_cutover: int = 200_000) -> DataFrame:
+def stem_postings(postings: DataFrame) -> DataFrame:
     """Derive a STEMMED inverted index from an existing one by stemming
     the dictionary: posting lists of tokens sharing a stem merge
     (union, sorted, distinct). Stemming runs once per DISTINCT token —
-    vocabulary-sized work — instead of once per token occurrence
+    vocabulary-sized work, through the Arrow stem UDF
+    (compat.stemming.stem_col) — instead of once per token occurrence
     across the corpus; at 100 TB the vocabulary is millions of rows
-    while the corpus is trillions of occurrences.
-
-    Two physical paths (round 7, full Snowball): a dictionary at or
-    below ``dict_cutover`` tokens is collected once, stemmed with the
-    Python reference (microseconds per token) and rejoined as a
-    BROADCAST token→stem frame — constructing the generated Catalyst
-    stemmer costs thousands of py4j calls and its evaluation is
-    interpreter-bound, so the collect-and-broadcast path wins by
-    orders of magnitude at any realistic dictionary size. Above the
-    cutover the single-expression Catalyst stemmer evaluates in place
-    (a one-time index-build cost; never per query).
+    while the corpus is trillions of occurrences. No driver action: the
+    result is a lazy frame.
 
     Output: (token=stem, postings, df) — same contract as
     ``build_postings``, consumable by every search function here.
     """
-    if dict_cutover and postings.count() <= dict_cutover:
-        from providenciasbigdata_spark.compat.stemming import stem_py
+    from providenciasbigdata_spark.compat.stemming import stem_col
 
-        spark = postings.sparkSession
-        vocab = [r["token"] for r in postings.select("token").collect()]
-        dict_df = spark.createDataFrame(
-            [(t, stem_py(t)) for t in vocab], "token string, __stem string"
-        )
-        stemmed = postings.join(F.broadcast(dict_df), "token").select(
-            F.col("__stem").alias("token"), "postings"
-        )
-    else:
-        from providenciasbigdata_spark.compat.stemming import stem_col
-
-        stemmed = postings.select(
-            stem_col(F.col("token")).alias("token"), "postings"
-        )
     return (
-        stemmed.groupBy("token")
+        postings.select(stem_col(F.col("token")).alias("token"), "postings")
+        .groupBy("token")
         .agg(
             F.sort_array(
                 F.array_distinct(F.flatten(F.collect_list("postings")))

@@ -20,10 +20,7 @@ from providenciasbigdata_spark.compat import (
     rulings_view,
     search_text,
 )
-from providenciasbigdata_spark.compat.documents import (
-    search_text_extended,
-    search_text_ranked,
-)
+from providenciasbigdata_spark.compat.documents import search_text_ranked
 from providenciasbigdata_spark.io import load_table
 
 # ---- shared SQL fragments (oracle side) --------------------------------
@@ -129,9 +126,7 @@ def q_a7_search_extended(spark: SparkSession, sf_dir: str) -> DataFrame:
     # Mongo $search grammar: the quoted phrase must appear as a token
     # run (bare terms only affect relevance once a phrase is present —
     # Mongo's phrase rule), 'error' must not appear
-    return _project(
-        search_text_extended(_rulings(spark, sf_dir), 'merge window -error "the"')
-    )
+    return _project(search_text(_rulings(spark, sf_dir), 'merge window -error "the"'))
 
 
 def q_a7_search_phrase(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -220,11 +215,12 @@ def q_a7_search_stemmed(spark: SparkSession, sf_dir: str) -> DataFrame:
     (reference streamlit_app.py:147): plural/derived query terms match
     base document tokens through the shared FULL Snowball algorithm
     (compat.snowball, round 7) — "values merges" finds documents
-    containing "value" or "merge". Runs the on-the-fly plan (no stems
-    column): document tokens stem INSIDE the scan predicate via the
-    single-expression Catalyst stemmer — still one scan, no join, no
-    exchange (plan-pinned). The materialized-stems path is exercised
-    by a7_search_postings_stemmed."""
+    containing "value" or "merge". Dictionary expansion: one
+    vocabulary job at query build stems the distinct tokens through
+    the Arrow stem UDF and replaces each query stem by its corpus
+    preimages, so the scan plan is the unstemmed one — one scan with
+    a token-overlap predicate, no join, no exchange (plan-pinned). The
+    index form is a7_search_postings_stemmed."""
     return _project(search_text(_rulings(spark, sf_dir), "values merges", stem=True))
 
 
@@ -426,7 +422,7 @@ _PREFIX_SQL = (
 
 def q_a7_search_postings_stemmed(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Stemmed search answered from a STEMMED inverted index, derived
-    by stemming the DICTIONARY of the token index (strip expression
+    by stemming the DICTIONARY of the token index (the Arrow stem UDF
     runs once per distinct token, not per corpus occurrence; posting
     lists of tokens sharing a stem merge) — the service-scale form of
     a7_search_stemmed, zero corpus scan at query time. Result must

@@ -27,6 +27,22 @@ def spark():
 
 
 @pytest.fixture(scope="session")
+def spark_stems(spark):
+    """Stem a word list through the Spark stem UDF
+    (compat.stemming.stem_col); returns the stems in input order."""
+    from pyspark.sql import functions as F
+
+    from providenciasbigdata_spark.compat.stemming import stem_col
+
+    def run(words, language="spanish"):
+        # a parallelized list under a narrow select collects in order
+        df = spark.createDataFrame([(w,) for w in words], "w string")
+        return [r.st for r in df.select(stem_col(F.col("w"), language).alias("st")).collect()]
+
+    return run
+
+
+@pytest.fixture(scope="session")
 def sf_dir():
     return SF_SMOKE
 

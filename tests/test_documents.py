@@ -157,18 +157,13 @@ def test_stem_py_spanish_forms():
         assert stem_py(word) == want, (word, stem_py(word), want)
 
 
-def test_stem_three_engine_parity(spark):
-    """stem_py (query side), stem_tokens (Catalyst corpus side) and
-    stems_sql (DuckDB oracle side) are generated from one rule table —
-    prove they agree on Spanish forms, English fixture tokens, and
-    degenerate shapes."""
+def test_stem_three_engine_parity(spark_stems):
+    """stem_py (query side), the stem UDF stem_col (Spark corpus side)
+    and stems_sql (DuckDB oracle side) must agree on Spanish forms,
+    English fixture tokens, and degenerate shapes."""
     import duckdb
 
-    from providenciasbigdata_spark.compat.stemming import (
-        stem_py,
-        stem_tokens,
-        stems_sql,
-    )
+    from providenciasbigdata_spark.compat.stemming import stem_py, stems_sql
 
     words = [w for w, _ in _STEM_PINS] + [
         "tables", "merges", "values", "queries", "customer", "filters",
@@ -176,13 +171,7 @@ def test_stem_three_engine_parity(spark):
     ]
     want = [stem_py(w) for w in words]
 
-    got_spark = (
-        spark.createDataFrame([(words,)], "toks: array<string>")
-        .select(stem_tokens(F.col("toks")).alias("st"))
-        .first()
-        .st
-    )
-    assert got_spark == want
+    assert spark_stems(words) == want
 
     lit = "[" + ", ".join(f"'{w}'" for w in words) + "]"
     got_duck = duckdb.sql(f"SELECT {stems_sql(lit)} AS st").fetchone()[0]
@@ -190,33 +179,114 @@ def test_stem_three_engine_parity(spark):
 
 
 def test_search_text_stemmed_matches_plurals(spark, sf_dir):
-    df = rulings_view(load_table(spark, sf_dir, "documents"), with_stems=True)
+    df = _rulings(spark, sf_dir)
     # fixture docs contain 'value'/'merge'; the plural query only hits
     # through stemming ("values"/"merges" both strip the vowel+s plural)
     unstemmed = search_text(df, "values merges")
     stemmed = search_text(df, "values merges", stem=True)
     base = search_text(df, "value merge")
     assert stemmed.count() == base.count() > unstemmed.count()
-    # on-the-fly path (no stems column) must agree with materialized
-    no_col = search_text(rulings_view(load_table(spark, sf_dir, "documents")),
-                         "values merges", stem=True)
-    assert no_col.count() == stemmed.count()
 
 
-def test_stem_vocab_preimages_distributed_cutover(spark, sf_dir):
-    """Verdict-r8 item 4: above the vocabulary cutover the preimage set
-    is computed DISTRIBUTIVELY (Catalyst Snowball stem + filter against
-    the query stems inside the job; only matches reach the driver) —
-    results must be identical to the collect-and-stem-in-Python path,
-    and the forced-distributed run must actually find preimages."""
+def test_stem_vocab_preimages_matches_python_reference(spark, sf_dir):
+    """The preimage set the stem UDF computes inside the vocabulary job
+    equals the one a pure-Python pass over the collected corpus
+    tokens gives, and the fixture corpus does contain preimages."""
     from providenciasbigdata_spark.compat.documents import stem_vocab_preimages
     from providenciasbigdata_spark.compat.stemming import stem_py
 
     df = _rulings(spark, sf_dir)
     stems = sorted({stem_py(w) for w in ("values", "merges")})
-    driver_path = stem_vocab_preimages(df, stems, "tokens", "spanish")
-    distributed = stem_vocab_preimages(
-        df, stems, "tokens", "spanish", collect_cutover=0
+    got = stem_vocab_preimages(df, stems, "tokens", "spanish")
+    vocab = {t for r in df.select("tokens").collect() for t in r.tokens}
+    assert got == sorted(t for t in vocab if stem_py(t) in stems)
+    assert got
+
+
+def test_stemming_degenerate_inputs(spark):
+    """Degenerate inputs on the one stemming path: empty corpus, empty
+    query, a null token element, an unknown $language and a stemmed
+    condition with no frame give the oracle answer or the documented
+    ValueError; stem_postings of an empty index is an empty index."""
+    import pytest
+
+    from providenciasbigdata_spark.compat.documents import (
+        stem_vocab_preimages,
+        text_match_condition,
     )
-    assert distributed == driver_path
-    assert distributed  # the fixture corpus contains value/merge forms
+    from providenciasbigdata_spark.compat.ir import mql_find
+    from providenciasbigdata_spark.operators.postings import (
+        build_postings,
+        stem_postings,
+    )
+
+    schema = "doc_id long, text string"
+    empty = rulings_view(
+        spark.createDataFrame([], schema).withColumn("source", F.lit("s"))
+    )
+    docs = rulings_view(
+        spark.createDataFrame([(1, "merge values"), (2, "hash")], schema)
+        .withColumn("source", F.lit("s"))
+    )
+    assert search_text(empty, "values", stem=True).count() == 0
+    assert stem_vocab_preimages(empty, ["valu"], "tokens", "spanish") == []
+    for q in ("", "   ", "-values"):
+        assert search_text(docs, q, stem=True).count() == 0
+        assert search_text(docs, q, stem="english").count() == 0
+    # a null element inside a token array never matches and never
+    # reaches the stemmer's output
+    nulls = spark.createDataFrame(
+        [(1, ["merges", None]), (2, [None])], "doc_id long, tokens array<string>"
+    )
+    assert stem_vocab_preimages(nulls, ["merg"], "tokens", "english") == ["merges"]
+    assert [r.doc_id for r in search_text(nulls, "merged", stem="english").collect()] == [1]
+    # unknown language: documented ValueError on every surface
+    with pytest.raises(ValueError, match="unsupported stemming language"):
+        search_text(docs, "values", stem="klingon")
+    with pytest.raises(ValueError, match="unsupported stemming language"):
+        mql_find(docs, {"$text": {"$search": "values", "$language": "klingon"}})
+    # a stemmed condition needs the frame whose vocabulary it expands over
+    with pytest.raises(ValueError, match="needs vocab_df"):
+        text_match_condition("values", stem=True)
+    # the empty index stems to an empty index with the postings contract
+    idx = stem_postings(build_postings(empty))
+    assert idx.columns == ["token", "postings", "df"]
+    assert idx.collect() == []
+
+
+def test_search_text_ranked_follows_search_grammar(spark):
+    """Ranked search matches exactly what search_text matches (phrases
+    gate the match, -terms exclude) under both weightings; the overlap
+    score counts distinct positive bare terms, like textScore."""
+    from providenciasbigdata_spark.compat.documents import search_text_ranked
+
+    rows = [
+        (1, "merge sort merge"),
+        (2, "merge window"),
+        (3, "window only"),
+        (4, "the cat merge"),
+        (5, "cat the"),
+    ]
+    df = rulings_view(
+        spark.createDataFrame(rows, "doc_id long, text string")
+        .withColumn("source", F.lit("s"))
+    )
+    want = {
+        "merge -window": {1, 4},
+        '"the cat" window': {4},
+        "Merge WINDOW -cat": {1, 2, 3},
+        "-window": set(),
+        "": set(),
+    }
+    for q, ids in want.items():
+        assert {r.doc_id for r in search_text(df, q).collect()} == ids, q
+        for weighting in ("overlap", "tf"):
+            got = search_text_ranked(df, q, weighting=weighting).collect()
+            assert {r.doc_id for r in got} == ids, (q, weighting)
+    scores = {
+        r.doc_id: r.score
+        for r in search_text_ranked(df, '"the cat" merge window').collect()
+    }
+    assert scores == {4: 1}
+    ranked = search_text_ranked(df, "merge window -cat", k=2).collect()
+    assert [(r.doc_id, r.score) for r in ranked] == [(2, 2), (1, 1)]

@@ -378,6 +378,34 @@ def test_engine_from_mongodump_matches_parquet(spark):
     ).count()
 
 
+def test_dump_engine_registers_the_format_once(spark, monkeypatch):
+    """A dump engine registers the mongodump format at construction;
+    requests (rulings(), facets, queries, its own stream) never call
+    register again, so they never touch the session-global config.
+    An engine not built from a dump registers when it streams."""
+    from providenciasbigdata_spark.engine import ProvidenciasEngine
+
+    dump_dir = _ensure_dump(spark, SF)
+    calls = []
+    real = datasources.register
+
+    def counting(s):
+        calls.append(s)
+        real(s)
+
+    monkeypatch.setattr(datasources, "register", counting)
+    eng = ProvidenciasEngine.from_mongodump(spark, dump_dir, SF)
+    assert len(calls) == 1
+    eng.rulings()
+    eng.rulings()
+    assert eng.facet_options("tipo")
+    assert eng.query_rulings(tipo="src3").count() > 0
+    eng.rulings_stream()
+    assert len(calls) == 1
+    ProvidenciasEngine(spark, SF).rulings_stream(dump_dir)
+    assert len(calls) == 2
+
+
 def test_mongodump_fresh_load_per_query_is_isolated(spark):
     """The Python-DataSource runtime caches the planned reader — with
     its pushed filters — per loaded relation, so the safe pattern

@@ -127,23 +127,18 @@ _TOKEN = st.one_of(
 @pytest.mark.parametrize("language", ["spanish", "english"])
 @settings(max_examples=10, deadline=None)
 @given(tokens=st.lists(_TOKEN, min_size=1, max_size=20))
-def test_stemmer_three_engine_parity_property(spark, language, tokens):
-    """stem_py / stem_col / stems_sql are generated from one rule
-    table per language; adversarial random tokens (including ones
-    landing exactly on suffix boundaries and min-stem edges) must
-    agree across all three, for BOTH languages."""
+def test_stemmer_three_engine_parity_property(spark_stems, language, tokens):
+    """stem_py is the reference; the Spark stem UDF (stem_col) runs it
+    over a DataFrame and stems_sql is generated from the same rule
+    tables. Adversarial random tokens (including ones landing exactly
+    on suffix boundaries and min-stem edges) must agree across all
+    three, for BOTH languages."""
     import duckdb
 
-    from providenciasbigdata_spark.compat.stemming import stem_py, stem_tokens
+    from providenciasbigdata_spark.compat.stemming import stem_py
 
     want = [stem_py(t, language) for t in tokens]
-    got_spark = (
-        spark.createDataFrame([(tokens,)], "toks: array<string>")
-        .select(stem_tokens(F.col("toks"), language).alias("st"))
-        .first()
-        .st
-    )
-    assert got_spark == want
+    assert spark_stems(tokens, language) == want
 
     from providenciasbigdata_spark.compat.stemming import stems_sql
 
@@ -158,12 +153,11 @@ def test_stemmer_three_engine_parity_property(spark, language, tokens):
 def test_stem_fold_invariance(language, tokens):
     """The stem key is a pure function of the FOLDED token (the B1
     stream the engine actually stores), so raw accented text and
-    pre-folded tokens produce identical keys — what makes the
-    materialized ``stems`` column, the on-the-fly scan predicate, and
-    client-side query-term stemming interchangeable. Keys also never
-    leak the Porter2 consonant-y marking, and they never grow past the
-    input (every Snowball action is a tail strip or a shortening
-    replacement), so a stems column never widens storage."""
+    pre-folded tokens produce identical keys — what makes
+    client-side query-term stemming and the vocabulary stemmed from
+    the stored tokens interchangeable. Keys also never leak the Porter2
+    consonant-y marking, and they never grow past the input (every
+    Snowball action is a tail strip or a shortening replacement)."""
     from providenciasbigdata_spark.compat.snowball import fold
     from providenciasbigdata_spark.compat.stemming import stem_py
 

@@ -5,9 +5,9 @@ The implementation targets the published algorithms
 (snowballstem.org/algorithms/{spanish,english}/stemmer.html) over
 accent-FOLDED input (the engine's B1 tokenize contract; divergence
 from Mongo's stem-then-fold documented in the module). Pins below are
-hand-traced against the spec; the parity tests then pin the Catalyst
-and DuckDB surfaces to the Python reference over suffix-biased
-corpora, so a regression in any surface is caught by value, not by
+hand-traced against the spec; the parity tests then pin the Spark
+stem UDF and the DuckDB SQL to the Python reference over
+suffix-biased corpora, so a regression in any surface is caught by value, not by
 construction claims.
 """
 
@@ -15,14 +15,9 @@ from __future__ import annotations
 
 import duckdb
 import pytest
-from pyspark.sql import functions as F
 
 from providenciasbigdata_spark.compat import snowball
-from providenciasbigdata_spark.compat.stemming import (
-    stem_py,
-    stem_tokens,
-    stems_sql,
-)
+from providenciasbigdata_spark.compat.stemming import stem_py, stems_sql
 
 # ---- Spanish: hand-traced vectors -----------------------------------------
 
@@ -186,15 +181,35 @@ def test_duckdb_parity_exhaustive(language):
 
 
 @pytest.mark.parametrize("language", ["spanish", "english"])
-def test_catalyst_parity_exhaustive(spark, language):
+def test_udf_parity_exhaustive(spark_stems, language):
     words = _adversarial_words(language)
-    got = (
-        spark.createDataFrame([(words,)], "toks: array<string>")
-        .select(stem_tokens(F.col("toks"), language).alias("st"))
-        .first()
-        .st
-    )
+    got = spark_stems(words, language)
     want = [stem_py(w, language) for w in words]
     assert got == want, [
         (w, g, x) for w, g, x in zip(words, got, want) if g != x
     ][:10]
+
+
+def test_stem_degenerate_tokens(spark_stems):
+    """Null in, null out on the Spark surface; a token whose stem is
+    the empty string ("''s": the leading apostrophe and the possessive
+    both strip in Porter2) stays "" on every surface; an unknown
+    language raises the documented ValueError on every entry point."""
+    from pyspark.sql import functions as F
+
+    from providenciasbigdata_spark.compat.stemming import stem_col
+
+    assert spark_stems([None, "values", None], "english") == [None, "valu", None]
+    assert spark_stems([], "spanish") == []
+    assert stem_py("''s", "english") == ""
+    assert spark_stems(["''s"], "english") == [""]
+    quoted = "''s".replace("'", "''")
+    sql = stems_sql(f"['{quoted}']", language="english")
+    assert duckdb.sql(f"SELECT {sql}").fetchone()[0] == [""]
+    for call in (
+        lambda: stem_py("values", "klingon"),
+        lambda: stem_col(F.col("w"), "klingon"),
+        lambda: stems_sql("['values']", language="klingon"),
+    ):
+        with pytest.raises(ValueError, match="unsupported stemming language"):
+            call()
