@@ -2,22 +2,46 @@
 
 The reference's graph surface is a single anchored 1-hop read
 (streamlit_app.py:60-64); these are the engine-side analytics a
-precomputed similarity graph enables. Both are driver-coordinated
-fixed-point loops — the one legitimate use of driver-side control flow:
-the driver holds only iteration counters and convergence counts, never
-row data.
+precomputed similarity graph enables: components, hop and weighted
+distances, shortest-path counts, PageRank variants, eigenvector
+centrality, k-core, k-truss, SCC, label propagation, link prediction
+and seed-sampled closeness and betweenness.
 
-Scale notes: each iteration is one equi-join + one partial-agg shuffle,
-both keyed on node id — a stable partitioning Catalyst reuses across
-iterations. ``localCheckpoint`` every few rounds truncates the growing
-lineage (otherwise plan size, not data, becomes the bottleneck).
-GraphFrames/Pregel would be the library route; this stays dependency-free.
+One size gate decides how the fixed-point operators run. Each counts
+its normalized edge set once: up to ``_DRIVER_MAX_EDGES`` edges (~3 MB)
+it collects the edges and runs the same fixed point on the driver in
+Python/numpy, because a distributed loop over a tiny graph pays
+per-round scheduling and plan-analysis latency for sub-millisecond
+compute. An empty edge set always finishes on the driver. Larger inputs
+run the distributed loop, where the driver holds only iteration counters
+and convergence counts, never row data. Both paths give the same answer
+(the tests force the distributed side by setting the constant to 0).
+
+Scale notes: each distributed iteration is one equi-join + one
+partial-agg shuffle, both keyed on node id — a stable partitioning
+Catalyst reuses across iterations. ``_truncator`` cuts the growing
+lineage every round (otherwise plan size, not data, becomes the
+bottleneck). GraphFrames/Pregel would be the library route; this stays
+dependency-free.
 """
 
 from __future__ import annotations
 
+from collections import Counter
+
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
+
+# Largest edge set the fixed-point operators finish on the driver.
+_DRIVER_MAX_EDGES = 200_000
+
+
+def _driver_rows(df: DataFrame):
+    """The collected rows of ``df`` when it has at most
+    ``_DRIVER_MAX_EDGES`` rows, else None (run the distributed loop)."""
+    if df.count() > _DRIVER_MAX_EDGES:
+        return None
+    return df.collect()
 
 
 def _truncator(df_session, checkpoint_dir):
@@ -37,20 +61,89 @@ def _truncator(df_session, checkpoint_dir):
     return lambda df, eager=True: df.checkpoint(eager=eager)
 
 
-def _cast_like(spark, dtype, value):
-    """Coerce a python anchor/target value through the SAME Spark cast
-    the distributed loops apply to their seed frames (string -> edge id
-    type), so the driver finishers key their dicts with values equal to
-    the collected edge ids (ADVICE r13: a string anchor over long ids
-    otherwise silently misses every adjacency lookup). One local-
-    relation job; callers gate it behind a python-type-mismatch check
-    so the common matched-type path pays nothing."""
-    if value is None:
-        return None
+def _as_edge_id(spark, dtype, value, sample):
+    """``value`` coerced to the edge id type through the SAME Spark cast
+    the distributed loops apply to their seed frames, so a driver
+    finisher keys its dicts with values equal to the collected ids (a
+    string anchor over long ids otherwise misses every adjacency
+    lookup). ``sample`` is one collected id; the one-row cast job runs
+    only when the Python types differ."""
+    if value is None or type(value) is type(sample):
+        return value
     return (
         spark.createDataFrame([(str(value),)], "v string")
         .select(F.col("v").cast(dtype))
         .first()[0]
+    )
+
+
+def _adjacency(rows) -> dict:
+    """{u: [v, ...]} over collected (u, v) rows."""
+    adj: dict = {}
+    for r in rows:
+        adj.setdefault(r["u"], []).append(r["v"])
+    return adj
+
+
+def _bfs_hops(adj: dict, source, max_hops: int, target=None) -> dict:
+    """Level-synchronous BFS on the driver: {node: hops} for every node
+    within ``max_hops`` of ``source``. With ``target``, stops after the
+    level where it first appears — the distributed loops' truncation."""
+    hops = {source: 0}
+    level = [source]
+    for hop in range(1, max_hops + 1):
+        nxt = {v for u in level for v in adj.get(u, ()) if v not in hops}
+        if not nxt:
+            break
+        for v in nxt:
+            hops[v] = hop
+        level = list(nxt)
+        if target is not None and target in nxt:
+            break
+    return hops
+
+
+def _edge_arrays(rows):
+    """Driver-side arrays for the power iterations over collected
+    (u, v, w) rows: sorted node ids, their index map, and per edge the
+    source index, destination index and weight."""
+    import numpy as np
+
+    ids = sorted({r["u"] for r in rows} | {r["v"] for r in rows})
+    ix = {v: i for i, v in enumerate(ids)}
+    usrc = np.array([ix[r["u"]] for r in rows], dtype=np.int64)
+    vdst = np.array([ix[r["v"]] for r in rows], dtype=np.int64)
+    w = np.array([r["w"] for r in rows], dtype=np.float64)
+    return ids, ix, usrc, vdst, w
+
+
+def _weighted_edges(edges: DataFrame, src: str, dst: str, weight_col) -> DataFrame:
+    """Persisted (u, v, w) transition edges for the power iterations.
+    Unweighted: distinct pairs at w = 1.0. Weighted: the probability of
+    following an edge is its weight over the source's total out-weight —
+    the similarity-graph random walk (heavier SIMILAR edges pull more
+    rank). Parallel edges collapse by SUM of weights; non-positive
+    weights are dropped (they carry no transition probability)."""
+    if weight_col is None:
+        return (
+            edges.select(F.col(src).alias("u"), F.col(dst).alias("v"))
+            .distinct()
+            .withColumn("w", F.lit(1.0))
+            .persist()
+        )
+    return (
+        edges.filter(F.col(weight_col) > 0)
+        .groupBy(F.col(src).alias("u"), F.col(dst).alias("v"))
+        .agg(F.sum(F.col(weight_col).cast("double")).alias("w"))
+        .persist()
+    )
+
+
+def _endpoints(e: DataFrame) -> DataFrame:
+    """Distinct node ids (``id``) incident to the (u, v) edges."""
+    return (
+        e.select(F.col("u").alias("id")).union(e.select(F.col("v").alias("id")))
+        .distinct()
     )
 
 
@@ -66,9 +159,7 @@ def connected_components(
     src: str = "src",
     dst: str = "dst",
     max_iter: int = 50,
-    checkpoint_every: int = 1,
     checkpoint_dir: str | None = None,
-    small_cutover: int = 200_000,
 ) -> DataFrame:
     """Connected components by alternating LARGE-STAR / SMALL-STAR
     edge contraction (Kiveris et al., "Connected Components in
@@ -92,14 +183,10 @@ def connected_components(
     accepted as set equality (collision odds < 2^-120; ``max_iter``
     bounds the loop regardless).
 
-    Small-subproblem cutover (the same FW-BW-style finisher
-    ``strongly_connected_components`` uses): when the normalized edge
-    set fits the driver (``small_cutover`` edges, ~3 MB at the
-    default) the fixed point resolves with sequential union-find
-    instead — a fixed-point loop over a tiny edge set pays per-round
-    scheduling + plan-analysis latency for sub-millisecond compute.
-    Labels are identical by construction (min id of each component);
-    the distributed loop stays pytest-pinned via ``small_cutover=0``.
+    Driver finisher (the module's size gate): a normalized edge set
+    of at most ``_DRIVER_MAX_EDGES`` edges resolves with sequential
+    union-find instead. Labels are identical by construction (min id
+    of each component).
 
     Output: (id, component), one row per node incident to an edge.
     """
@@ -144,8 +231,9 @@ def connected_components(
         .filter(F.col("u") != F.col("v"))
         .distinct()
     )
-    if small_cutover and cur.count() <= small_cutover:
-        comp = _union_find_cc([(r["u"], r["v"]) for r in cur.collect()])
+    rows = _driver_rows(cur)
+    if rows is not None:
+        comp = _union_find_cc([(r["u"], r["v"]) for r in rows])
         labels = spark.createDataFrame(
             sorted(comp.items()),
             schema=cur.select(
@@ -156,14 +244,13 @@ def connected_components(
             "id", F.coalesce("component", F.col("id")).alias("component")
         )
     prev_sig = None
-    for i in range(max_iter):
+    for _ in range(max_iter):
         cur = star(star(cur, large=True), large=False)
         # LAZY truncation fused with the convergence signature: the
         # aggregate below materializes the checkpoint blocks, so each
         # round runs ONE job (eager-ckpt + separate check measured 2x
         # the wall time on job-overhead-bound fixture graphs)
-        if (i + 1) % checkpoint_every == 0:
-            cur = ckpt(cur, eager=False)
+        cur = ckpt(cur, eager=False)
         sig = tuple(
             cur.agg(
                 F.count("*"),
@@ -193,7 +280,6 @@ def bfs_distances(
     directed: bool = True,
     checkpoint_dir: str | None = None,
     target=None,
-    small_cutover: int = 200_000,
 ) -> DataFrame:
     """Hop distances from one anchor node — frontier-expansion BFS.
     Generalizes the reference's 1-hop page (streamlit_app.py:60-64) and
@@ -211,6 +297,10 @@ def bfs_distances(
     prove unreachability). The check rides the level's already-
     materialized frontier; all-distances callers just omit it.
 
+    Driver finisher (the module's size gate): hop counts are
+    integers, so the level-synchronous Python BFS reproduces the
+    distributed loop's answer exactly, target truncation included.
+
     Output: (id, hops) for every node reachable within ``max_hops``
     (anchor included at 0); with ``target``, complete only up to the
     target's level.
@@ -226,44 +316,20 @@ def bfs_distances(
     visited = visited.withColumn("id", F.col("id").cast(e.schema["u"].dataType))
     frontier = visited.select("id")
 
-    if small_cutover and e.count() <= small_cutover:
-        # driver finisher (round 13 — the SCC/CC/pagerank small-
-        # subproblem pattern, guide §1.2: a fixed-point loop over a
-        # tiny graph pays per-round scheduling latency for sub-ms
-        # compute). Hop counts are integers, so the python
-        # level-synchronous BFS reproduces the distributed loop's
-        # answer EXACTLY — including the target truncation (stop after
-        # completing the level where the target appears). Pinned equal
-        # via small_cutover=0 in tests/test_graph_cutover.py.
-        rows = e.collect()
+    rows = _driver_rows(e)
+    if rows is not None:
         e.unpersist()
         if not rows:
             # no edges: the anchor alone at hop 0, typed by the same
             # cast the distributed path applies
             return visited
-        # ADVICE r13: the distributed loop casts the anchor to the edge
-        # id type (visited above); the python finisher must key its
-        # dicts with the SAME coerced value or a string anchor over
-        # non-string ids silently returns anchor-only results. The
-        # one-row local job runs only on a type mismatch.
-        if type(anchor) is not type(rows[0]["u"]):
-            anchor = visited.first()["id"]
-        if target is not None and type(target) is not type(rows[0]["u"]):
-            target = _cast_like(spark, e.schema["u"].dataType, target)
-        adj: dict = {}
-        for r in rows:
-            adj.setdefault(r["u"], []).append(r["v"])
-        hops = {anchor: 0}
-        level = [anchor]
-        for hop in range(1, max_hops + 1):
-            nxt = {v for u in level for v in adj.get(u, ()) if v not in hops}
-            if not nxt:
-                break
-            for v in nxt:
-                hops[v] = hop
-            level = list(nxt)
-            if target is not None and target in nxt:
-                break
+        dtype, sample = e.schema["u"].dataType, rows[0]["u"]
+        hops = _bfs_hops(
+            _adjacency(rows),
+            _as_edge_id(spark, dtype, anchor, sample),
+            max_hops,
+            _as_edge_id(spark, dtype, target, sample),
+        )
         return spark.createDataFrame(sorted(hops.items()), schema=visited.schema)
 
     for hop in range(1, max_hops + 1):
@@ -307,7 +373,6 @@ def shortest_path_sigma(
     max_hops: int = 30,
     directed: bool = False,
     checkpoint_dir: str | None = None,
-    small_cutover: int = 200_000,
 ) -> DataFrame:
     """Length of the shortest anchor->target path AND the number of
     distinct shortest paths (Cypher's ``allShortestPaths`` cardinality)
@@ -332,7 +397,15 @@ def shortest_path_sigma(
     redundantly store BOTH orientations of one logical edge, and
     summing would double every path count; a frame that stores each
     undirected relationship once keeps its duplicates counted.
+
+    Driver finisher (the module's size gate): sigma counting is integer
+    arithmetic over the same level-synchronous expansion, so the Python
+    loop is exact; the multiplicity table comes from the Spark
+    aggregate either way.
     """
+    spark = edges.sparkSession
+    if anchor == target:
+        return spark.createDataFrame([(0, 1)], "hops long, sigma long")
     fwd = edges.select(F.col(src).alias("u"), F.col(dst).alias("v"))
     if directed:
         e = fwd.groupBy("u", "v").agg(F.count(F.lit(1)).alias("mult"))
@@ -344,35 +417,19 @@ def shortest_path_sigma(
             .agg(F.max("c").alias("mult"))
         )
     e = e.persist()
-    spark = edges.sparkSession
     ckpt = _truncator(spark, checkpoint_dir)
     level = spark.createDataFrame([(anchor, 1)], "id string, sigma long")
     level = level.withColumn("id", F.col("id").cast(e.schema["u"].dataType))
     visited = level.select("id")
-    if anchor == target:
-        e.unpersist()
-        return spark.createDataFrame(
-            [(0, 1)], "hops long, sigma long"
-        )
 
-    if small_cutover and e.count() <= small_cutover:
-        # driver finisher (round 13 — SCC/CC/pagerank pattern): sigma
-        # counting is integer arithmetic over the SAME level-
-        # synchronous expansion, so the python loop is exact; pinned
-        # equal via small_cutover=0 in tests/test_graph_cutover.py
-        # (including the multigraph multiplicity contract — the mult
-        # table is computed by the Spark aggregate above either way).
-        rows = e.collect()
+    rows = _driver_rows(e)
+    if rows is not None:
         e.unpersist()
         if not rows:
             return spark.createDataFrame([], "hops long, sigma long")
-        # ADVICE r13: key the python dicts with the SAME cast values the
-        # distributed loop compares (string anchor/target over non-string
-        # ids otherwise reports the target unreachable). Mismatch-gated.
-        if type(anchor) is not type(rows[0]["u"]):
-            anchor = level.first()["id"]
-        if type(target) is not type(rows[0]["u"]):
-            target = _cast_like(spark, e.schema["u"].dataType, target)
+        dtype, sample = e.schema["u"].dataType, rows[0]["u"]
+        anchor = _as_edge_id(spark, dtype, anchor, sample)
+        target = _as_edge_id(spark, dtype, target, sample)
         adj: dict = {}
         for r in rows:
             adj.setdefault(r["u"], []).append((r["v"], int(r["mult"])))
@@ -432,9 +489,7 @@ def pagerank(
     damping: float = 0.85,
     max_iter: int = 10,
     checkpoint_dir: str | None = None,
-    checkpoint_every: int = 1,
     weight_col: str | None = None,
-    small_cutover: int = 200_000,
 ) -> DataFrame:
     """Power-iteration PageRank on the directed graph.
 
@@ -448,61 +503,30 @@ def pagerank(
     plan per step (2^k growth — 9.4s vs ~1s for 5 fixture iterations),
     and caching each level lazily instead measured 3x worse again
     (13-16s: every broadcast build materializes through the cache
-    chain). Fixed iteration count — the usual production choice
-    (convergence tests belong in offline validation, not the hot
-    loop).
+    chain). |V| rides along as a column of the persisted node set, so
+    the loop runs no driver action besides the size gate's count. Fixed
+    iteration count — the usual production choice (convergence tests
+    belong in offline validation, not the hot loop).
 
-    Output: (id, rank); ranks sum to ~1.
+    Driver finisher (the module's size gate): the same power-iteration
+    arithmetic in numpy. Summation order differs at ~1e-15/iteration,
+    far inside the 6-digit round every consumer applies.
+
+    Output: (id, rank); ranks sum to ~1. No edges: an empty frame.
     """
-    ckpt = _truncator(edges.sparkSession, checkpoint_dir)
-    if weight_col is None:
-        e = (
-            edges.select(F.col(src).alias("u"), F.col(dst).alias("v"))
-            .distinct()
-            .withColumn("w", F.lit(1.0))
-            .persist()
-        )
-    else:
-        # WEIGHTED transitions: probability of following an edge is its
-        # weight over the source's total out-weight — the similarity-
-        # graph random walk (heavier SIMILAR edges pull more rank).
-        # Parallel edges collapse by SUM of weights; non-positive
-        # weights are dropped (they carry no transition probability).
-        e = (
-            edges.filter(F.col(weight_col) > 0)
-            .groupBy(F.col(src).alias("u"), F.col(dst).alias("v"))
-            .agg(F.sum(F.col(weight_col).cast("double")).alias("w"))
-            .persist()
-        )
-    nodes = (
-        e.select(F.col("u").alias("id")).union(e.select(F.col("v").alias("id")))
-        .distinct().persist()
-    )
-    n = nodes.count()
+    spark = edges.sparkSession
+    ckpt = _truncator(spark, checkpoint_dir)
+    e = _weighted_edges(edges, src, dst, weight_col)
     out_schema = edges.select(F.col(src).alias("id"), F.lit(0.0).alias("rank")).schema
-    if n == 0:
-        # no edges, no nodes: empty ranking rather than a 1/0 below
-        e.unpersist()
-        nodes.unpersist()
-        return edges.sparkSession.createDataFrame([], out_schema)
-    if small_cutover and e.count() <= small_cutover:
-        # small-subproblem finisher (the SCC/CC/k-means pattern): the
-        # SAME power-iteration arithmetic in numpy — each distributed
-        # iteration otherwise pays a join+agg+broadcast of scheduling
-        # latency for microseconds of math. Summation order differs at
-        # ~1e-15/iteration, far inside the 6-digit round every consumer
-        # applies; the distributed loop stays pytest-forced via
-        # ``small_cutover=0``.
+    rows = _driver_rows(e)
+    if rows is not None:
         import numpy as np
 
-        rows = e.collect()
         e.unpersist()
-        nodes.unpersist()
-        ids = sorted({r["u"] for r in rows} | {r["v"] for r in rows})
-        ix = {v: i for i, v in enumerate(ids)}
-        usrc = np.array([ix[r["u"]] for r in rows], dtype=np.int64)
-        vdst = np.array([ix[r["v"]] for r in rows], dtype=np.int64)
-        w = np.array([r["w"] for r in rows], dtype=np.float64)
+        if not rows:
+            return spark.createDataFrame([], out_schema)  # no edges, no nodes
+        ids, _, usrc, vdst, w = _edge_arrays(rows)
+        n = len(ids)
         deg = np.zeros(n)
         np.add.at(deg, usrc, w)
         rank = np.full(n, 1.0 / n)
@@ -512,13 +536,17 @@ def pagerank(
             dangling = float(rank[deg == 0].sum())
             base = (1.0 - damping) / n + damping * dangling / n
             rank = base + damping * inflow
-        spark = edges.sparkSession
         return spark.createDataFrame(
             list(zip(ids, [float(x) for x in rank])), schema=out_schema
         )
+    ids = _endpoints(e)
+    # every node row carries |V| as _n
+    nodes = ids.crossJoin(
+        F.broadcast(ids.agg(F.count(F.lit(1)).cast("double").alias("_n")))
+    ).persist()
     out_deg = e.groupBy("u").agg(F.sum("w").alias("deg")).persist()
-    ranks = nodes.withColumn("rank", F.lit(1.0 / n))
-    for i in range(max_iter):
+    ranks = nodes.select("id", (F.lit(1.0) / F.col("_n")).alias("rank"))
+    for _ in range(max_iter):
         contribs = (
             e.join(ranks.withColumnRenamed("id", "u"), "u")
             .join(out_deg, "u")
@@ -529,18 +557,18 @@ def pagerank(
             .groupBy("id")
             .agg(F.sum("c").alias("inflow"))
         )
-        # dangling mass as a lazy 1-row frame, broadcast into the update
-        # (arithmetic keeps the scalar version's association order:
-        # base = (1-d)/n + d*dangling/n, then + d*inflow)
+        # dangling mass as a lazy 1-row frame, broadcast into the
+        # update (arithmetic keeps the scalar version's association
+        # order: base = (1-d)/n + d*dangling/n, then + d*inflow)
         dangling = (
             ranks.join(out_deg.withColumnRenamed("u", "id"), "id", "left_anti")
             .agg(F.coalesce(F.sum("rank"), F.lit(0.0)).alias("_dangling"))
         )
         base = (
-            F.lit((1.0 - damping) / n)
-            + F.lit(damping) * F.col("_dangling") / F.lit(float(n))
+            F.lit(1.0 - damping) / F.col("_n")
+            + F.lit(damping) * F.col("_dangling") / F.col("_n")
         )
-        ranks = (
+        ranks = ckpt(  # the iteration's ONE job (see docstring)
             nodes.join(contribs, "id", "left")
             .crossJoin(F.broadcast(dangling))
             .select(
@@ -548,10 +576,6 @@ def pagerank(
                 (base + F.lit(damping) * F.coalesce(F.col("inflow"), F.lit(0.0))).alias("rank"),
             )
         )
-        # checkpoint_every=1 by measurement (see docstring); the r02
-        # keyword is still honored for callers that tuned it
-        if (i + 1) % checkpoint_every == 0 or i == max_iter - 1:
-            ranks = ckpt(ranks)  # the iteration's ONE job
     for df in (e, nodes, out_deg):
         df.unpersist()
     return ranks
@@ -565,64 +589,67 @@ def personalized_pagerank(
     damping: float = 0.85,
     max_iter: int = 10,
     checkpoint_dir: str | None = None,
-    small_cutover: int = 200_000,
 ) -> DataFrame:
     """Personalized PageRank: the teleport distribution concentrates on
-    ``seeds`` (uniform over the seed set) instead of all nodes, so rank
-    measures proximity TO the seeds — the standard similar-item /
-    recommendation primitive over a similarity graph.
+    ``seeds`` (uniform over the distinct seeds that are nodes) instead
+    of all nodes, so rank measures proximity TO the seeds — the standard
+    similar-item / recommendation primitive over a similarity graph.
+    Raises ``ValueError`` when no seed is a node (an empty seed list
+    included): there is no teleport distribution to concentrate.
 
     Same one-job-per-iteration shape as ``pagerank`` (contribs join +
     agg, dangling mass folded in as a broadcast 1-row aggregate — in
     PPR dangling mass teleports back through the seed distribution),
     same per-iteration eager lineage truncation, same reliable-
-    checkpoint escape hatch. Output: (id, rank); ranks sum to ~1 and
-    are 0 for nodes unreachable from the seed set.
+    checkpoint escape hatch and the same driver finisher below the size
+    gate. Output: (id, rank); ranks sum to ~1 and are 0 for nodes
+    unreachable from the seed set.
     """
+    no_seed = "personalized_pagerank needs a seed that is a node"
     if not seeds:
-        raise ValueError("personalized_pagerank needs a non-empty seed set")
-    ckpt = _truncator(edges.sparkSession, checkpoint_dir)
-    e = edges.select(F.col(src).alias("u"), F.col(dst).alias("v")).distinct().persist()
-    nodes = (
-        e.select(F.col("u").alias("id")).union(e.select(F.col("v").alias("id")))
-        .distinct().persist()
-    )
-    if small_cutover and e.count() <= small_cutover:
-        # same driver finisher as pagerank's, seed-concentrated teleport
-        # (arithmetic mirrors the Column expressions term for term)
+        raise ValueError(no_seed)
+    spark = edges.sparkSession
+    ckpt = _truncator(spark, checkpoint_dir)
+    e = _weighted_edges(edges, src, dst, None)
+    rows = _driver_rows(e)
+    if rows is not None:
+        # arithmetic mirrors the Column expressions term for term
         import numpy as np
 
-        rows = e.collect()
         e.unpersist()
-        nodes.unpersist()
-        ids = sorted({r["u"] for r in rows} | {r["v"] for r in rows})
-        ix = {v: i for i, v in enumerate(ids)}
+        if not rows:
+            raise ValueError(no_seed)
+        ids, ix, usrc, vdst, _ = _edge_arrays(rows)
+        dtype, sample = e.schema["u"].dataType, ids[0]
+        hit = {_as_edge_id(spark, dtype, s, sample) for s in seeds} & ix.keys()
+        if not hit:
+            raise ValueError(no_seed)
         n = len(ids)
-        usrc = np.array([ix[r["u"]] for r in rows], dtype=np.int64)
-        vdst = np.array([ix[r["v"]] for r in rows], dtype=np.int64)
         deg = np.zeros(n)
         np.add.at(deg, usrc, 1.0)
         pvec = np.zeros(n)
-        for s in seeds:
-            if s in ix:
-                pvec[ix[s]] = 1.0 / len(seeds)
+        pvec[[ix[s] for s in hit]] = 1.0 / len(hit)
         rank = pvec.copy()
         for _ in range(max_iter):
             contrib = rank[usrc] / deg[usrc]
             inflow = np.bincount(vdst, weights=contrib, minlength=n)
             dangling = float(rank[deg == 0].sum())
             rank = (1.0 - damping) * pvec + damping * dangling * pvec + damping * inflow
-        spark = edges.sparkSession
         return spark.createDataFrame(
             list(zip(ids, [float(x) for x in rank])),
             schema=edges.select(
                 F.col(src).alias("id"), F.lit(0.0).alias("rank")
             ).schema,
         )
+    nodes = _endpoints(e).persist()
+    is_seed = F.col("id").isin(list(seeds))
+    n_hit = nodes.filter(is_seed).count()
+    if n_hit == 0:
+        nodes.unpersist()
+        e.unpersist()
+        raise ValueError(no_seed)
     out_deg = e.groupBy("u").agg(F.count("*").alias("deg")).persist()
-    p = F.when(F.col("id").isin(list(seeds)), F.lit(1.0 / len(seeds))).otherwise(
-        F.lit(0.0)
-    )
+    p = F.when(is_seed, F.lit(1.0 / n_hit)).otherwise(F.lit(0.0))
     ranks = nodes.withColumn("rank", p)
     for _ in range(max_iter):
         contribs = (
@@ -661,7 +688,6 @@ def sssp_distances(
     weight: str = "w",
     max_hops: int = 4,
     checkpoint_dir: str | None = None,
-    small_cutover: int = 200_000,
 ) -> DataFrame:
     """Weighted single-source shortest paths, hop-bounded Bellman-Ford:
     after iteration h, ``d(v)`` is the minimum total weight over paths
@@ -674,6 +700,12 @@ def sssp_distances(
     because IEEE addition is monotonic (a <= b implies a+w <= b+w), so
     a path-enumerating oracle reproduces these doubles exactly.
 
+    Driver finisher (the module's size gate): the same synchronous
+    min-then-extend rounds in IEEE doubles, so distances are
+    bit-identical to the distributed loop (min over the same candidate
+    set is order-independent). A converged round changes nothing, so
+    its early exit only skips the no-op rounds the loop still pays.
+
     Output: (id, d) for every node reachable within ``max_hops`` edges,
     anchor at 0.0.
     """
@@ -685,36 +717,24 @@ def sssp_distances(
     dist = spark.createDataFrame([(str(anchor), 0.0)], "id string, d double")
     dist = dist.withColumn("id", F.col("id").cast(e.schema["u"].dataType))
 
-    if small_cutover and e.count() <= small_cutover:
-        # driver finisher (round 13 — SCC/CC/pagerank pattern): the
-        # SAME synchronous min-then-extend rounds in IEEE doubles, so
-        # distances are BIT-IDENTICAL to the distributed loop (python
-        # floats are IEEE doubles; min over the same candidate set is
-        # order-independent). A converged round changes nothing, so the
-        # exact-equality early exit cannot change the answer — it only
-        # skips no-op rounds the distributed loop still pays. Pinned
-        # equal (exact float compare) in tests/test_graph_cutover.py.
-        rows = e.collect()
+    rows = _driver_rows(e)
+    if rows is not None:
         e.unpersist()
         if not rows:
             return dist  # anchor alone, typed by the distributed cast
-        # ADVICE r13: coerce the anchor to the collected id type (the
-        # distributed loop casts it; a string anchor over long ids
-        # would otherwise relax nothing). Mismatch-gated local job.
-        if type(anchor) is not type(rows[0]["u"]):
-            anchor = dist.first()["id"]
-        dd = {anchor: 0.0}
+        source = _as_edge_id(spark, e.schema["u"].dataType, anchor, rows[0]["u"])
+        dd = {source: 0.0}
         for _ in range(max_hops):
             new = dict(dd)
             for r in rows:
                 u = r["u"]
                 if u in dd:
                     du = dd[u]
-                    # mirror the min-aggregate's null handling (ADVICE
-                    # r13): a null weight (or a null upstream distance)
-                    # yields a null candidate, which never beats a real
-                    # distance but does mark the node reached — exactly
-                    # what unionByName + F.min produce distributedly.
+                    # mirror the min-aggregate's null handling: a null
+                    # weight (or a null upstream distance) yields a null
+                    # candidate, which never beats a real distance but
+                    # does mark the node reached — exactly what
+                    # unionByName + F.min produce distributedly.
                     w = r["w"]
                     cand = du + w if du is not None and w is not None else None
                     v = r["v"]
@@ -748,7 +768,6 @@ def kcore_decomposition(
     src: str = "src",
     dst: str = "dst",
     max_iter: int = 100,
-    checkpoint_every: int = 1,
     checkpoint_dir: str | None = None,
 ) -> DataFrame:
     """Core number (coreness) for every node by H-INDEX ITERATION
@@ -813,10 +832,8 @@ def kcore_decomposition(
     # count. Convergence still detected (fixed point is stable under
     # further rounds); overshoot is at most one cheap extra round.
     prev_sum = None
-    for i in range(0, max_iter, 2):
-        h = one_round(one_round(h))
-        if (i + 2) % checkpoint_every == 0 or checkpoint_every == 1:
-            h = ckpt(h, eager=False)
+    for _ in range(0, max_iter, 2):
+        h = ckpt(one_round(one_round(h)), eager=False)
         s = h.agg(F.sum("h")).first()[0]
         if s == prev_sum:
             break
@@ -831,23 +848,20 @@ def strongly_connected_components(
     max_outer: int = 20,
     max_prop: int = 50,
     checkpoint_dir: str | None = None,
-    loop_shuffle_partitions: int = 4,
-    small_cutover: int = 200_000,
 ) -> DataFrame:
     """Strongly connected components of a DIRECTED graph by the
     trim + forward-coloring + backward-membership algorithm (Orzan's
     coloring, the shape Slota et al. 2014 parallelize; completes the
     graph family where ``connected_components`` answers the undirected
-    question only), with the standard FW-BW small-subproblem cutover:
-    once the still-active edge set fits the driver
-    (``small_cutover`` edges, ~3 MB at the default), finish with
-    sequential iterative Tarjan — exactly what parallel SCC systems do
-    (Slota et al.; Hong et al. 2013), because a fixed-point loop over
-    a tiny remnant pays per-round scheduling + plan-analysis latency
-    (measured ~0.5 s/round here) for sub-millisecond compute. The
-    distributed loops below are the >cutover path and stay pytest-
-    pinned via ``small_cutover=0``; both paths produce identical
-    labels by construction (min id of the SCC):
+    question only), with the standard FW-BW small-subproblem finisher:
+    an edge set within the module's size gate finishes with sequential
+    iterative Tarjan — exactly what parallel SCC systems do (Slota et
+    al.; Hong et al. 2013), because a fixed-point loop over a tiny
+    graph pays per-round scheduling + plan-analysis latency (measured
+    ~0.5 s/round here) for sub-millisecond compute. Both paths produce
+    identical labels by construction (min id of the SCC). The
+    distributed loop runs at the session's shuffle width and changes
+    no session configuration:
 
     Per outer round, over the still-active subgraph:
 
@@ -880,16 +894,8 @@ def strongly_connected_components(
         .filter(F.col("u") != F.col("v"))
         .distinct()
     )
-    active_nodes = ckpt(
-        e_all.select(F.col("u").alias("id"))
-        .union(e_all.select(F.col("v").alias("id")))
-        .distinct()
-    )
-    e_act = e_all
-    done_parts: list[DataFrame] = []
-
-    if small_cutover and e_all.count() <= small_cutover:
-        rows = e_all.collect()
+    rows = _driver_rows(e_all)
+    if rows is not None:
         comp = _tarjan_scc([(r["u"], r["v"]) for r in rows])
         return spark.createDataFrame(
             sorted(comp.items()),
@@ -898,28 +904,8 @@ def strongly_connected_components(
             ).schema,
         )
 
-    # Shuffle-partition floor for the loop body (restored in finally):
-    # after the first trim, every per-round frame is a shrinking node
-    # subset — planning each of the many tiny exchanges at the session
-    # width (32+) pays task-scheduling overhead per round that dwarfs
-    # the sub-second compute. AQE's coalescing helps but still plans a
-    # stage per exchange; capping the width directly was measured
-    # fastest (13.4 s -> ~6 s on the 110-node fixture). Callers
-    # running SCC over a huge ACTIVE subgraph should raise
-    # ``loop_shuffle_partitions`` to match their cluster.
-    prev = spark.conf.get("spark.sql.shuffle.partitions")
-    try:
-        spark.conf.set("spark.sql.shuffle.partitions", str(loop_shuffle_partitions))
-        return _scc_loop(
-            spark, ckpt, e_all, active_nodes, done_parts, max_outer, max_prop,
-            loop_shuffle_partitions,
-        )
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", prev)
-
-
-def _scc_loop(spark, ckpt, e_all, active_nodes, done_parts, max_outer, max_prop,
-              loop_shuffle_partitions):
+    active_nodes = ckpt(_endpoints(e_all))
+    done_parts: list[DataFrame] = []
     e_act = e_all
     for _outer in range(max_outer):
         # -- 1. trim to fixpoint ----------------------------------------
@@ -1030,8 +1016,9 @@ def _scc_loop(spark, ckpt, e_all, active_nodes, done_parts, max_outer, max_prop,
     for part in done_parts[1:]:
         out = out.unionByName(part)
     # the union accumulates one partition set per retired part —
-    # collapse before handing downstream
-    return ckpt(out.coalesce(loop_shuffle_partitions))
+    # collapse to the session's shuffle width before handing downstream
+    width = int(spark.conf.get("spark.sql.shuffle.partitions"))
+    return ckpt(out.coalesce(width))
 
 
 def _tarjan_scc(edge_list):
@@ -1096,7 +1083,6 @@ def label_propagation(
     dst: str = "dst",
     n_rounds: int = 5,
     checkpoint_dir: str | None = None,
-    small_cutover: int = 200_000,
 ) -> DataFrame:
     """Community detection by SYNCHRONOUS label propagation (Raghavan
     et al. 2007), determinized: every node starts as its own label;
@@ -1111,22 +1097,20 @@ def label_propagation(
     fiat. Each round is one join + one count aggregate + one
     row_number window, all keyed on node id.
 
+    Driver finisher (the module's size gate): the update is pure
+    integer/ordering logic (most-frequent neighbor label, smallest-label
+    tie, fixed rounds), so the sequential replay produces IDENTICAL
+    labels, not merely close ones.
+
     Output: (id, community), community = the converged label.
     """
     from pyspark.sql import Window
 
     ckpt = _truncator(edges.sparkSession, checkpoint_dir)
     sym = ckpt(symmetrize(edges, src, dst))
-    if small_cutover and sym.count() <= small_cutover:
-        # driver finisher: the update is pure INTEGER/ordering logic
-        # (most-frequent neighbor label, smallest-label tie, fixed
-        # rounds), so the sequential replay produces IDENTICAL labels —
-        # not merely close ones; distributed loop pytest-forced via
-        # ``small_cutover=0``
-        rows = sym.collect()
-        adj: dict = {}
-        for r in rows:
-            adj.setdefault(r["u"], []).append(r["v"])
+    rows = _driver_rows(sym)
+    if rows is not None:
+        adj = _adjacency(rows)
         labels_py = {n: n for n in adj}
         for _ in range(n_rounds):
             nxt = {}
@@ -1277,7 +1261,7 @@ def scc_condensation(
     edges: DataFrame,
     src: str = "src",
     dst: str = "dst",
-    **scc_kwargs,
+    checkpoint_dir: str | None = None,
 ) -> DataFrame:
     """Condensation (quotient DAG) of a directed graph: one node per
     strongly connected component, an edge (A, B) whenever any original
@@ -1286,16 +1270,18 @@ def scc_condensation(
     cyclic graph a topological order (dependency resolution, deadlock
     analysis, stratified evaluation).
 
-    Plan: one SCC run (``strongly_connected_components``; its FW-BW
-    cutover applies), then two label joins on the edge endpoints and a
-    count aggregate — the joins key on node id, the same partitioning
-    the SCC loop used. Component labels are min-id, so condensation
-    node names are deterministic.
+    Plan: one SCC run (``strongly_connected_components``; its driver
+    finisher applies below the size gate), then two label joins on the
+    edge endpoints and a count aggregate — the joins key on node id,
+    the same partitioning the SCC loop used. Component labels are
+    min-id, so condensation node names are deterministic.
 
     Output: (src_comp, dst_comp, n_edges) — distinct crossing
     component pairs with the number of original edges collapsed onto
     each."""
-    comp = strongly_connected_components(edges, src=src, dst=dst, **scc_kwargs)
+    comp = strongly_connected_components(
+        edges, src=src, dst=dst, checkpoint_dir=checkpoint_dir
+    )
     cu = comp.select(F.col("id").alias(src), F.col("component").alias("src_comp"))
     cv = comp.select(F.col("id").alias(dst), F.col("component").alias("dst_comp"))
     return (
@@ -1316,7 +1302,6 @@ def multi_source_bfs(
     max_hops: int = 10,
     directed: bool = False,
     checkpoint_dir: str | None = None,
-    small_cutover: int = 200_000,
 ) -> DataFrame:
     """Hop distances from EVERY seed in ONE frontier loop: frontier and
     visited set carry (seed, id) pairs, so each iteration expands all
@@ -1334,7 +1319,13 @@ def multi_source_bfs(
     batches, anchored-chain frontiers) or a single-column DataFrame
     (round 9) — the DataFrame form never materializes the seed set on
     the driver, so an UNBOUNDED seed frame (e.g. an OPTIONAL var-length
-    expansion from an unanchored scope) stays fully distributed."""
+    expansion from an unanchored scope) stays fully distributed.
+
+    Driver finisher (the module's size gate), additionally bounded by
+    driver WORK = |seeds| x |edges|: the seed frame can be
+    corpus-derived and huge even over a tiny graph, so a budgeted
+    limit-collect probes it and an overflow falls through to the
+    distributed loop."""
     spark = edges.sparkSession
     ckpt = _truncator(spark, checkpoint_dir)
     if directed:
@@ -1353,55 +1344,23 @@ def multi_source_bfs(
         )
     frontier = base.select("seed", F.col("seed").alias("id"), F.lit(0).alias("hops"))
 
-    if small_cutover:
-        n_edges = e.count()  # cheap: e is checkpointed just above
-        if n_edges <= small_cutover:
-            # driver finisher (round 13 — SCC/CC/pagerank pattern),
-            # additionally bounded by driver WORK = |seeds| x |edges|:
-            # the seed frame can be corpus-derived and huge even over a
-            # tiny graph, so probe it with a budgeted limit-collect and
-            # fall through to the distributed loop when it overflows
-            # (the probe costs one bounded job; at fixture scale it
-            # replaces the eager frontier checkpoint job). Pinned equal
-            # via small_cutover=0 in tests/test_graph_cutover.py.
-            budget = max(64, 1_000_000 // max(n_edges, 1))
-            seed_rows = base.limit(budget + 1).collect()
-            if len(seed_rows) <= budget:
-                adj: dict = {}
-                for r in e.collect():
-                    adj.setdefault(r["u"], []).append(r["v"])
-                # ADVICE r13: the list form's base is NOT distinct-ed,
-                # and the distributed loop keeps duplicate seed rows
-                # only at hop 0 (visited starts as the raw frontier;
-                # every later level is distinct-ed). Mirror exactly:
-                # expand each seed once, emit one extra (s, s, 0) row
-                # per duplicate input row.
-                dup0 = []
-                uniq = {}
-                for srow in seed_rows:
-                    s = srow["seed"]
-                    if s in uniq:
-                        dup0.append(s)
-                    else:
-                        uniq[s] = None
-                out = [(s, s, 0) for s in dup0]
-                for s in uniq:
-                    hops = {s: 0}
-                    level = [s]
-                    for hop in range(1, max_hops + 1):
-                        nxt = {
-                            v
-                            for u in level
-                            for v in adj.get(u, ())
-                            if v not in hops
-                        }
-                        if not nxt:
-                            break
-                        for v in nxt:
-                            hops[v] = hop
-                        level = list(nxt)
-                    out.extend((s, node, h) for node, h in hops.items())
-                return spark.createDataFrame(sorted(out), schema=frontier.schema)
+    rows = _driver_rows(e)  # cheap: e is checkpointed just above
+    if rows is not None:
+        budget = max(64, 1_000_000 // max(len(rows), 1))
+        seed_rows = base.limit(budget + 1).collect()
+        if len(seed_rows) <= budget:
+            adj = _adjacency(rows)
+            # the list form's base is NOT distinct-ed, and the
+            # distributed loop keeps duplicate seed rows only at hop 0
+            # (visited starts as the raw frontier; every later level is
+            # distinct-ed). Mirror exactly: expand each seed once, emit
+            # one extra (s, s, 0) row per duplicate input row.
+            counts = Counter(r["seed"] for r in seed_rows)
+            out = [(s, s, 0) for s, c in counts.items() for _ in range(c - 1)]
+            for s in counts:
+                hops = _bfs_hops(adj, s, max_hops)
+                out.extend((s, node, h) for node, h in hops.items())
+            return spark.createDataFrame(sorted(out), schema=frontier.schema)
 
     visited = ckpt(frontier)
     for hop in range(1, max_hops + 1):
@@ -1435,8 +1394,8 @@ def closeness_from_seeds(
     subset — exact all-node closeness is all-pairs BFS, which nobody
     runs at 100 TB; seed/landmark closeness is the production form):
     ``closeness = n_reached / total_hops`` over each seed's BFS tree,
-    one int/int IEEE division (engine-identical). Seeds reaching
-    nothing get NULL rather than a division error.
+    one int/int IEEE division (engine-identical). A seed that reaches
+    no other node within ``max_hops`` has no row.
 
     Output: (seed, n_reached, total_hops, closeness)."""
     d = multi_source_bfs(
@@ -1662,7 +1621,6 @@ def eigenvector_centrality(
     weight_col: str | None = None,
     max_iter: int = 8,
     checkpoint_dir: str | None = None,
-    small_cutover: int = 200_000,
 ) -> DataFrame:
     """Power-iteration eigenvector centrality (round 7): x ← Aᵀx with
     MAX-normalization each step — a node is central in proportion to
@@ -1678,39 +1636,19 @@ def eigenvector_centrality(
 
     Same execution skeleton as ``pagerank``: one join + grouped sum +
     broadcast 1-row max per iteration, eager lineage truncation per
-    step, and the small-subproblem numpy finisher below
-    ``small_cutover`` edges (identical update math; distributed loop
-    pytest-forced via ``small_cutover=0``).
+    step, and the numpy driver finisher below the module's size gate
+    (identical update math).
 
     Output: (id, score) with max score = 1.0 (on any graph with at
-    least one edge).
+    least one edge); no edges: an empty frame.
     """
     ckpt = _truncator(edges.sparkSession, checkpoint_dir)
-    if weight_col is None:
-        e = (
-            edges.select(F.col(src).alias("u"), F.col(dst).alias("v"))
-            .distinct()
-            .withColumn("w", F.lit(1.0))
-            .persist()
-        )
-    else:
-        e = (
-            edges.filter(F.col(weight_col) > 0)
-            .groupBy(F.col(src).alias("u"), F.col(dst).alias("v"))
-            .agg(F.sum(F.col(weight_col).cast("double")).alias("w"))
-            .persist()
-        )
-    nodes = (
-        e.select(F.col("u").alias("id")).union(e.select(F.col("v").alias("id")))
-        .distinct().persist()
-    )
-
-    if small_cutover and e.count() <= small_cutover:
+    e = _weighted_edges(edges, src, dst, weight_col)
+    rows = _driver_rows(e)
+    if rows is not None:
         import numpy as np
 
-        rows = e.collect()
         e.unpersist()
-        nodes.unpersist()
         schema = edges.select(
             F.col(src).alias("id"), F.lit(0.0).alias("score")
         ).schema
@@ -1718,21 +1656,17 @@ def eigenvector_centrality(
             # empty (possibly fully-filtered) edge frame: no nodes, no
             # scores — np.bincount/max would raise on the empty array
             return edges.sparkSession.createDataFrame([], schema=schema)
-        ids = sorted({r["u"] for r in rows} | {r["v"] for r in rows})
-        ix = {v: i for i, v in enumerate(ids)}
-        usrc = np.array([ix[r["u"]] for r in rows], dtype=np.int64)
-        vdst = np.array([ix[r["v"]] for r in rows], dtype=np.int64)
-        w = np.array([r["w"] for r in rows], dtype=np.float64)
+        ids, _, usrc, vdst, w = _edge_arrays(rows)
         x = np.ones(len(ids))
         for _ in range(max_iter):
             nxt = np.bincount(vdst, weights=x[usrc] * w, minlength=len(ids))
             m = float(nxt.max())
             x = nxt / m if m > 0 else nxt
-        spark = edges.sparkSession
-        return spark.createDataFrame(
+        return edges.sparkSession.createDataFrame(
             list(zip(ids, [float(v) for v in x])), schema=schema
         )
 
+    nodes = _endpoints(e).persist()
     x = nodes.withColumn("score", F.lit(1.0))
     for _ in range(max_iter):
         inflow = (

@@ -501,13 +501,145 @@ def training_sample(
     )
 
 
+# Largest (sampled) corpus the Lloyd trainers — ``kmeans_centroids``
+# and ``pq_train`` — collect and iterate on the driver.
+_DRIVER_MAX_ROWS = 50_000
+
+
+def _vectors(vecs, spherical: bool):
+    """Stack embedding arrays into a float64 matrix; ``spherical``
+    scales every row to unit norm."""
+    import numpy as np
+
+    X = np.vstack([np.asarray(v, dtype=np.float64) for v in vecs])
+    return X / np.linalg.norm(X, axis=1, keepdims=True) if spherical else X
+
+
+def _lloyd_partials(X, C, spherical: bool):
+    """One Lloyd assignment of the rows of ``X`` against the
+    per-subspace centroids ``C`` [m, k, dim//m]: a (subspace, cluster,
+    count, vector sum) tuple per non-empty cluster. ``spherical``
+    assigns by cosine (rows and centroids unit-norm), else by L2."""
+    import numpy as np
+
+    dsub = C.shape[2]
+    out = []
+    for s in range(C.shape[0]):
+        Xs = X[:, s * dsub : (s + 1) * dsub]
+        if spherical:
+            a = np.argmax(Xs @ C[s].T, axis=1)
+        else:
+            # ||x-c||^2 = ||x||^2 - 2xc + ||c||^2; ||x||^2 constant per row
+            a = np.argmin(-2 * Xs @ C[s].T + (C[s] ** 2).sum(axis=1)[None, :], axis=1)
+        for c in np.unique(a):
+            msk = a == c
+            out.append((s, int(c), int(msk.sum()), Xs[msk].sum(axis=0)))
+    return out
+
+
+def _spark_lloyd_partials(base: DataFrame, C, spherical: bool, vec_col: str):
+    """``_lloyd_partials`` over a distributed corpus: each Arrow batch
+    emits one partial row per (subspace, cluster) and the reduce side
+    aggregates O(batches x k) tiny rows, never the corpus. The
+    centroids are the only data broadcast."""
+    import numpy as np
+    import pandas as pd
+
+    bc = base.sparkSession.sparkContext.broadcast(C)
+
+    def kernel(batches):
+        for b in batches:
+            X = _vectors(b[vec_col], spherical)
+            parts = _lloyd_partials(X, bc.value, spherical)
+            yield pd.DataFrame(
+                [(s, c, n, v.tolist()) for s, c, n, v in parts],
+                columns=["sub", "cluster", "n", "vsum"],
+            )
+
+    agg = (
+        base.mapInPandas(kernel, "sub int, cluster int, n long, vsum array<double>")
+        .select("sub", "cluster", "n", F.posexplode("vsum").alias("pos", "x"))
+        .groupBy("sub", "cluster", "pos")
+        .agg(F.sum("n").alias("n"), F.sum("x").alias("sx"))
+        .collect()
+    )
+    bc.destroy()
+    sums: dict = {}
+    for r in agg:
+        # the same cluster total repeats on every pos row
+        _, v = sums.setdefault((r.sub, r.cluster), (r.n, np.zeros(C.shape[2])))
+        v[r.pos] = r.sx
+    return [(s, c, n, v) for (s, c), (n, v) in sums.items()]
+
+
+def _lloyd(
+    embeddings: DataFrame,
+    k: int,
+    m: int,
+    max_iter: int,
+    spherical: bool,
+    id_col: str,
+    vec_col: str,
+    train_sample: int | None,
+):
+    """Lloyd's k-means in ``m`` contiguous subspaces from the ``k``
+    lowest-id vectors until no centroid moves by 1e-6 or ``max_iter``
+    rounds; returns (C [m, k, dim//m], rounds run).
+
+    Counts the corpus once. Above ``train_sample`` rows the rounds run
+    on the deterministic md5-top-N sample (``training_sample``). Up to
+    ``_DRIVER_MAX_ROWS`` rows the corpus is collected once (id order)
+    and every round runs on the driver; larger corpora run each round
+    as one distributed pass over the persisted vectors. Both paths call
+    ``_lloyd_partials``; only the double-addition order of the partial
+    sums differs. Empty clusters keep their centroid."""
+    import numpy as np
+
+    n_rows = embeddings.count()
+    if train_sample and n_rows > train_sample:
+        embeddings = training_sample(embeddings, id_col, train_sample)
+        n_rows = train_sample
+    on_driver = n_rows <= _DRIVER_MAX_ROWS
+    ordered = embeddings.select(id_col, vec_col).orderBy(id_col)
+    if not on_driver:
+        ordered = ordered.limit(k)
+    X = _vectors([r[vec_col] for r in ordered.collect()], spherical)
+    dim = X.shape[1]
+    if dim % m:
+        raise ValueError(f"dim {dim} not divisible by m={m}")
+    dsub = dim // m
+    C = np.stack([X[:k, s * dsub : (s + 1) * dsub] for s in range(m)])
+    if on_driver:
+        def partials(C):
+            return _lloyd_partials(X, C, spherical)
+    else:
+        # persist: every round rescans the projected vectors
+        base = embeddings.select(vec_col).persist()
+
+        def partials(C):
+            return _spark_lloyd_partials(base, C, spherical, vec_col)
+
+    rounds = max_iter
+    for it in range(max_iter):
+        newC = C.copy()
+        for s, c, n, vsum in partials(C):
+            newC[s, c] = vsum / np.linalg.norm(vsum) if spherical else vsum / n
+        shift = float(np.abs(newC - C).max())
+        C = newC
+        if shift < 1e-6:
+            rounds = it + 1
+            break
+    if not on_driver:
+        base.unpersist()
+    return C, rounds
+
+
 def kmeans_centroids(
     embeddings: DataFrame,
     n_clusters: int = 16,
     max_iter: int = 8,
     id_col: str = "vec_id",
     vec_col: str = "embedding",
-    small_cutover: int = 50_000,
     train_sample: int | None = 200_000,
 ):
     """Lloyd's k-means over the embedding column, spherical variant
@@ -520,17 +652,14 @@ def kmeans_centroids(
     driver-side numpy) are re-broadcast each iteration — the only data
     that ever leaves the executors.
 
-    Small-subproblem cutover (the SCC/CC finisher pattern applied to
-    training): at or below ``small_cutover`` rows the corpus is
-    collected ONCE (<= ~25 MB at dim 64) and the SAME Lloyd updates
-    run driver-side in numpy — each distributed iteration otherwise
-    pays a Python-worker pass + exchange + collect of scheduling
-    latency for sub-millisecond math. Assignment/update arithmetic is
-    identical; only double-addition order differs (the distributed
-    reduce was never bit-order-deterministic either, and every
-    consumer pins results through recall/agreement, not centroid
-    bits). The distributed loop stays pytest-pinned via
-    ``small_cutover=0``.
+    Driver finisher (the module's size gate): up to
+    ``_DRIVER_MAX_ROWS`` rows the corpus is collected ONCE (<= ~25 MB
+    at dim 64) and the SAME Lloyd step runs driver-side — each
+    distributed iteration otherwise pays a Python-worker pass +
+    exchange + collect of scheduling latency for sub-millisecond math.
+    Only double-addition order differs (the distributed reduce was
+    never bit-order-deterministic either, and every consumer pins
+    results through recall/agreement, not centroid bits).
 
     Sampled training (round 7, verdict-r6 item 5): above
     ``train_sample`` rows the Lloyd iterations run on a deterministic
@@ -549,85 +678,10 @@ def kmeans_centroids(
 
     Returns (centroids: np.ndarray [k x dim], used_iters: int).
     """
-    import numpy as np
-    import pandas as pd
-
-    n_rows = embeddings.count()
-    if train_sample and n_rows > train_sample:
-        embeddings = training_sample(embeddings, id_col, train_sample)
-        n_rows = train_sample
-
-    if small_cutover and n_rows <= small_cutover:
-        rows = embeddings.select(id_col, vec_col).orderBy(id_col).collect()
-        X = np.vstack([np.asarray(r[vec_col], dtype=np.float64) for r in rows])
-        Xn = X / np.linalg.norm(X, axis=1, keepdims=True)
-        C = Xn[:n_clusters].copy()
-        for it in range(max_iter):
-            a = np.argmax(Xn @ C.T, axis=1)
-            newC = C.copy()
-            for c in np.unique(a):
-                m = a == c
-                s = Xn[m].sum(axis=0)
-                newC[c] = s / np.linalg.norm(s)
-            shift = float(np.abs(newC - C).max())
-            C = newC
-            if shift < 1e-6:
-                return C, it + 1
-        return C, max_iter
-
-    init = (
-        embeddings.select(id_col, vec_col)
-        .orderBy(id_col)
-        .limit(n_clusters)
-        .collect()
+    C, rounds = _lloyd(
+        embeddings, n_clusters, 1, max_iter, True, id_col, vec_col, train_sample
     )
-    C = np.vstack([np.asarray(r[vec_col], dtype=np.float64) for r in init])
-    C = C / np.linalg.norm(C, axis=1, keepdims=True)
-    sc = embeddings.sparkSession.sparkContext
-    # persist: every Lloyd iteration rescans the projected vectors
-    base = embeddings.select(vec_col).persist()
-
-    for it in range(max_iter):
-        bc = sc.broadcast(C)
-
-        def partials(batches):
-            Cn = bc.value
-            k, d = Cn.shape
-            for b in batches:
-                X = np.vstack(b[vec_col].to_numpy()).astype(np.float64)
-                Xn = X / np.linalg.norm(X, axis=1, keepdims=True)
-                a = np.argmax(Xn @ Cn.T, axis=1)
-                rows = []
-                for c in np.unique(a):
-                    m = a == c
-                    rows.append((int(c), int(m.sum()), Xn[m].sum(axis=0).tolist()))
-                yield pd.DataFrame(rows, columns=["cluster", "n", "vsum"])
-
-        part = base.mapInPandas(
-            partials, "cluster int, n long, vsum array<double>"
-        )
-        agg = (
-            part.select("cluster", "n", F.posexplode("vsum").alias("pos", "x"))
-            .groupBy("cluster", "pos")
-            .agg(F.sum("n").alias("n"), F.sum("x").alias("sx"))
-            .collect()
-        )
-        newC = C.copy()
-        counts = np.zeros(len(C))
-        for r in agg:
-            newC[r.cluster, r.pos] = r.sx
-            counts[r.cluster] = r.n  # same total repeated per pos
-        nz = counts > 0
-        newC[nz] = newC[nz] / np.linalg.norm(newC[nz], axis=1, keepdims=True)
-        newC[~nz] = C[~nz]  # empty cluster keeps its old centroid
-        shift = float(np.abs(newC - C).max())
-        C = newC
-        bc.destroy()
-        if shift < 1e-6:
-            base.unpersist()
-            return C, it + 1
-    base.unpersist()
-    return C, max_iter
+    return C[0], rounds
 
 
 def ivf_assign(
@@ -814,7 +868,6 @@ def pq_train(
     max_iter: int = 5,
     id_col: str = "vec_id",
     vec_col: str = "embedding",
-    small_cutover: int = 50_000,
     train_sample: int | None = 200_000,
 ):
     """Train product-quantization codebooks: split each vector into
@@ -823,12 +876,9 @@ def pq_train(
     the corpus (each Arrow batch emits per-(subspace, cluster) partial
     sums), so an iteration costs one scan regardless of ``m``.
 
-    Same small-subproblem cutover as ``kmeans_centroids``: at or below
-    ``small_cutover`` rows the corpus is collected once (id order) and
-    the identical per-subspace Lloyd updates run driver-side — the
-    distributed loop otherwise pays a Python-worker pass + exchange +
-    collect per iteration for sub-millisecond math. Distributed path
-    pytest-pinned via ``small_cutover=0``.
+    Same driver finisher as ``kmeans_centroids``: up to
+    ``_DRIVER_MAX_ROWS`` rows the corpus is collected once (id order)
+    and the identical per-subspace Lloyd step runs driver-side.
 
     Sampled training above ``train_sample`` rows, exactly as in
     ``kmeans_centroids`` (round 7, verdict-r6 item 5): codebook Lloyd
@@ -839,88 +889,9 @@ def pq_train(
     Deterministic init: the ``n_codes`` lowest-id vectors, sliced.
     Returns np.ndarray [m, n_codes, dim//m].
     """
-    import numpy as np
-    import pandas as pd
-
-    if train_sample and embeddings.count() > train_sample:
-        embeddings = training_sample(embeddings, id_col, train_sample)
-
-    init = (
-        embeddings.select(id_col, vec_col).orderBy(id_col).limit(n_codes).collect()
+    C, _ = _lloyd(
+        embeddings, n_codes, m, max_iter, False, id_col, vec_col, train_sample
     )
-    X0 = np.vstack([np.asarray(r[vec_col], dtype=np.float64) for r in init])
-    dim = X0.shape[1]
-    if dim % m:
-        raise ValueError(f"dim {dim} not divisible by m={m}")
-    dsub = dim // m
-    C = np.stack([X0[:, s * dsub : (s + 1) * dsub].copy() for s in range(m)])
-
-    if small_cutover and embeddings.count() <= small_cutover:
-        rows = embeddings.select(id_col, vec_col).orderBy(id_col).collect()
-        X = np.vstack([np.asarray(r[vec_col], dtype=np.float64) for r in rows])
-        for _ in range(max_iter):
-            newC = C.copy()
-            for s in range(m):
-                Xs = X[:, s * dsub : (s + 1) * dsub]
-                d = -2 * Xs @ C[s].T + (C[s] ** 2).sum(axis=1)[None, :]
-                a = np.argmin(d, axis=1)
-                for c in np.unique(a):
-                    msk = a == c
-                    newC[s, c] = Xs[msk].sum(axis=0) / msk.sum()
-            shift = float(np.abs(newC - C).max())
-            C = newC
-            if shift < 1e-6:
-                break
-        return C
-
-    sc = embeddings.sparkSession.sparkContext
-    # persist the projected vectors once: every Lloyd iteration scans
-    # them, and re-reading (+ re-decoding) the parquet per iteration
-    # dominates training time at fixture scale
-    base = embeddings.select(vec_col).persist()
-
-    for _ in range(max_iter):
-        bc = sc.broadcast(C)
-
-        def partials(batches):
-            Cb = bc.value  # [m, k, dsub]
-            for b in batches:
-                X = np.vstack(b[vec_col].to_numpy()).astype(np.float64)
-                rows = []
-                for s in range(Cb.shape[0]):
-                    Xs = X[:, s * dsub : (s + 1) * dsub]
-                    # ||x-c||^2 = ||x||^2 - 2xc + ||c||^2; ||x||^2 constant per row
-                    d = -2 * Xs @ Cb[s].T + (Cb[s] ** 2).sum(axis=1)[None, :]
-                    a = np.argmin(d, axis=1)
-                    for c in np.unique(a):
-                        msk = a == c
-                        rows.append(
-                            (s, int(c), int(msk.sum()), Xs[msk].sum(axis=0).tolist())
-                        )
-                yield pd.DataFrame(rows, columns=["sub", "cluster", "n", "vsum"])
-
-        agg = (
-            base.mapInPandas(partials, "sub int, cluster int, n long, vsum array<double>")
-            .select("sub", "cluster", "n", F.posexplode("vsum").alias("pos", "x"))
-            .groupBy("sub", "cluster", "pos")
-            .agg(F.sum("n").alias("n"), F.sum("x").alias("sx"))
-            .collect()
-        )
-        newC = C.copy()
-        counts = np.zeros((m, n_codes))
-        for r in agg:
-            newC[r.sub, r.cluster, r.pos] = r.sx
-            counts[r.sub, r.cluster] = r.n
-        for s in range(m):
-            nz = counts[s] > 0
-            newC[s, nz] = newC[s, nz] / counts[s, nz][:, None]
-            newC[s, ~nz] = C[s, ~nz]
-        shift = float(np.abs(newC - C).max())
-        C = newC
-        bc.destroy()
-        if shift < 1e-6:
-            break
-    base.unpersist()
     return C
 
 

@@ -2,6 +2,7 @@
 
 from __future__ import annotations
 
+import contextlib
 import os
 import sys
 
@@ -40,6 +41,24 @@ def spark_stems(spark):
         return [r.st for r in df.select(stem_col(F.col("w"), language).alias("st")).collect()]
 
     return run
+
+
+@pytest.fixture()
+def distributed(monkeypatch):
+    """Context manager that forces the distributed loops: inside it the
+    size gates of ``graph_algos`` (``_DRIVER_MAX_EDGES``) and
+    ``similarity`` (``_DRIVER_MAX_ROWS``) are 0, so every non-empty
+    input skips the driver finisher."""
+    from providenciasbigdata_spark.operators import graph_algos, similarity
+
+    @contextlib.contextmanager
+    def force():
+        with monkeypatch.context() as m:
+            m.setattr(graph_algos, "_DRIVER_MAX_EDGES", 0)
+            m.setattr(similarity, "_DRIVER_MAX_ROWS", 0)
+            yield
+
+    return force
 
 
 @pytest.fixture(scope="session")

@@ -3,11 +3,14 @@ structural properties on the similarity graph."""
 
 from __future__ import annotations
 
+import contextlib
+
 import pytest
 from pyspark.sql import functions as F
 
 from providenciasbigdata_spark.compat.graph import build_similarity_edges
 from providenciasbigdata_spark.io import load_table
+from providenciasbigdata_spark.operators import graph_algos as ga
 from providenciasbigdata_spark.operators.graph_algos import connected_components, pagerank
 
 SF = "/root/testdata/sf0.001"
@@ -22,24 +25,23 @@ def toy_edges(spark):
     return spark.createDataFrame(rows, "src string, dst string")
 
 
-def test_connected_components_exact(spark, toy_edges):
-    # distributed star-contraction loop, pytest-forced past the cutover
-    got = {
-        r.id: r.component
-        for r in connected_components(toy_edges, small_cutover=0).collect()
-    }
+def test_connected_components_exact(spark, toy_edges, distributed):
+    # distributed star-contraction loop, forced past the size gate
+    with distributed():
+        got = {r.id: r.component for r in connected_components(toy_edges).collect()}
     assert got == {"a": "a", "b": "a", "c": "a", "d": "d", "e": "d", "f": "f", "g": "f"}
     # the union-find finisher (default path at fixture scale) agrees
     fin = {r.id: r.component for r in connected_components(toy_edges).collect()}
     assert fin == got
 
 
-def test_connected_components_on_similarity_graph(spark):
+def test_connected_components_on_similarity_graph(spark, distributed):
     emb = load_table(spark, SF, "embeddings").filter(F.col("vec_id") < 150)
     edges = build_similarity_edges(emb).filter(F.col("similitud") >= 30)
     # the diameter-19 fixture component: keep the distributed loop
     # exercised on a non-toy graph
-    comp = connected_components(edges, small_cutover=0)
+    with distributed():
+        comp = connected_components(edges)
     # every edge's endpoints share a component (the defining property)
     joined = (
         edges.join(comp.withColumnRenamed("id", "src").withColumnRenamed("component", "c1"), "src")
@@ -233,10 +235,11 @@ def test_sssp_unit_weights_equal_bfs_hops(spark):
         assert d[k] == float(h[k]), (k, d[k], h[k])
 
 
-def test_pagerank_no_per_iteration_collect(spark):
+def test_pagerank_no_per_iteration_collect(spark, distributed):
     """The dangling-mass fold: pagerank must run NO collect() at all —
     the dangling aggregate rides the update plan as a broadcast 1-row
-    frame (VERDICT r2 item 7). count() is allowed exactly once (|V|)."""
+    frame (VERDICT r2 item 7). count() is allowed exactly once: the
+    size gate's edge count (|V| rides the node frame as a column)."""
     rows = [(f"s{i}", "hub") for i in range(5)]
     edges = spark.createDataFrame(rows, "src string, dst string")
     cls = type(edges)
@@ -252,7 +255,8 @@ def test_pagerank_no_per_iteration_collect(spark):
 
     cls.collect, cls.count = banned_collect, counting_count
     try:
-        pr = pagerank(edges, max_iter=7, small_cutover=0)
+        with distributed():
+            pr = pagerank(edges, max_iter=7)
     finally:
         cls.collect, cls.count = orig_collect, orig_count
     assert counts["count"] == 1
@@ -260,34 +264,31 @@ def test_pagerank_no_per_iteration_collect(spark):
     assert abs(sum(got.values()) - 1.0) < 1e-6
 
 
-def test_reliable_checkpoint_dir_matches_local(spark, toy_edges, tmp_path):
+def test_reliable_checkpoint_dir_matches_local(spark, toy_edges, tmp_path, distributed):
     """checkpoint_dir switches every truncation point to a reliable
     checkpoint (survives executor loss at cluster scale) without
     changing results; checkpoint files actually land in the dir."""
     import os
 
     ckdir = str(tmp_path / "ck")
-    local = {
-        (r.id, round(r.rank, 10))
-        for r in pagerank(toy_edges, max_iter=3, small_cutover=0).collect()
-    }
-    reliable = {
-        (r.id, round(r.rank, 10))
-        for r in pagerank(toy_edges, max_iter=3, checkpoint_dir=ckdir,
-                          small_cutover=0).collect()
-    }
+    with distributed():
+        local = {
+            (r.id, round(r.rank, 10))
+            for r in pagerank(toy_edges, max_iter=3).collect()
+        }
+        reliable = {
+            (r.id, round(r.rank, 10))
+            for r in pagerank(toy_edges, max_iter=3, checkpoint_dir=ckdir).collect()
+        }
     assert local == reliable
     assert any(os.scandir(ckdir)), "no checkpoint data written to checkpoint_dir"
 
-    cc_local = {
-        tuple(r) for r in connected_components(toy_edges, small_cutover=0).collect()
-    }
-    cc_rel = {
-        tuple(r)
-        for r in connected_components(
-            toy_edges, checkpoint_dir=ckdir, small_cutover=0
-        ).collect()
-    }
+    with distributed():
+        cc_local = {tuple(r) for r in connected_components(toy_edges).collect()}
+        cc_rel = {
+            tuple(r)
+            for r in connected_components(toy_edges, checkpoint_dir=ckdir).collect()
+        }
     assert cc_local == cc_rel
 
 
@@ -376,7 +377,7 @@ def test_kcore_known_small_graph(spark):
     assert got == {1: 2, 2: 2, 3: 2, 4: 1, 5: 1}
 
 
-def test_scc_known_graph(spark):
+def test_scc_known_graph(spark, distributed):
     """SCC on a hand-built digraph: a 3-cycle, a 2-cycle fed by the
     3-cycle, and trim-resolved singletons (source, sink, isolated
     pair) — labels are the SCC's min id."""
@@ -389,11 +390,12 @@ def test_scc_known_graph(spark):
         "src long, dst long",
     )
     want = {1: 1, 2: 1, 3: 1, 4: 4, 5: 4, 6: 6, 7: 7, 8: 8}
-    # the DISTRIBUTED trim/color/backward path (cutover forced off) ...
-    got = {
-        r.id: r.component
-        for r in strongly_connected_components(edges, small_cutover=0).collect()
-    }
+    # the DISTRIBUTED trim/color/backward path (size gate forced off) ...
+    with distributed():
+        got = {
+            r.id: r.component
+            for r in strongly_connected_components(edges).collect()
+        }
     assert got == want
     # ... and the sub-cutover Tarjan finisher agree exactly
     got_seq = {
@@ -402,7 +404,7 @@ def test_scc_known_graph(spark):
     assert got_seq == want
 
 
-def test_scc_directed_vs_undirected_cc(spark):
+def test_scc_directed_vs_undirected_cc(spark, distributed):
     """On a graph whose every edge is mutual, SCC == CC; dropping one
     back edge must split that 2-cycle into singletons while leaving
     the rest intact."""
@@ -413,21 +415,23 @@ def test_scc_directed_vs_undirected_cc(spark):
 
     mutual = [(1, 2), (2, 1), (2, 3), (3, 2)]
     e = spark.createDataFrame(mutual, "src long, dst long")
-    scc = {
-        r.id: r.component
-        for r in strongly_connected_components(e, small_cutover=0).collect()
-    }
+    with distributed():
+        scc = {
+            r.id: r.component
+            for r in strongly_connected_components(e).collect()
+        }
     cc = {r.id: r.component for r in connected_components(e).collect()}
     assert scc == cc == {1: 1, 2: 1, 3: 1}
     broken = e.filter(~((F.col("src") == 3) & (F.col("dst") == 2)))
-    scc2 = {
-        r.id: r.component
-        for r in strongly_connected_components(broken, small_cutover=0).collect()
-    }
+    with distributed():
+        scc2 = {
+            r.id: r.component
+            for r in strongly_connected_components(broken).collect()
+        }
     assert scc2 == {1: 1, 2: 1, 3: 3}
 
 
-def test_label_propagation_known_communities(spark):
+def test_label_propagation_known_communities(spark, distributed):
     """Two 4-cliques joined by one bridge edge: LPA converges to two
     communities labeled by each clique's min id. The isolated PAIR is
     the canonical synchronous-LPA oscillator (each node adopts the
@@ -450,18 +454,19 @@ def test_label_propagation_known_communities(spark):
         for r in label_propagation(edges.repartition(7), n_rounds=6).collect()
     }
     assert got2 == got
-    # the distributed loop (pytest-forced past the driver finisher)
-    # produces IDENTICAL labels — the update is pure integer/order logic
-    dist = {
-        r.id: r.community
-        for r in label_propagation(edges, n_rounds=6, small_cutover=0).collect()
-    }
+    # the distributed loop (forced past the driver finisher) produces
+    # IDENTICAL labels — the update is pure integer/order logic
+    with distributed():
+        dist = {
+            r.id: r.community
+            for r in label_propagation(edges, n_rounds=6).collect()
+        }
     assert dist == got
 
 
-def test_scc_random_digraphs_match_tarjan(spark):
+def test_scc_random_digraphs_match_tarjan(spark, distributed):
     """Randomized agreement: on random sparse digraphs the DISTRIBUTED
-    trim/color/backward path (cutover forced off) and the sequential
+    trim/color/backward path (size gate forced off) and the sequential
     Tarjan finisher produce identical labels — and both equal a
     from-first-principles mutual-reachability model."""
     import itertools
@@ -501,10 +506,11 @@ def test_scc_random_digraphs_match_tarjan(spark):
             want[u] = min(scc)
         assert _tarjan_scc(edges) == want, (trial, edges)
         df = spark.createDataFrame(edges, "src long, dst long")
-        got = {
-            r.id: r.component
-            for r in strongly_connected_components(df, small_cutover=0).collect()
-        }
+        with distributed():
+            got = {
+                r.id: r.component
+                for r in strongly_connected_components(df).collect()
+            }
         assert got == want, (trial, edges)
 
 
@@ -536,7 +542,7 @@ def test_link_prediction_jaccard_known_graph(spark):
     assert {(r.a, r.b) for r in strict.collect()} == {("a", "c"), ("b", "h")}
 
 
-def test_scc_condensation_known_digraph(spark):
+def test_scc_condensation_known_digraph(spark, distributed):
     """Two 2-cycles bridged by one-way edges: condensation = 3 nodes
     in a path, acyclic, with collapsed-edge counts."""
     from providenciasbigdata_spark.operators.graph_algos import scc_condensation
@@ -552,16 +558,17 @@ def test_scc_condensation_known_digraph(spark):
     )
     got = {
         (r.src_comp, r.dst_comp): r.n_edges
-        for r in scc_condensation(edges, small_cutover=10**6).collect()
+        for r in scc_condensation(edges).collect()
     }
     assert got == {("a", "c"): 2, ("c", "e"): 1}
     # acyclic: no pair appears in both directions
     assert all((b, a) not in got for a, b in got)
     # distributed SCC path agrees
-    dist = {
-        (r.src_comp, r.dst_comp): r.n_edges
-        for r in scc_condensation(edges, small_cutover=0).collect()
-    }
+    with distributed():
+        dist = {
+            (r.src_comp, r.dst_comp): r.n_edges
+            for r in scc_condensation(edges).collect()
+        }
     assert dist == got
 
 
@@ -597,7 +604,7 @@ def test_multi_source_bfs_equals_per_seed_bfs(spark):
     assert und[("d", "a")] == 2  # d-c-a via the shortcut
 
 
-def test_pagerank_cutover_agrees_with_distributed(spark, toy_edges):
+def test_pagerank_cutover_agrees_with_distributed(spark, toy_edges, distributed):
     """Driver power-iteration finisher == the distributed loop within
     the float tolerance every consumer rounds away; weighted variant
     and personalized variant agree too."""
@@ -606,26 +613,27 @@ def test_pagerank_cutover_agrees_with_distributed(spark, toy_edges):
         personalized_pagerank,
     )
 
-    dist = {r.id: r.rank for r in pagerank(toy_edges, max_iter=5, small_cutover=0).collect()}
+    with distributed():
+        dist = {r.id: r.rank for r in pagerank(toy_edges, max_iter=5).collect()}
     drv = {r.id: r.rank for r in pagerank(toy_edges, max_iter=5).collect()}
     assert dist.keys() == drv.keys()
     assert all(abs(dist[k] - drv[k]) < 1e-12 for k in dist)
     assert abs(sum(drv.values()) - 1.0) < 1e-9
 
     we = toy_edges.withColumn("w", (F.length("src") + F.length("dst")).cast("double"))
-    dist_w = {
-        r.id: r.rank
-        for r in pagerank(we, max_iter=5, weight_col="w", small_cutover=0).collect()
-    }
+    with distributed():
+        dist_w = {
+            r.id: r.rank
+            for r in pagerank(we, max_iter=5, weight_col="w").collect()
+        }
     drv_w = {r.id: r.rank for r in pagerank(we, max_iter=5, weight_col="w").collect()}
     assert all(abs(dist_w[k] - drv_w[k]) < 1e-12 for k in dist_w)
 
-    dist_p = {
-        r.id: r.rank
-        for r in personalized_pagerank(
-            toy_edges, seeds=["b"], max_iter=5, small_cutover=0
-        ).collect()
-    }
+    with distributed():
+        dist_p = {
+            r.id: r.rank
+            for r in personalized_pagerank(toy_edges, seeds=["b"], max_iter=5).collect()
+        }
     drv_p = {
         r.id: r.rank
         for r in personalized_pagerank(toy_edges, seeds=["b"], max_iter=5).collect()
@@ -634,12 +642,13 @@ def test_pagerank_cutover_agrees_with_distributed(spark, toy_edges):
 
 
 @pytest.mark.parametrize("weight_col", [None, "w"])
-def test_pagerank_empty_edge_set_is_empty_ranking(spark, weight_col):
-    """No edges => no nodes => an empty (id, rank) frame, on both the
-    driver finisher and the distributed loop (small_cutover=0)."""
+def test_pagerank_empty_edge_set_is_empty_ranking(spark, weight_col, distributed):
+    """No edges => no nodes => an empty (id, rank) frame, with the
+    default size gate and with the gate forced to 0."""
     edges = spark.createDataFrame([], "src string, dst string, w double")
-    for cutover in (200_000, 0):
-        out = pagerank(edges, weight_col=weight_col, small_cutover=cutover)
+    for gate in (contextlib.nullcontext, distributed):
+        with gate():
+            out = pagerank(edges, weight_col=weight_col)
         assert out.collect() == []
         assert out.columns == ["id", "rank"]
         assert [f.dataType.simpleString() for f in out.schema] == ["string", "double"]
@@ -774,3 +783,137 @@ def test_betweenness_matches_python_brandes(spark):
     gsub = {r.id: r.betweenness for r in sub.collect()}
     for k in set(gsub) | set(wsub):
         assert gsub.get(k, 0.0) == wsub.get(k, 0.0), k
+
+
+def test_personalized_pagerank_teleport_over_distinct_node_seeds(spark, distributed):
+    """The teleport is uniform over the DISTINCT seeds that are nodes:
+    a duplicated seed or a seed off the graph changes nothing (ranks
+    still sum to 1), on both sides of the size gate; when no seed is a
+    node there is no teleport distribution and the call raises."""
+    edges = spark.createDataFrame(
+        [("a", "b"), ("b", "c"), ("c", "a"), ("c", "d")], "src string, dst string"
+    )
+
+    def ranks(seeds):
+        return {
+            r.id: r.rank
+            for r in ga.personalized_pagerank(edges, seeds=seeds, max_iter=5).collect()
+        }
+
+    for gate in (contextlib.nullcontext, distributed):
+        with gate():
+            want = ranks(["b"])
+            assert abs(sum(want.values()) - 1.0) < 1e-9
+            for seeds in (["b", "b"], ["b", "zz"]):
+                got = ranks(seeds)
+                assert got.keys() == want.keys()
+                assert all(abs(got[k] - want[k]) < 1e-12 for k in want), seeds
+            with pytest.raises(ValueError):
+                ga.personalized_pagerank(edges, seeds=["zz"])
+
+
+def test_scc_leaves_session_conf_alone(spark, distributed, monkeypatch):
+    """The distributed SCC loop runs at the session's shuffle width and
+    writes no session configuration: other threads share the session."""
+    from pyspark.sql.conf import RuntimeConfig
+
+    writes = []
+    real_set = RuntimeConfig.set
+
+    def recording_set(self, key, value):
+        writes.append(key)
+        return real_set(self, key, value)
+
+    monkeypatch.setattr(RuntimeConfig, "set", recording_set)
+    edges = spark.createDataFrame([(1, 2), (2, 1), (2, 3)], "src long, dst long")
+    with distributed():
+        scc = {
+            r.id: r.component
+            for r in ga.strongly_connected_components(edges).collect()
+        }
+        cond = {
+            (r.src_comp, r.dst_comp): r.n_edges
+            for r in ga.scc_condensation(edges).collect()
+        }
+    assert writes == []
+    assert scc == {1: 1, 2: 1, 3: 3}
+    assert cond == {(1, 3): 1}
+
+
+# ---- degenerate inputs: every operator, both sides of the size gate ----
+
+_ANCHOR = "zz"  # not a node of the test graph
+# operator -> (call, output columns, answer on an empty edge set, answer
+# for an unknown anchor/seed — None where the operator takes none).
+# An answer is the sorted output rows, or ValueError.
+_DEGENERATE = {
+    "symmetrize": (ga.symmetrize, ["u", "v"], [], None),
+    "connected_components": (ga.connected_components, ["id", "component"], [], None),
+    "bfs_distances": (
+        lambda e: ga.bfs_distances(e, _ANCHOR),
+        ["id", "hops"], [(_ANCHOR, 0)], [(_ANCHOR, 0)],
+    ),
+    "shortest_path_sigma": (
+        lambda e: ga.shortest_path_sigma(e, _ANCHOR, "b"), ["hops", "sigma"], [], [],
+    ),
+    "pagerank": (ga.pagerank, ["id", "rank"], [], None),
+    "personalized_pagerank": (
+        lambda e: ga.personalized_pagerank(e, [_ANCHOR]), None, ValueError, ValueError,
+    ),
+    "sssp_distances": (
+        lambda e: ga.sssp_distances(e, _ANCHOR),
+        ["id", "d"], [(_ANCHOR, 0.0)], [(_ANCHOR, 0.0)],
+    ),
+    "kcore_decomposition": (ga.kcore_decomposition, ["id", "core"], [], None),
+    "strongly_connected_components": (
+        ga.strongly_connected_components, ["id", "component"], [], None,
+    ),
+    "label_propagation": (ga.label_propagation, ["id", "community"], [], None),
+    "link_prediction_jaccard": (
+        ga.link_prediction_jaccard,
+        ["a", "b", "n_common", "n_union", "jaccard"], [], None,
+    ),
+    "scc_condensation": (
+        ga.scc_condensation, ["src_comp", "dst_comp", "n_edges"], [], None,
+    ),
+    "multi_source_bfs": (
+        lambda e: ga.multi_source_bfs(e, [_ANCHOR]),
+        ["seed", "id", "hops"], [(_ANCHOR, _ANCHOR, 0)], [(_ANCHOR, _ANCHOR, 0)],
+    ),
+    "closeness_from_seeds": (
+        lambda e: ga.closeness_from_seeds(e, [_ANCHOR]),
+        ["seed", "n_reached", "total_hops", "closeness"], [], [],
+    ),
+    "ktruss": (lambda e: ga.ktruss(e, 3), ["u", "v"], [], None),
+    "betweenness_from_seeds": (
+        lambda e: ga.betweenness_from_seeds(e, [_ANCHOR]), ["id", "betweenness"], [], [],
+    ),
+    "eigenvector_centrality": (ga.eigenvector_centrality, ["id", "score"], [], None),
+}
+
+
+@pytest.mark.parametrize("gate", ["driver", "distributed"])
+@pytest.mark.parametrize(
+    "op,case",
+    [(op, "no_edges") for op in _DEGENERATE]
+    + [(op, "unknown_anchor") for op, v in _DEGENERATE.items() if v[3] is not None],
+)
+def test_degenerate_inputs(spark, distributed, op, case, gate):
+    """An empty edge frame, or an anchor/seed that is not a node, gives
+    the documented empty frame, the anchor alone, or a documented
+    ValueError — never an internal exception."""
+    call, columns, on_empty, on_unknown = _DEGENERATE[op]
+    rows = [] if case == "no_edges" else [
+        ("a", "b", 1.0), ("b", "c", 2.0), ("c", "a", 1.0), ("c", "d", 1.0)
+    ]
+    edges = spark.createDataFrame(rows, "src string, dst string, w double")
+    want = on_empty if case == "no_edges" else on_unknown
+    with distributed() if gate == "distributed" else contextlib.nullcontext():
+        if want is ValueError:
+            with pytest.raises(ValueError):
+                call(edges)
+            return
+        out = call(edges)
+        got = sorted(tuple(r) for r in out.collect())
+    assert out.columns == columns
+    assert got == want

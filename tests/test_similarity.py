@@ -84,17 +84,16 @@ def test_blocked_pairwise_single_block_degenerate(spark, sf_dir):
     assert all(l != r for l, r in pairs)
 
 
-def test_kmeans_converges_and_partitions(spark, sf_dir):
+def test_kmeans_converges_and_partitions(spark, sf_dir, distributed):
     emb = load_table(spark, sf_dir, "embeddings").cache()
-    # distributed Lloyd loop, pytest-forced past the driver cutover
-    C, iters = similarity.kmeans_centroids(
-        emb, n_clusters=8, max_iter=10, small_cutover=0
-    )
+    # distributed Lloyd loop, forced past the driver size gate
+    with distributed():
+        C, iters = similarity.kmeans_centroids(emb, n_clusters=8, max_iter=10)
     assert C.shape == (8, 64) and 1 <= iters <= 10
     import numpy as np
 
     assert np.allclose(np.linalg.norm(C, axis=1), 1.0)  # spherical
-    # driver-cutover path: identical math, same fixed point up to the
+    # driver path: identical math, same fixed point up to the
     # double-addition order of the partial sums
     Cd, _ = similarity.kmeans_centroids(emb, n_clusters=8, max_iter=10)
     assert Cd.shape == C.shape
@@ -147,14 +146,15 @@ def test_srp_buckets_deterministic(spark, sf_dir):
     assert b1 == b2
 
 
-def test_pq_encode_shape_and_determinism(spark, sf_dir):
+def test_pq_encode_shape_and_determinism(spark, sf_dir, distributed):
     import numpy as np
 
     emb = load_table(spark, sf_dir, "embeddings").cache()
-    # distributed per-subspace Lloyd, pytest-forced past the cutover
-    C = similarity.pq_train(emb, m=4, n_codes=16, max_iter=3, small_cutover=0)
+    # distributed per-subspace Lloyd, forced past the driver size gate
+    with distributed():
+        C = similarity.pq_train(emb, m=4, n_codes=16, max_iter=3)
     assert C.shape == (4, 16, 16)
-    # driver-cutover path reaches the same codebooks (same update math)
+    # driver path reaches the same codebooks (same update math)
     Cd = similarity.pq_train(emb, m=4, n_codes=16, max_iter=3)
     assert np.allclose(Cd, C, atol=1e-8)
     codes = similarity.pq_encode(emb, C)
