@@ -42,8 +42,8 @@ def main() -> None:
     tipos = eng.facet_options("tipo")
     print(f"[page 1] tipo facet: {len(tipos)} values, first 3 {tipos[:3]}")
     hits = eng.query_rulings(tipo=tipos[0])
-    print(f"[page 1] tipo={tipos[0]}: {hits.count()} rulings (filter pushed "
-          "into the dump scan)")
+    print(f"[page 1] tipo={tipos[0]}: {hits.count()} rulings (read from the "
+          "engine's resident snapshot of the dump)")
     text_hits = eng.query_rulings(texto="merge window")
     print(f"[page 1] text search 'merge window': {text_hits.count()} rulings")
 

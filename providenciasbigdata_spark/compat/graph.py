@@ -20,7 +20,8 @@ Operator citations (SURVEY.md §2.2/§2.3):
   B3  directed-only       — only outgoing edges of the anchor qualify
   B4  closed range        — Column.between is inclusive-inclusive, exact match
   A13/A14 neighborhood_nodes — pyvis node upsert + singleton fallback
-                            (reference streamlit_app.py:73-85)
+                            over the collected hits (reference
+                            streamlit_app.py:73-85)
 """
 
 from __future__ import annotations
@@ -140,19 +141,14 @@ def neighborhood(edges: DataFrame, anchor: str, lo: float, hi: float) -> DataFra
     )
 
 
-def neighborhood_nodes(hits: DataFrame, anchor: str) -> DataFrame:
-    """A13+A14: the node set of a neighborhood result.
+def neighborhood_nodes(hits, anchor: str) -> list[str]:
+    """A13+A14: the sorted node ids of a COLLECTED neighborhood result
+    (``hits``: a pandas frame, or any mapping, with ``origen`` and
+    ``destino`` columns).
 
     pyvis upserts src and dst nodes per edge (reference
-    streamlit_app.py:80-81) == union-distinct of endpoints; the anchor
-    renders even with zero edges (singleton fallback, streamlit_app.py:83-85)
-    == union with the anchor literal.
+    streamlit_app.py:80-81) == the distinct endpoints; the anchor
+    renders even with zero edges (singleton fallback,
+    streamlit_app.py:83-85) == the anchor joins them.
     """
-    spark = hits.sparkSession
-    anchor_df = spark.createDataFrame([(anchor,)], "id string")
-    return (
-        hits.select(F.col("origen").alias("id"))
-        .union(hits.select(F.col("destino").alias("id")))
-        .union(anchor_df)
-        .distinct()
-    )
+    return sorted({anchor, *hits["origen"], *hits["destino"]})

@@ -26,9 +26,10 @@ Scale design (100 TB dump directory):
 Lifecycle caveat (pinned in tests/test_modern.py): the Python
 DataSource runtime caches the planned reader — including its pushed
 filters — per loaded relation, so deriving several differently-filtered
-queries from ONE ``.load()`` reuses the first query's pushdown. Use one
-``.load()`` per query (the engine facade does this); ``pushFilters``
-also resets its state defensively on entry.
+queries from ONE ``.load()`` reuses the first query's pushdown;
+``pushFilters`` resets its state on entry for that reason. The engine
+facade loads a dump once per snapshot version and persists it, so its
+requests read the cached relation and never plan a pushdown.
 
 Extended-JSON type wrappers are unwrapped per the BSON spec:
 ``{"$oid": s}`` -> string, ``{"$numberInt"|"$numberLong": s}`` -> int,

@@ -9,22 +9,63 @@ Similitudes", streamlit_app.py:150-177) maps to ``node_ids`` +
 parameters — never hardcoded credentials (the reference embeds live
 URIs at streamlit_app.py:9,14; see SURVEY.md §0.1).
 
-Everything stays a lazy DataFrame until the ``*_frame``/pandas helpers
-at the presentation edge.
+Requests read a resident snapshot, as the reference's two servers keep
+their text index and graph resident: the engine holds one persisted
+version of each source it serves from, the rulings view with its
+``tokens`` and the embeddings. The first request fills the cache; later
+requests plan against the in-memory relation and never scan or
+tokenize the files again. A version is keyed by its source's file
+listing (relative path, size, mtime). When the listing changes, the
+next request builds version v+1 under a lock, swaps it in and
+unpersists v; a frame a caller already holds from v still answers,
+from v+1's cache when their plans match, else through its lineage.
+``release()`` frees the snapshot, and so does garbage collection.
+Offline passes (``deduplicate``) read the tables directly.
 """
 
 from __future__ import annotations
 
+import os
+import re
+import threading
+from collections.abc import Callable
+
+import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import functions as F
 
 from providenciasbigdata_spark import multimodal, streaming
 from providenciasbigdata_spark.compat import documents as _docs
 from providenciasbigdata_spark.compat import graph as _graph
 from providenciasbigdata_spark.io import load_table
 from providenciasbigdata_spark.operators import dedup, similarity
+from providenciasbigdata_spark.session import unpersist_on_collect
 
 # schema of a rulings mongodump read through the mongodump DataSource
 _DUMP_SCHEMA = "_id string, providencia string, tipo string, anio int, texto string"
+_HITS_SCHEMA = "origen string, destino string, similitud double"
+# a node id that names an embedding: "P-<vec_id>", vec_id a bigint
+_NODE_ID = re.compile(r"P-(0|[1-9][0-9]{0,17})")
+
+
+def _listing(path: str) -> tuple:
+    """A source's version key: (relative path, size, mtime) of each data
+    file at ``path``, skipping the ``_``/``.`` names Spark skips."""
+    if os.path.isfile(path):
+        files = [path]
+    else:
+        files = []
+        for root, dirs, names in os.walk(path):
+            dirs[:] = [d for d in dirs if not d.startswith(("_", "."))]
+            files += [os.path.join(root, n) for n in names if not n.startswith(("_", "."))]
+    key = []
+    for f in files:
+        try:
+            st = os.stat(f)
+        except FileNotFoundError:  # removed since the walk
+            continue
+        key.append((os.path.relpath(f, path), st.st_size, st.st_mtime_ns))
+    return tuple(sorted(key))
 
 
 class ProvidenciasEngine:
@@ -39,6 +80,11 @@ class ProvidenciasEngine:
     def __init__(self, spark: SparkSession, data_dir: str):
         self.spark = spark
         self.data_dir = data_dir
+        self._dump_dir: str | None = None
+        self._lock = threading.Lock()
+        self._keys: dict[str, tuple] = {}
+        self._frames: dict[str, DataFrame] = {}
+        unpersist_on_collect(self, self._frames)
 
     @classmethod
     def from_mongodump(
@@ -59,43 +105,75 @@ class ProvidenciasEngine:
         eng._dump_dir = dump_dir
         return eng
 
-    # -- sources (cached logical views, still lazy) -----------------------
+    # -- sources: the resident snapshot ----------------------------------
 
-    _dump_dir: str | None = None
+    def _resident(self, name: str, path: str, build: Callable[[], DataFrame]) -> DataFrame:
+        """The persisted version of source ``name`` for the current
+        listing of ``path``: the held one, or, when the listing has
+        changed, a new one swapped in for it."""
+        key = _listing(path)
+        with self._lock:
+            if self._keys.get(name) == key:
+                return self._frames[name]
+            # the old version goes first: a re-read of the same directory
+            # plans the same as v, and Spark would hand v's cache to v+1
+            old = self._frames.pop(name, None)
+            if old is not None:
+                old.unpersist()
+            frame = build().persist()
+            self._keys[name], self._frames[name] = key, frame
+            return frame
+
+    def release(self) -> None:
+        """Unpersist the snapshot now; the next request builds it again.
+        Frames already handed out still answer, through their lineage."""
+        with self._lock:
+            for frame in self._frames.values():
+                frame.unpersist()
+            self._frames.clear()
+            self._keys.clear()
+
+    def _table(self, name: str) -> DataFrame:
+        return load_table(self.spark, self.data_dir, name)
 
     def rulings(self) -> DataFrame:
         if self._dump_dir is not None:
-            # fresh .load() per call: the Python-DataSource runtime
-            # caches the planned reader (incl. its pushed filters) per
-            # loaded relation, so reusing one relation across
-            # differently-filtered queries would leak the first
-            # query's pushdown into the rest (pinned by
-            # tests/test_modern.py)
-            from pyspark.sql import functions as F
+            return self._resident("rulings", self._dump_dir, self._dump_rulings)
+        return self._resident(
+            "rulings",
+            os.path.join(self.data_dir, "documents.parquet"),
+            lambda: _docs.rulings_view(self._table("documents")),
+        )
 
-            from providenciasbigdata_spark import datasources
+    def _dump_rulings(self) -> DataFrame:
+        from providenciasbigdata_spark import datasources
 
-            docs = (
-                self.spark.read.format(datasources.FORMAT_NAME)
-                .schema(_DUMP_SCHEMA)
-                .load(self._dump_dir)
-            )
-            return docs.select(
-                F.split(F.col("providencia"), "-")[1].cast("long").alias("doc_id"),
-                "providencia",
-                "tipo",
-                "anio",
-                "texto",
-                _docs.tokenize(F.col("texto")).alias("tokens"),
-            )
-        return _docs.rulings_view(load_table(self.spark, self.data_dir, "documents"))
+        docs = (
+            self.spark.read.format(datasources.FORMAT_NAME)
+            .schema(_DUMP_SCHEMA)
+            .load(self._dump_dir)
+        )
+        return docs.select(
+            F.split(F.col("providencia"), "-")[1].cast("long").alias("doc_id"),
+            "providencia",
+            "tipo",
+            "anio",
+            "texto",
+            _docs.tokenize(F.col("texto")).alias("tokens"),
+        )
+
+    def _embeddings(self) -> DataFrame:
+        return self._resident(
+            "embeddings",
+            os.path.join(self.data_dir, "embeddings.parquet"),
+            lambda: self._table("embeddings"),
+        )
 
     def nodes(self) -> DataFrame:
-        return _graph.nodes_view(load_table(self.spark, self.data_dir, "documents"))
+        return _graph.nodes_view(self.rulings())
 
     def edges(self, anchor_vec_id: int | None = None) -> DataFrame:
-        emb = load_table(self.spark, self.data_dir, "embeddings")
-        return _graph.build_similarity_edges(emb, anchor_vec_id=anchor_vec_id)
+        return _graph.build_similarity_edges(self._embeddings(), anchor_vec_id=anchor_vec_id)
 
     # -- page 1: facets + text search ------------------------------------
 
@@ -199,20 +277,31 @@ class ProvidenciasEngine:
     ) -> DataFrame:
         """Anchored 1-hop expansion, weight in [lo, hi] inclusive
         (reference streamlit_app.py:60-64). Anchored edge build is
-        O(n): only the anchor's outgoing cosines are computed."""
-        vec_id = int(anchor.split("-", 1)[1])
-        return _graph.neighborhood(self.edges(anchor_vec_id=vec_id), anchor, lo, hi)
+        O(n): only the anchor's outgoing cosines are computed. An
+        anchor that names no node has no edges."""
+        m = _NODE_ID.fullmatch(anchor)
+        if m is None:
+            edges = self.edges().where(F.lit(False))  # planned away, never run
+        else:
+            edges = self.edges(anchor_vec_id=int(m.group(1)))
+        return _graph.neighborhood(edges, anchor, lo, hi)
 
     def neighborhood_graph(self, anchor: str, lo: float = 0.0, hi: float = 100.0):
         """(nodes_df, edges_df) for rendering — includes the singleton
-        fallback (A14: the anchor renders even with zero edges)."""
-        hits = self.similarity_neighborhood(anchor, lo, hi)
-        return _graph.neighborhood_nodes(hits, anchor), hits
+        fallback (A14: the anchor renders even with zero edges). The
+        anchored scan runs once; both frames are built from its
+        collected rows, through Arrow."""
+        hits = self.similarity_neighborhood(anchor, lo, hi).toPandas()
+        nodes = pd.DataFrame({"id": _graph.neighborhood_nodes(hits, anchor)})
+        return (
+            self.spark.createDataFrame(nodes, "id string"),
+            self.spark.createDataFrame(hits, _HITS_SCHEMA),
+        )
 
     # -- pipeline extensions ----------------------------------------------
 
     def deduplicate(self, method: str = "exact", **kwargs) -> DataFrame:
-        docs = load_table(self.spark, self.data_dir, "documents")
+        docs = self._table("documents")  # offline: a direct read, not the snapshot
         if method == "exact":
             return dedup.dedup_exact(docs, **kwargs)
         if method == "minhash":
@@ -224,11 +313,13 @@ class ProvidenciasEngine:
         raise ValueError(f"unknown dedup method: {method!r}")
 
     def nearest_neighbors(self, query_vec, k: int = 10, approx: bool = False) -> DataFrame:
-        emb = load_table(self.spark, self.data_dir, "embeddings")
-        if approx:
-            dim = len(emb.select("embedding").first().embedding)
-            return similarity.srp_lsh_topk(emb, query_vec, dim=dim, k=k)
-        return similarity.brute_force_topk(emb, query_vec, k=k)
+        """Cosine top-k (vec_id, score); ``approx=True`` probes SRP-LSH
+        buckets. No embeddings => the empty (vec_id, score) frame."""
+        emb = self._embeddings()
+        first = emb.select("embedding").first() if approx else None
+        if first is None:
+            return similarity.brute_force_topk(emb, query_vec, k=k)
+        return similarity.srp_lsh_topk(emb, query_vec, dim=len(first.embedding), k=k)
 
     def events_stream(self, events_dir: str, **kwargs) -> DataFrame:
         return streaming.events_stream(self.spark, events_dir, **kwargs)

@@ -509,14 +509,18 @@ def q_a7_search_bm25(spark: SparkSession, sf_dir: str) -> DataFrame:
     $text returns matches unranked; a search service over the same
     collection wants ranked top-k). Scoring runs entirely from the
     prebuilt index (BM25Index captures N/avgdl at build — zero driver
-    actions per search): no corpus rescan at query time."""
+    actions per search). A one-shot query outlives its index: this one
+    releases the index's cache, so the returned plan recomputes the
+    index through its lineage."""
     from providenciasbigdata_spark.operators.postings import (
         bm25_search,
         build_bm25_index,
     )
 
     idx = build_bm25_index(_rulings(spark, sf_dir))
-    return bm25_search(idx, ["merge", "window", "shuffle"], k=10)
+    out = bm25_search(idx, ["merge", "window", "shuffle"], k=10)
+    idx.release()
+    return out
 
 
 # DuckDB twin of the exact BM25 formula (k1=1.2, b=0.75, Lucene idf).

@@ -7,13 +7,21 @@ and for scale (AQE on, Arrow on, shuffle partitions sized to cores locally —
 on a real cluster leave ``spark.sql.shuffle.partitions`` to AQE's
 coalescing and size ``spark.sql.files.maxPartitionBytes`` so scan tasks
 stay ~128MB).
+
+It also ties persisted DataFrames to the Python object that owns them
+(``unpersist_on_collect``), so cached data lives exactly as long as its
+owner.
 """
 
 from __future__ import annotations
 
+import logging
 import os
+import queue
+import threading
+import weakref
 
-from pyspark.sql import SparkSession
+from pyspark.sql import DataFrame, SparkSession
 
 
 def get_spark(
@@ -78,3 +86,43 @@ def get_spark(
     spark = builder.getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     return spark
+
+
+# Frames whose owner was garbage-collected, waiting to be unpersisted.
+# A collector callback may run in the middle of another Py4J call on
+# the same thread's connection, so it must not call the JVM itself: it
+# only enqueues (SimpleQueue.put is reentrant), and one daemon thread,
+# with its own connection, does the unpersisting.
+_RELEASED: "queue.SimpleQueue[DataFrame]" = queue.SimpleQueue()
+_releaser: threading.Thread | None = None
+_releaser_lock = threading.Lock()
+
+
+def _unpersist_released() -> None:
+    while True:
+        df = _RELEASED.get()
+        try:
+            df.unpersist()
+        except Exception:  # its session may have been stopped since
+            logging.getLogger(__name__).debug("unpersist after collection failed", exc_info=True)
+
+
+def unpersist_on_collect(owner: object, frames: dict[str, DataFrame]) -> None:
+    """When ``owner`` is garbage-collected, unpersist the DataFrames
+    that ``frames`` holds at that moment. ``frames`` is a dict the owner
+    keeps current (and empties on an explicit release); it must not
+    refer back to ``owner``."""
+    global _releaser
+    with _releaser_lock:
+        if _releaser is None:
+            _releaser = threading.Thread(
+                target=_unpersist_released, name="unpersist-released", daemon=True
+            )
+            _releaser.start()
+    done = weakref.finalize(owner, _enqueue, frames)
+    done.atexit = False  # the JVM goes down with the interpreter anyway
+
+
+def _enqueue(frames: dict[str, DataFrame]) -> None:
+    for df in list(frames.values()):
+        _RELEASED.put(df)

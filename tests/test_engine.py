@@ -52,6 +52,36 @@ def test_singleton_fallback_via_facade(engine):
     assert [r.id for r in nodes.collect()] == ["P-7"]
 
 
+@pytest.mark.parametrize("anchor", ["nope", "P-abc", "P-", "", "P-007", "P-999999"])
+def test_anchor_that_is_not_a_node_renders_alone(engine, anchor):
+    # malformed ids used to raise IndexError/ValueError; every anchor
+    # that names no node gets zero edges and the anchor alone (A14),
+    # as run_cypher answers it
+    nodes, edges = engine.neighborhood_graph(anchor, 0.0, 100.0)
+    assert [r.id for r in nodes.collect()] == [anchor]
+    assert edges.collect() == [] and edges.columns == ["origen", "destino", "similitud"]
+    assert engine.similarity_neighborhood(anchor).count() == 0
+
+
+def test_approx_nearest_neighbors_on_empty_embeddings(spark, tmp_path):
+    # the approx path used to call .embedding on first() == None
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    pq.write_table(
+        pa.table({
+            "vec_id": pa.array([], pa.int64()),
+            "embedding": pa.array([], pa.list_(pa.float32())),
+        }),
+        str(tmp_path / "embeddings.parquet"),
+    )
+    eng = ProvidenciasEngine(spark, str(tmp_path))
+    exact = eng.nearest_neighbors([1.0] * 64, k=5)
+    approx = eng.nearest_neighbors([1.0] * 64, k=5, approx=True)
+    assert approx.collect() == [] == exact.collect()
+    assert approx.columns == exact.columns == ["vec_id", "score"]
+
+
 def test_dedup_and_ann_extensions(engine):
     assert engine.deduplicate("exact").count() > 0
     qvec = [1.0] * 64

@@ -408,9 +408,10 @@ def test_dump_engine_registers_the_format_once(spark, monkeypatch):
 
 def test_mongodump_fresh_load_per_query_is_isolated(spark):
     """The Python-DataSource runtime caches the planned reader — with
-    its pushed filters — per loaded relation, so the safe pattern
-    (used by the engine facade) is one .load() per query. Pin that
-    fresh loads are fully isolated from each other's pushdown."""
+    its pushed filters — per loaded relation, so the safe pattern for
+    direct reads is one .load() per query (the engine facade persists
+    one load per snapshot version instead). Pin that fresh loads are
+    fully isolated from each other's pushdown."""
     datasources.register(spark)
     dump_dir = _ensure_dump(spark, SF)
     schema = "_id string, providencia string, tipo string, anio int, texto string"

@@ -1,0 +1,211 @@
+"""The engine's resident snapshot and the BM25 index's cache: requests
+read one in-memory version, a changed listing swaps in the next one,
+and cached data lives exactly as long as its owner."""
+
+from __future__ import annotations
+
+import gc
+import os
+import shutil
+import sys
+import threading
+import time
+
+import pyarrow as pa
+import pyarrow.parquet as pq
+import pytest
+
+from providenciasbigdata_spark import session
+from providenciasbigdata_spark.compat.documents import rulings_view
+from providenciasbigdata_spark.engine import ProvidenciasEngine
+from providenciasbigdata_spark.io import load_table
+from providenciasbigdata_spark.operators.postings import bm25_search, build_bm25_index
+
+
+def _store(tmp_path, sf_dir) -> str:
+    """A private copy of the fixture, ``documents.parquet`` as a
+    directory that files can be appended to (plans over it match no
+    other test's cache)."""
+    store = tmp_path / "store"
+    (store / "documents.parquet").mkdir(parents=True)
+    shutil.copy(f"{sf_dir}/documents.parquet", store / "documents.parquet" / "part-0.parquet")
+    shutil.copy(f"{sf_dir}/embeddings.parquet", store / "embeddings.parquet")
+    return str(store)
+
+
+def _append(store: str, sf_dir: str, name: str, first_id: int, n: int, source: str) -> None:
+    """Add ``n`` fixture rows under new ids as one more file, made
+    visible by a rename, as a committing writer does."""
+    t = pq.read_table(f"{sf_dir}/documents.parquet").slice(0, n).to_pandas()
+    t["doc_id"] = range(first_id, first_id + n)
+    t["source"] = source
+    part = os.path.join(store, "documents.parquet")
+    pq.write_table(pa.Table.from_pandas(t, preserve_index=False), os.path.join(part, f"_{name}"))
+    os.rename(os.path.join(part, f"_{name}"), os.path.join(part, name))
+
+
+def _persisted(spark) -> int:
+    return spark.sparkContext._jsc.getPersistentRDDs().size()
+
+
+def _settled(spark) -> int:
+    """The persisted-RDD count once frames of owners already collected
+    have been unpersisted."""
+    gc.collect()
+    last = -1
+    for _ in range(200):
+        n = _persisted(spark)
+        if session._RELEASED.empty() and n == last:
+            return n
+        last = n
+        time.sleep(0.05)
+    return last
+
+
+def _back_to(spark, base: int) -> bool:
+    gc.collect()
+    for _ in range(400):
+        if _persisted(spark) == base:
+            return True
+        time.sleep(0.05)
+    return False
+
+
+def _cached(df) -> bool:
+    level = df.storageLevel
+    return level.useMemory or level.useDisk
+
+
+def _scans(df) -> list:
+    """The leaf scans of ``df``'s executed plan (run it first), looking
+    through adaptive query stages."""
+
+    def leaves(plan):
+        name = plan.nodeName()
+        if name == "AdaptiveSparkPlan":
+            return leaves(plan.executedPlan())
+        if name.endswith("QueryStage"):
+            return leaves(plan.plan())
+        kids = plan.children()
+        if kids.size() == 0:
+            return [plan]
+        return [leaf for i in range(kids.size()) for leaf in leaves(kids.apply(i))]
+
+    return leaves(df._jdf.queryExecution().executedPlan())
+
+
+def test_page1_requests_share_one_in_memory_relation(spark, tmp_path, sf_dir):
+    eng = ProvidenciasEngine(spark, _store(tmp_path, sf_dir))
+    first = eng.query_rulings(tipo="src3")
+    second = eng.query_rulings(anio=2005)
+    assert first.count() > 0 and second.count() > 0
+    rdds = set()
+    for df in (first, second):
+        scans = _scans(df)
+        assert [s.nodeName() for s in scans] == ["InMemoryTableScan"]
+        rdds.add(scans[0].relation().cacheBuilder().cachedColumnBuffers().id())
+    assert len(rdds) == 1
+    assert eng.rulings() is eng.rulings()
+    eng.release()
+
+
+def test_append_swaps_in_the_next_version(spark, tmp_path, sf_dir):
+    store = _store(tmp_path, sf_dir)
+    eng = ProvidenciasEngine(spark, store)
+    assert eng.count_documents({"tipo": "added"}) == 0
+    v0 = eng.rulings()
+    base = _settled(spark)
+    _append(store, sf_dir, "part-1.parquet", 10_000, 7, "added")
+    assert eng.count_documents({"tipo": "added"}) == 7
+    assert eng.query_rulings(providencia="P-10006").count() == 1
+    v1 = eng.rulings()
+    assert v1 is not v0 and _cached(v1)
+    assert _persisted(spark) <= base
+    eng.release()
+
+
+def test_release_and_collection_free_the_cache(spark, tmp_path, sf_dir):
+    base = _settled(spark)
+    eng = ProvidenciasEngine(spark, _store(tmp_path, sf_dir))
+    eng.query_rulings(tipo="src3").collect()
+    eng.nearest_neighbors([1.0] * 64, k=3).collect()
+    assert _persisted(spark) == base + 2
+    eng.release()
+    assert _persisted(spark) == base
+    # the engine serves again after a release, and collection frees it
+    frames = [eng.rulings()]
+    eng.facet_options("tipo")
+    assert _persisted(spark) == base + 1
+    del eng
+    assert _back_to(spark, base) and not _cached(frames[0])
+
+    idx = build_bm25_index(rulings_view(load_table(spark, sf_dir, "documents")))
+    assert _persisted(spark) == base + 1
+    query = bm25_search(idx, ["merge"], k=3)
+    idx.release()
+    assert _persisted(spark) == base and len(query.collect()) == 3
+    idx = build_bm25_index(rulings_view(load_table(spark, sf_dir, "documents")))
+    tfs = idx.term_freqs
+    del idx
+    assert _back_to(spark, base) and not _cached(tfs)
+
+
+def test_readers_see_the_old_or_the_new_version(spark, tmp_path, sf_dir):
+    store = _store(tmp_path, sf_dir)
+    eng = ProvidenciasEngine(spark, store)
+    old = eng.count_documents({"tipo": "src3"})
+    seen, frames, errors = [], [], []
+    go = threading.Barrier(5)
+
+    def reader():
+        try:
+            go.wait()
+            for _ in range(4):
+                frames.append(eng.rulings())
+                seen.append(eng.count_documents({"tipo": "src3"}))
+        except Exception as exc:  # surfaced by the assert below
+            errors.append(exc)
+
+    threads = [threading.Thread(target=reader) for _ in range(4)]
+    interval = sys.getswitchinterval()
+    sys.setswitchinterval(1e-5)
+    try:
+        for t in threads:
+            t.start()
+        go.wait()
+        _append(store, sf_dir, "part-1.parquet", 10_000, 40, "src3")
+        for t in threads:
+            t.join(timeout=300)
+    finally:
+        sys.setswitchinterval(interval)
+    assert not any(t.is_alive() for t in threads) and not errors
+    assert set(seen) <= {old, old + 40} and len(seen) == 16
+    # one swap, made once: readers racing on the new listing share v1
+    assert len({id(f) for f in frames}) <= 2
+    assert eng.count_documents({"tipo": "src3"}) == old + 40
+    eng.release()
+
+
+@pytest.mark.parametrize("dump", [False, True])
+def test_nodes_and_edges_read_the_snapshot(spark, tmp_path, sf_dir, dump):
+    from providenciasbigdata_spark import datasources
+
+    store = _store(tmp_path, sf_dir)
+    if dump:
+        out = str(tmp_path / "dump")
+        datasources.export_mongodump(
+            rulings_view(load_table(spark, sf_dir, "documents")).select(
+                "doc_id", "providencia", "tipo", "anio", "texto"
+            ),
+            out,
+        )
+        eng = ProvidenciasEngine.from_mongodump(spark, out, store)
+    else:
+        eng = ProvidenciasEngine(spark, store)
+    assert len(eng.node_ids()) == 500
+    hits = eng.similarity_neighborhood("P-7", 20.0, 100.0)
+    assert hits.count() > 0
+    for df in (eng.nodes(), hits):
+        df.collect()
+        assert {s.nodeName() for s in _scans(df)} == {"InMemoryTableScan"}
+    eng.release()
