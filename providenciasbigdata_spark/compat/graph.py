@@ -14,6 +14,15 @@ cosine x 100), reproducing the pipeline the reference assumes ran
 offline (SURVEY.md §7 Phase 2). The approximate, scale path (LSH
 blocking, O(n*b) not O(n^2)) lives in ``operators.similarity``.
 
+An anchor's outgoing edges have two exact builds with one arithmetic:
+the Catalyst fold (``build_similarity_edges(anchor_vec_id=...)``) and a
+numpy kernel over a ``VectorBlock`` the caller keeps on the driver
+(``anchored_edges``), whose rows become a local relation that Spark
+rounds and filters without running a job. Both cast to double, fold
+the dot and the squared norms left to right, then take
+``dot / (|a| |b|) * 100``; a pair with a zero norm, a null or a
+different-length side has a null ``similitud``.
+
 Operator citations (SURVEY.md §2.2/§2.3):
   A9  list_nodes          — reference streamlit_app.py:48-53
   A10 neighborhood        — reference streamlit_app.py:60-64
@@ -26,7 +35,10 @@ Operator citations (SURVEY.md §2.2/§2.3):
 
 from __future__ import annotations
 
-from pyspark.sql import Column, DataFrame
+import numpy as np
+import pyarrow as pa
+import pyarrow.compute as pc
+from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 
@@ -54,13 +66,14 @@ def cosine(a: Column, b: Column) -> Column:
     BOTH norms per call — fine for per-row use, but inside an n^2 pair
     join compute ``l2_norm`` per SIDE once and divide the per-pair
     ``dot`` by the scalar product (turns 3 folds/pair into 1; ~3x on
-    the pairwise build — see build_similarity_edges).
+    the pairwise build — see build_similarity_edges). A zero norm
+    gives null, not a division error.
     """
     a = F.transform(a, lambda x: x.cast("double"))
     b = F.transform(b, lambda x: x.cast("double"))
     na = F.sqrt(F.aggregate(F.transform(a, lambda x: x * x), F.lit(0.0), lambda acc, x: acc + x))
     nb = F.sqrt(F.aggregate(F.transform(b, lambda x: x * x), F.lit(0.0), lambda acc, x: acc + x))
-    return dot(a, b) / (na * nb)
+    return F.try_divide(dot(a, b), na * nb)
 
 
 def dot(a: Column, b: Column) -> Column:
@@ -86,7 +99,7 @@ def build_similarity_edges(
     anchor row is broadcast and the join is a broadcast nested loop over
     one row x n rows, i.e. a scan. The full O(n^2) build is for fixture
     scale / oracle checks only; at 100TB use
-    ``operators.similarity.lsh_similarity_join``.
+    ``operators.similarity.srp_lsh_pairs``.
 
     ``similitud`` is rounded (default 4 digits) so cross-engine oracle
     hashes are stable; the reference's UI granularity is 0.01
@@ -107,15 +120,105 @@ def build_similarity_edges(
         l2_norm(F.col("embedding")).alias("nb"),
     )
     pairs = left.join(right, F.col("src_id") != F.col("dst_id"))
-    cos = dot(
-        F.transform("emb_a", lambda x: x.cast("double")),
-        F.transform("emb_b", lambda x: x.cast("double")),
-    ) / (F.col("na") * F.col("nb"))
-    return pairs.select(
-        F.concat(F.lit("P-"), F.col("src_id").cast("string")).alias("src"),
-        F.concat(F.lit("P-"), F.col("dst_id").cast("string")).alias("dst"),
-        F.round(cos * 100, round_digits).alias("similitud"),
+    cos = F.try_divide(
+        dot(
+            F.transform("emb_a", lambda x: x.cast("double")),
+            F.transform("emb_b", lambda x: x.cast("double")),
+        ),
+        F.col("na") * F.col("nb"),
     )
+    return _edge_frame(pairs, cos * 100, round_digits)
+
+
+def _edge_frame(pairs: DataFrame, cos100: Column, round_digits: int) -> DataFrame:
+    """edges(src, dst, similitud) from (src_id, dst_id) pairs and their
+    unrounded cosine x 100; Spark's own round (HALF_UP) sets the digits.
+    The ids are SQL text: one gateway call each, on the request path."""
+    return pairs.select(
+        F.expr("concat('P-', CAST(src_id AS STRING)) AS src"),
+        F.expr("concat('P-', CAST(dst_id AS STRING)) AS dst"),
+        F.round(cos100, round_digits).alias("similitud"),
+    )
+
+
+class VectorBlock:
+    """An embeddings table held on the driver for ``anchored_edges``.
+
+    ``ids`` are the int64 vec_ids (rows without one are dropped: no
+    edge has them as an endpoint). ``E`` is the float64 matrix, each
+    row's values read exactly and padded with zeros to the widest row
+    (``dim``); ``lens`` is each row's own length; ``ok`` is False for a
+    null embedding or one holding a null element. ``norms`` are the
+    square roots of each row's squares folded left to right, as
+    ``l2_norm`` folds them (padding adds +0.0, which changes no sum).
+    """
+
+    def __init__(self, table: pa.Table):
+        """``table``: (vec_id, embedding) as collected with ``toArrow``."""
+        table = table.filter(pc.is_valid(table["vec_id"]))
+        emb = table["embedding"].combine_chunks()
+        n = len(emb)
+        self.ids = table["vec_id"].to_numpy().astype(np.int64)
+        self.ok = emb.is_valid().to_numpy(zero_copy_only=False)
+        self.lens = pc.list_value_length(emb).fill_null(0).to_numpy().astype(np.int64)
+        values = emb.flatten()  # the values of the non-null rows, in row order
+        row = np.repeat(np.arange(n), self.lens)
+        nulls = np.bincount(row, weights=values.is_null().to_numpy(zero_copy_only=False), minlength=n)
+        self.ok &= nulls == 0
+        col = np.arange(len(values)) - np.repeat(np.cumsum(self.lens) - self.lens, self.lens)
+        self.E = np.zeros((n, int(self.lens.max()) if n else 0))
+        self.E[row, col] = values.fill_null(0).to_numpy(zero_copy_only=False).astype(np.float64)
+        sq = np.zeros(n)
+        for j in range(self.dim):
+            sq = sq + self.E[:, j] * self.E[:, j]
+        self.norms = np.sqrt(sq)
+
+    @property
+    def dim(self) -> int:
+        return self.E.shape[1]
+
+
+def anchored_cosine100(block: VectorBlock, anchor_vec_id: int):
+    """The anchor's outgoing cosine x 100 from ``block``, unrounded:
+    (src_ids, dst_ids, values, valid), one entry per pair of an anchor
+    row and a row with another id. The dot is folded left to right and
+    divided by the product of the norms, as ``build_similarity_edges``
+    does; ``valid`` is False where that build gives null."""
+    a = np.flatnonzero(block.ids == anchor_vec_id)
+    b = np.flatnonzero(block.ids != anchor_vec_id)
+    A, B = block.E[a], block.E[b]
+    dots = np.zeros((len(a), len(b)))
+    for j in range(block.dim):
+        dots = dots + A[:, j : j + 1] * B[:, j]
+    den = block.norms[a][:, None] * block.norms[b][None, :]
+    valid = (
+        (block.ok[a][:, None] & block.ok[b][None, :])
+        & (block.lens[a][:, None] == block.lens[b][None, :])
+        & (den != 0)
+    )
+    with np.errstate(all="ignore"):
+        values = np.divide(dots, den, out=np.zeros_like(dots), where=den != 0) * 100
+    src = np.repeat(block.ids[a], len(b))
+    dst = np.tile(block.ids[b], len(a))
+    return src, dst, values.ravel(), valid.ravel()
+
+
+def anchored_edges(
+    spark: SparkSession, block: VectorBlock, anchor_vec_id: int, round_digits: int = 4
+) -> DataFrame:
+    """``build_similarity_edges(embeddings, anchor_vec_id)`` from the
+    driver-held ``block``: the kernel's row as a local relation, so
+    rounding and any filter or projection above it fold into the
+    relation and collecting it runs no Spark job."""
+    src, dst, values, valid = anchored_cosine100(block, int(anchor_vec_id))
+    pairs = spark.createDataFrame(
+        pa.table({
+            "src_id": pa.array(src, pa.int64()),
+            "dst_id": pa.array(dst, pa.int64()),
+            "cos100": pa.array(values, pa.float64(), mask=~valid),
+        })
+    )
+    return _edge_frame(pairs, F.col("cos100"), round_digits)
 
 
 def neighborhood(edges: DataFrame, anchor: str, lo: float, hi: float) -> DataFrame:

@@ -21,6 +21,16 @@ unpersists v; a frame a caller already holds from v still answers,
 from v+1's cache when their plans match, else through its lineage.
 ``release()`` frees the snapshot, and so does garbage collection.
 Offline passes (``deduplicate``) read the tables directly.
+
+Each version also carries driver state derived from it, built by the
+first request that needs it and dropped with the version: the sorted
+domain of each facet field asked for (``facet_options`` is then a
+lookup), and the embeddings as a ``compat.graph.VectorBlock`` when the
+version has at most ``similarity._DRIVER_MAX_ROWS`` rows. Anchored
+edge reads (``edges(anchor_vec_id=...)``, the neighborhoods and the
+one-hop route of ``run_cypher``) then run the numpy kernel over the
+block and read its row as a local relation, with no Spark job; above
+the gate they keep the Catalyst anchored plan over the snapshot.
 """
 
 from __future__ import annotations
@@ -46,6 +56,8 @@ _DUMP_SCHEMA = "_id string, providencia string, tipo string, anio int, texto str
 _HITS_SCHEMA = "origen string, destino string, similitud double"
 # a node id that names an embedding: "P-<vec_id>", vec_id a bigint
 _NODE_ID = re.compile(r"P-(0|[1-9][0-9]{0,17})")
+# WHERE atoms that read no edge beyond the matched hop's own
+_HOP_LOCAL_CONDS = {"cmp", "in", "bare", "expr_cond"}
 
 
 def _listing(path: str) -> tuple:
@@ -68,6 +80,61 @@ def _listing(path: str) -> tuple:
     return tuple(sorted(key))
 
 
+class _Version:
+    """One resident version of a source: its persisted frame and the
+    driver state derived from it, each piece built at most once."""
+
+    def __init__(self, key: tuple, frame: DataFrame):
+        self.key, self.frame = key, frame
+        self._lock = threading.Lock()
+        self._derived: dict = {}
+
+    def derived(self, name, build: Callable[[DataFrame], object]):
+        """The state ``name`` of this version: ``build(frame)``, run by
+        the first caller only (the others wait for it)."""
+        with self._lock:
+            if name not in self._derived:
+                self._derived[name] = build(self.frame)
+            return self._derived[name]
+
+
+def _vector_block(emb: DataFrame) -> _graph.VectorBlock | None:
+    """The embeddings collected once into a block, or None above the
+    driver gate (the anchored reads then run in Spark)."""
+    if emb.count() > similarity._DRIVER_MAX_ROWS:
+        return None
+    return _graph.VectorBlock(emb.select("vec_id", "embedding").toArrow())
+
+
+def _hop_anchor(query: str, params: dict) -> str | None:
+    """The anchor whose outgoing edges are all the edges ``query``
+    reads: the value of ``$p`` when the query is one MATCH of a single
+    outgoing SIMILAR hop from a node bound by ``{id: $p}``, with WHERE
+    atoms on that hop and its nodes only. None for any other shape."""
+    from providenciasbigdata_spark.compat.cypher import CypherUnsupported, parse, split_union
+
+    if len(split_union(" ".join(query.split()))[0]) != 1:
+        return None
+    try:
+        segments = parse(query)["segments"]
+    except CypherUnsupported:
+        return None
+    if len(segments) != 1 or segments[0]["unwind"] or len(segments[0]["matches"]) != 1:
+        return None
+    seg = segments[0]
+    match = seg["matches"][0]
+    pattern = match["pattern"]
+    if len(pattern) != 2 or pattern[0]["anchor_param"] is None:
+        return None
+    rel = pattern[1][0]
+    if rel["dir"] != ">" or rel["varlen"] is not None:
+        return None
+    if any(c[0] not in _HOP_LOCAL_CONDS for c in match["where"] + seg["post_where"]):
+        return None
+    anchor = params.get(pattern[0]["anchor_param"])
+    return anchor if isinstance(anchor, str) else None
+
+
 class ProvidenciasEngine:
     """Facade over the document + graph query surfaces.
 
@@ -82,7 +149,8 @@ class ProvidenciasEngine:
         self.data_dir = data_dir
         self._dump_dir: str | None = None
         self._lock = threading.Lock()
-        self._keys: dict[str, tuple] = {}
+        self._versions: dict[str, _Version] = {}
+        # the versions' frames, for unpersist_on_collect
         self._frames: dict[str, DataFrame] = {}
         unpersist_on_collect(self, self._frames)
 
@@ -107,36 +175,41 @@ class ProvidenciasEngine:
 
     # -- sources: the resident snapshot ----------------------------------
 
-    def _resident(self, name: str, path: str, build: Callable[[], DataFrame]) -> DataFrame:
-        """The persisted version of source ``name`` for the current
-        listing of ``path``: the held one, or, when the listing has
-        changed, a new one swapped in for it."""
+    def _resident(self, name: str, path: str, build: Callable[[], DataFrame]) -> _Version:
+        """The version of source ``name`` for the current listing of
+        ``path``: the held one, or, when the listing has changed, a new
+        one swapped in for it (its derived state goes with the old)."""
         key = _listing(path)
         with self._lock:
-            if self._keys.get(name) == key:
-                return self._frames[name]
+            version = self._versions.get(name)
+            if version is not None and version.key == key:
+                return version
             # the old version goes first: a re-read of the same directory
             # plans the same as v, and Spark would hand v's cache to v+1
             old = self._frames.pop(name, None)
             if old is not None:
                 old.unpersist()
-            frame = build().persist()
-            self._keys[name], self._frames[name] = key, frame
-            return frame
+            version = _Version(key, build().persist())
+            self._versions[name], self._frames[name] = version, version.frame
+            return version
 
     def release(self) -> None:
-        """Unpersist the snapshot now; the next request builds it again.
-        Frames already handed out still answer, through their lineage."""
+        """Unpersist the snapshot and drop its driver state now; the next
+        request builds them again. Frames already handed out still
+        answer, through their lineage."""
         with self._lock:
             for frame in self._frames.values():
                 frame.unpersist()
             self._frames.clear()
-            self._keys.clear()
+            self._versions.clear()
 
     def _table(self, name: str) -> DataFrame:
         return load_table(self.spark, self.data_dir, name)
 
     def rulings(self) -> DataFrame:
+        return self._rulings_version().frame
+
+    def _rulings_version(self) -> _Version:
         if self._dump_dir is not None:
             return self._resident("rulings", self._dump_dir, self._dump_rulings)
         return self._resident(
@@ -162,7 +235,7 @@ class ProvidenciasEngine:
             _docs.tokenize(F.col("texto")).alias("tokens"),
         )
 
-    def _embeddings(self) -> DataFrame:
+    def _embeddings_version(self) -> _Version:
         return self._resident(
             "embeddings",
             os.path.join(self.data_dir, "embeddings.parquet"),
@@ -173,13 +246,33 @@ class ProvidenciasEngine:
         return _graph.nodes_view(self.rulings())
 
     def edges(self, anchor_vec_id: int | None = None) -> DataFrame:
-        return _graph.build_similarity_edges(self._embeddings(), anchor_vec_id=anchor_vec_id)
+        """edges(src, dst, similitud); with ``anchor_vec_id``, that
+        vector's outgoing edges only, from the block below the gate."""
+        emb = self._embeddings_version()
+        if anchor_vec_id is not None:
+            block = emb.derived("block", _vector_block)
+            if block is not None:
+                return _graph.anchored_edges(self.spark, block, anchor_vec_id)
+        return _graph.build_similarity_edges(emb.frame, anchor_vec_id=anchor_vec_id)
+
+    def _edges_from(self, anchor: str) -> DataFrame:
+        """The edges an anchored read can reach: the anchor's outgoing
+        ones, or none when it names no node."""
+        m = _NODE_ID.fullmatch(anchor)
+        if m is None:
+            return self.edges().where(F.lit(False))  # planned away, never run
+        return self.edges(anchor_vec_id=int(m.group(1)))
 
     # -- page 1: facets + text search ------------------------------------
 
     def facet_options(self, field: str) -> list:
-        """Selectbox domains (reference streamlit_app.py:125-131)."""
-        return [r[0] for r in _docs.distinct_values(self.rulings(), field).collect()]
+        """Selectbox domains (reference streamlit_app.py:125-131),
+        computed once per rulings version."""
+        domain = self._rulings_version().derived(
+            ("facet", field),
+            lambda rulings: tuple(r[0] for r in _docs.distinct_values(rulings, field).collect()),
+        )
+        return list(domain)
 
     def query_rulings(
         self,
@@ -256,13 +349,16 @@ class ProvidenciasEngine:
 
     def run_cypher(self, query: str, params: dict | None = None) -> DataFrame:
         """Run the reference's Cypher templates verbatim
-        (streamlit_app.py:50,60-64) against the derived graph."""
+        (streamlit_app.py:50,60-64) against the derived graph. A single
+        outgoing hop from an anchor bound by ``{id: $p}`` reads only
+        that anchor's edges; every other shape reads all of them."""
         from providenciasbigdata_spark.compat.ir import cypher_run
 
+        anchor = _hop_anchor(query, params or {})
         return cypher_run(
             query,
             nodes=self.nodes(),
-            edges=self.edges(),
+            edges=self.edges() if anchor is None else self._edges_from(anchor),
             params=params,
         )
 
@@ -279,19 +375,15 @@ class ProvidenciasEngine:
         (reference streamlit_app.py:60-64). Anchored edge build is
         O(n): only the anchor's outgoing cosines are computed. An
         anchor that names no node has no edges."""
-        m = _NODE_ID.fullmatch(anchor)
-        if m is None:
-            edges = self.edges().where(F.lit(False))  # planned away, never run
-        else:
-            edges = self.edges(anchor_vec_id=int(m.group(1)))
-        return _graph.neighborhood(edges, anchor, lo, hi)
+        return _graph.neighborhood(self._edges_from(anchor), anchor, lo, hi)
 
     def neighborhood_graph(self, anchor: str, lo: float = 0.0, hi: float = 100.0):
         """(nodes_df, edges_df) for rendering — includes the singleton
         fallback (A14: the anchor renders even with zero edges). The
-        anchored scan runs once; both frames are built from its
-        collected rows, through Arrow."""
-        hits = self.similarity_neighborhood(anchor, lo, hi).toPandas()
+        anchored read runs once (no Spark job below the gate); both
+        frames are built from its collected rows, through Arrow."""
+        rows = self.similarity_neighborhood(anchor, lo, hi).collect()
+        hits = pd.DataFrame(rows, columns=["origen", "destino", "similitud"])
         nodes = pd.DataFrame({"id": _graph.neighborhood_nodes(hits, anchor)})
         return (
             self.spark.createDataFrame(nodes, "id string"),
@@ -314,12 +406,20 @@ class ProvidenciasEngine:
 
     def nearest_neighbors(self, query_vec, k: int = 10, approx: bool = False) -> DataFrame:
         """Cosine top-k (vec_id, score); ``approx=True`` probes SRP-LSH
-        buckets. No embeddings => the empty (vec_id, score) frame."""
-        emb = self._embeddings()
-        first = emb.select("embedding").first() if approx else None
-        if first is None:
-            return similarity.brute_force_topk(emb, query_vec, k=k)
-        return similarity.srp_lsh_topk(emb, query_vec, dim=len(first.embedding), k=k)
+        buckets, of the block's width below the gate. No embeddings =>
+        the empty (vec_id, score) frame."""
+        emb = self._embeddings_version()
+        dim = None
+        if approx:
+            block = emb.derived("block", _vector_block)
+            if block is not None:
+                dim = block.dim
+            else:
+                first = emb.frame.select("embedding").first()
+                dim = None if first is None else len(first.embedding)
+        if not dim:
+            return similarity.brute_force_topk(emb.frame, query_vec, k=k)
+        return similarity.srp_lsh_topk(emb.frame, query_vec, dim=dim, k=k)
 
     def events_stream(self, events_dir: str, **kwargs) -> DataFrame:
         return streaming.events_stream(self.spark, events_dir, **kwargs)

@@ -11,9 +11,14 @@
                            candidates.
 - ``ml_minhash_join``      optional pyspark.ml wrapper (import-gated).
 
-The exact cosine is a Catalyst expression (compat.graph.cosine) — all
-JVM. The SRP hyperplanes are deterministic (numpy PCG64 with a literal
-seed) and shipped as array literals, not a UDF closure.
+The exact cosine of these operators is a Catalyst expression
+(compat.graph.cosine): it runs in the JVM, and a zero norm gives null.
+The engine's anchored reads compute the same cosine with a numpy kernel
+(compat.graph.anchored_edges) over a vector block collected once per
+embeddings version, when that version has at most ``_DRIVER_MAX_ROWS``
+rows; above that size they stay on the Catalyst plan. The SRP
+hyperplanes are deterministic (numpy PCG64 with a literal seed) and
+shipped as array literals, not a UDF closure.
 
 Scale notes: for a 100TB corpus the brute-force path is a single scan
 (fine for one-off queries); the SRP path buckets the corpus once
@@ -502,7 +507,8 @@ def training_sample(
 
 
 # Largest (sampled) corpus the Lloyd trainers — ``kmeans_centroids``
-# and ``pq_train`` — collect and iterate on the driver.
+# and ``pq_train`` — collect and iterate on the driver, and the largest
+# embeddings version the engine holds as a driver-side vector block.
 _DRIVER_MAX_ROWS = 50_000
 
 

@@ -14,7 +14,7 @@ table: similitud bands and anchors then push into a parquet scan
 instead of recomputing cosines per query.
 
 At 100 TB the analogue is exactly this: materialize the similarity
-graph once (``operators.similarity.lsh_similarity_join`` -> table),
+graph once (``operators.similarity.srp_lsh_pairs`` -> table),
 query it many times; nobody recomputes an n^2 cosine join per query.
 One query (``cypher_two_hop_motif``) deliberately keeps the inline
 end-to-end build so that path stays covered.

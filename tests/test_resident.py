@@ -1,6 +1,8 @@
 """The engine's resident snapshot and the BM25 index's cache: requests
 read one in-memory version, a changed listing swaps in the next one,
-and cached data lives exactly as long as its owner."""
+and cached data lives exactly as long as its owner. The driver state
+derived from a version (the vector block, the facet domains) is built
+once, by the first request that needs it, and goes with its version."""
 
 from __future__ import annotations
 
@@ -10,6 +12,8 @@ import shutil
 import sys
 import threading
 import time
+import weakref
+from concurrent.futures import ThreadPoolExecutor
 
 import pyarrow as pa
 import pyarrow.parquet as pq
@@ -20,6 +24,12 @@ from providenciasbigdata_spark.compat.documents import rulings_view
 from providenciasbigdata_spark.engine import ProvidenciasEngine
 from providenciasbigdata_spark.io import load_table
 from providenciasbigdata_spark.operators.postings import bm25_search, build_bm25_index
+
+_CYPHER = (
+    "MATCH (a:Providencia {id: $providencia})-[r:SIMILAR]->(b:Providencia) "
+    "WHERE r.similitud >= $rango_min AND r.similitud <= $rango_max "
+    "RETURN a.id AS origen, b.id AS destino, r.similitud AS similitud"
+)
 
 
 def _store(tmp_path, sf_dir) -> str:
@@ -187,7 +197,7 @@ def test_readers_see_the_old_or_the_new_version(spark, tmp_path, sf_dir):
 
 
 @pytest.mark.parametrize("dump", [False, True])
-def test_nodes_and_edges_read_the_snapshot(spark, tmp_path, sf_dir, dump):
+def test_nodes_and_edges_read_the_snapshot(spark, tmp_path, sf_dir, dump, distributed):
     from providenciasbigdata_spark import datasources
 
     store = _store(tmp_path, sf_dir)
@@ -199,13 +209,170 @@ def test_nodes_and_edges_read_the_snapshot(spark, tmp_path, sf_dir, dump):
             ),
             out,
         )
-        eng = ProvidenciasEngine.from_mongodump(spark, out, store)
+
+        def engine():
+            return ProvidenciasEngine.from_mongodump(spark, out, store)
     else:
-        eng = ProvidenciasEngine(spark, store)
+
+        def engine():
+            return ProvidenciasEngine(spark, store)
+
+    eng = engine()
     assert len(eng.node_ids()) == 500
+    nodes = eng.nodes()
+    nodes.collect()
+    assert {s.nodeName() for s in _scans(nodes)} == {"InMemoryTableScan"}
+    # below the driver gate a neighborhood reads the block collected
+    # from the snapshot, as a local relation; above it, the snapshot
     hits = eng.similarity_neighborhood("P-7", 20.0, 100.0)
     assert hits.count() > 0
-    for df in (eng.nodes(), hits):
-        df.collect()
-        assert {s.nodeName() for s in _scans(df)} == {"InMemoryTableScan"}
+    assert {s.nodeName() for s in _scans(hits)} == {"LocalTableScan"}
+    eng.release()
+    with distributed():
+        eng = engine()
+        hits = eng.similarity_neighborhood("P-7", 20.0, 100.0)
+        assert hits.count() > 0
+        assert {s.nodeName() for s in _scans(hits)} == {"InMemoryTableScan"}
+        eng.release()
+
+
+# -- per-version driver state: the vector block and the facet domains --
+
+
+def _vector_store(tmp_path, sf_dir) -> str:
+    """``_store`` with ``embeddings.parquet`` as a directory too."""
+    store = _store(tmp_path, sf_dir)
+    emb = os.path.join(store, "embeddings.parquet")
+    os.rename(emb, emb + ".file")
+    os.mkdir(emb)
+    os.rename(emb + ".file", os.path.join(emb, "part-0.parquet"))
+    return store
+
+
+def _append_vectors(store: str, sf_dir: str, name: str, first_id: int, n: int) -> None:
+    """Add copies of the fixture's first ``n`` vectors under new ids."""
+    t = pq.read_table(f"{sf_dir}/embeddings.parquet").slice(0, n).to_pandas()
+    t["vec_id"] = range(first_id, first_id + n)
+    part = os.path.join(store, "embeddings.parquet")
+    pq.write_table(pa.Table.from_pandas(t, preserve_index=False), os.path.join(part, f"_{name}"))
+    os.rename(os.path.join(part, f"_{name}"), os.path.join(part, name))
+
+
+def _destinations(eng, anchor: str) -> set:
+    nodes, edges = eng.neighborhood_graph(anchor, -100.0, 100.0)
+    return {r.destino for r in edges.collect()}
+
+
+def test_appends_reach_the_next_neighborhood_and_facet(spark, tmp_path, sf_dir):
+    store = _vector_store(tmp_path, sf_dir)
+    eng = ProvidenciasEngine(spark, store)
+    before = _destinations(eng, "P-7")
+    assert len(before) == 499 and "added" not in eng.facet_options("tipo")
+    _append_vectors(store, sf_dir, "part-1.parquet", 10_000, 8)
+    _append(store, sf_dir, "part-1.parquet", 10_000, 3, "added")
+    assert _destinations(eng, "P-7") == before | {f"P-{i}" for i in range(10_000, 10_008)}
+    # P-10007 is a copy of P-7: its edge to it is the self-similarity
+    hits = eng.similarity_neighborhood("P-10007", 99.9999, 100.0).collect()
+    assert [r.destino for r in hits] == ["P-7"]
+    assert "added" in eng.facet_options("tipo")
+    eng.release()
+
+
+def test_each_version_builds_its_block_once(spark, tmp_path, sf_dir, monkeypatch):
+    from providenciasbigdata_spark import engine as engine_mod
+
+    builds = []
+    build = engine_mod._vector_block
+
+    def counted(emb):
+        builds.append(emb)
+        return build(emb)
+
+    monkeypatch.setattr(engine_mod, "_vector_block", counted)
+    store = _vector_store(tmp_path, sf_dir)
+    eng = ProvidenciasEngine(spark, store)
+    assert builds == []  # nothing is built before a request needs it
+    eng.facet_options("tipo")
+    eng.query_rulings(tipo="src3").collect()
+    assert builds == []
+    params = {"providencia": "P-3", "rango_min": 20.0, "rango_max": 100.0}
+    with ThreadPoolExecutor(4) as pool:
+        list(pool.map(lambda a: _destinations(eng, f"P-{a}"), range(8)))
+    eng.run_cypher(_CYPHER, params).collect()
+    eng.edges(anchor_vec_id=5).collect()
+    eng.nearest_neighbors([1.0] * 64, k=3, approx=True).collect()
+    assert len(builds) == 1
+    _append_vectors(store, sf_dir, "part-1.parquet", 10_000, 2)
+    eng.run_cypher(_CYPHER, params).collect()
+    _destinations(eng, "P-3")
+    assert len(builds) == 2
+    eng.release()
+
+
+def test_release_and_collection_free_the_driver_state(spark, tmp_path, sf_dir):
+    eng = ProvidenciasEngine(spark, _store(tmp_path, sf_dir))
+    eng.facet_options("tipo")
+    _destinations(eng, "P-7")
+    held = [weakref.ref(v) for v in eng._versions.values()]
+    held.append(weakref.ref(eng._embeddings_version().derived("block", None)))
+    assert len(held) == 3 and all(r() is not None for r in held)
+    eng.release()
+    gc.collect()
+    assert all(r() is None for r in held)
+    # the engine serves again after a release, and collection frees it
+    assert len(_destinations(eng, "P-7")) == 499 and eng.facet_options("tipo")
+    held = [weakref.ref(v) for v in eng._versions.values()]
+    held.append(weakref.ref(eng._embeddings_version().derived("block", None)))
+    del eng
+    gc.collect()
+    assert all(r() is None for r in held)
+
+
+def test_a_returned_domain_is_the_callers_copy(spark, tmp_path, sf_dir):
+    eng = ProvidenciasEngine(spark, _store(tmp_path, sf_dir))
+    tipos = eng.facet_options("tipo")
+    want = list(tipos)
+    tipos.append("mutated")
+    tipos.sort(reverse=True)
+    assert eng.facet_options("tipo") == want
+    eng.release()
+
+
+def test_readers_of_derived_state_see_the_old_or_the_new_version(spark, tmp_path, sf_dir):
+    store = _vector_store(tmp_path, sf_dir)
+    eng = ProvidenciasEngine(spark, store)
+    old_tipos = eng.facet_options("tipo")
+    old_dsts = _destinations(eng, "P-7")
+    new_tipos = sorted([*old_tipos, "added"])
+    new_dsts = old_dsts | {"P-10000", "P-10001"}
+    seen, errors = [], []
+    go = threading.Barrier(5)
+
+    def reader():
+        try:
+            go.wait()
+            for _ in range(3):
+                seen.append(("tipo", eng.facet_options("tipo")))
+                seen.append(("dsts", _destinations(eng, "P-7")))
+        except Exception as exc:  # surfaced by the assert below
+            errors.append(exc)
+
+    threads = [threading.Thread(target=reader) for _ in range(4)]
+    interval = sys.getswitchinterval()
+    sys.setswitchinterval(1e-5)
+    try:
+        for t in threads:
+            t.start()
+        go.wait()
+        _append(store, sf_dir, "part-1.parquet", 10_000, 2, "added")
+        _append_vectors(store, sf_dir, "part-1.parquet", 10_000, 2)
+        for t in threads:
+            t.join(timeout=300)
+    finally:
+        sys.setswitchinterval(interval)
+    assert not any(t.is_alive() for t in threads) and not errors
+    assert len(seen) == 24
+    for kind, got in seen:
+        assert got in ((old_tipos, new_tipos) if kind == "tipo" else (old_dsts, new_dsts))
+    assert eng.facet_options("tipo") == new_tipos and _destinations(eng, "P-7") == new_dsts
     eng.release()
