@@ -210,15 +210,39 @@ def anchored_edges(
     driver-held ``block``: the kernel's row as a local relation, so
     rounding and any filter or projection above it fold into the
     relation and collecting it runs no Spark job."""
+    return _edge_frame(_kernel_row(spark, block, anchor_vec_id), F.col("cos100"), round_digits)
+
+
+def _kernel_row(spark: SparkSession, block: VectorBlock, anchor_vec_id: int) -> DataFrame:
+    """The anchor's (src_id, dst_id, cos100) row as a local relation."""
     src, dst, values, valid = anchored_cosine100(block, int(anchor_vec_id))
-    pairs = spark.createDataFrame(
+    return spark.createDataFrame(
         pa.table({
             "src_id": pa.array(src, pa.int64()),
             "dst_id": pa.array(dst, pa.int64()),
             "cos100": pa.array(values, pa.float64(), mask=~valid),
         })
     )
-    return _edge_frame(pairs, F.col("cos100"), round_digits)
+
+
+def anchored_neighborhood(
+    spark: SparkSession, block: VectorBlock, anchor_vec_id: int, lo: float, hi: float,
+    round_digits: int = 4,
+) -> tuple[list[str], list[float]]:
+    """``neighborhood(anchored_edges(spark, block, anchor_vec_id), ...)``
+    collected, as (destino ids, similitudes) in the kernel's row order:
+    one local relation from the kernel's row, rounded by Spark's own
+    ``round`` and filtered by its inclusive ``between`` in one plan,
+    then collected with no Spark job. The origen of every hit is
+    ``P-<anchor_vec_id>``."""
+    sim = F.round("cos100", round_digits)
+    rows = (
+        _kernel_row(spark, block, anchor_vec_id)
+        .where(sim.between(float(lo), float(hi)))
+        .select("dst_id", sim.alias("similitud"))
+        .collect()
+    )
+    return [f"P-{r[0]}" for r in rows], [r[1] for r in rows]
 
 
 def neighborhood(edges: DataFrame, anchor: str, lo: float, hi: float) -> DataFrame:

@@ -40,7 +40,7 @@ import re
 import threading
 from collections.abc import Callable
 
-import pandas as pd
+import pyarrow as pa
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
@@ -53,7 +53,6 @@ from providenciasbigdata_spark.session import unpersist_on_collect
 
 # schema of a rulings mongodump read through the mongodump DataSource
 _DUMP_SCHEMA = "_id string, providencia string, tipo string, anio int, texto string"
-_HITS_SCHEMA = "origen string, destino string, similitud double"
 # a node id that names an embedding: "P-<vec_id>", vec_id a bigint
 _NODE_ID = re.compile(r"P-(0|[1-9][0-9]{0,17})")
 # WHERE atoms that read no edge beyond the matched hop's own
@@ -380,14 +379,29 @@ class ProvidenciasEngine:
     def neighborhood_graph(self, anchor: str, lo: float = 0.0, hi: float = 100.0):
         """(nodes_df, edges_df) for rendering — includes the singleton
         fallback (A14: the anchor renders even with zero edges). The
-        anchored read runs once (no Spark job below the gate); both
-        frames are built from its collected rows, through Arrow."""
-        rows = self.similarity_neighborhood(anchor, lo, hi).collect()
-        hits = pd.DataFrame(rows, columns=["origen", "destino", "similitud"])
-        nodes = pd.DataFrame({"id": _graph.neighborhood_nodes(hits, anchor)})
+        anchored read runs once: below the gate as one local relation
+        rounded and filtered by Spark (no Spark job), above it as the
+        Catalyst neighborhood. Both frames are built from its collected
+        rows, through Arrow."""
+        m = _NODE_ID.fullmatch(anchor)
+        block = None
+        if m is not None:
+            block = self._embeddings_version().derived("block", _vector_block)
+        if block is not None:
+            dst, sim = _graph.anchored_neighborhood(self.spark, block, int(m.group(1)), lo, hi)
+            src = [anchor] * len(dst)
+        else:
+            rows = self.similarity_neighborhood(anchor, lo, hi).collect()
+            src, dst, sim = ([r[i] for r in rows] for i in range(3))
+        nodes = _graph.neighborhood_nodes({"origen": src, "destino": dst}, anchor)
+        hits = pa.table({
+            "origen": pa.array(src, pa.string()),
+            "destino": pa.array(dst, pa.string()),
+            "similitud": pa.array(sim, pa.float64()),
+        })
         return (
-            self.spark.createDataFrame(nodes, "id string"),
-            self.spark.createDataFrame(hits, _HITS_SCHEMA),
+            self.spark.createDataFrame(pa.table({"id": pa.array(nodes, pa.string())})),
+            self.spark.createDataFrame(hits),
         )
 
     # -- pipeline extensions ----------------------------------------------

@@ -14,6 +14,17 @@ from it:
   postings (explode + distinct); AND = posting intersection via
   count-of-terms (a doc qualifies when it appears under every term) —
   no corpus scan, the join is against the tiny matched-token slice.
+- ``build_bm25_index`` / ``bm25_search``: Okapi BM25 top-k from a built
+  ``BM25Index``. Up to ``_DRIVER_MAX_ROWS`` (doc, token) rows the index
+  is a numpy postings block on the driver and a search runs no Spark
+  job: numpy sums the terms' contributions, and the top k come back as
+  a local relation that Spark's own ``round`` folds into. Above the
+  gate the rows are a persisted Spark table and a search is a plan over
+  it. Both paths share one expression for a term's contribution, and
+  the idf of a driver block comes from Spark's ``log``, so each term's
+  contribution agrees bit for bit; the rounded scores agree unless the
+  Spark path adds three or more terms in an order that moves a sum's
+  last bit across a rounding boundary.
 
 Degenerate-key note: stop-word-like tokens produce postings arrays as
 long as the corpus. The index is still correct — but at 100 TB those
@@ -24,13 +35,17 @@ drop (a term in more than max_df of all docs carries ~no selectivity).
 
 from __future__ import annotations
 
-from pyspark.sql import Column, DataFrame, Window
+import numbers
+
+import numpy as np
+import pyarrow as pa
+import pyarrow.compute as pc
+from pyspark.sql import Column, DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from providenciasbigdata_spark.session import unpersist_on_collect
 
 _EMPTY_HITS_SCHEMA = "doc_id bigint"
-_EMPTY_SCORED_SCHEMA = "doc_id bigint, score double"
 
 
 def build_postings(
@@ -175,28 +190,126 @@ def search_fuzzy(
     return matched.select(F.explode("postings").alias("doc_id")).distinct()
 
 
+# Largest (doc_id, token) table a BM25 index holds on the driver, as a
+# numpy postings block (20 bytes a row, plus the vocabulary); larger
+# ones stay a persisted Spark table. 0 keeps every index in Spark.
+_DRIVER_MAX_ROWS = 1_000_000
+
+
+def _idf(n_docs: int, df):
+    """Lucene's BM25 idf over a df column (always positive)."""
+    return F.log((F.lit(float(n_docs)) - df + 0.5) / (df + 0.5) + 1.0)
+
+
+def _term_score(idf, tf, dl, avgdl, k1: float, b: float):
+    """One term's BM25 contribution to a doc. The same expression tree
+    serves Spark columns and numpy arrays, so both paths do the same
+    double arithmetic in the same order."""
+    return idf * (tf * (k1 + 1)) / (tf + k1 * (1 - b + b * dl / avgdl))
+
+
+class _DriverPostings:
+    """A BM25 index's rows held on the driver, grouped by token: token
+    ``t`` with ``i = terms[t]`` owns rows ``offsets[i]:offsets[i + 1]`` of
+    ``doc_id``, ``tf`` and ``dl``, and ``idf[i]`` is its idf as Spark's ``log``
+    computes it (numpy's ``log`` differs in the last bit for about a
+    third of the arguments)."""
+
+    def __init__(self, spark: SparkSession, table: pa.Table):
+        """``table``: (doc_id, token, tf, dl) as collected with ``toArrow``."""
+        token = pc.dictionary_encode(table["token"], null_encoding="encode").combine_chunks()
+        code = token.indices.to_numpy()
+        rows = np.argsort(code, kind="stable")
+        self.offsets = np.append(0, np.cumsum(np.bincount(code, minlength=len(token.dictionary))))
+        self.terms = {t: i for i, t in enumerate(token.dictionary.to_pylist())}
+        self.doc_id = table["doc_id"].to_numpy()[rows]
+        self.tf = table["tf"].to_numpy()[rows]
+        self.dl = table["dl"].to_numpy()[rows]
+        self.n_docs = len(np.unique(self.doc_id))
+        self.avgdl = int(self.tf.sum()) / self.n_docs if self.n_docs else None
+        # one idf per distinct df, from a local relation (no Spark job)
+        df = np.diff(self.offsets)
+        dfs = np.unique(df)
+        idfs = np.zeros(0)
+        if len(dfs):
+            local = spark.createDataFrame(pa.table({"df": pa.array(dfs, pa.int64())}))
+            idfs = np.array([r[0] for r in local.select(_idf(self.n_docs, F.col("df"))).collect()])
+        self.idf = idfs[np.searchsorted(dfs, df)]
+
+    def top(self, spark, terms, k, k1, b, round_digits) -> DataFrame:
+        """The top-k frame for sorted distinct ``terms``, k > 0."""
+        docs, sums = [], []
+        for t in terms:
+            i = self.terms.get(t)
+            if i is not None:
+                rows = slice(self.offsets[i], self.offsets[i + 1])
+                docs.append(self.doc_id[rows])
+                sums.append(_term_score(self.idf[i], self.tf[rows], self.dl[rows], self.avgdl, k1, b))
+        if not docs:
+            return _scored(spark, [], [], round_digits)
+        ids, at = np.unique(np.concatenate(docs), return_inverse=True)
+        score = np.zeros(len(ids))
+        # each doc sums its terms in sorted-term order, from 0.0
+        for at_term, sum_term in zip(np.split(at, np.cumsum([len(d) for d in docs])[:-1]), sums):
+            score[at_term] += sum_term
+        order = np.argsort(-score, kind="stable")  # doc_id ascending among equal sums
+        # rounding is monotone, so only docs within ``band`` of the k-th
+        # sum can reach the top k; they keep this order unless two
+        # different sums among them may round to the same score
+        band = 2 * 10.0**-round_digits
+        s = score[order]
+        if len(s) > k:
+            order = order[: np.searchsorted(-s, band - s[k - 1], side="right")]
+        gaps = -np.diff(score[order])
+        settle = bool(np.any((gaps > 0) & (gaps < band)))
+        if not settle:
+            order = order[:k]
+        frame = _scored(spark, ids[order], score[order], round_digits)
+        return frame.orderBy(F.desc("score"), F.asc("doc_id")).limit(k) if settle else frame
+
+
+def _scored(spark: SparkSession, ids, sums, round_digits: int) -> DataFrame:
+    """(doc_id, score) as a local relation, in the given row order, each
+    sum rounded by Spark's ``round``: collecting it runs no Spark job."""
+    return spark.createDataFrame(
+        pa.table({"doc_id": pa.array(ids, pa.int64()), "s": pa.array(sums, pa.float64())})
+    ).select("doc_id", F.round("s", round_digits).alias("score"))
+
+
 class BM25Index:
-    """Built ranked-retrieval data, resident in Spark's cache: one row
-    per (doc_id, token) with the token's count in the doc (``tf``), the
-    doc's length (``dl``) and the token's first position in the doc
-    (``first_pos``), plus the corpus scalars N and avgdl. A
-    query reads its terms' rows from the cached table: it never reads
-    or tokenizes the corpus, and runs no driver action (pinned in
-    tests/test_postings.py). Doc ids must be unique.
+    """Built ranked-retrieval data: one row per (doc_id, token) with the
+    token's count in the doc (``tf``) and the doc's length (``dl``),
+    plus the corpus scalars N and avgdl. Doc ids must be unique.
 
-    The cache lives as long as the index: ``release()`` frees it, and
-    so does garbage collection. Frames built from a released index
-    still answer, by recomputing from the corpus."""
+    The build decides by size alone where the rows live: up to
+    ``_DRIVER_MAX_ROWS`` of them in a driver-side postings block, which
+    a search scores in numpy; above that in ``term_freqs`` persisted in
+    Spark's cache (with each token's ``first_pos`` in the doc), which a
+    search plans over. Either way a query never reads or tokenizes the
+    corpus and runs no driver action (pinned in tests/test_postings.py).
 
-    def __init__(self, term_freqs: DataFrame, n_docs: int, avgdl: float | None):
+    The block or the cache lives as long as the index: ``release()``
+    frees it, and so does garbage collection. A released index still
+    answers, and so do frames built from it, by recomputing from the
+    corpus (``term_freqs`` is then its lazy plan)."""
+
+    def __init__(
+        self,
+        term_freqs: DataFrame,
+        n_docs: int,
+        avgdl: float | None,
+        postings: _DriverPostings | None = None,
+    ):
         self.term_freqs = term_freqs
         self.n_docs = n_docs
         self.avgdl = avgdl
-        self._frames = {"term_freqs": term_freqs}
+        self._postings = postings
+        self._frames = {} if postings is not None else {"term_freqs": term_freqs}
         unpersist_on_collect(self, self._frames)
 
     def release(self) -> None:
-        """Free the cached table now."""
+        """Free the driver block or the cached table now."""
+        self._postings = None
         for df in self._frames.values():
             df.unpersist()
         self._frames.clear()
@@ -208,9 +321,13 @@ def build_bm25_index(
     """Build the BM25 index from a tokenized corpus: a doc's terms are
     its tokens (``compat.documents.tokenize`` emits no empty ones), its
     length is their number, and a doc without tokens is not in the
-    index. One shuffle groups the (doc, token) counts; the one stats
-    action (N and the total length, one aggregate) fills the cache on
-    its way."""
+    index. One shuffle groups the (doc, token) counts.
+
+    Up to ``_DRIVER_MAX_ROWS`` rows, one ``toArrow`` collects them into
+    the driver block (the ``limit`` that decides the gate rides in the
+    same action) and N and avgdl come from the block.
+    Above it, the rows are persisted and the one stats action (N and
+    the total length, one aggregate) fills the cache on its way."""
     term_freqs = (
         docs.select(
             F.col(id_col).alias("doc_id"),
@@ -223,8 +340,17 @@ def build_bm25_index(
             F.max("dl").alias("dl"),
             F.min("pos").alias("first_pos"),
         )
-        .persist()
     )
+    if _DRIVER_MAX_ROWS:
+        table = (
+            term_freqs.select("doc_id", "token", "tf", "dl")
+            .limit(_DRIVER_MAX_ROWS + 1)
+            .toArrow()
+        )
+        if table.num_rows <= _DRIVER_MAX_ROWS:
+            postings = _DriverPostings(docs.sparkSession, table)
+            return BM25Index(term_freqs, postings.n_docs, postings.avgdl, postings)
+    term_freqs = term_freqs.persist()
     # one row per doc holds the doc's first token, so N needs no
     # distinct pass over doc ids
     row = term_freqs.agg(
@@ -248,32 +374,39 @@ def bm25_search(
     score(d, q) = sum over query terms t of
         idf(t) * tf(t,d) * (k1+1) / (tf(t,d) + k1 * (1 - b + b*|d|/avgdl))
     with idf(t) = ln((N - df(t) + 0.5) / (df(t) + 0.5) + 1)  (Lucene form,
-    always positive).
-
-    The plan filters the query terms' rows from the cached table,
-    counts each term's rows (its df) over a window on that small
-    slice, scores each row, sums per doc and keeps a TakeOrdered top-k
-    (per-partition heaps, not a global sort). Ties broken by doc_id
-    ascending for a total order. Empty term list or empty index =>
+    always positive), rounded to ``round_digits`` by Spark's ``round``
+    (HALF_UP). Rows come ordered by score descending, then doc_id
+    ascending; ``k`` must be a non-negative integer (else ValueError).
+    Empty term list, only unknown terms, ``k=0`` or an empty index =>
     empty (doc_id, score) frame.
+
+    On a driver-held index the sums are numpy's, each doc's terms added
+    in sorted-term order, and the result is a local relation of the top
+    k with the rounding folded in: collecting it runs no Spark job. When
+    two different sums near the k-th place could round to one score, the
+    frame sorts those few candidate rows by their rounded score instead.
+    On a Spark-held index the plan filters the query terms' rows from
+    the cached table, counts each term's rows (its df) over a window on
+    that small slice, scores each row, sums per doc and keeps a
+    TakeOrdered top-k (per-partition heaps, not a global sort).
     """
+    if isinstance(k, bool) or not isinstance(k, numbers.Integral) or k < 0:
+        raise ValueError(f"bm25_search: k must be a non-negative integer, got {k!r}")
+    k = int(k)
     spark = index.term_freqs.sparkSession
     terms = sorted(set(terms))
-    if not terms or index.n_docs == 0 or index.avgdl is None:
-        return spark.createDataFrame([], _EMPTY_SCORED_SCHEMA)
+    postings = index._postings
+    if not terms or k == 0 or index.n_docs == 0 or index.avgdl is None:
+        return _scored(spark, [], [], round_digits)
+    if postings is not None:
+        return postings.top(spark, terms, k, k1, b, round_digits)
     term_lit = F.array(*[F.lit(t) for t in terms])
     matched = index.term_freqs.where(F.array_contains(term_lit, F.col("token"))).select(
         "doc_id", "tf", "dl", F.count("*").over(Window.partitionBy("token")).alias("df")
     )
-    idf = F.log(
-        (F.lit(float(index.n_docs)) - F.col("df") + 0.5) / (F.col("df") + 0.5) + 1.0
-    )
-    dl_norm = 1 - b + b * F.col("dl") / F.lit(float(index.avgdl))
+    s = _term_score(_idf(index.n_docs, F.col("df")), F.col("tf"), F.col("dl"), index.avgdl, k1, b)
     scored = (
-        matched.select(
-            "doc_id",
-            (idf * (F.col("tf") * (k1 + 1)) / (F.col("tf") + k1 * dl_norm)).alias("s"),
-        )
+        matched.select("doc_id", s.alias("s"))
         .groupBy("doc_id")
         .agg(F.round(F.sum("s"), round_digits).alias("score"))
     )

@@ -509,9 +509,12 @@ def q_a7_search_bm25(spark: SparkSession, sf_dir: str) -> DataFrame:
     $text returns matches unranked; a search service over the same
     collection wants ranked top-k). Scoring runs entirely from the
     prebuilt index (BM25Index captures N/avgdl at build — zero driver
-    actions per search). A one-shot query outlives its index: this one
-    releases the index's cache, so the returned plan recomputes the
-    index through its lineage."""
+    actions per search). At fixture scale the index is a driver-side
+    postings block, and the result is a local relation of the top 10
+    that the release below leaves intact; above the index's size gate
+    the result is a plan over the index's cached table, which the
+    release frees, so the plan recomputes the index through its
+    lineage."""
     from providenciasbigdata_spark.operators.postings import (
         bm25_search,
         build_bm25_index,

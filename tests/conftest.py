@@ -46,16 +46,18 @@ def spark_stems(spark):
 @pytest.fixture()
 def distributed(monkeypatch):
     """Context manager that forces the distributed loops: inside it the
-    size gates of ``graph_algos`` (``_DRIVER_MAX_EDGES``) and
-    ``similarity`` (``_DRIVER_MAX_ROWS``) are 0, so every non-empty
-    input skips the driver finisher."""
-    from providenciasbigdata_spark.operators import graph_algos, similarity
+    size gates of ``graph_algos`` (``_DRIVER_MAX_EDGES``),
+    ``similarity`` (``_DRIVER_MAX_ROWS``) and ``postings``
+    (``_DRIVER_MAX_ROWS``) are 0, so every non-empty input skips the
+    driver finisher and every BM25 index built inside is a Spark table."""
+    from providenciasbigdata_spark.operators import graph_algos, postings, similarity
 
     @contextlib.contextmanager
     def force():
         with monkeypatch.context() as m:
             m.setattr(graph_algos, "_DRIVER_MAX_EDGES", 0)
             m.setattr(similarity, "_DRIVER_MAX_ROWS", 0)
+            m.setattr(postings, "_DRIVER_MAX_ROWS", 0)
             yield
 
     return force

@@ -118,6 +118,17 @@ def test_kernel_matches_the_catalyst_fold_for_every_anchor(spark, gate, oracle_e
         got = pool.map(lambda a: sorted(eng.edges(anchor_vec_id=a).collect()), anchors)
         for a, rows in zip(anchors, got):
             assert rows == sorted(want[f"P-{a}"]), a
+    # neighborhood_graph's fused read: the range ends are similitudes
+    # of the anchor's own edges, and both ends are inclusive
+    for a in anchors[:3]:
+        sims = sorted(r.similitud for r in want[f"P-{a}"])
+        lo, hi = sims[len(sims) // 4], sims[3 * len(sims) // 4]
+        hits = {(r.dst, r.similitud) for r in want[f"P-{a}"] if lo <= r.similitud <= hi}
+        nodes, edges = eng.neighborhood_graph(f"P-{a}", lo, hi)
+        rows = edges.collect()
+        assert {(r.destino, r.similitud) for r in rows} == hits and len(rows) == len(hits)
+        assert {r.origen for r in rows} == {f"P-{a}"}
+        assert [r.id for r in nodes.collect()] == sorted({f"P-{a}", *(d for d, _ in hits)})
     eng.release()
 
 

@@ -134,7 +134,7 @@ def test_append_swaps_in_the_next_version(spark, tmp_path, sf_dir):
     eng.release()
 
 
-def test_release_and_collection_free_the_cache(spark, tmp_path, sf_dir):
+def test_release_and_collection_free_the_cache(spark, tmp_path, sf_dir, distributed):
     base = _settled(spark)
     eng = ProvidenciasEngine(spark, _store(tmp_path, sf_dir))
     eng.query_rulings(tipo="src3").collect()
@@ -149,15 +149,36 @@ def test_release_and_collection_free_the_cache(spark, tmp_path, sf_dir):
     del eng
     assert _back_to(spark, base) and not _cached(frames[0])
 
-    idx = build_bm25_index(rulings_view(load_table(spark, sf_dir, "documents")))
-    assert _persisted(spark) == base + 1
-    query = bm25_search(idx, ["merge"], k=3)
-    idx.release()
-    assert _persisted(spark) == base and len(query.collect()) == 3
-    idx = build_bm25_index(rulings_view(load_table(spark, sf_dir, "documents")))
+    # an index above its size gate is a persisted table
+    with distributed():
+        idx = build_bm25_index(rulings_view(load_table(spark, sf_dir, "documents")))
+        assert _persisted(spark) == base + 1
+        query = bm25_search(idx, ["merge"], k=3)
+        idx.release()
+        assert _persisted(spark) == base and len(query.collect()) == 3
+        idx = build_bm25_index(rulings_view(load_table(spark, sf_dir, "documents")))
     tfs = idx.term_freqs
     del idx
     assert _back_to(spark, base) and not _cached(tfs)
+
+
+def test_release_and_collection_free_the_bm25_block(spark, sf_dir):
+    base = _settled(spark)
+    docs = rulings_view(load_table(spark, sf_dir, "documents"))
+    idx = build_bm25_index(docs)
+    assert _persisted(spark) == base and not _cached(idx.term_freqs)
+    block = weakref.ref(idx._postings)
+    query = bm25_search(idx, ["merge"], k=3)
+    idx.release()
+    gc.collect()
+    assert block() is None and len(query.collect()) == 3
+    # a released index still answers, through its lineage
+    assert bm25_search(idx, ["merge"], k=3).collect() == query.collect()
+    idx = build_bm25_index(docs)
+    block = weakref.ref(idx._postings)
+    del idx
+    gc.collect()
+    assert block() is None and _persisted(spark) == base
 
 
 def test_readers_see_the_old_or_the_new_version(spark, tmp_path, sf_dir):
