@@ -57,6 +57,8 @@ import re
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from providenciasbigdata_spark.session import local_frame
+
 
 class CypherUnsupported(ValueError):
     """Query parses outside the linear-anchored-path grammar."""
@@ -1345,7 +1347,7 @@ def _compile_segment(
             # zero-row result, not a schema-inference error
             dtype = _unwind_value_type(uvals)
             rows = [((float(v) if dtype == "double" else v),) for v in uvals]
-            env = base.sparkSession.createDataFrame(rows, f"{ualias} {dtype}")
+            env = local_frame(base.sparkSession, rows, f"{ualias} {dtype}")
             env_kinds = {ualias: "value"}
             env_small = True
         elif uvals is not None:

@@ -14,14 +14,17 @@ cosine x 100), reproducing the pipeline the reference assumes ran
 offline (SURVEY.md §7 Phase 2). The approximate, scale path (LSH
 blocking, O(n*b) not O(n^2)) lives in ``operators.similarity``.
 
-An anchor's outgoing edges have two exact builds with one arithmetic:
-the Catalyst fold (``build_similarity_edges(anchor_vec_id=...)``) and a
-numpy kernel over a ``VectorBlock`` the caller keeps on the driver
-(``anchored_edges``), whose rows become a local relation that Spark
-rounds and filters without running a job. Both cast to double, fold
-the dot and the squared norms left to right, then take
-``dot / (|a| |b|) * 100``; a pair with a zero norm, a null or a
-different-length side has a null ``similitud``.
+The edges have two exact builds with one arithmetic: the Catalyst fold
+(``build_similarity_edges``) and one numpy kernel over a
+``VectorBlock`` the caller keeps on the driver (``cosine100_pairs``).
+Both cast to double, fold the dot and the squared norms left to right,
+then take ``dot / (|a| |b|) * 100``; a pair with a zero norm, a null or
+a different-length side has a null ``similitud``. The kernel serves an
+anchor's outgoing edges (``anchored_edges``: its row becomes a local
+relation that Spark rounds and filters without running a job) and the
+full build (``block_edges``: an Arrow UDF scores the pairs of a
+Catalyst cross join, so a filter on ``src`` or ``dst`` still lands
+below the join). Spark's own ``round`` sets the digits in every build.
 
 Operator citations (SURVEY.md §2.2/§2.3):
   A9  list_nodes          — reference streamlit_app.py:48-53
@@ -40,6 +43,8 @@ import pyarrow as pa
 import pyarrow.compute as pc
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
+
+from providenciasbigdata_spark.session import local_frame
 
 
 def nodes_view(documents: DataFrame) -> DataFrame:
@@ -178,29 +183,72 @@ class VectorBlock:
         return self.E.shape[1]
 
 
+def cosine100_pairs(block: VectorBlock, a, b):
+    """Unrounded cosine x 100 of ``block`` rows ``a[i]`` and ``b[i]``
+    (int arrays of row positions), as (values, valid): the dot folded
+    left to right and divided by the product of the norms, as
+    ``build_similarity_edges`` does; ``valid`` is False where that
+    build gives null (a null or null-holding side, different lengths,
+    a zero norm product)."""
+    A, B = block.E[a], block.E[b]
+    dots = np.zeros(len(a))
+    for j in range(block.dim):
+        dots = dots + A[:, j] * B[:, j]
+    den = block.norms[a] * block.norms[b]
+    valid = block.ok[a] & block.ok[b] & (block.lens[a] == block.lens[b]) & (den != 0)
+    with np.errstate(all="ignore"):
+        values = np.divide(dots, den, out=np.zeros_like(dots), where=den != 0) * 100
+    return values, valid
+
+
 def anchored_cosine100(block: VectorBlock, anchor_vec_id: int):
     """The anchor's outgoing cosine x 100 from ``block``, unrounded:
     (src_ids, dst_ids, values, valid), one entry per pair of an anchor
-    row and a row with another id. The dot is folded left to right and
-    divided by the product of the norms, as ``build_similarity_edges``
-    does; ``valid`` is False where that build gives null."""
+    row and a row with another id, from ``cosine100_pairs``."""
     a = np.flatnonzero(block.ids == anchor_vec_id)
     b = np.flatnonzero(block.ids != anchor_vec_id)
-    A, B = block.E[a], block.E[b]
-    dots = np.zeros((len(a), len(b)))
-    for j in range(block.dim):
-        dots = dots + A[:, j : j + 1] * B[:, j]
-    den = block.norms[a][:, None] * block.norms[b][None, :]
-    valid = (
-        (block.ok[a][:, None] & block.ok[b][None, :])
-        & (block.lens[a][:, None] == block.lens[b][None, :])
-        & (den != 0)
+    a, b = np.repeat(a, len(b)), np.tile(b, len(a))
+    values, valid = cosine100_pairs(block, a, b)
+    return block.ids[a], block.ids[b], values, valid
+
+
+# Pairs one task of the full build's kernel scores: each Python task
+# unpickles the block and holds a row-queue page (tens of MB) until
+# its worker monitor exits, so a small build runs as one task.
+_PAIRS_PER_TASK = 1 << 20
+
+
+def block_edges(spark: SparkSession, block: VectorBlock, round_digits: int = 4) -> DataFrame:
+    """``build_similarity_edges(embeddings)`` from the driver-held
+    ``block``: a Catalyst cross join of two (block row, vec_id) local
+    relations, whose pairs an Arrow UDF scores with ``cosine100_pairs``
+    against the block it carries. The UDF is keyed by block row, so
+    rows sharing a vec_id pair exactly as the fold pairs them. A filter
+    on ``src`` or ``dst`` still folds into its side's relation below the
+    join, so an anchored read of this frame stays O(n)."""
+    n = len(block.ids)
+    rows = local_frame(spark, pa.table({
+        "row": pa.array(np.arange(n), pa.int64()),
+        "vec_id": pa.array(block.ids, pa.int64()),
+    }))
+
+    @F.arrow_udf("double")
+    def cos100(a: pa.Array, b: pa.Array) -> pa.Array:
+        values, valid = cosine100_pairs(block, a.to_numpy(), b.to_numpy())
+        return pa.array(values, pa.float64(), mask=~valid)
+
+    pairs = rows.select(F.col("row").alias("a"), F.col("vec_id").alias("src_id")).join(
+        rows.select(F.col("row").alias("b"), F.col("vec_id").alias("dst_id")),
+        F.col("src_id") != F.col("dst_id"),
     )
-    with np.errstate(all="ignore"):
-        values = np.divide(dots, den, out=np.zeros_like(dots), where=den != 0) * 100
-    src = np.repeat(block.ids[a], len(b))
-    dst = np.tile(block.ids[b], len(a))
-    return src, dst, values.ravel(), valid.ravel()
+    tasks = max(1, min(-(-n * n // _PAIRS_PER_TASK), spark.sparkContext.defaultParallelism))
+    # the score comes out of a one-element explode: a filter on it stays
+    # above the generator, so the UDF runs once per pair, while a filter
+    # on src or dst, which the generator does not produce, passes below
+    scored = pairs.coalesce(tasks).select(
+        "src_id", "dst_id", F.explode(F.array(cos100("a", "b"))).alias("cos100")
+    )
+    return _edge_frame(scored, F.col("cos100"), round_digits)
 
 
 def anchored_edges(
@@ -216,13 +264,11 @@ def anchored_edges(
 def _kernel_row(spark: SparkSession, block: VectorBlock, anchor_vec_id: int) -> DataFrame:
     """The anchor's (src_id, dst_id, cos100) row as a local relation."""
     src, dst, values, valid = anchored_cosine100(block, int(anchor_vec_id))
-    return spark.createDataFrame(
-        pa.table({
-            "src_id": pa.array(src, pa.int64()),
-            "dst_id": pa.array(dst, pa.int64()),
-            "cos100": pa.array(values, pa.float64(), mask=~valid),
-        })
-    )
+    return local_frame(spark, pa.table({
+        "src_id": pa.array(src, pa.int64()),
+        "dst_id": pa.array(dst, pa.int64()),
+        "cos100": pa.array(values, pa.float64(), mask=~valid),
+    }))
 
 
 def anchored_neighborhood(

@@ -43,6 +43,7 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from providenciasbigdata_spark.compat.documents import text_match_condition
+from providenciasbigdata_spark.session import local_frame
 
 
 # ---- MQL filter documents ------------------------------------------------
@@ -3770,7 +3771,7 @@ def cypher_run(
         ).first()
         spark = edges.sparkSession
         if hit is None:
-            return spark.createDataFrame([], f"{out_len} long")
+            return local_frame(spark, [], f"{out_len} long")
         # one row per shortest path, Neo4j's cardinality (sigma is the
         # target's completed Brandes count — driver-sized by definition)
         return spark.range(int(hit["sigma"])).select(

@@ -29,8 +29,11 @@ lookup), and the embeddings as a ``compat.graph.VectorBlock`` when the
 version has at most ``similarity._DRIVER_MAX_ROWS`` rows. Anchored
 edge reads (``edges(anchor_vec_id=...)``, the neighborhoods and the
 one-hop route of ``run_cypher``) then run the numpy kernel over the
-block and read its row as a local relation, with no Spark job; above
-the gate they keep the Catalyst anchored plan over the snapshot.
+block and read its row as a local relation, with no Spark job. The
+full edge build (``edges()``, one frame per version) scores its pairs
+with the same kernel, through an Arrow UDF over a cross join that keeps
+a filter on ``src`` or ``dst`` below the join. Above the gate both keep
+the Catalyst plans over the snapshot.
 """
 
 from __future__ import annotations
@@ -49,7 +52,7 @@ from providenciasbigdata_spark.compat import documents as _docs
 from providenciasbigdata_spark.compat import graph as _graph
 from providenciasbigdata_spark.io import load_table
 from providenciasbigdata_spark.operators import dedup, similarity
-from providenciasbigdata_spark.session import unpersist_on_collect
+from providenciasbigdata_spark.session import local_frame, unpersist_on_collect
 
 # schema of a rulings mongodump read through the mongodump DataSource
 _DUMP_SCHEMA = "_id string, providencia string, tipo string, anio int, texto string"
@@ -246,13 +249,16 @@ class ProvidenciasEngine:
 
     def edges(self, anchor_vec_id: int | None = None) -> DataFrame:
         """edges(src, dst, similitud); with ``anchor_vec_id``, that
-        vector's outgoing edges only, from the block below the gate."""
+        vector's outgoing edges only. Below the gate both come from the
+        version's block: the anchor's kernel row, or the full build
+        (one frame per version) whose pairs the block kernel scores."""
         emb = self._embeddings_version()
+        block = emb.derived("block", _vector_block)
+        if block is None:
+            return _graph.build_similarity_edges(emb.frame, anchor_vec_id=anchor_vec_id)
         if anchor_vec_id is not None:
-            block = emb.derived("block", _vector_block)
-            if block is not None:
-                return _graph.anchored_edges(self.spark, block, anchor_vec_id)
-        return _graph.build_similarity_edges(emb.frame, anchor_vec_id=anchor_vec_id)
+            return _graph.anchored_edges(self.spark, block, anchor_vec_id)
+        return emb.derived("edges", lambda _: _graph.block_edges(self.spark, block))
 
     def _edges_from(self, anchor: str) -> DataFrame:
         """The edges an anchored read can reach: the anchor's outgoing
@@ -400,8 +406,8 @@ class ProvidenciasEngine:
             "similitud": pa.array(sim, pa.float64()),
         })
         return (
-            self.spark.createDataFrame(pa.table({"id": pa.array(nodes, pa.string())})),
-            self.spark.createDataFrame(hits),
+            local_frame(self.spark, pa.table({"id": pa.array(nodes, pa.string())})),
+            local_frame(self.spark, hits),
         )
 
     # -- pipeline extensions ----------------------------------------------

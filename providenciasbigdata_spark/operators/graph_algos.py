@@ -16,6 +16,10 @@ compute. An empty edge set always finishes on the driver. Larger inputs
 run the distributed loop, where the driver holds only iteration counters
 and convergence counts, never row data. Both paths give the same answer
 (the tests force the distributed side by setting the constant to 0).
+A driver finisher's result, like every frame this module makes on the
+driver (seed frames, empty results), is an Arrow local relation
+(``session.local_frame``) with the schema the distributed loop would
+give: collecting it runs no Spark job.
 
 Scale notes: each distributed iteration is one equi-join + one
 partial-agg shuffle, both keyed on node id — a stable partitioning
@@ -27,10 +31,14 @@ dependency-free.
 
 from __future__ import annotations
 
+import itertools
+import uuid
 from collections import Counter
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
+
+from providenciasbigdata_spark.session import local_frame
 
 # Largest edge set the fixed-point operators finish on the driver.
 _DRIVER_MAX_EDGES = 200_000
@@ -51,14 +59,24 @@ def _truncator(df_session, checkpoint_dir):
     measured fastest locally (see pagerank docstring) but NOT
     fault-tolerant: at cluster scale an executor loss kills the job.
     Passing ``checkpoint_dir`` (an HDFS/S3/shared path) switches every
-    truncation point to a RELIABLE ``checkpoint`` that survives
-    executor loss — the production setting for long iterative jobs on
-    preemptible fleets.
+    truncation point to a RELIABLE one that survives executor loss —
+    the production setting for long iterative jobs on preemptible
+    fleets: the frame is written as parquet to its own subdirectory of
+    a directory unique to this call, and read back. Always eager, and
+    the context's checkpoint directory, which other threads share, is
+    left alone.
     """
     if checkpoint_dir is None:
         return lambda df, eager=True: df.localCheckpoint(eager=eager)
-    df_session.sparkContext.setCheckpointDir(checkpoint_dir)
-    return lambda df, eager=True: df.checkpoint(eager=eager)
+    run = f"{checkpoint_dir.rstrip('/')}/{uuid.uuid4().hex}"
+    points = itertools.count()
+
+    def reliable(df, eager=True):
+        path = f"{run}/{next(points)}"
+        df.write.parquet(path)
+        return df_session.read.parquet(path)
+
+    return reliable
 
 
 def _as_edge_id(spark, dtype, value, sample):
@@ -71,7 +89,7 @@ def _as_edge_id(spark, dtype, value, sample):
     if value is None or type(value) is type(sample):
         return value
     return (
-        spark.createDataFrame([(str(value),)], "v string")
+        local_frame(spark, [(str(value),)], "v string")
         .select(F.col("v").cast(dtype))
         .first()[0]
     )
@@ -234,7 +252,8 @@ def connected_components(
     rows = _driver_rows(cur)
     if rows is not None:
         comp = _union_find_cc([(r["u"], r["v"]) for r in rows])
-        labels = spark.createDataFrame(
+        labels = local_frame(
+            spark,
             sorted(comp.items()),
             schema=cur.select(
                 F.col("u").alias("id"), F.col("u").alias("component")
@@ -311,7 +330,7 @@ def bfs_distances(
     e = e.persist()
     spark = edges.sparkSession
     ckpt = _truncator(spark, checkpoint_dir)
-    visited = spark.createDataFrame([(anchor, 0)], "id string, hops int")
+    visited = local_frame(spark, [(anchor, 0)], "id string, hops int")
     # fixture node ids are strings ("P-7"); cast to match arbitrary types
     visited = visited.withColumn("id", F.col("id").cast(e.schema["u"].dataType))
     frontier = visited.select("id")
@@ -330,7 +349,7 @@ def bfs_distances(
             max_hops,
             _as_edge_id(spark, dtype, target, sample),
         )
-        return spark.createDataFrame(sorted(hops.items()), schema=visited.schema)
+        return local_frame(spark, sorted(hops.items()), schema=visited.schema)
 
     for hop in range(1, max_hops + 1):
         nxt = (
@@ -405,7 +424,7 @@ def shortest_path_sigma(
     """
     spark = edges.sparkSession
     if anchor == target:
-        return spark.createDataFrame([(0, 1)], "hops long, sigma long")
+        return local_frame(spark, [(0, 1)], "hops long, sigma long")
     fwd = edges.select(F.col(src).alias("u"), F.col(dst).alias("v"))
     if directed:
         e = fwd.groupBy("u", "v").agg(F.count(F.lit(1)).alias("mult"))
@@ -418,7 +437,7 @@ def shortest_path_sigma(
         )
     e = e.persist()
     ckpt = _truncator(spark, checkpoint_dir)
-    level = spark.createDataFrame([(anchor, 1)], "id string, sigma long")
+    level = local_frame(spark, [(anchor, 1)], "id string, sigma long")
     level = level.withColumn("id", F.col("id").cast(e.schema["u"].dataType))
     visited = level.select("id")
 
@@ -426,7 +445,7 @@ def shortest_path_sigma(
     if rows is not None:
         e.unpersist()
         if not rows:
-            return spark.createDataFrame([], "hops long, sigma long")
+            return local_frame(spark, [], "hops long, sigma long")
         dtype, sample = e.schema["u"].dataType, rows[0]["u"]
         anchor = _as_edge_id(spark, dtype, anchor, sample)
         target = _as_edge_id(spark, dtype, target, sample)
@@ -444,12 +463,13 @@ def shortest_path_sigma(
             if not nxt:
                 break
             if target in nxt:
-                return spark.createDataFrame(
+                return local_frame(
+                    spark,
                     [(hop, int(nxt[target]))], "hops long, sigma long"
                 )
             seen.update(nxt)
             frontier = nxt
-        return spark.createDataFrame([], "hops long, sigma long")
+        return local_frame(spark, [], "hops long, sigma long")
 
     for hop in range(1, max_hops + 1):
         nxt = (
@@ -473,13 +493,14 @@ def shortest_path_sigma(
             break
         if stats["t"] is not None:
             e.unpersist()
-            return spark.createDataFrame(
+            return local_frame(
+                spark,
                 [(hop, int(stats["t"]))], "hops long, sigma long"
             )
         visited = visited.union(nxt.select("id"))
         level = nxt
     e.unpersist()
-    return spark.createDataFrame([], "hops long, sigma long")
+    return local_frame(spark, [], "hops long, sigma long")
 
 
 def pagerank(
@@ -524,7 +545,7 @@ def pagerank(
 
         e.unpersist()
         if not rows:
-            return spark.createDataFrame([], out_schema)  # no edges, no nodes
+            return local_frame(spark, [], out_schema)  # no edges, no nodes
         ids, _, usrc, vdst, w = _edge_arrays(rows)
         n = len(ids)
         deg = np.zeros(n)
@@ -536,7 +557,8 @@ def pagerank(
             dangling = float(rank[deg == 0].sum())
             base = (1.0 - damping) / n + damping * dangling / n
             rank = base + damping * inflow
-        return spark.createDataFrame(
+        return local_frame(
+            spark,
             list(zip(ids, [float(x) for x in rank])), schema=out_schema
         )
     ids = _endpoints(e)
@@ -635,7 +657,8 @@ def personalized_pagerank(
             inflow = np.bincount(vdst, weights=contrib, minlength=n)
             dangling = float(rank[deg == 0].sum())
             rank = (1.0 - damping) * pvec + damping * dangling * pvec + damping * inflow
-        return spark.createDataFrame(
+        return local_frame(
+            spark,
             list(zip(ids, [float(x) for x in rank])),
             schema=edges.select(
                 F.col(src).alias("id"), F.lit(0.0).alias("rank")
@@ -714,7 +737,7 @@ def sssp_distances(
     ).persist()
     spark = edges.sparkSession
     ckpt = _truncator(spark, checkpoint_dir)
-    dist = spark.createDataFrame([(str(anchor), 0.0)], "id string, d double")
+    dist = local_frame(spark, [(str(anchor), 0.0)], "id string, d double")
     dist = dist.withColumn("id", F.col("id").cast(e.schema["u"].dataType))
 
     rows = _driver_rows(e)
@@ -747,7 +770,7 @@ def sssp_distances(
             if new == dd:
                 break
             dd = new
-        return spark.createDataFrame(sorted(dd.items()), schema=dist.schema)
+        return local_frame(spark, sorted(dd.items()), schema=dist.schema)
 
     for _ in range(max_hops):
         relaxed = e.join(
@@ -897,7 +920,8 @@ def strongly_connected_components(
     rows = _driver_rows(e_all)
     if rows is not None:
         comp = _tarjan_scc([(r["u"], r["v"]) for r in rows])
-        return spark.createDataFrame(
+        return local_frame(
+            spark,
             sorted(comp.items()),
             schema=e_all.select(
                 F.col("u").alias("id"), F.col("u").alias("component")
@@ -1124,7 +1148,8 @@ def label_propagation(
                 )
             labels_py = nxt
         spark = edges.sparkSession
-        return spark.createDataFrame(
+        return local_frame(
+            spark,
             sorted(labels_py.items()),
             schema=sym.select(
                 F.col("u").alias("id"), F.col("u").alias("community")
@@ -1339,7 +1364,8 @@ def multi_source_bfs(
         base = seeds.toDF("seed").distinct()
     else:
         seed_rows = [(s,) for s in seeds]
-        base = spark.createDataFrame(
+        base = local_frame(
+            spark,
             seed_rows, schema=edges.select(F.col(src).alias("seed")).schema
         )
     frontier = base.select("seed", F.col("seed").alias("id"), F.lit(0).alias("hops"))
@@ -1360,7 +1386,7 @@ def multi_source_bfs(
             for s in counts:
                 hops = _bfs_hops(adj, s, max_hops)
                 out.extend((s, node, h) for node, h in hops.items())
-            return spark.createDataFrame(sorted(out), schema=frontier.schema)
+            return local_frame(spark, sorted(out), schema=frontier.schema)
 
     visited = ckpt(frontier)
     for hop in range(1, max_hops + 1):
@@ -1540,7 +1566,8 @@ def betweenness_from_seeds(
     else:
         e = symmetrize(edges, src, dst)
     e = ckpt(e)
-    base = spark.createDataFrame(
+    base = local_frame(
+        spark,
         [(s,) for s in seeds], schema=edges.select(F.col(src).alias("seed")).schema
     )
     level = ckpt(
@@ -1605,7 +1632,8 @@ def betweenness_from_seeds(
         if d > 0:  # level 0 is the seed itself: excluded from its own tally
             contribs.append(deltas)
     if not contribs:
-        return edges.sparkSession.createDataFrame(
+        return local_frame(
+            edges.sparkSession,
             [], "id " + dict(edges.dtypes)[src] + ", betweenness double"
         )
     out = contribs[0]
@@ -1655,14 +1683,15 @@ def eigenvector_centrality(
         if not rows:
             # empty (possibly fully-filtered) edge frame: no nodes, no
             # scores — np.bincount/max would raise on the empty array
-            return edges.sparkSession.createDataFrame([], schema=schema)
+            return local_frame(edges.sparkSession, [], schema=schema)
         ids, _, usrc, vdst, w = _edge_arrays(rows)
         x = np.ones(len(ids))
         for _ in range(max_iter):
             nxt = np.bincount(vdst, weights=x[usrc] * w, minlength=len(ids))
             m = float(nxt.max())
             x = nxt / m if m > 0 else nxt
-        return edges.sparkSession.createDataFrame(
+        return local_frame(
+            edges.sparkSession,
             list(zip(ids, [float(v) for v in x])), schema=schema
         )
 

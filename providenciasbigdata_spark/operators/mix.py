@@ -30,6 +30,8 @@ from functools import reduce
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from providenciasbigdata_spark.session import local_frame
+
 _HEX_DIGITS = 15  # 60 bits of the md5 — plenty of resolution, < 2^63
 
 
@@ -497,7 +499,7 @@ def dsir_log_weights(
         )
         for b in range(n_buckets)
     ]
-    delta = spark.createDataFrame(delta_rows, "bucket long, delta double")
+    delta = local_frame(spark, delta_rows, "bucket long, delta double")
     scored = doc_counts.join(F.broadcast(delta), "bucket").groupBy(id_col).agg(
         F.sum("c").cast("long").alias("n_feats"),
         F.sum(F.col("c") * F.col("delta")).alias("log_weight"),

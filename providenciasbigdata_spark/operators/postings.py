@@ -43,7 +43,7 @@ import pyarrow.compute as pc
 from pyspark.sql import Column, DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from providenciasbigdata_spark.session import unpersist_on_collect
+from providenciasbigdata_spark.session import local_frame, unpersist_on_collect
 
 _EMPTY_HITS_SCHEMA = "doc_id bigint"
 
@@ -112,7 +112,7 @@ def search_or(postings: DataFrame, terms: list[str]) -> DataFrame:
     index alone. Output: (doc_id). Empty term list matches nothing
     (an F.array() of zero elements would fail analysis)."""
     if not terms:
-        return postings.sparkSession.createDataFrame([], _EMPTY_HITS_SCHEMA)
+        return local_frame(postings.sparkSession, [], _EMPTY_HITS_SCHEMA)
     return (
         _matched(postings, terms)
         .select(F.explode("postings").alias("doc_id"))
@@ -132,7 +132,7 @@ def search_prefix(postings: DataFrame, prefix: str) -> DataFrame:
 
     p = _fold(prefix or "").strip()
     if not p:
-        return postings.sparkSession.createDataFrame([], _EMPTY_HITS_SCHEMA)
+        return local_frame(postings.sparkSession, [], _EMPTY_HITS_SCHEMA)
     return (
         postings.filter(F.col("token").startswith(p))
         .select(F.explode("postings").alias("doc_id"))
@@ -144,7 +144,7 @@ def search_and(postings: DataFrame, terms: list[str]) -> DataFrame:
     """Docs containing ALL terms: posting intersection by term count.
     Output: (doc_id). Empty term list matches nothing."""
     if not terms:
-        return postings.sparkSession.createDataFrame([], _EMPTY_HITS_SCHEMA)
+        return local_frame(postings.sparkSession, [], _EMPTY_HITS_SCHEMA)
     n = len(set(terms))
     return (
         _matched(postings, list(set(terms)))
@@ -177,8 +177,9 @@ def search_fuzzy(
     (doc_id), distinct.
     """
     if not terms:
-        return postings.sparkSession.createDataFrame([], _EMPTY_HITS_SCHEMA)
-    q = postings.sparkSession.createDataFrame(
+        return local_frame(postings.sparkSession, [], _EMPTY_HITS_SCHEMA)
+    q = local_frame(
+        postings.sparkSession,
         [(t,) for t in sorted(set(terms))], "q string"
     )
     p = max(prefix_len, 0)
@@ -232,7 +233,7 @@ class _DriverPostings:
         dfs = np.unique(df)
         idfs = np.zeros(0)
         if len(dfs):
-            local = spark.createDataFrame(pa.table({"df": pa.array(dfs, pa.int64())}))
+            local = local_frame(spark, pa.table({"df": pa.array(dfs, pa.int64())}))
             idfs = np.array([r[0] for r in local.select(_idf(self.n_docs, F.col("df"))).collect()])
         self.idf = idfs[np.searchsorted(dfs, df)]
 
@@ -271,7 +272,8 @@ class _DriverPostings:
 def _scored(spark: SparkSession, ids, sums, round_digits: int) -> DataFrame:
     """(doc_id, score) as a local relation, in the given row order, each
     sum rounded by Spark's ``round``: collecting it runs no Spark job."""
-    return spark.createDataFrame(
+    return local_frame(
+        spark,
         pa.table({"doc_id": pa.array(ids, pa.int64()), "s": pa.array(sums, pa.float64())})
     ).select("doc_id", F.round("s", round_digits).alias("score"))
 

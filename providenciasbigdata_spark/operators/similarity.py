@@ -13,10 +13,11 @@
 
 The exact cosine of these operators is a Catalyst expression
 (compat.graph.cosine): it runs in the JVM, and a zero norm gives null.
-The engine's anchored reads compute the same cosine with a numpy kernel
-(compat.graph.anchored_edges) over a vector block collected once per
-embeddings version, when that version has at most ``_DRIVER_MAX_ROWS``
-rows; above that size they stay on the Catalyst plan. The SRP
+The engine's edge reads, anchored and full, compute the same cosine
+with a numpy kernel (compat.graph.cosine100_pairs) over a vector block
+collected once per embeddings version, when that version has at most
+``_DRIVER_MAX_ROWS`` rows; above that size they stay on the Catalyst
+plan. The SRP
 hyperplanes are deterministic (numpy PCG64 with a literal seed) and
 shipped as array literals, not a UDF closure.
 
@@ -32,6 +33,7 @@ from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
 from providenciasbigdata_spark.compat.graph import cosine
+from providenciasbigdata_spark.session import local_frame
 
 
 def _vec_lit(vec) -> "F.Column":
@@ -292,7 +294,7 @@ def srp_lsh_topk(
         bits = (planes[t] @ q >= 0).astype(np.int64)
         buckets.append((t, int((bits << np.arange(n_bits)).sum())))
     corpus_b = srp_buckets(embeddings, dim, n_bits, tables, seed, id_col=id_col, vec_col=vec_col)
-    probe = corpus_b.sparkSession.createDataFrame(buckets, "table int, bucket long")
+    probe = local_frame(corpus_b.sparkSession, buckets, "table int, bucket long")
     cand_ids = corpus_b.join(F.broadcast(probe), ["table", "bucket"]).select("id").distinct()
     cands = embeddings.join(cand_ids, embeddings[id_col] == cand_ids.id, "left_semi")
     score = F.round(cosine(F.col(vec_col), _vec_lit(q)), round_digits)
@@ -1365,7 +1367,8 @@ def build_ivf_index(
         .write.mode("overwrite").partitionBy("cluster")
         .parquet(f"{out_dir}/vectors")
     )
-    spark.createDataFrame(
+    local_frame(
+        spark,
         [(i, [float(x) for x in row]) for i, row in enumerate(C)],
         "cluster int, centroid array<double>",
     ).coalesce(1).write.mode("overwrite").parquet(f"{out_dir}/centroids")

@@ -18,6 +18,7 @@ from pyspark.sql import functions as F
 from providenciasbigdata_spark.compat.graph import build_similarity_edges, cosine
 from providenciasbigdata_spark.io import load_table
 from providenciasbigdata_spark.queries.fixtures import staged_similarity_edges
+from providenciasbigdata_spark.session import local_frame
 
 _HOP_LO = 30.0  # similitud >= 30 keeps hop fan-out small on the fixtures
 
@@ -839,7 +840,7 @@ def q_degree_assortativity(spark: SparkSession, sf_dir: str) -> DataFrame:
     rows = out.collect()
     deg.unpersist()
     pairs.unpersist()
-    return spark.createDataFrame(rows, schema=out.schema)
+    return local_frame(spark, rows, schema=out.schema)
 
 
 _ASSORTATIVITY_SQL = f"""

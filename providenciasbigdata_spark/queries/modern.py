@@ -32,6 +32,7 @@ from providenciasbigdata_spark import datasources
 from providenciasbigdata_spark.compat.documents import rulings_view, tokenize
 from providenciasbigdata_spark.io import load_table
 from providenciasbigdata_spark.operators.sketch import cms_build, cms_estimate
+from providenciasbigdata_spark.session import local_frame
 
 _ROCKSDB = "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider"
 
@@ -289,7 +290,8 @@ def _preflight_tws(spark: SparkSession) -> None:
 
     src = os.path.join(tempfile.gettempdir(), "pbd_tws_preflight_src")
     if not os.path.exists(os.path.join(src, "_SUCCESS")):
-        spark.createDataFrame(
+        local_frame(
+            spark,
             [
                 (1, "2024-01-01 00:00:00", 1, "click", 1.0, "{}"),
                 (2, "2024-01-01 00:00:01", 2, "view", 2.0, "{}"),

@@ -27,6 +27,7 @@ from providenciasbigdata_spark.functions.text import (
 )
 from providenciasbigdata_spark.io import load_table
 from providenciasbigdata_spark.operators import dedup, similarity
+from providenciasbigdata_spark.session import local_frame
 
 # DuckDB twin of the pinned tokenizer (see compat_queries._TOKENS_SQL)
 _TOKENS = (
@@ -972,7 +973,8 @@ def q_embedding_pca_variance(spark: SparkSession, sf_dir: str) -> DataFrame:
     tests/test_similarity.py."""
     emb = load_table(spark, sf_dir, "embeddings")
     _, _, evr = similarity.pca_fit(emb, n_components=8)
-    return spark.createDataFrame(
+    return local_frame(
+        spark,
         [(i, round(float(v), 6)) for i, v in enumerate(evr)],
         "component long, explained_variance_ratio double",
     )
@@ -2046,7 +2048,8 @@ def q_bpe_train_merges(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = load_table(spark, sf_dir, "documents")
     merges = bpe_train(docs, n_merges=12, min_count=2)
     rows = [(i + 1, l, r, l + r) for i, (l, r) in enumerate(merges)]
-    return spark.createDataFrame(
+    return local_frame(
+        spark,
         rows, "rank long, left string, right string, merged string"
     )
 

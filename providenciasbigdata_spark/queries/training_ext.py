@@ -22,6 +22,7 @@ from providenciasbigdata_spark.functions.text import (
 )
 from providenciasbigdata_spark.io import load_table
 from providenciasbigdata_spark.operators.pack import packed_positions
+from providenciasbigdata_spark.session import local_frame
 
 _TOKENS = (
     "list_filter(string_split_regex(strip_accents(lower(text)), '\\W+'), x -> x <> '')"
@@ -1024,7 +1025,7 @@ def q_curate_quality_classifier(spark: SparkSession, sf_dir: str) -> DataFrame:
     )[:20]
     rows = [(int(j), round(float(w), 6)) for j, w in top]
     rows.append((-1, float(acc)))
-    return spark.createDataFrame(rows, "bucket long, weight double")
+    return local_frame(spark, rows, "bucket long, weight double")
 
 
 def _synthetic_weights_millionths(dim: int, salt: str = "w") -> list[int]:

@@ -10,18 +10,23 @@ stay ~128MB).
 
 It also ties persisted DataFrames to the Python object that owns them
 (``unpersist_on_collect``), so cached data lives exactly as long as its
-owner.
+owner, and builds every frame made on the driver as an Arrow local
+relation (``local_frame``).
 """
 
 from __future__ import annotations
 
+import functools
 import logging
 import os
 import queue
 import threading
 import weakref
 
+import pyarrow as pa
 from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql.pandas.types import to_arrow_schema
+from pyspark.sql.types import StructType, _parse_datatype_string
 
 
 def get_spark(
@@ -126,3 +131,29 @@ def unpersist_on_collect(owner: object, frames: dict[str, DataFrame]) -> None:
 def _enqueue(frames: dict[str, DataFrame]) -> None:
     for df in list(frames.values()):
         _RELEASED.put(df)
+
+
+def local_frame(
+    spark: SparkSession, data: "pa.Table | list", schema: "StructType | str | None" = None
+) -> DataFrame:
+    """A frame made on the driver, as an Arrow local relation: collecting
+    it, and any projection or filter Spark folds into it, runs no Spark
+    job. (``createDataFrame`` over a Python list makes an RDD of pickled
+    rows instead, whose every collect runs a Python-worker job.)
+
+    ``data`` is a ``pyarrow.Table``, typed by its own schema, or a list
+    of row tuples typed by ``schema``: a ``StructType`` or a DDL string,
+    whose types and nullability the frame keeps as declared.
+    """
+    if isinstance(data, pa.Table):
+        return spark.createDataFrame(data)
+    if isinstance(schema, str):
+        schema = _ddl_schema(schema)
+    arrow = to_arrow_schema(schema)
+    columns = [pa.array([row[i] for row in data], f.type) for i, f in enumerate(arrow)]
+    return spark.createDataFrame(pa.Table.from_arrays(columns, schema=arrow), schema)
+
+
+@functools.lru_cache(maxsize=256)
+def _ddl_schema(ddl: str) -> StructType:
+    return _parse_datatype_string(ddl)

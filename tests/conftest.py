@@ -64,6 +64,27 @@ def distributed(monkeypatch):
 
 
 @pytest.fixture(scope="session")
+def count_jobs(spark):
+    """``count_jobs(fn)`` -> (fn(), the number of Spark jobs it ran),
+    counted through a job group of its own on this thread."""
+    import uuid
+
+    sc = spark.sparkContext
+
+    def run(fn):
+        group = f"count-jobs-{uuid.uuid4().hex}"
+        sc.setLocalProperty("spark.jobGroup.id", group)
+        try:
+            out = fn()
+        finally:
+            sc.setLocalProperty("spark.jobGroup.id", None)
+        sc._jsc.sc().listenerBus().waitUntilEmpty()  # the status store is fed asynchronously
+        return out, len(sc.statusTracker().getJobIdsForGroup(group))
+
+    return run
+
+
+@pytest.fixture(scope="session")
 def sf_dir():
     return SF_SMOKE
 

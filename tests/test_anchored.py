@@ -2,9 +2,11 @@
 driver-held vector block gives the Catalyst fold's edges bit for bit,
 degenerate vectors give null similarities instead of errors, and the
 one-hop Cypher route reads a local relation while every other shape
-reads the full edge frame. Each case runs with the default driver gate
-and with the ``distributed`` fixture, which sends the engine's anchored
-reads through the Catalyst plan."""
+reads the full edge frame. That full frame, the block kernel's pairs
+below the gate, equals the fold as well, and a filter on an id stays
+below its pair join. Each case runs with the default driver gate and
+with the ``distributed`` fixture, which sends the engine's edge reads
+through the Catalyst plans."""
 
 from __future__ import annotations
 
@@ -45,6 +47,11 @@ CYPHER_MULTI_ANCHOR = (
 NOT_NODES = ["nope", "P-abc", "P-", "", "P-007", "P-999999"]
 
 
+def _edge_key(r):
+    """A total order on edge rows, null similitudes included."""
+    return (r.src, r.dst, r.similitud is None, r.similitud or 0.0)
+
+
 @pytest.fixture(params=["driver", "distributed"])
 def gate(request, distributed):
     """Run the test below the driver gate, then above it."""
@@ -55,16 +62,18 @@ def gate(request, distributed):
             yield request.param
 
 
-def _store(tmp_path, vectors, value_type=pa.float64()) -> str:
-    """A store holding ``vectors`` ({vec_id: list or None}) as the
-    embeddings table, next to the smoke fixture's documents."""
-    store = tmp_path / "store"
+def _store(tmp_path, vectors, value_type=pa.float64(), name="store") -> str:
+    """A store holding ``vectors`` ({vec_id: list or None}, or a list of
+    (vec_id, vector) pairs) as the embeddings table, next to the smoke
+    fixture's documents."""
+    store = tmp_path / name
     store.mkdir()
     shutil.copy(f"{SF_SMOKE}/documents.parquet", store / "documents.parquet")
+    pairs = list(vectors.items()) if isinstance(vectors, dict) else vectors
     pq.write_table(
         pa.table({
-            "vec_id": pa.array(list(vectors), pa.int64()),
-            "embedding": pa.array(list(vectors.values()), pa.list_(value_type)),
+            "vec_id": pa.array([i for i, _ in pairs], pa.int64()),
+            "embedding": pa.array([v for _, v in pairs], pa.list_(value_type)),
         }),
         str(store / "embeddings.parquet"),
     )
@@ -262,4 +271,97 @@ def test_cypher_routes_only_the_one_hop_outgoing_shape(spark, monkeypatch):
             assert {n for n in plan if "Scan" in n} == {"LocalTableScan"}
             assert "BroadcastNestedLoopJoin" not in plan
     ref_edges.unpersist()
+    eng.release()
+
+
+def test_full_edge_build_matches_the_catalyst_fold(spark, gate, oracle_edges):
+    # below the gate the block kernel scores every sf0.01 pair, above it
+    # the Catalyst fold does; both give the fold's rows exactly
+    eng = ProvidenciasEngine(spark, SF_ORACLE)
+    edges = eng.edges()
+    plan = edges._jdf.queryExecution().optimizedPlan().toString()
+    assert ("ArrowEvalPython" in plan) == (gate == "driver")
+    got = sorted(edges.collect())
+    assert got == sorted(r for rows in oracle_edges.values() for r in rows)
+    assert eng.edges() is edges or gate == "distributed"  # one frame per version
+    eng.release()
+
+
+def test_full_edge_build_of_degenerate_vectors(spark, tmp_path, gate):
+    stores = {
+        "degenerate": [
+            (0, [0.0, 0.0, 0.0, 0.0]),  # zero norm
+            (1, [1.0, 2.0, 3.0, 4.0]),
+            (2, [4.0, 3.0, 2.0, 1.0]),
+            (3, None),  # null embedding
+            (4, [1.0, 2.0]),  # another length
+            (5, [2.0, 1.0]),
+            (6, [1.0, None, 3.0, 4.0]),  # null element
+            (1, [0.5, 0.5, 0.5, 0.25]),  # a second vector under id 1
+            (None, [1.0, 1.0, 1.0, 1.0]),  # no id: in no edge
+        ],
+        "single": [(0, [1.0, 2.0])],
+        "empty": [],
+    }
+    for name, vectors in stores.items():
+        store = _store(tmp_path, vectors, pa.float32(), name)
+        eng = ProvidenciasEngine(spark, store)
+        want = build_similarity_edges(load_table(spark, store, "embeddings")).collect()
+        got = eng.edges().collect()
+        assert sorted(got, key=_edge_key) == sorted(want, key=_edge_key), name
+        eng.release()
+        if name == "degenerate":
+            valued = sorted((r.src, r.dst) for r in got if r.similitud is not None)
+            assert valued == [
+                ("P-1", "P-2"), ("P-1", "P-2"), ("P-2", "P-1"), ("P-2", "P-1"),
+                ("P-4", "P-5"), ("P-5", "P-4"),
+            ]
+            assert len(got) == 8 * 7 - 2  # two rows under id 1 do not pair
+        else:
+            assert got == []
+
+
+def _pair_sides(df) -> tuple[str, str]:
+    """The two sides of the edge build's pair join in ``df``'s optimized
+    plan: "anchored" where a filter on the anchor's id sits below the
+    join, or where that filter has been folded into a local relation of
+    at most one row; else "full"."""
+
+    def find_join(plan):
+        if plan.nodeName() == "Join":
+            return plan
+        kids = plan.children()
+        return next(
+            (j for j in (find_join(kids.apply(i)) for i in range(kids.size())) if j), None
+        )
+
+    def anchored(plan) -> bool:
+        if plan.nodeName() == "Filter" and "= P-7)" in plan.condition().toString():
+            return True
+        if plan.nodeName() == "LocalRelation":
+            return plan.data().size() <= 1
+        kids = plan.children()
+        return any(anchored(kids.apply(i)) for i in range(kids.size()))
+
+    join = find_join(df._jdf.queryExecution().optimizedPlan())
+    kids = join.children()
+    return tuple("anchored" if anchored(kids.apply(i)) else "full" for i in range(2))
+
+
+def test_an_id_filter_on_the_full_build_stays_below_the_pair_join(spark, gate):
+    # Catalyst pushes a filter on src or dst below the join into its
+    # side, so an anchored read of the full build pairs O(n) rows, not
+    # O(n^2); this covers Cypher shapes the one-hop route does not take
+    eng = ProvidenciasEngine(spark, SF_SMOKE)
+    emb = load_table(spark, SF_SMOKE, "embeddings")
+    ref = build_similarity_edges(emb)
+    out = eng.edges().filter(F.col("src") == "P-7")
+    assert _pair_sides(out) == ("anchored", "full")
+    assert sorted(out.collect()) == sorted(ref.filter(F.col("src") == "P-7").collect())
+    params = {"origen": "P-7", "lo": 20.0, "hi": 90.0}
+    incoming = eng.run_cypher(CYPHER_INCOMING, params)
+    assert _pair_sides(incoming) == ("full", "anchored")
+    ref_nodes = nodes_view(rulings_view(load_table(spark, SF_SMOKE, "documents")))
+    want = cypher_run(CYPHER_INCOMING, nodes=ref_nodes, edges=ref, params=params).collect()
+    assert sorted(incoming.collect()) == sorted(want) and want
     eng.release()
