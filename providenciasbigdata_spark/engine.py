@@ -102,10 +102,12 @@ class _Version:
 
 def _vector_block(emb: DataFrame) -> _graph.VectorBlock | None:
     """The embeddings collected once into a block, or None above the
-    driver gate (the anchored reads then run in Spark)."""
-    if emb.count() > similarity._DRIVER_MAX_ROWS:
+    driver gate (the anchored reads then run in Spark). One action: the
+    ``limit`` that decides the gate rides in the collect."""
+    table = emb.select("vec_id", "embedding").limit(similarity._DRIVER_MAX_ROWS + 1).toArrow()
+    if table.num_rows > similarity._DRIVER_MAX_ROWS:
         return None
-    return _graph.VectorBlock(emb.select("vec_id", "embedding").toArrow())
+    return _graph.VectorBlock(table)
 
 
 def _hop_anchor(query: str, params: dict) -> str | None:

@@ -7,6 +7,10 @@ Five strategies, cheapest first:
                 pairs.  Exact but O(pairs); feed it LSH candidates.
 - MinHash+LSH:  shingle -> k minhashes -> b bands -> bucket join.
                 O(n*b) candidate generation, the 100TB near-dup path.
+                Up to ``_DRIVER_MAX_ROWS`` hashed shingles,
+                ``minhash_near_dups`` collects them once and bands and
+                verifies in numpy on the driver, with the same hash
+                family: no shuffle, join or persist.
 - SimHash:      64-bit weighted-majority fingerprint; near-dups have
                 small Hamming distance.  One pandas_udf (Arrow) pass.
 - embedding:    cosine over an embedding column; thresholded pairs.
@@ -14,12 +18,12 @@ Five strategies, cheapest first:
 All hash functions are deterministic across runs (xxhash64 seeds are
 literal ints; no PYTHONHASHSEED dependence).
 
-Scale notes: candidate generation never materializes O(n^2) — bands
-bucket-join with an equi-key (band_id, band_hash) so Catalyst plans a
-plain shuffle-hash join; the verify step runs exact Jaccard only on
-bucket collisions. Skewed buckets (a shingle shared by millions of
-docs) are handled by AQE skew splitting; degenerate full-constant
-buckets should be salted or capped upstream.
+Scale notes (the Spark plans): candidate generation never
+materializes O(n^2) — bands bucket-join with an equi-key (band_id,
+band_hash) so Catalyst plans a plain shuffle-hash join; the verify step
+runs exact Jaccard only on bucket collisions. Skewed buckets (a
+shingle shared by millions of docs) are handled by AQE skew splitting;
+degenerate full-constant buckets should be salted or capped upstream.
 """
 
 from __future__ import annotations
@@ -549,11 +553,13 @@ _XXH_P4 = 0x85EBCA77C2B2AE63
 _XXH_P5 = 0x27D4EB2F165667C5
 
 
-def _xxh64_long_np(v_i64, seed: int = 42):
+def _xxh64_long_np(v_i64, seed=42):
     """Vectorized XXH64 of int64 values (8-byte two's-complement
     input), bit-identical to Spark's ``xxhash64`` expression on a
-    LongType column (XXH64.hashLong, default seed 42). Pinned against
-    the JVM expression in tests/test_dedup.py."""
+    LongType column (XXH64.hashLong, default seed 42). ``seed`` is an
+    int or an int64 array of one seed per value: Spark's multi-column
+    ``xxhash64`` hashes each column with the previous column's hash as
+    the seed. Pinned against the JVM expression in tests/test_dedup.py."""
     import numpy as np
 
     P1, P2 = np.uint64(_XXH_P1), np.uint64(_XXH_P2)
@@ -561,7 +567,8 @@ def _xxh64_long_np(v_i64, seed: int = 42):
         v = v_i64.view(np.uint64)
         k1 = v * P2
         k1 = ((k1 << np.uint64(31)) | (k1 >> np.uint64(33))) * P1
-        h = (np.uint64(seed) + np.uint64(_XXH_P5) + np.uint64(8)) ^ k1
+        seed = np.asarray(seed, dtype=np.int64).view(np.uint64)
+        h = (seed + np.uint64(_XXH_P5) + np.uint64(8)) ^ k1
         h = ((h << np.uint64(27)) | (h >> np.uint64(37))) * P1 + np.uint64(_XXH_P4)
         h ^= h >> np.uint64(33)
         h *= P2
@@ -791,6 +798,143 @@ def minhash_lsh_pairs(
     )
 
 
+# Most hashed-shingle rows (one per distinct shingle of a doc) that
+# ``minhash_near_dups`` collects to band and verify on the driver, and
+# most candidate pairs it verifies there; a larger corpus runs the
+# Catalyst banding plan. 0 keeps every run in Spark.
+_DRIVER_MAX_ROWS = 1_000_000
+
+
+def _jaccard(inter: Column, union: Column) -> Column:
+    """Exact Jaccard from a pair's intersection and union sizes (both
+    double), rounded to 6 digits: the one expression both paths of
+    ``minhash_near_dups`` threshold."""
+    return F.round(inter / F.greatest(union, F.lit(1.0)), 6)
+
+
+def _runs(lengths):
+    """(run, step) of each element of consecutive runs of ``lengths``."""
+    import numpy as np
+
+    run = np.repeat(np.arange(len(lengths)), lengths)
+    return run, np.arange(len(run)) - (np.cumsum(lengths) - lengths)[run]
+
+
+def _intersections(h, offsets, set_a, set_b):
+    """|A ∩ B| for each pair (``set_a[i]``, ``set_b[i]``) of set rows,
+    where set row s holds the distinct ``h[offsets[s]:offsets[s + 1]]``:
+    equal neighbours after sorting each pair's elements together,
+    verified in chunks of about ``_DRIVER_MAX_ROWS`` elements."""
+    import numpy as np
+
+    sizes = np.diff(offsets)
+    cost = np.cumsum(sizes[set_a] + sizes[set_b])
+    inter = np.zeros(len(set_a), dtype=np.int64)
+    lo = 0
+    while lo < len(set_a):
+        base = cost[lo - 1] if lo else 0
+        hi = max(int(np.searchsorted(cost, base + _DRIVER_MAX_ROWS, side="right")), lo + 1)
+        tags, vals = [], []
+        for sets in (set_a[lo:hi], set_b[lo:hi]):
+            run, step = _runs(sizes[sets])
+            tags.append(run)
+            vals.append(h[offsets[sets][run] + step])
+        tag, val = np.concatenate(tags), np.concatenate(vals)
+        order = np.lexsort((val, tag))
+        tag, val = tag[order], val[order]
+        same = (tag[1:] == tag[:-1]) & (val[1:] == val[:-1])
+        inter[lo:hi] = np.bincount(tag[1:][same], minlength=hi - lo)
+        lo = hi
+    return inter
+
+
+def _band_keys(sig):
+    """(n, bands) band hashes of (n, bands, rows_per_band) signature
+    values, as ``minhash_lsh_pairs`` hashes each band: Spark's
+    multi-column ``xxhash64`` starts from seed 42 and hashes each column
+    with the previous column's hash as the seed."""
+    import numpy as np
+
+    keys = np.full(sig.shape[:2], 42, dtype=np.int64)
+    for r in range(sig.shape[2]):
+        keys = _xxh64_long_np(sig[:, :, r], keys)
+    return keys
+
+
+def _driver_near_dups(spark, table, threshold, bands, rows_per_band):
+    """``minhash_near_dups`` over collected (row, id, h) rows, one per
+    hashed shingle of set row ``row``: the OPH kernel's signatures,
+    their ``_band_keys``, the distinct id pairs that share a band key,
+    and exact Jaccard for each pair of their set rows, which Spark
+    rounds and thresholds over a local relation.
+    None when the band buckets or the candidates' set rows make more
+    than ``_DRIVER_MAX_ROWS`` pairs, found before any pair is built."""
+    import numpy as np
+    import pyarrow as pa
+
+    from providenciasbigdata_spark.session import local_frame
+
+    ids, rank = np.unique(table["id"].to_numpy(), return_inverse=True)
+    _, set_row = np.unique(table["row"].to_numpy(), return_inverse=True)
+    order = np.argsort(set_row, kind="stable")
+    h = table["h"].to_numpy()[order]
+    offsets = np.append(0, np.cumsum(np.bincount(set_row))).astype(np.int64)
+    n_sets = len(offsets) - 1
+    set_rank = rank[order][offsets[:-1]]  # each set row's id, as its rank in ids
+
+    batch = pa.RecordBatch.from_arrays(
+        [pa.array(np.arange(n_sets)), pa.ListArray.from_arrays(offsets.astype(np.int32), h)],
+        names=["id", "__set"],
+    )
+    sig = _oph_signature_batch(batch, bands * rows_per_band).column(1).values.to_numpy()
+    band_hash = _band_keys(sig.reshape(n_sets, bands, rows_per_band))
+
+    # every pair of set rows in one (band, band hash) bucket, as sorted
+    # positions p < q of the bucket
+    band = np.tile(np.arange(bands), n_sets)
+    band_hash = band_hash.reshape(-1)
+    by_key = np.lexsort((band_hash, band))
+    member = by_key // bands
+    band, band_hash = band[by_key], band_hash[by_key]
+    first = np.ones(len(by_key), dtype=bool)
+    first[1:] = (band[1:] != band[:-1]) | (band_hash[1:] != band_hash[:-1])
+    start = np.flatnonzero(first)
+    size = np.diff(np.append(start, len(by_key)))
+    if int((size * (size - 1) // 2).sum()) > _DRIVER_MAX_ROWS:
+        return None
+    later = np.repeat(start + size, size) - np.arange(len(by_key)) - 1
+    p, step = _runs(later)
+    a, b = set_rank[member[p]], set_rank[member[p + 1 + step]]
+    n_ids = max(len(ids), 1)
+    pair = np.unique(np.minimum(a, b)[a != b] * n_ids + np.maximum(a, b)[a != b])
+    lo, hi = np.divmod(pair, n_ids)
+
+    # each candidate id pair verifies every pair of the two ids' set rows
+    by_rank = np.argsort(set_rank, kind="stable")
+    count = np.bincount(set_rank, minlength=len(ids))
+    rank_offsets = np.cumsum(count) - count
+    n_pairs = count[lo] * count[hi]
+    if int(n_pairs.sum()) > _DRIVER_MAX_ROWS:
+        return None
+    c, j = _runs(n_pairs)
+    set_a = by_rank[rank_offsets[lo[c]] + j // count[hi[c]]]
+    set_b = by_rank[rank_offsets[hi[c]] + j % count[hi[c]]]
+
+    inter = _intersections(h, offsets, set_a, set_b)
+    union = np.diff(offsets)[set_a] + np.diff(offsets)[set_b] - inter
+    id_type = table.schema.field("id").type
+    pairs = local_frame(spark, pa.table({
+        "left_id": pa.array(ids[set_rank[set_a]], id_type),
+        "right_id": pa.array(ids[set_rank[set_b]], id_type),
+        "inter": pa.array(inter, pa.float64()),
+        "union": pa.array(union, pa.float64()),
+    }))
+    jac = _jaccard(F.col("inter"), F.col("union"))
+    return pairs.select("left_id", "right_id", jac.alias("jaccard")).filter(
+        F.col("jaccard") >= threshold
+    )
+
+
 def minhash_near_dups(
     df: DataFrame,
     id_col: str = "doc_id",
@@ -807,19 +951,46 @@ def minhash_near_dups(
 
     Sets are pre-hashed to longs (shingle_hash_sets): Jaccard is
     preserved modulo 64-bit collisions and every shuffle/intersect
-    moves 8-byte elements instead of strings.
+    moves 8-byte elements instead of strings. A doc with a null id
+    pairs with nothing. A doc id that repeats gives one row per pair of
+    its set rows with the other id's.
 
-    The shingle sets feed three plan branches (signatures + both verify
-    sides); ``cache_sets`` persists them so tokenize/shingle/hash runs
-    once. Measured verdict (sf0.1, 5k docs): caching LONG sets wins ~2x
-    (they serialize cheaply), while caching the earlier STRING sets
-    LOST ~6x to recompute — whether a cache pays depends on element
-    width, not just recompute cost. At 100 TB the cache spills to
-    executor-local disk; disable to trade recompute for storage.
+    Up to ``_DRIVER_MAX_ROWS`` hashed-shingle rows (and a positive
+    ``threshold``), one ``toArrow`` collects them and the rest runs on
+    the driver in numpy, with the same hash family, signatures and band
+    keys; the result is a local relation that Spark rounds and
+    thresholds, so collecting it runs no further job, and it persists
+    nothing. Above the gate, or when the band buckets hold more than
+    ``_DRIVER_MAX_ROWS`` candidate pairs, the Catalyst plan runs.
+
+    In the plan, the shingle sets feed three branches (signatures +
+    both verify sides); ``cache_sets`` persists them so
+    tokenize/shingle/hash runs once. Measured verdict (sf0.1, 5k docs):
+    caching LONG sets wins ~2x (they serialize cheaply), while caching
+    the earlier STRING sets LOST ~6x to recompute — whether a cache
+    pays depends on element width, not just recompute cost. At 100 TB
+    the cache spills to executor-local disk; disable to trade
+    recompute for storage. The plan's persisted frames are released
+    with ``release(out)`` after the action.
 
     Output: (left_id, right_id, jaccard >= threshold).
     """
     sets = shingle_hash_sets(df, id_col, text_col, ngram)
+    # a threshold of 0 or less also keeps the zero rows of a repeated
+    # id's empty set rows, which the collected shingle rows do not hold
+    if _DRIVER_MAX_ROWS and threshold > 0:
+        table = (
+            sets.where(F.col("id").isNotNull())
+            .select(F.monotonically_increasing_id().alias("row"), "id", "__set")
+            .select("row", "id", F.explode("__set").alias("h"))
+            .limit(_DRIVER_MAX_ROWS + 1)
+            .toArrow()
+        )
+        if table.num_rows <= _DRIVER_MAX_ROWS:
+            out = _driver_near_dups(df.sparkSession, table, threshold, bands, rows_per_band)
+            if out is not None:
+                return out
+        del table
     if cache_sets:
         sets = sets.persist()
     # ALWAYS persist signatures: they are tiny (docs x k longs) and the
@@ -835,8 +1006,7 @@ def minhash_near_dups(
     )
     inter = F.size(F.array_intersect("set_a", "set_b")).cast("double")
     union = (F.size("set_a") + F.size("set_b")).cast("double") - inter
-    jac = F.round(inter / F.greatest(union, F.lit(1.0)), 6)
-    out = joined.select("left_id", "right_id", jac.alias("jaccard")).filter(
+    out = joined.select("left_id", "right_id", _jaccard(inter, union).alias("jaccard")).filter(
         F.col("jaccard") >= threshold
     )
     # caller releases via dedup.release(out) after its action (verdict

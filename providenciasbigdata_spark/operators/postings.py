@@ -15,16 +15,18 @@ from it:
   count-of-terms (a doc qualifies when it appears under every term) —
   no corpus scan, the join is against the tiny matched-token slice.
 - ``build_bm25_index`` / ``bm25_search``: Okapi BM25 top-k from a built
-  ``BM25Index``. Up to ``_DRIVER_MAX_ROWS`` (doc, token) rows the index
-  is a numpy postings block on the driver and a search runs no Spark
-  job: numpy sums the terms' contributions, and the top k come back as
-  a local relation that Spark's own ``round`` folds into. Above the
-  gate the rows are a persisted Spark table and a search is a plan over
-  it. Both paths share one expression for a term's contribution, and
-  the idf of a driver block comes from Spark's ``log``, so each term's
-  contribution agrees bit for bit; the rounded scores agree unless the
-  Spark path adds three or more terms in an order that moves a sum's
-  last bit across a rounding boundary.
+  ``BM25Index``. Up to ``_DRIVER_MAX_ROWS`` token occurrences the build
+  collects the exploded tokens once and groups them with Arrow's hash
+  aggregate into a numpy postings block on the driver, with no shuffle
+  and no persist, and a search runs no Spark job: numpy sums the
+  terms' contributions, and the top k come back as a local relation
+  that Spark's own ``round`` folds into. Above the gate one shuffle
+  groups the (doc, token) rows into a persisted Spark table and a
+  search is a plan over it. Both paths share one expression for a
+  term's contribution, and the idf of a driver block comes from
+  Spark's ``log``, so each term's contribution agrees bit for bit; the
+  rounded scores agree unless the Spark path adds three or more terms
+  in an order that moves a sum's last bit across a rounding boundary.
 
 Degenerate-key note: stop-word-like tokens produce postings arrays as
 long as the corpus. The index is still correct — but at 100 TB those
@@ -191,9 +193,10 @@ def search_fuzzy(
     return matched.select(F.explode("postings").alias("doc_id")).distinct()
 
 
-# Largest (doc_id, token) table a BM25 index holds on the driver, as a
-# numpy postings block (20 bytes a row, plus the vocabulary); larger
-# ones stay a persisted Spark table. 0 keeps every index in Spark.
+# Most token occurrences (the exploded (doc_id, token) rows, one per
+# token in a doc) a BM25 index builds into a numpy postings block on the
+# driver; a larger corpus stays a persisted Spark table. 0 keeps every
+# index in Spark.
 _DRIVER_MAX_ROWS = 1_000_000
 
 
@@ -217,16 +220,25 @@ class _DriverPostings:
     third of the arguments)."""
 
     def __init__(self, spark: SparkSession, table: pa.Table):
-        """``table``: (doc_id, token, tf, dl) as collected with ``toArrow``."""
-        token = pc.dictionary_encode(table["token"], null_encoding="encode").combine_chunks()
+        """``table``: one (doc_id, dl, pos, token) row per token
+        occurrence, as collected with ``toArrow``. Arrow's hash
+        aggregate groups it as the Spark aggregate does: a (doc, token)
+        row's ``tf`` counts its occurrences and its ``dl`` is their
+        largest, and N counts the rows that hold a doc's first token
+        (duplicated doc ids included). Its buffers stay in Arrow's
+        memory pool, where numpy temporaries would grow the heap."""
+        rows = table.group_by(["doc_id", "token"], use_threads=False).aggregate(
+            [("pos", "count"), ("dl", "max"), ("pos", "min")]
+        )
+        token = pc.dictionary_encode(rows["token"], null_encoding="encode").combine_chunks()
         code = token.indices.to_numpy()
-        rows = np.argsort(code, kind="stable")
+        order = np.argsort(code, kind="stable")
         self.offsets = np.append(0, np.cumsum(np.bincount(code, minlength=len(token.dictionary))))
         self.terms = {t: i for i, t in enumerate(token.dictionary.to_pylist())}
-        self.doc_id = table["doc_id"].to_numpy()[rows]
-        self.tf = table["tf"].to_numpy()[rows]
-        self.dl = table["dl"].to_numpy()[rows]
-        self.n_docs = len(np.unique(self.doc_id))
+        self.doc_id = rows["doc_id"].to_numpy()[order]
+        self.tf = rows["pos_count"].to_numpy()[order]
+        self.dl = rows["dl_max"].to_numpy()[order]
+        self.n_docs = int(np.count_nonzero(rows["pos_min"].to_numpy() == 0))
         self.avgdl = int(self.tf.sum()) / self.n_docs if self.n_docs else None
         # one idf per distinct df, from a local relation (no Spark job)
         df = np.diff(self.offsets)
@@ -281,14 +293,17 @@ def _scored(spark: SparkSession, ids, sums, round_digits: int) -> DataFrame:
 class BM25Index:
     """Built ranked-retrieval data: one row per (doc_id, token) with the
     token's count in the doc (``tf``) and the doc's length (``dl``),
-    plus the corpus scalars N and avgdl. Doc ids must be unique.
+    plus the corpus scalars N and avgdl. A doc with a null id is not
+    in the index; a repeated doc id merges its docs' rows (``tf`` sums,
+    ``dl`` is the larger), alike on both sides of the gate.
 
     The build decides by size alone where the rows live: up to
-    ``_DRIVER_MAX_ROWS`` of them in a driver-side postings block, which
-    a search scores in numpy; above that in ``term_freqs`` persisted in
-    Spark's cache (with each token's ``first_pos`` in the doc), which a
-    search plans over. Either way a query never reads or tokenizes the
-    corpus and runs no driver action (pinned in tests/test_postings.py).
+    ``_DRIVER_MAX_ROWS`` token occurrences in a driver-side postings
+    block, which a search scores in numpy; above that in ``term_freqs``
+    persisted in Spark's cache (with each token's ``first_pos`` in the
+    doc), which a search plans over. Either way a query never reads or
+    tokenizes the corpus and runs no driver action (pinned in
+    tests/test_postings.py).
 
     The block or the cache lives as long as the index: ``release()``
     frees it, and so does garbage collection. A released index still
@@ -322,36 +337,32 @@ def build_bm25_index(
 ) -> BM25Index:
     """Build the BM25 index from a tokenized corpus: a doc's terms are
     its tokens (``compat.documents.tokenize`` emits no empty ones), its
-    length is their number, and a doc without tokens is not in the
-    index. One shuffle groups the (doc, token) counts.
+    length is their number, and a doc without tokens or without an id
+    is not in the index.
 
-    Up to ``_DRIVER_MAX_ROWS`` rows, one ``toArrow`` collects them into
-    the driver block (the ``limit`` that decides the gate rides in the
-    same action) and N and avgdl come from the block.
-    Above it, the rows are persisted and the one stats action (N and
-    the total length, one aggregate) fills the cache on its way."""
-    term_freqs = (
-        docs.select(
-            F.col(id_col).alias("doc_id"),
-            F.size(tokens_col).alias("dl"),
-            F.posexplode(tokens_col).alias("pos", "token"),
-        )
-        .groupBy("doc_id", "token")
-        .agg(
-            F.count("*").alias("tf"),
-            F.max("dl").alias("dl"),
-            F.min("pos").alias("first_pos"),
-        )
+    Up to ``_DRIVER_MAX_ROWS`` token occurrences, one ``toArrow``
+    collects the exploded (doc_id, dl, pos, token) rows (the ``limit``
+    that decides the gate rides in the same action) and Arrow's hash
+    aggregate groups them into the driver block, with N and avgdl: one
+    action, no shuffle and no persist. Above it, one shuffle groups the (doc,
+    token) counts, the rows are persisted and the one stats action (N
+    and the total length, one aggregate) fills the cache on its way."""
+    occurrences = docs.where(F.col(id_col).isNotNull()).select(
+        F.col(id_col).alias("doc_id"),
+        F.size(tokens_col).alias("dl"),
+        F.posexplode(tokens_col).alias("pos", "token"),
+    )
+    term_freqs = occurrences.groupBy("doc_id", "token").agg(
+        F.count("*").alias("tf"),
+        F.max("dl").alias("dl"),
+        F.min("pos").alias("first_pos"),
     )
     if _DRIVER_MAX_ROWS:
-        table = (
-            term_freqs.select("doc_id", "token", "tf", "dl")
-            .limit(_DRIVER_MAX_ROWS + 1)
-            .toArrow()
-        )
+        table = occurrences.limit(_DRIVER_MAX_ROWS + 1).toArrow()
         if table.num_rows <= _DRIVER_MAX_ROWS:
             postings = _DriverPostings(docs.sparkSession, table)
             return BM25Index(term_freqs, postings.n_docs, postings.avgdl, postings)
+        del table
     term_freqs = term_freqs.persist()
     # one row per doc holds the doc's first token, so N needs no
     # distinct pass over doc ids

@@ -47,10 +47,11 @@ def spark_stems(spark):
 def distributed(monkeypatch):
     """Context manager that forces the distributed loops: inside it the
     size gates of ``graph_algos`` (``_DRIVER_MAX_EDGES``),
-    ``similarity`` (``_DRIVER_MAX_ROWS``) and ``postings``
-    (``_DRIVER_MAX_ROWS``) are 0, so every non-empty input skips the
-    driver finisher and every BM25 index built inside is a Spark table."""
-    from providenciasbigdata_spark.operators import graph_algos, postings, similarity
+    ``similarity``, ``postings`` and ``dedup`` (each
+    ``_DRIVER_MAX_ROWS``) are 0, so every non-empty input skips the
+    driver finisher, every BM25 index built inside is a Spark table and
+    ``dedup.minhash_near_dups`` runs its Catalyst banding plan."""
+    from providenciasbigdata_spark.operators import dedup, graph_algos, postings, similarity
 
     @contextlib.contextmanager
     def force():
@@ -58,6 +59,7 @@ def distributed(monkeypatch):
             m.setattr(graph_algos, "_DRIVER_MAX_EDGES", 0)
             m.setattr(similarity, "_DRIVER_MAX_ROWS", 0)
             m.setattr(postings, "_DRIVER_MAX_ROWS", 0)
+            m.setattr(dedup, "_DRIVER_MAX_ROWS", 0)
             yield
 
     return force

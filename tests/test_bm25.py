@@ -154,3 +154,41 @@ def test_rows_agree_with_the_python_formula(spark, side):
     want = {1: part(idf_a, 2, 3) + part(idf_b, 1, 3), 2: part(idf_b, 1, 1)}
     assert got.keys() == want.keys()
     assert all(abs(got[d] - want[d]) <= 1e-6 for d in want)
+
+
+def test_degenerate_rows_index_alike_on_both_sides(spark, distributed):
+    """A null element is a token of its own; an empty list and null
+    tokens put no doc in the index; a duplicated id merges its rows (tf
+    sums, dl is the larger); a null id is not in the index and does not
+    count in N."""
+    docs = spark.createDataFrame([
+        (1, ["a", None, "b", "a"]),
+        (2, []),
+        (3, None),
+        (4, ["b", "c"]), (4, ["c", "d", "c"]),
+        (None, ["a", "e"]),
+        (5, ["e"]),
+    ], _SCHEMA)
+    driver = build_bm25_index(docs)
+    with distributed():
+        table = build_bm25_index(docs)
+    assert driver._postings is not None and table._postings is None
+    # keys (1,a) (1,null) (1,b) (4,b) (4,c) (4,d) (5,e): N counts the
+    # four that hold a first token, avgdl is their 10 occurrences over N
+    assert (driver.n_docs, driver.avgdl) == (table.n_docs, table.avgdl) == (4, 2.5)
+    for terms in (["a"], ["b"], ["c"], ["d"], ["e"], ["a", "b", "c", "d", "e"]):
+        got = _rows(bm25_search(driver, terms))
+        assert got and got == _rows(bm25_search(table, terms)), terms
+        assert None not in [d for d, _ in got]
+    driver.release()
+    table.release()
+
+
+def test_driver_build_runs_one_job(spark, count_jobs):
+    docs = rulings_view(load_table(spark, SF_ORACLE, "documents"))
+    persisted = spark.sparkContext._jsc.getPersistentRDDs
+    before = set(persisted().keys())
+    idx, jobs = count_jobs(lambda: build_bm25_index(docs))
+    assert idx._postings is not None and jobs == 1
+    assert set(persisted().keys()) <= before  # nothing new is persisted
+    idx.release()

@@ -806,7 +806,7 @@ def test_signature_arrow_matches_jvm_on_null_elements(spark):
         assert sorted(r.id for r in arrow.collect()) == [1, 2, 3]
 
 
-def test_operator_persist_release(spark):
+def test_operator_persist_release(spark, distributed):
     """Round-14 (verdict-r13 item 5): operators that persist an
     intermediate attach it to the returned frame; dedup.release(df)
     after the caller's action leaves NO live cached RDDs behind."""
@@ -815,8 +815,13 @@ def test_operator_persist_release(spark):
     )
     sc = spark.sparkContext
     before = set(sc._jsc.getPersistentRDDs().keys())
+
+    def minhash_plan():  # MinHash persists only above its driver gate
+        with distributed():
+            return dedup.minhash_near_dups(docs)
+
     for build in (
-        lambda: dedup.minhash_near_dups(docs),
+        minhash_plan,
         lambda: dedup.minhash_near_dups_estimated(docs),
         lambda: dedup.containment_join_prefix(docs, threshold=0.8),
         lambda: dedup.dup_span_stats(docs, n=3),
@@ -830,3 +835,23 @@ def test_operator_persist_release(spark):
         dedup.release(out)
         leaked = set(sc._jsc.getPersistentRDDs().keys()) - before
         assert not leaked, f"cached RDDs leaked after release: {leaked}"
+
+
+def test_minhash_below_its_gate_persists_nothing(spark, sf_dir, count_jobs):
+    """Below ``dedup._DRIVER_MAX_ROWS`` one collect feeds the driver
+    build: the whole call and its collect run one Spark job, and no RDD
+    stays persisted, so ``release`` has nothing to free."""
+    docs = load_table(spark, sf_dir, "documents").filter(
+        F.col("doc_id") < 120
+    )
+    sc = spark.sparkContext
+    before = set(sc._jsc.getPersistentRDDs().keys())
+
+    def build_and_collect():
+        out = dedup.minhash_near_dups(docs)
+        return out, out.collect()
+
+    (out, rows), jobs = count_jobs(build_and_collect)
+    assert jobs == 1 and not getattr(out, "_pbd_persisted", ())
+    assert set(sc._jsc.getPersistentRDDs().keys()) <= before
+    assert rows and all(r.left_id < r.right_id for r in rows)

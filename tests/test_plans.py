@@ -73,7 +73,7 @@ def test_agg_is_two_phase(spark, reg):
     assert plan.count("HashAggregate") >= 2, plan
 
 
-def test_lsh_banding_never_cartesian(spark, reg):
+def test_lsh_banding_never_cartesian(spark, reg, distributed):
     for name in (
         "minhash_near_dups",
         "simhash_near_dups",
@@ -83,9 +83,18 @@ def test_lsh_banding_never_cartesian(spark, reg):
         # all-pairs tile join
         "dedup_embedding_blocked",
     ):
-        plan = plan_of(_run(reg, name, spark))
+        # MinHash bands in a plan only above its driver gate
+        with distributed() if name == "minhash_near_dups" else contextlib.nullcontext():
+            plan = plan_of(_run(reg, name, spark))
         assert "CartesianProduct" not in plan, (name, plan)
         assert "BroadcastNestedLoopJoin" not in plan, (name, plan)
+
+
+def test_minhash_below_its_gate_is_a_local_relation(spark, reg):
+    """Below ``dedup._DRIVER_MAX_ROWS`` the bands and the verify ran on
+    the driver: the plan only scans the local relation of pairs."""
+    plan = plan_of(_run(reg, "minhash_near_dups", spark))
+    assert "LocalTableScan" in plan and "Join" not in plan, plan
 
 
 def test_text_search_is_scan_plus_predicate(spark, reg):
