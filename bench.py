@@ -22,6 +22,7 @@ import time
 
 sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 
+from perfbench.run import stop_jvm  # noqa: E402
 from providenciasbigdata_spark.io import load_table  # noqa: E402
 from providenciasbigdata_spark.queries import all_queries  # noqa: E402
 from providenciasbigdata_spark.session import get_spark  # noqa: E402
@@ -303,10 +304,19 @@ def _fingerprints_only(sf_dir: str) -> None:
 
 
 def main() -> None:
+    """Run the sweep (or ``--fingerprints``) and stop the JVM after it,
+    whether or not the sweep finished."""
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    if len(sys.argv) >= 2 and sys.argv[1] == "--fingerprints":
-        _fingerprints_only(sf_dir)
-        return
+    try:
+        if len(sys.argv) >= 2 and sys.argv[1] == "--fingerprints":
+            _fingerprints_only(sf_dir)
+        else:
+            _sweep(sf_dir)
+    finally:
+        stop_jvm()
+
+
+def _sweep(sf_dir: str) -> None:
     sf = float(os.path.basename(sf_dir.rstrip("/")).removeprefix("sf") or "0.1")
     # Spark's whole-stage-codegen class cache holds 100 entries; a sweep
     # of 100+ queries would otherwise recompile every stage it revisits.

@@ -52,7 +52,7 @@ from providenciasbigdata_spark.compat import documents as _docs
 from providenciasbigdata_spark.compat import graph as _graph
 from providenciasbigdata_spark.io import load_table
 from providenciasbigdata_spark.operators import dedup, similarity
-from providenciasbigdata_spark.session import local_frame, unpersist_on_collect
+from providenciasbigdata_spark.session import collect_below, local_frame, unpersist_on_collect
 
 # schema of a rulings mongodump read through the mongodump DataSource
 _DUMP_SCHEMA = "_id string, providencia string, tipo string, anio int, texto string"
@@ -102,12 +102,11 @@ class _Version:
 
 def _vector_block(emb: DataFrame) -> _graph.VectorBlock | None:
     """The embeddings collected once into a block, or None above the
-    driver gate (the anchored reads then run in Spark). One action: the
-    ``limit`` that decides the gate rides in the collect."""
-    table = emb.select("vec_id", "embedding").limit(similarity._DRIVER_MAX_ROWS + 1).toArrow()
-    if table.num_rows > similarity._DRIVER_MAX_ROWS:
-        return None
-    return _graph.VectorBlock(table)
+    driver gate (the anchored reads then run in Spark): one action,
+    ``collect_below``, decides and collects. A gate of 0 keeps every
+    version, an empty one too, in Spark."""
+    table = collect_below(emb.select("vec_id", "embedding"), similarity._DRIVER_MAX_ROWS)
+    return None if table is None else _graph.VectorBlock(table)
 
 
 def _hop_anchor(query: str, params: dict) -> str | None:

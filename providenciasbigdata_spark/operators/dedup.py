@@ -8,9 +8,10 @@ Five strategies, cheapest first:
 - MinHash+LSH:  shingle -> k minhashes -> b bands -> bucket join.
                 O(n*b) candidate generation, the 100TB near-dup path.
                 Up to ``_DRIVER_MAX_ROWS`` hashed shingles,
-                ``minhash_near_dups`` collects them once and bands and
-                verifies in numpy on the driver, with the same hash
-                family: no shuffle, join or persist.
+                ``minhash_near_dups`` collects them once
+                (``session.collect_below``) and bands and verifies in
+                numpy on the driver, with the same hash family: no
+                shuffle, join or persist.
 - SimHash:      64-bit weighted-majority fingerprint; near-dups have
                 small Hamming distance.  One pandas_udf (Arrow) pass.
 - embedding:    cosine over an embedding column; thresholded pairs.
@@ -33,6 +34,7 @@ from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
 from providenciasbigdata_spark.functions.text import content_fingerprint, shingles, tokenize
+from providenciasbigdata_spark.session import collect_below, local_frame
 
 
 # ---- fingerprint format versioning ---------------------------------------
@@ -872,8 +874,6 @@ def _driver_near_dups(spark, table, threshold, bands, rows_per_band):
     import numpy as np
     import pyarrow as pa
 
-    from providenciasbigdata_spark.session import local_frame
-
     ids, rank = np.unique(table["id"].to_numpy(), return_inverse=True)
     _, set_row = np.unique(table["row"].to_numpy(), return_inverse=True)
     order = np.argsort(set_row, kind="stable")
@@ -956,9 +956,9 @@ def minhash_near_dups(
     its set rows with the other id's.
 
     Up to ``_DRIVER_MAX_ROWS`` hashed-shingle rows (and a positive
-    ``threshold``), one ``toArrow`` collects them and the rest runs on
-    the driver in numpy, with the same hash family, signatures and band
-    keys; the result is a local relation that Spark rounds and
+    ``threshold``), one ``session.collect_below`` decides the gate and
+    collects them, and the rest runs on the driver in numpy, with the
+    same hash family, signatures and band keys; the result is a local relation that Spark rounds and
     thresholds, so collecting it runs no further job, and it persists
     nothing. Above the gate, or when the band buckets hold more than
     ``_DRIVER_MAX_ROWS`` candidate pairs, the Catalyst plan runs.
@@ -978,15 +978,14 @@ def minhash_near_dups(
     sets = shingle_hash_sets(df, id_col, text_col, ngram)
     # a threshold of 0 or less also keeps the zero rows of a repeated
     # id's empty set rows, which the collected shingle rows do not hold
-    if _DRIVER_MAX_ROWS and threshold > 0:
-        table = (
+    if threshold > 0:
+        table = collect_below(
             sets.where(F.col("id").isNotNull())
             .select(F.monotonically_increasing_id().alias("row"), "id", "__set")
-            .select("row", "id", F.explode("__set").alias("h"))
-            .limit(_DRIVER_MAX_ROWS + 1)
-            .toArrow()
+            .select("row", "id", F.explode("__set").alias("h")),
+            _DRIVER_MAX_ROWS,
         )
-        if table.num_rows <= _DRIVER_MAX_ROWS:
+        if table is not None:
             out = _driver_near_dups(df.sparkSession, table, threshold, bands, rows_per_band)
             if out is not None:
                 return out
@@ -1415,6 +1414,11 @@ def embedding_near_dups(
     ).filter(F.col("cosine") >= threshold)
 
 
+# Largest corpus ``dedup_embedding(candidates="auto")`` scores with the
+# exact all-pairs kernel; a larger one is cluster-blocked.
+_EXACT_MAX_ROWS = 20_000
+
+
 def dedup_embedding(
     embeddings: DataFrame,
     id_col: str = "vec_id",
@@ -1423,7 +1427,6 @@ def dedup_embedding(
     scale: float = 1.0,
     block_size: int = 4096,
     candidates: str = "auto",
-    exact_max_rows: int = 20_000,
     n_clusters: int = 16,
     kmeans_iter: int = 8,
     srp_bits: int = 12,
@@ -1447,7 +1450,7 @@ def dedup_embedding(
       1.0; recall pinned vs exact in tests).
     - ``"srp"``: SRP-LSH bucketed candidates, exact-cosine verified.
       O(n*tables) shuffle; recall grows with tables.
-    - ``"auto"`` (default): exact at or below ``exact_max_rows``
+    - ``"auto"`` (default): exact at or below ``_EXACT_MAX_ROWS``
       (one count(*), answered from file footers), cluster-blocked
       above — small/fixture corpora keep the fully-verifiable exact
       path, large corpora never pay quadratic compute by default.
@@ -1467,7 +1470,7 @@ def dedup_embedding(
     )
 
     if candidates == "auto":
-        candidates = "exact" if embeddings.count() <= exact_max_rows else "cluster"
+        candidates = "exact" if embeddings.count() <= _EXACT_MAX_ROWS else "cluster"
     if candidates == "exact":
         edges = pairwise_cosine_blocked(
             embeddings, threshold, id_col=id_col, vec_col=vec_col,

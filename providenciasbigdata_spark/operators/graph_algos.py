@@ -7,15 +7,16 @@ distances, shortest-path counts, PageRank variants, eigenvector
 centrality, k-core, k-truss, SCC, label propagation, link prediction
 and seed-sampled closeness and betweenness.
 
-One size gate decides how the fixed-point operators run. Each counts
-its normalized edge set once: up to ``_DRIVER_MAX_EDGES`` edges (~3 MB)
-it collects the edges and runs the same fixed point on the driver in
+One size gate decides how the fixed-point operators run. Each
+collects its normalized edge set with ``session.collect_below``: up to
+``_DRIVER_MAX_EDGES`` edges (~3 MB) that one action returns the edges
+as Arrow columns and the same fixed point runs on the driver in
 Python/numpy, because a distributed loop over a tiny graph pays
 per-round scheduling and plan-analysis latency for sub-millisecond
-compute. An empty edge set always finishes on the driver. Larger inputs
-run the distributed loop, where the driver holds only iteration counters
-and convergence counts, never row data. Both paths give the same answer
-(the tests force the distributed side by setting the constant to 0).
+compute. Larger inputs run the distributed loop, where the driver holds
+only iteration counters and convergence counts, never row data. Both
+paths give the same answer (the tests force the distributed side, empty
+inputs included, by setting the constant to 0).
 A driver finisher's result, like every frame this module makes on the
 driver (seed frames, empty results), is an Arrow local relation
 (``session.local_frame``) with the schema the distributed loop would
@@ -35,21 +36,14 @@ import itertools
 import uuid
 from collections import Counter
 
+import numpy as np
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from providenciasbigdata_spark.session import local_frame
+from providenciasbigdata_spark.session import collect_below, local_frame
 
 # Largest edge set the fixed-point operators finish on the driver.
 _DRIVER_MAX_EDGES = 200_000
-
-
-def _driver_rows(df: DataFrame):
-    """The collected rows of ``df`` when it has at most
-    ``_DRIVER_MAX_EDGES`` rows, else None (run the distributed loop)."""
-    if df.count() > _DRIVER_MAX_EDGES:
-        return None
-    return df.collect()
 
 
 def _truncator(df_session, checkpoint_dir):
@@ -95,11 +89,24 @@ def _as_edge_id(spark, dtype, value, sample):
     )
 
 
-def _adjacency(rows) -> dict:
-    """{u: [v, ...]} over collected (u, v) rows."""
+def _pairs(t):
+    """The collected (u, v) edges of Arrow table ``t``, in row order."""
+    return zip(t["u"].to_pylist(), t["v"].to_pylist())
+
+
+def _node_frame(spark, pairs, ids: DataFrame, name: str, value) -> DataFrame:
+    """The driver finisher's (id, ``name``) ``pairs`` as a local relation
+    typed as its distributed loop types them: ``id`` as the first column
+    of ``ids``, ``name`` as the ``value`` expression."""
+    id_col = F.col(ids.columns[0]).alias("id")
+    return local_frame(spark, pairs, ids.select(id_col, value.alias(name)).schema)
+
+
+def _adjacency(t) -> dict:
+    """{u: [v, ...]} over the collected (u, v) edges."""
     adj: dict = {}
-    for r in rows:
-        adj.setdefault(r["u"], []).append(r["v"])
+    for u, v in _pairs(t):
+        adj.setdefault(u, []).append(v)
     return adj
 
 
@@ -121,18 +128,16 @@ def _bfs_hops(adj: dict, source, max_hops: int, target=None) -> dict:
     return hops
 
 
-def _edge_arrays(rows):
-    """Driver-side arrays for the power iterations over collected
-    (u, v, w) rows: sorted node ids, their index map, and per edge the
+def _edge_arrays(t):
+    """Driver-side arrays for the power iterations over the collected
+    (u, v, w) edges: sorted node ids, their index map, and per edge the
     source index, destination index and weight."""
-    import numpy as np
-
-    ids = sorted({r["u"] for r in rows} | {r["v"] for r in rows})
-    ix = {v: i for i, v in enumerate(ids)}
-    usrc = np.array([ix[r["u"]] for r in rows], dtype=np.int64)
-    vdst = np.array([ix[r["v"]] for r in rows], dtype=np.int64)
-    w = np.array([r["w"] for r in rows], dtype=np.float64)
-    return ids, ix, usrc, vdst, w
+    u, v = t["u"].to_pylist(), t["v"].to_pylist()
+    ids = sorted(set(u) | set(v))
+    ix = {x: i for i, x in enumerate(ids)}
+    usrc = np.array([ix[x] for x in u], dtype=np.int64)
+    vdst = np.array([ix[x] for x in v], dtype=np.int64)
+    return ids, ix, usrc, vdst, t["w"].to_numpy()
 
 
 def _weighted_edges(edges: DataFrame, src: str, dst: str, weight_col) -> DataFrame:
@@ -249,16 +254,10 @@ def connected_components(
         .filter(F.col("u") != F.col("v"))
         .distinct()
     )
-    rows = _driver_rows(cur)
-    if rows is not None:
-        comp = _union_find_cc([(r["u"], r["v"]) for r in rows])
-        labels = local_frame(
-            spark,
-            sorted(comp.items()),
-            schema=cur.select(
-                F.col("u").alias("id"), F.col("u").alias("component")
-            ).schema,
-        )
+    t = collect_below(cur, _DRIVER_MAX_EDGES)
+    if t is not None:
+        comp = _union_find_cc(_pairs(t))
+        labels = _node_frame(spark, sorted(comp.items()), cur, "component", F.col("u"))
         return nodes.join(labels, "id", "left").select(
             "id", F.coalesce("component", F.col("id")).alias("component")
         )
@@ -335,16 +334,16 @@ def bfs_distances(
     visited = visited.withColumn("id", F.col("id").cast(e.schema["u"].dataType))
     frontier = visited.select("id")
 
-    rows = _driver_rows(e)
-    if rows is not None:
+    t = collect_below(e, _DRIVER_MAX_EDGES)
+    if t is not None:
         e.unpersist()
-        if not rows:
+        if not t.num_rows:
             # no edges: the anchor alone at hop 0, typed by the same
             # cast the distributed path applies
             return visited
-        dtype, sample = e.schema["u"].dataType, rows[0]["u"]
+        dtype, sample = e.schema["u"].dataType, t["u"][0].as_py()
         hops = _bfs_hops(
-            _adjacency(rows),
+            _adjacency(t),
             _as_edge_id(spark, dtype, anchor, sample),
             max_hops,
             _as_edge_id(spark, dtype, target, sample),
@@ -441,17 +440,17 @@ def shortest_path_sigma(
     level = level.withColumn("id", F.col("id").cast(e.schema["u"].dataType))
     visited = level.select("id")
 
-    rows = _driver_rows(e)
-    if rows is not None:
+    t = collect_below(e, _DRIVER_MAX_EDGES)
+    if t is not None:
         e.unpersist()
-        if not rows:
+        if not t.num_rows:
             return local_frame(spark, [], "hops long, sigma long")
-        dtype, sample = e.schema["u"].dataType, rows[0]["u"]
+        dtype, sample = e.schema["u"].dataType, t["u"][0].as_py()
         anchor = _as_edge_id(spark, dtype, anchor, sample)
         target = _as_edge_id(spark, dtype, target, sample)
         adj: dict = {}
-        for r in rows:
-            adj.setdefault(r["u"], []).append((r["v"], int(r["mult"])))
+        for (u, v), mult in zip(_pairs(t), t["mult"].to_pylist()):
+            adj.setdefault(u, []).append((v, mult))
         seen = {anchor}
         frontier = {anchor: 1}
         for hop in range(1, max_hops + 1):
@@ -538,15 +537,12 @@ def pagerank(
     spark = edges.sparkSession
     ckpt = _truncator(spark, checkpoint_dir)
     e = _weighted_edges(edges, src, dst, weight_col)
-    out_schema = edges.select(F.col(src).alias("id"), F.lit(0.0).alias("rank")).schema
-    rows = _driver_rows(e)
-    if rows is not None:
-        import numpy as np
-
+    t = collect_below(e, _DRIVER_MAX_EDGES)
+    if t is not None:
         e.unpersist()
-        if not rows:
-            return local_frame(spark, [], out_schema)  # no edges, no nodes
-        ids, _, usrc, vdst, w = _edge_arrays(rows)
+        if not t.num_rows:
+            return _node_frame(spark, [], edges.select(src), "rank", F.lit(0.0))  # no nodes
+        ids, _, usrc, vdst, w = _edge_arrays(t)
         n = len(ids)
         deg = np.zeros(n)
         np.add.at(deg, usrc, w)
@@ -557,10 +553,8 @@ def pagerank(
             dangling = float(rank[deg == 0].sum())
             base = (1.0 - damping) / n + damping * dangling / n
             rank = base + damping * inflow
-        return local_frame(
-            spark,
-            list(zip(ids, [float(x) for x in rank])), schema=out_schema
-        )
+        ranks = list(zip(ids, rank.tolist()))
+        return _node_frame(spark, ranks, edges.select(src), "rank", F.lit(0.0))
     ids = _endpoints(e)
     # every node row carries |V| as _n
     nodes = ids.crossJoin(
@@ -633,15 +627,13 @@ def personalized_pagerank(
     spark = edges.sparkSession
     ckpt = _truncator(spark, checkpoint_dir)
     e = _weighted_edges(edges, src, dst, None)
-    rows = _driver_rows(e)
-    if rows is not None:
+    t = collect_below(e, _DRIVER_MAX_EDGES)
+    if t is not None:
         # arithmetic mirrors the Column expressions term for term
-        import numpy as np
-
         e.unpersist()
-        if not rows:
+        if not t.num_rows:
             raise ValueError(no_seed)
-        ids, ix, usrc, vdst, _ = _edge_arrays(rows)
+        ids, ix, usrc, vdst, _ = _edge_arrays(t)
         dtype, sample = e.schema["u"].dataType, ids[0]
         hit = {_as_edge_id(spark, dtype, s, sample) for s in seeds} & ix.keys()
         if not hit:
@@ -657,13 +649,8 @@ def personalized_pagerank(
             inflow = np.bincount(vdst, weights=contrib, minlength=n)
             dangling = float(rank[deg == 0].sum())
             rank = (1.0 - damping) * pvec + damping * dangling * pvec + damping * inflow
-        return local_frame(
-            spark,
-            list(zip(ids, [float(x) for x in rank])),
-            schema=edges.select(
-                F.col(src).alias("id"), F.lit(0.0).alias("rank")
-            ).schema,
-        )
+        ranks = list(zip(ids, rank.tolist()))
+        return _node_frame(spark, ranks, edges.select(src), "rank", F.lit(0.0))
     nodes = _endpoints(e).persist()
     is_seed = F.col("id").isin(list(seeds))
     n_hit = nodes.filter(is_seed).count()
@@ -740,33 +727,27 @@ def sssp_distances(
     dist = local_frame(spark, [(str(anchor), 0.0)], "id string, d double")
     dist = dist.withColumn("id", F.col("id").cast(e.schema["u"].dataType))
 
-    rows = _driver_rows(e)
-    if rows is not None:
+    t = collect_below(e, _DRIVER_MAX_EDGES)
+    if t is not None:
         e.unpersist()
-        if not rows:
+        if not t.num_rows:
             return dist  # anchor alone, typed by the distributed cast
-        source = _as_edge_id(spark, e.schema["u"].dataType, anchor, rows[0]["u"])
+        source = _as_edge_id(spark, e.schema["u"].dataType, anchor, t["u"][0].as_py())
+        rows = list(zip(t["u"].to_pylist(), t["v"].to_pylist(), t["w"].to_pylist()))
         dd = {source: 0.0}
         for _ in range(max_hops):
             new = dict(dd)
-            for r in rows:
-                u = r["u"]
+            for u, v, w in rows:
                 if u in dd:
-                    du = dd[u]
                     # mirror the min-aggregate's null handling: a null
                     # weight (or a null upstream distance) yields a null
                     # candidate, which never beats a real distance but
                     # does mark the node reached — exactly what
                     # unionByName + F.min produce distributedly.
-                    w = r["w"]
-                    cand = du + w if du is not None and w is not None else None
-                    v = r["v"]
-                    if v not in new:
+                    cand = None if dd[u] is None or w is None else dd[u] + w
+                    cur = new.get(v)
+                    if v not in new or cand is not None and (cur is None or cand < cur):
                         new[v] = cand
-                    else:
-                        cur = new[v]
-                        if cand is not None and (cur is None or cand < cur):
-                            new[v] = cand
             if new == dd:
                 break
             dd = new
@@ -917,16 +898,10 @@ def strongly_connected_components(
         .filter(F.col("u") != F.col("v"))
         .distinct()
     )
-    rows = _driver_rows(e_all)
-    if rows is not None:
-        comp = _tarjan_scc([(r["u"], r["v"]) for r in rows])
-        return local_frame(
-            spark,
-            sorted(comp.items()),
-            schema=e_all.select(
-                F.col("u").alias("id"), F.col("u").alias("component")
-            ).schema,
-        )
+    t = collect_below(e_all, _DRIVER_MAX_EDGES)
+    if t is not None:
+        comp = _tarjan_scc(_pairs(t))
+        return _node_frame(spark, sorted(comp.items()), e_all, "component", F.col("u"))
 
     active_nodes = ckpt(_endpoints(e_all))
     done_parts: list[DataFrame] = []
@@ -1036,6 +1011,8 @@ def strongly_connected_components(
             .join(active_nodes.withColumnRenamed("id", "v"), "v", "left_semi")
         )
 
+    if not done_parts:  # no edge between two distinct nodes
+        return _node_frame(spark, [], e_all, "component", F.col("u"))
     out = done_parts[0]
     for part in done_parts[1:]:
         out = out.unionByName(part)
@@ -1132,9 +1109,9 @@ def label_propagation(
 
     ckpt = _truncator(edges.sparkSession, checkpoint_dir)
     sym = ckpt(symmetrize(edges, src, dst))
-    rows = _driver_rows(sym)
-    if rows is not None:
-        adj = _adjacency(rows)
+    t = collect_below(sym, _DRIVER_MAX_EDGES)
+    if t is not None:
+        adj = _adjacency(t)
         labels_py = {n: n for n in adj}
         for _ in range(n_rounds):
             nxt = {}
@@ -1147,13 +1124,8 @@ def label_propagation(
                     counts, key=lambda c: (-counts[c], c)
                 )
             labels_py = nxt
-        spark = edges.sparkSession
-        return local_frame(
-            spark,
-            sorted(labels_py.items()),
-            schema=sym.select(
-                F.col("u").alias("id"), F.col("u").alias("community")
-            ).schema,
+        return _node_frame(
+            edges.sparkSession, sorted(labels_py.items()), sym, "community", F.col("u")
         )
     nodes = ckpt(sym.select(F.col("u").alias("id")).distinct())
     labels = nodes.withColumn("lbl", F.col("id"))
@@ -1370,18 +1342,17 @@ def multi_source_bfs(
         )
     frontier = base.select("seed", F.col("seed").alias("id"), F.lit(0).alias("hops"))
 
-    rows = _driver_rows(e)  # cheap: e is checkpointed just above
-    if rows is not None:
-        budget = max(64, 1_000_000 // max(len(rows), 1))
-        seed_rows = base.limit(budget + 1).collect()
-        if len(seed_rows) <= budget:
-            adj = _adjacency(rows)
+    t = collect_below(e, _DRIVER_MAX_EDGES)  # cheap: e is checkpointed just above
+    if t is not None:
+        seed_t = collect_below(base, max(64, 1_000_000 // max(t.num_rows, 1)))
+        if seed_t is not None:
+            adj = _adjacency(t)
             # the list form's base is NOT distinct-ed, and the
             # distributed loop keeps duplicate seed rows only at hop 0
             # (visited starts as the raw frontier; every later level is
             # distinct-ed). Mirror exactly: expand each seed once, emit
             # one extra (s, s, 0) row per duplicate input row.
-            counts = Counter(r["seed"] for r in seed_rows)
+            counts = Counter(seed_t["seed"].to_pylist())
             out = [(s, s, 0) for s, c in counts.items() for _ in range(c - 1)]
             for s in counts:
                 hops = _bfs_hops(adj, s, max_hops)
@@ -1672,28 +1643,19 @@ def eigenvector_centrality(
     """
     ckpt = _truncator(edges.sparkSession, checkpoint_dir)
     e = _weighted_edges(edges, src, dst, weight_col)
-    rows = _driver_rows(e)
-    if rows is not None:
-        import numpy as np
-
+    t = collect_below(e, _DRIVER_MAX_EDGES)
+    if t is not None:
         e.unpersist()
-        schema = edges.select(
-            F.col(src).alias("id"), F.lit(0.0).alias("score")
-        ).schema
-        if not rows:
-            # empty (possibly fully-filtered) edge frame: no nodes, no
-            # scores — np.bincount/max would raise on the empty array
-            return local_frame(edges.sparkSession, [], schema=schema)
-        ids, _, usrc, vdst, w = _edge_arrays(rows)
-        x = np.ones(len(ids))
-        for _ in range(max_iter):
-            nxt = np.bincount(vdst, weights=x[usrc] * w, minlength=len(ids))
-            m = float(nxt.max())
-            x = nxt / m if m > 0 else nxt
-        return local_frame(
-            edges.sparkSession,
-            list(zip(ids, [float(v) for v in x])), schema=schema
-        )
+        scores = []
+        if t.num_rows:  # np.bincount/max would raise on no edges
+            ids, _, usrc, vdst, w = _edge_arrays(t)
+            x = np.ones(len(ids))
+            for _ in range(max_iter):
+                nxt = np.bincount(vdst, weights=x[usrc] * w, minlength=len(ids))
+                m = float(nxt.max())
+                x = nxt / m if m > 0 else nxt
+            scores = list(zip(ids, x.tolist()))
+        return _node_frame(edges.sparkSession, scores, edges.select(src), "score", F.lit(0.0))
 
     nodes = _endpoints(e).persist()
     x = nodes.withColumn("score", F.lit(1.0))

@@ -16,13 +16,13 @@ from it:
   no corpus scan, the join is against the tiny matched-token slice.
 - ``build_bm25_index`` / ``bm25_search``: Okapi BM25 top-k from a built
   ``BM25Index``. Up to ``_DRIVER_MAX_ROWS`` token occurrences the build
-  collects the exploded tokens once and groups them with Arrow's hash
-  aggregate into a numpy postings block on the driver, with no shuffle
-  and no persist, and a search runs no Spark job: numpy sums the
-  terms' contributions, and the top k come back as a local relation
-  that Spark's own ``round`` folds into. Above the gate one shuffle
-  groups the (doc, token) rows into a persisted Spark table and a
-  search is a plan over it. Both paths share one expression for a
+  collects the exploded tokens once (``session.collect_below``) and
+  groups them with Arrow's hash aggregate into a numpy postings block
+  on the driver, with no shuffle and no persist, and a search runs no
+  Spark job: numpy sums the terms' contributions, and the top k come
+  back as a local relation that Spark's own ``round`` folds into.
+  Above the gate one shuffle groups the (doc, token) rows into a
+  persisted Spark table and a search is a plan over it. Both paths share one expression for a
   term's contribution, and the idf of a driver block comes from
   Spark's ``log``, so each term's contribution agrees bit for bit; the
   rounded scores agree unless the Spark path adds three or more terms
@@ -45,7 +45,7 @@ import pyarrow.compute as pc
 from pyspark.sql import Column, DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from providenciasbigdata_spark.session import local_frame, unpersist_on_collect
+from providenciasbigdata_spark.session import collect_below, local_frame, unpersist_on_collect
 
 _EMPTY_HITS_SCHEMA = "doc_id bigint"
 
@@ -340,11 +340,11 @@ def build_bm25_index(
     length is their number, and a doc without tokens or without an id
     is not in the index.
 
-    Up to ``_DRIVER_MAX_ROWS`` token occurrences, one ``toArrow``
-    collects the exploded (doc_id, dl, pos, token) rows (the ``limit``
-    that decides the gate rides in the same action) and Arrow's hash
-    aggregate groups them into the driver block, with N and avgdl: one
-    action, no shuffle and no persist. Above it, one shuffle groups the (doc,
+    Up to ``_DRIVER_MAX_ROWS`` token occurrences, one
+    ``session.collect_below`` decides the gate and collects the
+    exploded (doc_id, dl, pos, token) rows, and Arrow's hash aggregate
+    groups them into the driver block, with N and avgdl: one action, no
+    shuffle and no persist. Above it, one shuffle groups the (doc,
     token) counts, the rows are persisted and the one stats action (N
     and the total length, one aggregate) fills the cache on its way."""
     occurrences = docs.where(F.col(id_col).isNotNull()).select(
@@ -357,12 +357,10 @@ def build_bm25_index(
         F.max("dl").alias("dl"),
         F.min("pos").alias("first_pos"),
     )
-    if _DRIVER_MAX_ROWS:
-        table = occurrences.limit(_DRIVER_MAX_ROWS + 1).toArrow()
-        if table.num_rows <= _DRIVER_MAX_ROWS:
-            postings = _DriverPostings(docs.sparkSession, table)
-            return BM25Index(term_freqs, postings.n_docs, postings.avgdl, postings)
-        del table
+    table = collect_below(occurrences, _DRIVER_MAX_ROWS)
+    if table is not None:
+        postings = _DriverPostings(docs.sparkSession, table)
+        return BM25Index(term_freqs, postings.n_docs, postings.avgdl, postings)
     term_freqs = term_freqs.persist()
     # one row per doc holds the doc's first token, so N needs no
     # distinct pass over doc ids

@@ -17,7 +17,8 @@ The engine's edge reads, anchored and full, compute the same cosine
 with a numpy kernel (compat.graph.cosine100_pairs) over a vector block
 collected once per embeddings version, when that version has at most
 ``_DRIVER_MAX_ROWS`` rows; above that size they stay on the Catalyst
-plan. The SRP
+plan. The Lloyd trainers iterate on the driver below the same gate,
+which ``session.collect_below`` decides as it collects. The SRP
 hyperplanes are deterministic (numpy PCG64 with a literal seed) and
 shipped as array literals, not a UDF closure.
 
@@ -33,7 +34,7 @@ from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
 from providenciasbigdata_spark.compat.graph import cosine
-from providenciasbigdata_spark.session import local_frame
+from providenciasbigdata_spark.session import collect_below, local_frame
 
 
 def _vec_lit(vec) -> "F.Column":
@@ -594,24 +595,26 @@ def _lloyd(
     lowest-id vectors until no centroid moves by 1e-6 or ``max_iter``
     rounds; returns (C [m, k, dim//m], rounds run).
 
-    Counts the corpus once. Above ``train_sample`` rows the rounds run
-    on the deterministic md5-top-N sample (``training_sample``). Up to
-    ``_DRIVER_MAX_ROWS`` rows the corpus is collected once (id order)
-    and every round runs on the driver; larger corpora run each round
-    as one distributed pass over the persisted vectors. Both paths call
-    ``_lloyd_partials``; only the double-addition order of the partial
-    sums differs. Empty clusters keep their centroid."""
+    Up to ``_DRIVER_MAX_ROWS`` rows (and ``train_sample``) the corpus
+    is collected once (id order) and every round runs on the driver.
+    Only a larger corpus is counted: above ``train_sample`` rows the
+    rounds run on the deterministic md5-top-N sample
+    (``training_sample``), collected when it fits the gate. Otherwise
+    each round is one distributed pass over the persisted vectors.
+    Both paths call ``_lloyd_partials``; only the double-addition order
+    of the partial sums differs. Empty clusters keep their centroid."""
     import numpy as np
 
-    n_rows = embeddings.count()
-    if train_sample and n_rows > train_sample:
-        embeddings = training_sample(embeddings, id_col, train_sample)
-        n_rows = train_sample
-    on_driver = n_rows <= _DRIVER_MAX_ROWS
     ordered = embeddings.select(id_col, vec_col).orderBy(id_col)
+    table = collect_below(ordered, min(_DRIVER_MAX_ROWS, train_sample or _DRIVER_MAX_ROWS))
+    if table is None and train_sample and embeddings.count() > train_sample:
+        embeddings = training_sample(embeddings, id_col, train_sample)
+        ordered = embeddings.select(id_col, vec_col).orderBy(id_col)
+        table = collect_below(ordered, _DRIVER_MAX_ROWS)
+    on_driver = table is not None
     if not on_driver:
-        ordered = ordered.limit(k)
-    X = _vectors([r[vec_col] for r in ordered.collect()], spherical)
+        table = ordered.limit(k).toArrow()
+    X = _vectors(table[vec_col].to_pylist(), spherical)
     dim = X.shape[1]
     if dim % m:
         raise ValueError(f"dim {dim} not divisible by m={m}")

@@ -10,8 +10,9 @@ stay ~128MB).
 
 It also ties persisted DataFrames to the Python object that owns them
 (``unpersist_on_collect``), so cached data lives exactly as long as its
-owner, and builds every frame made on the driver as an Arrow local
-relation (``local_frame``).
+owner, builds every frame made on the driver as an Arrow local
+relation (``local_frame``), and decides every driver/Spark size gate
+inside one Arrow collect (``collect_below``).
 """
 
 from __future__ import annotations
@@ -152,6 +153,23 @@ def local_frame(
     arrow = to_arrow_schema(schema)
     columns = [pa.array([row[i] for row in data], f.type) for i, f in enumerate(arrow)]
     return spark.createDataFrame(pa.Table.from_arrays(columns, schema=arrow), schema)
+
+
+def collect_below(df: DataFrame, max_rows: int) -> "pa.Table | None":
+    """``df`` as an Arrow table, in ``collect()`` order, when it has at
+    most ``max_rows`` rows, else None: the size gate between a driver
+    path and a Spark path. One action, ``df.limit(max_rows + 1)
+    .toArrow()``, decides and collects: one job over a materialized
+    input (two stages over several partitions: each keeps its first
+    rows, then a shuffle gathers them in partition order), plus one per
+    shuffle in ``df``'s plan, which adaptive execution runs first. A
+    ``count()`` then a ``collect()`` run one or two jobs more.
+    ``max_rows <= 0`` returns None and runs no job: a gate of 0 sends
+    every input, an empty one too, to the Spark path."""
+    if max_rows <= 0:
+        return None
+    table = df.limit(max_rows + 1).toArrow()
+    return table if table.num_rows <= max_rows else None
 
 
 @functools.lru_cache(maxsize=256)

@@ -48,8 +48,9 @@ def distributed(monkeypatch):
     """Context manager that forces the distributed loops: inside it the
     size gates of ``graph_algos`` (``_DRIVER_MAX_EDGES``),
     ``similarity``, ``postings`` and ``dedup`` (each
-    ``_DRIVER_MAX_ROWS``) are 0, so every non-empty input skips the
-    driver finisher, every BM25 index built inside is a Spark table and
+    ``_DRIVER_MAX_ROWS``) are 0, so ``session.collect_below`` sends
+    every input, an empty one too, past the driver finisher: every BM25
+    index built inside is a Spark table and
     ``dedup.minhash_near_dups`` runs its Catalyst banding plan."""
     from providenciasbigdata_spark.operators import dedup, graph_algos, postings, similarity
 

@@ -2,7 +2,9 @@
 (``session.local_frame``): collecting a driver finisher's result, an
 empty search result or the one-row id cast runs no Spark job, and each
 frame keeps the schema it declares, nullability included. No module of
-the package builds a frame any other way."""
+the package builds a frame any other way. A size gate collects the
+driver path's rows in the same action that decides it
+(``session.collect_below``)."""
 
 from __future__ import annotations
 
@@ -10,6 +12,7 @@ import ast
 import pathlib
 
 import pytest
+from pyspark.sql import functions as F
 from pyspark.sql.types import (
     DoubleType,
     IntegerType,
@@ -22,6 +25,7 @@ from pyspark.sql.types import (
 import providenciasbigdata_spark
 from providenciasbigdata_spark.operators import graph_algos as G
 from providenciasbigdata_spark.operators import postings
+from providenciasbigdata_spark.session import collect_below
 
 PACKAGE = pathlib.Path(providenciasbigdata_spark.__file__).parent
 
@@ -117,6 +121,28 @@ def test_empty_searches_collect_without_a_job(spark, count_jobs):
     ):
         assert count_jobs(frame.collect) == ([], 0)
         assert frame.schema == _schema(("doc_id", LongType(), True))
+
+
+def test_collect_below_decides_the_gate_in_one_collect(spark, count_jobs):
+    # a materialized frame over four partitions, not in id order
+    df = spark.range(0, 40, numPartitions=4).select(((F.col("id") * 37) % 41).alias("x"))
+    df = df.localCheckpoint()
+    assert collect_below(df, 40).num_rows == 40
+    assert collect_below(df, 39) is None
+    # gate 0 (and below) decides without a job
+    assert count_jobs(lambda: collect_below(df, 0)) == (None, 0)
+    assert count_jobs(lambda: collect_below(df, -1)) == (None, 0)
+    table, jobs = count_jobs(lambda: collect_below(df, 100))
+    assert table.column("x").to_pylist() == [r.x for r in df.collect()]
+    # one job over the materialized input; a shuffle in the plan adds one
+    assert jobs == 1
+    assert count_jobs(lambda: collect_below(df.repartition(4), 100))[1] == 2
+
+
+def test_driver_gate_runs_fewer_jobs(spark, edges, count_jobs):
+    # the gate used to count the edges, then collect them: 5 jobs each
+    assert count_jobs(lambda: G.pagerank(edges))[1] == 3
+    assert count_jobs(lambda: G.connected_components(edges))[1] == 3
 
 
 def test_edge_id_cast_runs_no_job(spark, count_jobs):
