@@ -19,7 +19,12 @@ general MQL/Cypher engine:
   (``find(q, projection).sort(...).limit(n)``). Unsupported operators
   raise rather than silently misread. Missing-field semantics map to
   NULL in the fixed relational schema ($ne/$nin/$not match nulls, as
-  Mongo matches missing fields).
+  Mongo matches missing fields). A filter document compiles to one
+  Catalyst predicate (``_query_condition``). Beside it, a driver
+  evaluator (``query_mask``, ``find_block``, ``distinct_block``)
+  answers part of the grammar over an Arrow table with Spark's null
+  logic, for the engine's driver-held document block; the section
+  "MQL over a driver-held block" says which documents it answers.
 - Cypher: the full-node-scan template and the anchored 1-hop SIMILAR
   expansion with an inclusive weight range and ``$param`` binding —
   matched structurally (whitespace-insensitive), parameters bound as
@@ -38,11 +43,14 @@ import re
 from functools import reduce
 from operator import and_, or_
 
+import numpy as np
+import pyarrow as pa
+import pyarrow.compute as pc
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
-from providenciasbigdata_spark.compat.documents import text_match_condition
+from providenciasbigdata_spark.compat.documents import parse_search_query, text_match_condition
 from providenciasbigdata_spark.session import local_frame
 
 
@@ -361,6 +369,264 @@ def _query_condition(
     return reduce(and_, conds) if conds else F.lit(True)
 
 
+# ---- MQL over a driver-held block ----------------------------------------
+#
+# The engine holds each small rulings version as one Arrow table, its
+# document block. The functions below answer a filter document over it on
+# the driver, in Spark's three-valued logic: each predicate is true, false
+# or null per row, built with Arrow's Kleene kernels, and a row matches
+# when the whole filter is true. Their grammar is the part of
+# ``_query_condition`` that has exact Arrow kernels: equality and implicit
+# AND, ``$in``/``$nin``/``$ne``/``$exists``/``$not``, the range operators,
+# ``$and``/``$or`` and unstemmed ``$text`` bare terms and negations, on the
+# block's string and integer columns, with plain include/exclude
+# projections and sorts by fields. Everything else (``$regex``, ``$expr``,
+# ``$geoWithin``, ``$all``, ``$size``, ``$elemMatch``, ``$text`` phrases
+# or stemming, ``$meta`` and ``$slice``, a field the block lacks, an
+# operand whose Python type is not the column's, any malformed document)
+# is left to the Catalyst plan, which also raises every error the grammar
+# defines.
+
+_RANGE_KERNELS = {
+    "$gt": pc.greater,
+    "$gte": pc.greater_equal,
+    "$lt": pc.less,
+    "$lte": pc.less_equal,
+}
+
+
+class _Unanswered(Exception):
+    """A filter, projection or sort the block leaves to Catalyst."""
+
+
+def _block_column(table: pa.Table, field) -> pa.Array:
+    """The scalar column ``field`` of the block, integers as int64."""
+    if not isinstance(field, str) or field not in table.column_names:
+        raise _Unanswered
+    col = table.column(field).combine_chunks()
+    if pa.types.is_integer(col.type):
+        return col.cast(pa.int64())
+    if pa.types.is_string(col.type) or pa.types.is_large_string(col.type):
+        return col
+    raise _Unanswered
+
+
+def _operand(field: str, col: pa.Array, value) -> pa.Scalar:
+    """``value`` coerced as ``_field_condition`` coerces it, as a scalar
+    of ``col``'s type. Spark would cast an operand of another Python
+    type (and raise under ANSI where the cast fails), so such an operand
+    is left to it, as is None."""
+    try:
+        value = _coerce(field, value)
+    except (TypeError, ValueError):
+        raise _Unanswered from None
+    if pa.types.is_integer(col.type):
+        if not isinstance(value, (int, np.integer)) or isinstance(value, bool):
+            raise _Unanswered
+        value = int(value)
+        if not -(2**63) <= value < 2**63:
+            raise _Unanswered
+    elif isinstance(value, str):  # numpy's str_ too
+        value = str(value)
+    else:
+        raise _Unanswered
+    return pa.scalar(value, col.type)
+
+
+def _constant(n: int, value: bool) -> pa.Array:
+    return pa.array(np.full(n, value))
+
+
+def _overlap(tokens: pa.Array, terms: list[str]) -> pa.Array:
+    """Spark's ``arrays_overlap(tokens, array(terms))`` per row: true
+    when the row shares a non-null element with ``terms``, else null when
+    the row is null or holds a null element, else false."""
+    n = len(tokens)
+    rows = pc.list_parent_indices(tokens).to_numpy()
+    elems = pc.list_flatten(tokens)
+    hit = pc.fill_null(pc.is_in(elems, value_set=pa.array(terms, elems.type)), False)
+    any_hit = np.bincount(rows[hit.to_numpy(zero_copy_only=False)], minlength=n) > 0
+    null_elem = elems.is_null().to_numpy(zero_copy_only=False)
+    has_null = np.bincount(rows[null_elem], minlength=n) > 0
+    unknown = tokens.is_null().to_numpy(zero_copy_only=False) | (~any_hit & has_null)
+    return pa.array(any_hit, mask=unknown)
+
+
+def _text_mask(table: pa.Table, value, default_language: str) -> pa.Array:
+    """``text_match_condition`` for unstemmed bare terms and negations."""
+    if not (
+        isinstance(value, dict) and {"$search"} <= set(value) <= {"$search", "$language"}
+    ):
+        raise _Unanswered
+    lang = str(value.get("$language", default_language)).lower()
+    search = value["$search"]
+    if lang != "none" or not isinstance(search, str) or "tokens" not in table.column_names:
+        raise _Unanswered
+    tokens = table.column("tokens").combine_chunks()
+    terms, phrases, negated = parse_search_query(search)
+    if phrases:
+        raise _Unanswered
+    if not terms:
+        return _constant(table.num_rows, False)
+    cond = _overlap(tokens, terms)
+    if negated:
+        cond = pc.and_kleene(cond, pc.invert(_overlap(tokens, negated)))
+    return cond
+
+
+def _field_mask(table: pa.Table, field: str, value) -> pa.Array:
+    """``_field_condition`` over the block."""
+    col = _block_column(table, field)
+    if not isinstance(value, dict):
+        return pc.equal(col, _operand(field, col, value))
+    if not value:
+        raise _Unanswered
+    conds = []
+    for op, operand in value.items():
+        if op in ("$in", "$nin"):
+            if not isinstance(operand, (list, tuple)):
+                raise _Unanswered
+            vals = [_operand(field, col, v).as_py() for v in operand]
+            if not vals:  # $in [] matches nothing, $nin [] everything
+                conds.append(_constant(len(col), op == "$nin"))
+                continue
+            # Spark's IN is null on a null row, Arrow's is_in false
+            isin = pc.if_else(
+                pc.is_valid(col),
+                pc.is_in(col, value_set=pa.array(vals, col.type)),
+                pa.scalar(None, pa.bool_()),
+            )
+            conds.append(isin if op == "$in" else pc.or_kleene(pc.is_null(col), pc.invert(isin)))
+        elif op == "$ne":
+            ne = pc.not_equal(col, _operand(field, col, operand))
+            conds.append(pc.or_kleene(pc.is_null(col), ne))
+        elif op == "$exists":
+            if not isinstance(operand, bool):
+                raise _Unanswered
+            conds.append(pc.is_valid(col) if operand else pc.is_null(col))
+        elif op == "$not":
+            if not isinstance(operand, dict) or not operand:
+                raise _Unanswered
+            inner = _field_mask(table, field, operand)
+            conds.append(pc.or_kleene(pc.is_null(col), pc.invert(inner)))
+        elif op in _RANGE_KERNELS:
+            conds.append(_RANGE_KERNELS[op](col, _operand(field, col, operand)))
+        else:  # $regex/$options, $geoWithin, $all, $size, $elemMatch, unknown
+            raise _Unanswered
+    return reduce(pc.and_kleene, conds)
+
+
+def _query_mask(table: pa.Table, query, default_language: str) -> pa.Array:
+    """``_query_condition`` over the block."""
+    if not isinstance(query, dict):
+        raise _Unanswered
+    conds = []
+    for key, value in query.items():
+        if key == "$text":
+            conds.append(_text_mask(table, value, default_language))
+        elif key in ("$and", "$or"):
+            if not isinstance(value, (list, tuple)) or not value:
+                raise _Unanswered
+            sub = [_query_mask(table, q, default_language) for q in value]
+            conds.append(reduce(pc.and_kleene if key == "$and" else pc.or_kleene, sub))
+        elif not isinstance(key, str) or key.startswith("$"):
+            raise _Unanswered  # $expr, unknown operators
+        else:
+            conds.append(_field_mask(table, key, value))
+    return reduce(pc.and_kleene, conds) if conds else _constant(table.num_rows, True)
+
+
+def query_mask(table: pa.Table, query, default_language: str = "none") -> np.ndarray | None:
+    """The rows of ``table`` that filter document ``query`` matches, as
+    a boolean array, or None when the Catalyst plan must decide."""
+    try:
+        cond = _query_mask(table, query, default_language)
+    except _Unanswered:
+        return None
+    return pc.fill_null(cond, False).to_numpy(zero_copy_only=False)
+
+
+def _sort_order(rows: pa.Table, sort) -> pa.Array | None:
+    """The row order ``mql_find``'s sort gives ``rows``: ascending puts
+    nulls first and descending puts nulls last, strings in byte order,
+    one stable sort per key from the last key to the first. None when
+    ``sort`` is not by scalar fields of the block, 1 or -1 each."""
+    try:
+        pairs = list(sort.items()) if isinstance(sort, dict) else list(sort)
+    except TypeError:
+        return None
+    order = pa.array(np.arange(rows.num_rows))
+    for pair in reversed(pairs):
+        if not (isinstance(pair, (list, tuple)) and len(pair) == 2):
+            return None
+        field, direction = pair
+        if direction not in (1, -1):  # a $meta sort among them
+            return None
+        try:
+            col = _block_column(rows, field).take(order)
+        except _Unanswered:
+            return None
+        asc = direction == 1
+        order = order.take(pc.array_sort_indices(
+            col, order="ascending" if asc else "descending",
+            null_placement="at_start" if asc else "at_end",
+        ))
+    return order
+
+
+def find_block(
+    table: pa.Table,
+    query,
+    projection: dict | None = None,
+    sort=None,
+    limit: int | None = None,
+    default_language: str = "none",
+) -> pa.Table | None:
+    """``mql_find`` over a document block, as an Arrow table: filter,
+    sort, slice and project on the driver. None where the Catalyst plan
+    must answer: a filter outside the block's grammar, a ``$meta`` or
+    ``$slice`` projection, a sort other than by fields, a limit that is
+    not an int, and every input ``mql_find`` rejects."""
+    mask = query_mask(table, query, default_language)
+    if mask is None or not (limit is None or type(limit) is int):
+        return None
+    keep = table.column_names
+    if projection is not None:
+        if not isinstance(projection, dict) or any(isinstance(v, dict) for v in projection.values()):
+            return None
+        try:
+            keep = _projection_columns(keep, projection) or keep
+        except ValueError:
+            return None
+    rows = table.take(np.flatnonzero(mask))  # one chunk per column, an empty one too
+    if sort is not None:
+        order = _sort_order(rows, sort)
+        if order is None:
+            return None
+        rows = rows.take(order)
+    if limit:
+        rows = rows.slice(0, abs(limit))
+    return rows.select(keep)
+
+
+def distinct_block(
+    table: pa.Table, field: str, query: dict | None = None, default_language: str = "none"
+) -> list | None:
+    """``mql_distinct`` over a document block: the matching rows'
+    distinct values of ``field``, sorted ascending with null first, as
+    its ``orderBy`` sorts them; None where the Catalyst plan must
+    answer."""
+    try:
+        col = _block_column(table, field)
+    except _Unanswered:
+        return None
+    mask = query_mask(table, query or {}, default_language)
+    if mask is None:
+        return None
+    values = pc.unique(col.filter(pa.array(mask)))
+    return values.take(pc.array_sort_indices(values, null_placement="at_start")).to_pylist()
+
+
 def _slice_expr(col: Column, arg) -> Column:
     """Projection ``$slice`` (round 6): ``n`` = first n / last |n|
     elements (0 = empty, Mongo); ``[skip, limit]`` = limit elements
@@ -430,33 +696,41 @@ def _apply_projection(df: DataFrame, projection: dict) -> DataFrame:
             {k: _slice_expr(F.col(k), arg) for k, arg in slices.items()
              if k in out.columns}
         )
-    has_id = "_id" in df.columns
+    keep = _projection_columns(df.columns, projection)
+    return df if keep is None else df.select(*keep)
+
+
+def _projection_columns(columns: list[str], projection: dict) -> list[str] | None:
+    """The columns an include/exclude ``projection`` keeps, in
+    ``columns`` order, or None when it keeps them as they are; the
+    ``_id`` rules and the errors are ``_apply_projection``'s."""
+    has_id = "_id" in columns
     id_setting = projection.get("_id")  # None = unspecified
     spec = {k: bool(v) for k, v in projection.items() if k != "_id"}
     if not spec:
         if has_id and "_id" in projection and not id_setting:
-            keep = [c for c in df.columns if c != "_id"]
+            keep = [c for c in columns if c != "_id"]
             if not keep:
                 raise ValueError(f"projection excludes every field: {projection!r}")
-            return df.select(*keep)
-        return df
+            return keep
+        return None
     modes = set(spec.values())
     if len(modes) > 1:
         raise ValueError(
             f"cannot mix include and exclude in a projection: {projection!r}"
         )
-    unknown = spec.keys() - set(df.columns)
+    unknown = spec.keys() - set(columns)
     if unknown:
         raise ValueError(f"projection references unknown fields: {sorted(unknown)}")
     if modes == {True}:
         keep_id = has_id and (id_setting is None or bool(id_setting))
-        keep = [c for c in df.columns if c in spec or (c == "_id" and keep_id)]
+        keep = [c for c in columns if c in spec or (c == "_id" and keep_id)]
     else:
         drop_id = has_id and id_setting is not None and not id_setting
-        keep = [c for c in df.columns if c not in spec and not (c == "_id" and drop_id)]
+        keep = [c for c in columns if c not in spec and not (c == "_id" and drop_id)]
     if not keep:
         raise ValueError(f"projection excludes every field: {projection!r}")
-    return df.select(*keep)
+    return keep
 
 
 def _apply_sort(df: DataFrame, sort) -> DataFrame:

@@ -34,6 +34,23 @@ full edge build (``edges()``, one frame per version) scores its pairs
 with the same kernel, through an Arrow UDF over a cross join that keeps
 a filter on ``src`` or ``dst`` below the join. Above the gate both keep
 the Catalyst plans over the snapshot.
+
+A rulings version of at most ``_DRIVER_MAX_DOCS`` rows also carries its
+document block: the view collected once into one Arrow table (about
+1.2 kB a ruling, so 6 MB at 5,000 rulings and 60 MB at the gate). The
+Mongo reads answer over it with the driver evaluator of
+``compat/ir.py`` and run no Spark job: ``count_documents`` sums a mask
+and makes no gateway call, ``distinct`` and ``find_one`` return Python
+values, and ``query_mongo`` returns one local relation with the Spark
+plan's schema. The block answers filter documents of equality and
+implicit AND, ``$in``/``$nin``/``$ne``/``$exists``/``$not``, the range
+operators, ``$and``/``$or`` and unstemmed ``$text`` bare terms and
+negations, over the view's string and integer fields, with plain
+include/exclude projections and sorts by fields. Every other document
+(``$regex``, ``$expr``, ``$geoWithin``, array operators, ``$text``
+phrases or stemming, a ``$meta`` or ``$slice`` projection, an operand
+of another type than its field's, any malformed one) keeps its Catalyst
+plan, as do ``query_rulings`` and the versions above the gate.
 """
 
 from __future__ import annotations
@@ -60,6 +77,9 @@ _DUMP_SCHEMA = "_id string, providencia string, tipo string, anio int, texto str
 _NODE_ID = re.compile(r"P-(0|[1-9][0-9]{0,17})")
 # WHERE atoms that read no edge beyond the matched hop's own
 _HOP_LOCAL_CONDS = {"cmp", "in", "bare", "expr_cond"}
+# the most rulings a version holds as a driver-side document block
+# (about 60 MB: 1.2 kB a ruling, measured on the benchmark's corpus)
+_DRIVER_MAX_DOCS = 50_000
 
 
 def _listing(path: str) -> tuple:
@@ -107,6 +127,13 @@ def _vector_block(emb: DataFrame) -> _graph.VectorBlock | None:
     version, an empty one too, in Spark."""
     table = collect_below(emb.select("vec_id", "embedding"), similarity._DRIVER_MAX_ROWS)
     return None if table is None else _graph.VectorBlock(table)
+
+
+def _document_block(rulings: DataFrame) -> pa.Table | None:
+    """The rulings collected once into one Arrow table, or None above
+    the driver gate (the Mongo reads then run in Spark)."""
+    table = collect_below(rulings, _DRIVER_MAX_DOCS)
+    return None if table is None else table.combine_chunks()
 
 
 def _hop_anchor(query: str, params: dict) -> str | None:
@@ -309,15 +336,36 @@ class ProvidenciasEngine:
 
     # -- literal reference IR (compat/ir.py) ------------------------------
 
-    def query_mongo(self, query: dict, **cursor) -> DataFrame:
+    def _documents(self) -> tuple[DataFrame, pa.Table | None]:
+        """The rulings version's frame and its document block (None
+        above the gate)."""
+        version = self._rulings_version()
+        return version.frame, version.derived("documents", _document_block)
+
+    def _find(self, query, projection, sort, limit, default_language) -> DataFrame | pa.Table:
+        """``mql_find``'s answer: an Arrow table from the block when it
+        answers, else the Catalyst plan."""
+        from providenciasbigdata_spark.compat import ir as _ir
+
+        rulings, block = self._documents()
+        cursor = {
+            "projection": projection, "sort": sort, "limit": limit,
+            "default_language": default_language,
+        }
+        page = None if block is None else _ir.find_block(block, query, **cursor)
+        return _ir.mql_find(rulings, query, **cursor) if page is None else page
+
+    def query_mongo(
+        self, query: dict, projection: dict | None = None, sort=None,
+        limit: int | None = None, default_language: str = "none",
+    ) -> DataFrame:
         """``collection.find(query)`` with the reference's own MQL
         filter documents (streamlit_app.py:31-32,137-148) — paste the
-        dict, get the DataFrame. Keyword args pass through to the
-        pymongo cursor surface (projection / sort / limit /
-        default_language)."""
-        from providenciasbigdata_spark.compat.ir import mql_find
-
-        return mql_find(self.rulings(), query, **cursor)
+        dict, get the DataFrame. The keyword args are the pymongo
+        cursor surface (``compat.ir.mql_find``). From the document
+        block the page is one local relation."""
+        page = self._find(query, projection, sort, limit, default_language)
+        return local_frame(self.spark, page) if isinstance(page, pa.Table) else page
 
     def aggregate_mongo(self, pipeline: list, **kwargs) -> DataFrame:
         """``collection.aggregate(pipeline)`` — the facet-counting
@@ -327,30 +375,48 @@ class ProvidenciasEngine:
 
         return mql_aggregate(self.rulings(), pipeline, **kwargs)
 
-    def find_one(self, query: dict, **cursor) -> dict | None:
+    def find_one(
+        self, query: dict, projection: dict | None = None, sort=None,
+        default_language: str = "none",
+    ) -> dict | None:
         """``collection.findOne(query)`` — the first matching document
         as a plain dict, or None (pymongo's contract). Without a
         ``sort`` kwarg, "first" is UNSPECIFIED in Mongo too (B5); pass
         ``sort=`` for a deterministic pick. The limit is pushed into
-        the plan (CollectLimit 1), never a full materialization."""
-        row = self.query_mongo(query, **{**cursor, "limit": 1}).first()
+        the plan (CollectLimit 1), never a full materialization; from
+        the document block the dict comes straight from Arrow."""
+        page = self._find(query, projection, sort, 1, default_language)
+        if isinstance(page, pa.Table):
+            return page.to_pylist()[0] if page.num_rows else None
+        row = page.first()
         return row.asDict() if row is not None else None
 
-    def count_documents(self, query: dict, **kwargs) -> int:
+    def count_documents(self, query: dict, default_language: str = "none") -> int:
         """``collection.countDocuments(filter)`` — returns the scalar,
         like pymongo (the 1-row frame is an implementation detail)."""
-        from providenciasbigdata_spark.compat.ir import mql_count_documents
+        from providenciasbigdata_spark.compat import ir as _ir
 
-        return mql_count_documents(self.rulings(), query, **kwargs).first()["n"]
+        rulings, block = self._documents()
+        mask = None if block is None else _ir.query_mask(block, query, default_language)
+        if mask is not None:
+            return int(mask.sum())
+        return _ir.mql_count_documents(rulings, query, default_language).first()["n"]
 
-    def distinct(self, field: str, query: dict | None = None, **kwargs) -> list:
+    def distinct(
+        self, field: str, query: dict | None = None, default_language: str = "none"
+    ) -> list:
         """``collection.distinct(field, filter)`` — sorted value list,
         like pymongo (the reference's A2 facet scans are the no-filter
         form; ``facet_options`` keeps the legacy name)."""
-        from providenciasbigdata_spark.compat.ir import mql_distinct
+        from providenciasbigdata_spark.compat import ir as _ir
 
+        rulings, block = self._documents()
+        values = None if block is None else _ir.distinct_block(block, field, query, default_language)
+        if values is not None:
+            return values
         return [
-            r[field] for r in mql_distinct(self.rulings(), field, query, **kwargs).collect()
+            r[field]
+            for r in _ir.mql_distinct(rulings, field, query, default_language).collect()
         ]
 
     def run_cypher(self, query: str, params: dict | None = None) -> DataFrame:

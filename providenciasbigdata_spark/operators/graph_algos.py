@@ -131,13 +131,16 @@ def _bfs_hops(adj: dict, source, max_hops: int, target=None) -> dict:
 def _edge_arrays(t):
     """Driver-side arrays for the power iterations over the collected
     (u, v, w) edges: sorted node ids, their index map, and per edge the
-    source index, destination index and weight."""
+    source index, destination index and weight. The edges come ordered
+    by (source index, destination index), so the iterations' sums run
+    in one order, whatever order the edges were collected in."""
     u, v = t["u"].to_pylist(), t["v"].to_pylist()
     ids = sorted(set(u) | set(v))
     ix = {x: i for i, x in enumerate(ids)}
     usrc = np.array([ix[x] for x in u], dtype=np.int64)
     vdst = np.array([ix[x] for x in v], dtype=np.int64)
-    return ids, ix, usrc, vdst, t["w"].to_numpy()
+    order = np.lexsort((vdst, usrc))
+    return ids, ix, usrc[order], vdst[order], t["w"].to_numpy()[order]
 
 
 def _weighted_edges(edges: DataFrame, src: str, dst: str, weight_col) -> DataFrame:
@@ -160,6 +163,17 @@ def _weighted_edges(edges: DataFrame, src: str, dst: str, weight_col) -> DataFra
         .agg(F.sum(F.col(weight_col).cast("double")).alias("w"))
         .persist()
     )
+
+
+def _non_null(edges: DataFrame, src: str, dst: str) -> DataFrame:
+    """``edges`` without its edges that have a null endpoint: a null id
+    names no node, on the driver path and the distributed one alike."""
+    return edges.filter(F.col(src).isNotNull() & F.col(dst).isNotNull())
+
+
+def _nulls_first(row: tuple) -> tuple:
+    """Sort key for rows whose values may be null, nulls first."""
+    return tuple((x is not None, x) for x in row)
 
 
 def _endpoints(e: DataFrame) -> DataFrame:
@@ -321,8 +335,10 @@ def bfs_distances(
 
     Output: (id, hops) for every node reachable within ``max_hops``
     (anchor included at 0); with ``target``, complete only up to the
-    target's level.
+    target's level. Edges with a null endpoint are dropped before
+    either path.
     """
+    edges = _non_null(edges, src, dst)
     e = edges.select(F.col(src).alias("u"), F.col(dst).alias("v"))
     if not directed:
         e = symmetrize(edges, src, dst)
@@ -419,12 +435,13 @@ def shortest_path_sigma(
     Driver finisher (the module's size gate): sigma counting is integer
     arithmetic over the same level-synchronous expansion, so the Python
     loop is exact; the multiplicity table comes from the Spark
-    aggregate either way.
+    aggregate either way. Edges with a null endpoint are dropped
+    before either path, so no path runs through a null id.
     """
     spark = edges.sparkSession
     if anchor == target:
         return local_frame(spark, [(0, 1)], "hops long, sigma long")
-    fwd = edges.select(F.col(src).alias("u"), F.col(dst).alias("v"))
+    fwd = _non_null(edges, src, dst).select(F.col(src).alias("u"), F.col(dst).alias("v"))
     if directed:
         e = fwd.groupBy("u", "v").agg(F.count(F.lit(1)).alias("mult"))
     else:
@@ -533,9 +550,11 @@ def pagerank(
     far inside the 6-digit round every consumer applies.
 
     Output: (id, rank); ranks sum to ~1. No edges: an empty frame.
+    Edges with a null endpoint are dropped before either path.
     """
     spark = edges.sparkSession
     ckpt = _truncator(spark, checkpoint_dir)
+    edges = _non_null(edges, src, dst)
     e = _weighted_edges(edges, src, dst, weight_col)
     t = collect_below(e, _DRIVER_MAX_EDGES)
     if t is not None:
@@ -619,13 +638,15 @@ def personalized_pagerank(
     same per-iteration eager lineage truncation, same reliable-
     checkpoint escape hatch and the same driver finisher below the size
     gate. Output: (id, rank); ranks sum to ~1 and are 0 for nodes
-    unreachable from the seed set.
+    unreachable from the seed set. Edges with a null endpoint are
+    dropped before either path.
     """
     no_seed = "personalized_pagerank needs a seed that is a node"
     if not seeds:
         raise ValueError(no_seed)
     spark = edges.sparkSession
     ckpt = _truncator(spark, checkpoint_dir)
+    edges = _non_null(edges, src, dst)
     e = _weighted_edges(edges, src, dst, None)
     t = collect_below(e, _DRIVER_MAX_EDGES)
     if t is not None:
@@ -717,9 +738,10 @@ def sssp_distances(
     its early exit only skips the no-op rounds the loop still pays.
 
     Output: (id, d) for every node reachable within ``max_hops`` edges,
-    anchor at 0.0.
+    anchor at 0.0. Edges with a null endpoint are dropped before
+    either path.
     """
-    e = edges.select(
+    e = _non_null(edges, src, dst).select(
         F.col(src).alias("u"), F.col(dst).alias("v"), F.col(weight).alias("w")
     ).persist()
     spark = edges.sparkSession
@@ -1104,11 +1126,12 @@ def label_propagation(
     labels, not merely close ones.
 
     Output: (id, community), community = the converged label.
+    Edges with a null endpoint are dropped before either path.
     """
     from pyspark.sql import Window
 
     ckpt = _truncator(edges.sparkSession, checkpoint_dir)
-    sym = ckpt(symmetrize(edges, src, dst))
+    sym = ckpt(symmetrize(_non_null(edges, src, dst), src, dst))
     t = collect_below(sym, _DRIVER_MAX_EDGES)
     if t is not None:
         adj = _adjacency(t)
@@ -1322,9 +1345,11 @@ def multi_source_bfs(
     driver WORK = |seeds| x |edges|: the seed frame can be
     corpus-derived and huge even over a tiny graph, so a budgeted
     limit-collect probes it and an overflow falls through to the
-    distributed loop."""
+    distributed loop. Edges with a null endpoint are dropped before
+    either path; a null seed reaches only itself, at hop 0."""
     spark = edges.sparkSession
     ckpt = _truncator(spark, checkpoint_dir)
+    edges = _non_null(edges, src, dst)
     if directed:
         e = edges.select(F.col(src).alias("u"), F.col(dst).alias("v")).distinct()
     else:
@@ -1357,7 +1382,7 @@ def multi_source_bfs(
             for s in counts:
                 hops = _bfs_hops(adj, s, max_hops)
                 out.extend((s, node, h) for node, h in hops.items())
-            return local_frame(spark, sorted(out), schema=frontier.schema)
+            return local_frame(spark, sorted(out, key=_nulls_first), schema=frontier.schema)
 
     visited = ckpt(frontier)
     for hop in range(1, max_hops + 1):
@@ -1639,9 +1664,11 @@ def eigenvector_centrality(
     (identical update math).
 
     Output: (id, score) with max score = 1.0 (on any graph with at
-    least one edge); no edges: an empty frame.
+    least one edge); no edges: an empty frame. Edges with a null
+    endpoint are dropped before either path.
     """
     ckpt = _truncator(edges.sparkSession, checkpoint_dir)
+    edges = _non_null(edges, src, dst)
     e = _weighted_edges(edges, src, dst, weight_col)
     t = collect_below(e, _DRIVER_MAX_EDGES)
     if t is not None:

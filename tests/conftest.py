@@ -48,15 +48,19 @@ def distributed(monkeypatch):
     """Context manager that forces the distributed loops: inside it the
     size gates of ``graph_algos`` (``_DRIVER_MAX_EDGES``),
     ``similarity``, ``postings`` and ``dedup`` (each
-    ``_DRIVER_MAX_ROWS``) are 0, so ``session.collect_below`` sends
-    every input, an empty one too, past the driver finisher: every BM25
-    index built inside is a Spark table and
-    ``dedup.minhash_near_dups`` runs its Catalyst banding plan."""
+    ``_DRIVER_MAX_ROWS``) and ``engine`` (``_DRIVER_MAX_DOCS``) are 0,
+    so ``session.collect_below`` sends every input, an empty one too,
+    past the driver finisher: every BM25 index built inside is a Spark
+    table, ``dedup.minhash_near_dups`` runs its Catalyst banding plan,
+    and an engine's rulings version built inside holds no document
+    block, so its Mongo reads run their Catalyst plans."""
+    from providenciasbigdata_spark import engine
     from providenciasbigdata_spark.operators import dedup, graph_algos, postings, similarity
 
     @contextlib.contextmanager
     def force():
         with monkeypatch.context() as m:
+            m.setattr(engine, "_DRIVER_MAX_DOCS", 0)
             m.setattr(graph_algos, "_DRIVER_MAX_EDGES", 0)
             m.setattr(similarity, "_DRIVER_MAX_ROWS", 0)
             m.setattr(postings, "_DRIVER_MAX_ROWS", 0)

@@ -11,6 +11,11 @@ the degenerate set: empty inputs, a singleton, null elements, null and
 duplicate ids, self-loops, parallel edges and unknown anchors. A
 documented ``ValueError`` must be raised on both sides alike.
 
+The engine's Mongo reads are checked the same way: over a drawn
+collection, a version with a document block (the default gate) and one
+without (``distributed()``) must give the same counts, distinct values,
+documents and pages, page schemas included, and raise the same errors.
+
 Each example runs Spark's distributed loops, so examples are few: the
 point is the drawn shapes, not volume.
 """
@@ -18,11 +23,17 @@ point is the drawn shapes, not volume.
 from __future__ import annotations
 
 import math
+import uuid
+from collections import Counter
 
 import numpy as np
+import pyarrow as pa
+import pyarrow.parquet as pq
 import pytest
 from hypothesis import HealthCheck, example, given, settings, strategies as st
+from pyspark.errors import PySparkException
 
+from providenciasbigdata_spark.engine import ProvidenciasEngine
 from providenciasbigdata_spark.operators import dedup, similarity
 from providenciasbigdata_spark.operators import graph_algos as G
 from providenciasbigdata_spark.operators.postings import bm25_search, build_bm25_index
@@ -69,54 +80,53 @@ _NODES = ["a", "b", "c", "d", "e"]
 _WEIGHTS = st.sampled_from([0.5, 1.0, 2.0, -1.0, None])
 
 
-def _edge_sets(nodes):
-    return st.lists(st.tuples(st.sampled_from(nodes), st.sampled_from(nodes), _WEIGHTS), max_size=7)
-
-
-_EDGES = _edge_sets(_NODES)
-# the operators whose two paths also agree on null node ids
-_EDGES_WITH_NULLS = _edge_sets(_NODES + [None])
+# node ids may be null: every operator drops such edges on both paths
+_EDGES = st.lists(
+    st.tuples(st.sampled_from(_NODES + [None]), st.sampled_from(_NODES + [None]), _WEIGHTS),
+    max_size=7,
+)
 _ANCHOR = st.sampled_from(["a", "b", "c", "zz"])  # "zz" is never a node
 
 # name -> (call(edges, anchor, other), tolerance of the last column or
-# None for ==, whether node ids may be null)
+# None for ==)
 _GRAPH_OPS = {
-    "connected_components": (lambda e, a, o: G.connected_components(e), None, True),
-    "strongly_connected_components": (
-        lambda e, a, o: G.strongly_connected_components(e), None, True,
-    ),
-    "scc_condensation": (lambda e, a, o: G.scc_condensation(e), None, True),
-    "shortest_path_sigma": (lambda e, a, o: G.shortest_path_sigma(e, a, o), None, False),
+    "connected_components": (lambda e, a, o: G.connected_components(e), None),
+    "strongly_connected_components": (lambda e, a, o: G.strongly_connected_components(e), None),
+    "scc_condensation": (lambda e, a, o: G.scc_condensation(e), None),
+    "shortest_path_sigma": (lambda e, a, o: G.shortest_path_sigma(e, a, o), None),
     "bfs_distances": (
         # directed or not by the drawn pair's order
-        lambda e, a, o: G.bfs_distances(e, a, max_hops=3, directed=a < o, target=o), None, False,
+        lambda e, a, o: G.bfs_distances(e, a, max_hops=3, directed=a < o, target=o), None,
     ),
-    "sssp_distances": (lambda e, a, o: G.sssp_distances(e, a, max_hops=3), None, False),
-    "multi_source_bfs": (
-        lambda e, a, o: G.multi_source_bfs(e, [a, o, a], max_hops=3), None, False,
-    ),
+    "sssp_distances": (lambda e, a, o: G.sssp_distances(e, a, max_hops=3), None),
+    "multi_source_bfs": (lambda e, a, o: G.multi_source_bfs(e, [a, o, a], max_hops=3), None),
     "multi_source_bfs_frame": (
-        lambda e, a, o: G.multi_source_bfs(e, e.select("src").limit(2), max_hops=3), None, False,
+        lambda e, a, o: G.multi_source_bfs(e, e.select("src").limit(2), max_hops=3), None,
     ),
-    "label_propagation": (lambda e, a, o: G.label_propagation(e, n_rounds=3), None, False),
-    "pagerank": (lambda e, a, o: G.pagerank(e, max_iter=3, weight_col="w"), 1e-12, False),
+    "label_propagation": (lambda e, a, o: G.label_propagation(e, n_rounds=3), None),
+    "pagerank": (lambda e, a, o: G.pagerank(e, max_iter=3, weight_col="w"), 1e-12),
     "personalized_pagerank": (
-        lambda e, a, o: G.personalized_pagerank(e, [a, o], max_iter=3), 1e-12, False,
+        lambda e, a, o: G.personalized_pagerank(e, [a, o], max_iter=3), 1e-12,
     ),
-    "eigenvector_centrality": (
-        lambda e, a, o: G.eigenvector_centrality(e, max_iter=3), 1e-12, False,
-    ),
+    "eigenvector_centrality": (lambda e, a, o: G.eigenvector_centrality(e, max_iter=3), 1e-12),
 }
 
 
 @pytest.mark.parametrize("op", list(_GRAPH_OPS))
 def test_graph_finishers_match_the_distributed_loops(spark, distributed, op):
-    call, tol, nulls = _GRAPH_OPS[op]
+    call, tol = _GRAPH_OPS[op]
 
     @_FEW
-    @given(rows=_EDGES_WITH_NULLS if nulls else _EDGES, anchor=_ANCHOR, other=_ANCHOR)
+    @given(rows=_EDGES, anchor=_ANCHOR, other=_ANCHOR)
     # a singleton node with only a self-loop, from an unknown anchor
     @example(rows=[("a", "a", 1.0)], anchor="zz", other="a")
+    # null endpoints: the driver path used to sort None among the ids,
+    # and route a -> null -> b where the distributed joins never match
+    @example(
+        rows=[("a", None, 1.0), (None, "b", 1.0), ("a", "b", 1.0), ("b", "c", 1.0)],
+        anchor="a", other="c",
+    )
+    @example(rows=[("a", None, 1.0), ("b", None, 1.0)], anchor="a", other="b")
     def check(rows, anchor, other):
         edges = local_frame(spark, rows, "src string, dst string, w double")
         driver, spark_side = _both(
@@ -220,3 +230,198 @@ def test_lloyd_driver_rounds_match_the_distributed_rounds(spark, distributed, ro
         driver, spark_side = _both(distributed, train)
         assert driver.shape == spark_side.shape
         assert np.allclose(driver, spark_side, atol=1e-8), (rows, k, train_sample)
+
+
+# ---- Mongo reads over the document block ---------------------------------
+
+# (doc_id, source, text) rows of a ``documents`` table: the rulings view
+# derives providencia and anio from doc_id (1 and 26 share an anio), so a
+# null doc_id makes both null; source is the tipo
+_COLLECTIONS = st.lists(
+    st.tuples(
+        st.sampled_from([1, 2, 26, 27, None]),
+        st.sampled_from(["auto", "fallo", "Tutela", None]),
+        _TEXTS,
+    ),
+    max_size=6,
+)
+# operands per field: matches, misses, numpy scalars, operands of another
+# type (which Spark casts, or fails to cast under ANSI), None and
+# malformed years
+_OPERANDS = {
+    "tipo": st.sampled_from(["auto", "fallo", "Tutela", np.str_("auto"), "zz", 5, None]),
+    "anio": st.sampled_from([2001, 2002, np.int64(2001), 2027, "2001", 2.5, True, "x"]),
+    "providencia": st.sampled_from(["P-1", "P-26", "P-3"]),
+    "doc_id": st.sampled_from([1, 26, np.int64(26), 3, "1", 2**63]),
+    "texto": st.sampled_from(["el juez", "la corte", None]),
+    "tokens": st.just("juez"),
+    "nope": st.just(1),  # no such field
+}
+
+
+def _operator_docs(field: str):
+    v = _OPERANDS[field]
+    some = st.lists(v, max_size=2)
+    return st.one_of(
+        v,
+        st.fixed_dictionaries({"$in": some}),
+        st.fixed_dictionaries({"$nin": some}),
+        st.fixed_dictionaries({"$ne": v}),
+        st.fixed_dictionaries({"$exists": st.sampled_from([True, False, 1])}),
+        st.fixed_dictionaries({"$gte": v, "$lt": v}),
+        st.fixed_dictionaries({"$gt": v}),
+        st.fixed_dictionaries({"$lte": v}),
+        st.fixed_dictionaries({"$not": st.fixed_dictionaries({"$in": some})}),
+        st.fixed_dictionaries({"$not": st.fixed_dictionaries({"$gt": v})}),
+        # outside the block's grammar, and malformed
+        st.sampled_from([{"$regex": "^a"}, {"$size": 1}, {}, {"$foo": 1}, {"$in": "a"}, {"$not": 1}]),
+    )
+
+
+_TEXT_CLAUSES = st.fixed_dictionaries(
+    {"$search": st.sampled_from(["juez", "juez -corte", "JUEZ fallo", "-juez", "", "júez", '"el juez"'])},
+    optional={"$language": st.sampled_from(["none", "NONE", "spanish"])},
+)
+
+
+@st.composite
+def _filters(draw, depth=0):
+    """A filter document: field clauses, ``$text``, ``$and``/``$or``
+    (an empty list is malformed) and ``$expr``."""
+    kinds = ["field", "field", "text", "and", "or", "expr"] if depth == 0 else ["field", "text"]
+    doc = {}
+    for _ in range(draw(st.integers(0, 2))):
+        kind = draw(st.sampled_from(kinds))
+        if kind == "field":
+            field = draw(st.sampled_from(list(_OPERANDS)))
+            doc[field] = draw(_operator_docs(field))
+        elif kind == "text":
+            doc["$text"] = draw(_TEXT_CLAUSES)
+        elif kind == "expr":
+            doc["$expr"] = {"$gt": ["$anio", 2001]}
+        else:
+            doc[f"${kind}"] = draw(st.lists(_filters(depth + 1), max_size=2))
+    return doc
+
+
+# sorts by every field but tokens: rows that tie on it are equal rows
+_FULL_SORT = [("anio", 1), ("tipo", -1), ("providencia", 1), ("texto", 1)]
+_PAGES = st.fixed_dictionaries({
+    "projection": st.sampled_from([
+        None, {"providencia": 1, "anio": 1}, {"texto": 0, "tokens": 0}, {"tipo": 1, "_id": 0},
+        {"_id": 0}, {"tipo": 1, "anio": 0}, {"nope": 1},
+        {"tokens": {"$slice": 1}}, {"score": {"$meta": "textScore"}},
+    ]),
+    "sort": st.sampled_from([
+        None, [("anio", -1), ("providencia", 1)], {"tipo": 1}, [("texto", -1)],
+        [("anio", 2)], [("nope", 1)], [("tokens", 1)], "anio",
+    ]),
+    "limit": st.sampled_from([None, 0, 2, -2]),
+})
+
+
+def _outcome(call):
+    """``call()``, or the type and condition (else message) of what it raised."""
+    try:
+        return ("ok", call())
+    except Exception as exc:
+        cond = exc.getCondition() if isinstance(exc, PySparkException) else str(exc)
+        return ("raised", type(exc), cond)
+
+
+def _hashable(row) -> tuple:
+    return tuple(tuple(x) if isinstance(x, list) else x for x in row)
+
+
+def _page(df) -> tuple:
+    return df.schema, [_hashable(r) for r in df.collect()]
+
+
+def _same_page(a, b, sort, limited: bool) -> bool:
+    """Equal page outcomes up to the order of rows that tie on the sort:
+    the same schema and row count; in order, the same sort key per row
+    when the page holds every sort field; the same multiset of rows in
+    every tie group that the limit did not cut (all of them without a
+    limit)."""
+    if a[0] != "ok" or b[0] != "ok":
+        return a == b
+    (schema, rows), (schema_b, rows_b) = a[1], b[1]
+    if schema != schema_b or len(rows) != len(rows_b):
+        return False
+    fields = [f for f, _ in (sort.items() if isinstance(sort, dict) else sort or [])]
+    names = schema.fieldNames()
+    if not set(fields) <= set(names):
+        return limited or Counter(rows) == Counter(rows_b)
+    at = [names.index(f) for f in fields]
+    keys = [tuple(r[i] for i in at) for r in rows]
+    if keys != [tuple(r[i] for i in at) for r in rows_b]:
+        return False
+    groups = sorted(set(keys), key=keys.index)
+    whole = groups[:-1] if limited else groups
+    return all(
+        Counter(r for r, k in zip(rows, keys) if k == g)
+        == Counter(r for r, k in zip(rows_b, keys) if k == g)
+        for g in whole
+    )
+
+
+@settings(
+    max_examples=6, deadline=None, suppress_health_check=[HealthCheck.function_scoped_fixture]
+)
+@given(
+    docs=_COLLECTIONS,
+    queries=st.lists(_filters(), min_size=1, max_size=2),
+    field=st.sampled_from(["tipo", "anio", "texto", "tokens", "nope"]),
+    page=_PAGES,
+)
+@example(
+    docs=[(1, "auto", "el juez"), (26, None, None), (None, "fallo", "la corte"), (1, "auto", "el juez")],
+    queries=[
+        {"anio": {"$gte": 2001}, "tipo": {"$in": ["auto", "fallo"]}},
+        {"$text": {"$search": "juez -corte"}},
+        # the negations match null fields
+        {"tipo": {"$ne": "auto"}},
+        {"tipo": {"$nin": ["auto"]}},
+        {"$or": [{"texto": {"$exists": False}}, {"anio": {"$not": {"$gt": 2001}}}]},
+        {"tipo": 5},
+        None,
+    ],
+    field="tipo",
+    page={"projection": {"providencia": 1, "anio": 1}, "sort": [("anio", -1), ("providencia", 1)], "limit": 2},
+)
+@example(docs=[], queries=[{"tipo": "auto"}, {}], field="anio", page={"projection": None, "sort": None, "limit": None})
+def test_mongo_reads_over_the_block_match_the_plans(spark, distributed, tmp_path, docs, queries, field, page):
+    data_dir = tmp_path / uuid.uuid4().hex
+    data_dir.mkdir()
+    ids, sources, texts = zip(*docs) if docs else ((), (), ())
+    pq.write_table(
+        pa.table({
+            "doc_id": pa.array(ids, pa.int64()),
+            "source": pa.array(sources, pa.string()),
+            "text": pa.array(texts, pa.string()),
+        }),
+        data_dir / "documents.parquet",
+    )
+    limited = bool(page["limit"])
+
+    def run():
+        eng = ProvidenciasEngine(spark, str(data_dir))
+        try:
+            out = []
+            for q in queries:
+                out += [
+                    _outcome(lambda: eng.count_documents(q)),
+                    _outcome(lambda: eng.distinct(field, q)),
+                    _outcome(lambda: eng.find_one(q, projection=page["projection"], sort=_FULL_SORT)),
+                    _outcome(lambda: _page(eng.query_mongo(q, **page))),
+                ]
+            return out
+        finally:
+            eng.release()
+
+    driver, spark_side = _both(distributed, run)
+    for i, (a, b) in enumerate(zip(driver, spark_side)):
+        if i % 4 == 3:
+            assert _same_page(a, b, page["sort"], limited), (docs, queries[i // 4], page, a, b)
+        else:
+            assert a == b, (docs, queries[i // 4], field, a, b)

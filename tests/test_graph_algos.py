@@ -918,3 +918,30 @@ def test_degenerate_inputs(spark, distributed, op, case, gate):
         got = sorted(tuple(r) for r in out.collect())
     assert out.columns == columns
     assert got == want
+
+
+def test_driver_power_iterations_are_bit_stable(spark):
+    """The driver PageRank family sums over its edges in (source,
+    destination) order, so one graph collected in two orders gives the
+    same doubles to the last bit."""
+    import random
+
+    rng = random.Random(7)
+    nodes = [f"n{i}" for i in range(30)]
+    rows = list({
+        (rng.choice(nodes), rng.choice(nodes)): rng.uniform(0.01, 3.0) for _ in range(400)
+    }.items())
+    rows = [(u, v, w) for (u, v), w in rows]
+    orders = [rows, rows[::-1]]
+    frames = [
+        spark.createDataFrame(r, "src string, dst string, w double").repartition(n)
+        for r, n in zip(orders, (1, 3))
+    ]
+    for run in (
+        lambda e: ga.pagerank(e, max_iter=20),
+        lambda e: ga.pagerank(e, max_iter=20, weight_col="w"),
+        lambda e: ga.personalized_pagerank(e, ["n1", "n2"], max_iter=20),
+        lambda e: ga.eigenvector_centrality(e, weight_col="w", max_iter=20),
+    ):
+        first, second = (sorted(tuple(r) for r in run(e).collect()) for e in frames)
+        assert first == second

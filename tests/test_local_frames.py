@@ -4,13 +4,18 @@ empty search result or the one-row id cast runs no Spark job, and each
 frame keeps the schema it declares, nullability included. No module of
 the package builds a frame any other way. A size gate collects the
 driver path's rows in the same action that decides it
-(``session.collect_below``)."""
+(``session.collect_below``), and ``distributed()`` forces every such
+gate. The engine's Mongo reads over a warm document block run no Spark
+job, and ``count_documents`` makes no gateway call."""
 
 from __future__ import annotations
 
 import ast
+import importlib
+import inspect
 import pathlib
 
+import numpy as np
 import pytest
 from pyspark.sql import functions as F
 from pyspark.sql.types import (
@@ -23,6 +28,7 @@ from pyspark.sql.types import (
 )
 
 import providenciasbigdata_spark
+from providenciasbigdata_spark.engine import ProvidenciasEngine
 from providenciasbigdata_spark.operators import graph_algos as G
 from providenciasbigdata_spark.operators import postings
 from providenciasbigdata_spark.session import collect_below
@@ -187,3 +193,69 @@ def test_no_module_builds_a_frame_outside_local_frame():
             ):
                 offenders.append(f"{path.relative_to(PACKAGE.parent)}:{node.lineno}")
     assert offenders == []
+
+
+def _gate_constants(path: pathlib.Path) -> set[tuple[str, str]]:
+    """(module, name) of each module-level int that code in ``path``
+    passes to ``collect_below`` as its gate, by name or as
+    ``module.NAME``."""
+    tree = ast.parse(path.read_text(), str(path))
+    calls = [
+        n for n in ast.walk(tree)
+        if isinstance(n, ast.Call)
+        and getattr(n.func, "id", getattr(n.func, "attr", None)) == "collect_below"
+    ]
+    if not calls:
+        return set()
+    parts = path.relative_to(PACKAGE.parent).with_suffix("").parts
+    module = importlib.import_module(".".join(p for p in parts if p != "__init__"))
+    found = set()
+    for call in calls:
+        gates = call.args[1:] + [k.value for k in call.keywords if k.arg == "max_rows"]
+        for ref in (r for g in gates for r in ast.walk(g)):
+            owner, name = module, None
+            if isinstance(ref, ast.Name):
+                name = ref.id
+            elif isinstance(ref, ast.Attribute) and isinstance(ref.value, ast.Name):
+                owner, name = getattr(module, ref.value.id, None), ref.attr
+            if name and inspect.ismodule(owner) and type(getattr(owner, name, None)) is int:
+                found.add((owner.__name__, name))
+    return found
+
+
+def test_distributed_forces_every_collect_below_gate(distributed):
+    """A module constant that gates a ``collect_below`` must be one that
+    ``distributed()`` sets to 0, so the equivalence harness reaches the
+    Spark side of every gate."""
+    gates = set().union(*(_gate_constants(p) for p in sorted(PACKAGE.rglob("*.py"))))
+    assert ("providenciasbigdata_spark.engine", "_DRIVER_MAX_DOCS") in gates
+    assert ("providenciasbigdata_spark.operators.graph_algos", "_DRIVER_MAX_EDGES") in gates
+    with distributed():
+        missed = sorted(g for g in gates if getattr(importlib.import_module(g[0]), g[1]) != 0)
+    assert missed == []
+
+
+def test_warm_mongo_reads_run_no_job(spark, sf_dir, count_jobs, monkeypatch):
+    eng = ProvidenciasEngine(spark, sf_dir)
+    assert eng.count_documents({}) > 0  # builds the version and its block
+    # numpy scalars too, as a caller drawing values from numpy passes them
+    q = {"tipo": np.str_("src3"), "anio": {"$gte": np.int64(2005)}, "$text": {"$search": "merge -zzz"}}
+    reads = {
+        "count_documents": lambda: eng.count_documents(q),
+        "distinct": lambda: eng.distinct("anio", q),
+        "find_one": lambda: eng.find_one(q, sort=[("providencia", 1)]),
+        "query_mongo": lambda: eng.query_mongo(
+            q, projection={"providencia": 1, "anio": 1}, sort=[("anio", -1)], limit=5
+        ).collect(),
+    }
+    for name, read in reads.items():
+        out, jobs = count_jobs(read)
+        assert out and jobs == 0, name
+    client = spark.sparkContext._gateway._gateway_client
+    sent = []
+    send = client.send_command
+    monkeypatch.setattr(client, "send_command", lambda *a, **k: sent.append(a) or send(*a, **k))
+    assert eng.count_documents(q) > 0
+    monkeypatch.undo()
+    assert sent == []
+    eng.release()
