@@ -83,9 +83,9 @@ def distinct_values(df: DataFrame, field: str) -> DataFrame:
 def filter_equals(df: DataFrame, field: str, value) -> DataFrame:
     """A4-A6: single equality predicate (reference
     streamlit_app.py:138,141,144). Pushed down to the Parquet scan;
-    with anio-partitioned storage the A6 case is partition pruning."""
-    if field == "anio":
-        value = int(value)  # reference's dynamic year type, pinned (SURVEY.md §1.4)
+    with anio-partitioned storage the A6 case is partition pruning.
+    ``value`` is compared as given; ``query_cascade`` pins the
+    reference's dynamic year type to ``int`` (``cascade_predicates``)."""
     return df.filter(F.col(field) == F.lit(value))
 
 
@@ -345,6 +345,37 @@ def search_text_ranked(
     return ranked.limit(k) if k else ranked
 
 
+# The reference's filter dispatch (streamlit_app.py:137-148): each field
+# in precedence order, with the test that makes its predicate apply.
+_CASCADE = (
+    ("providencia", bool),
+    ("tipo", bool),
+    ("anio", lambda v: v is not None and v != ""),
+    ("texto", bool),
+)
+
+
+def cascade_predicates(
+    providencia: str | None = None,
+    tipo: str | None = None,
+    anio: int | str | None = None,
+    texto: str | None = None,
+    conjunctive: bool = False,
+) -> dict:
+    """The predicates ``query_cascade`` applies, as {field: value} in
+    precedence order: the first field given, or with ``conjunctive``
+    every one. ``anio`` is coerced with ``int`` (SURVEY.md §1.4), so a
+    malformed year applied raises ``ValueError``."""
+    given = {"providencia": providencia, "tipo": tipo, "anio": anio, "texto": texto}
+    active = {}
+    for field, applies in _CASCADE:
+        if applies(given[field]):
+            active[field] = int(given[field]) if field == "anio" else given[field]
+            if not conjunctive:
+                break
+    return active
+
+
 def query_cascade(
     df: DataFrame,
     providencia: str | None = None,
@@ -364,27 +395,22 @@ def query_cascade(
     ``conjunctive=True`` is the documented extension: AND of all
     provided predicates (what a user usually wants). ``stem=True``
     applies the Spanish full-Snowball stemmer to the texto match.
+    Which predicates apply is ``cascade_predicates``.
     """
-    if conjunctive:
-        out = df
-        if providencia:
-            out = filter_equals(out, "providencia", providencia)
-        if tipo:
-            out = filter_equals(out, "tipo", tipo)
-        if anio is not None and anio != "":
-            out = filter_equals(out, "anio", anio)
-        if texto:
-            out = search_text(out, texto, stem=stem)
-        return out
-    if providencia:
-        return filter_equals(df, "providencia", providencia)
-    if tipo:
-        return filter_equals(df, "tipo", tipo)
-    if anio is not None and anio != "":
-        return filter_equals(df, "anio", anio)
-    if texto:
-        return search_text(df, texto, stem=stem)
-    return df
+    predicates = cascade_predicates(providencia, tipo, anio, texto, conjunctive)
+    return apply_cascade(df, predicates, stem=stem)
+
+
+def apply_cascade(df: DataFrame, predicates: dict, stem: bool = False) -> DataFrame:
+    """``df`` filtered by ``cascade_predicates``' answer: each field's
+    equality, ``texto`` as ``search_text``."""
+    out = df
+    for field, value in predicates.items():
+        if field == "texto":
+            out = search_text(out, value, stem=stem)
+        else:
+            out = filter_equals(out, field, value)
+    return out
 
 
 def to_result_frame(df: DataFrame, drop_cols: tuple[str, ...] = ("doc_id", "tokens")):
@@ -395,7 +421,10 @@ def to_result_frame(df: DataFrame, drop_cols: tuple[str, ...] = ("doc_id", "toke
     1-column sentinel frame when empty. Returns a pandas DataFrame —
     this is the ONLY place the compat document path materializes;
     everything upstream stays lazy (contrast the reference's eager
-    ``list(cursor)`` at streamlit_app.py:32).
+    ``list(cursor)`` at streamlit_app.py:32). A ``session.LocalFrame``
+    (the engine's ``query_rulings`` from its document block) drops and
+    converts its held Arrow table on the driver: no Spark job, and no
+    gateway call beyond ``toPandas``'s configuration reads.
     """
     import pandas as pd
 

@@ -22,9 +22,10 @@ then take ``dot / (|a| |b|) * 100``; a pair with a zero norm, a null or
 a different-length side has a null ``similitud``. The kernel serves an
 anchor's outgoing edges (``anchored_edges``: its row becomes a local
 relation that Spark rounds and filters without running a job) and the
-full build (``block_edges``: an Arrow UDF scores the pairs of a
-Catalyst cross join, so a filter on ``src`` or ``dst`` still lands
-below the join). Spark's own ``round`` sets the digits in every build.
+full build (``block_edges``: a Catalyst cross join of the block's rows,
+scored on the driver when the build is small and by an Arrow UDF
+otherwise, so a filter on ``src`` or ``dst`` still lands below the
+join). Spark's own ``round`` sets the digits in every build.
 
 Operator citations (SURVEY.md §2.2/§2.3):
   A9  list_nodes          — reference streamlit_app.py:48-53
@@ -185,15 +186,16 @@ class VectorBlock:
 
 def cosine100_pairs(block: VectorBlock, a, b):
     """Unrounded cosine x 100 of ``block`` rows ``a[i]`` and ``b[i]``
-    (int arrays of row positions), as (values, valid): the dot folded
-    left to right and divided by the product of the norms, as
-    ``build_similarity_edges`` does; ``valid`` is False where that
-    build gives null (a null or null-holding side, different lengths,
-    a zero norm product)."""
+    (int arrays of row positions that broadcast together: a column and
+    a row give every pair), as (values, valid) of the broadcast shape:
+    the dot folded left to right and divided by the product of the
+    norms, as ``build_similarity_edges`` does; ``valid`` is False where
+    that build gives null (a null or null-holding side, different
+    lengths, a zero norm product)."""
     A, B = block.E[a], block.E[b]
-    dots = np.zeros(len(a))
+    dots = np.zeros(np.broadcast_shapes(np.shape(a), np.shape(b)))
     for j in range(block.dim):
-        dots = dots + A[:, j] * B[:, j]
+        dots = dots + A[..., j] * B[..., j]
     den = block.norms[a] * block.norms[b]
     valid = block.ok[a] & block.ok[b] & (block.lens[a] == block.lens[b]) & (den != 0)
     with np.errstate(all="ignore"):
@@ -214,23 +216,43 @@ def anchored_cosine100(block: VectorBlock, anchor_vec_id: int):
 
 # Pairs one task of the full build's kernel scores: each Python task
 # unpickles the block and holds a row-queue page (tens of MB) until
-# its worker monitor exits, so a small build runs as one task.
+# its worker monitor exits. A build of at most this many pairs is
+# scored on the driver instead (at most 8 MB of scores), and starts no
+# Python worker.
 _PAIRS_PER_TASK = 1 << 20
 
 
 def block_edges(spark: SparkSession, block: VectorBlock, round_digits: int = 4) -> DataFrame:
     """``build_similarity_edges(embeddings)`` from the driver-held
-    ``block``: a Catalyst cross join of two (block row, vec_id) local
-    relations, whose pairs an Arrow UDF scores with ``cosine100_pairs``
-    against the block it carries. The UDF is keyed by block row, so
-    rows sharing a vec_id pair exactly as the fold pairs them. A filter
-    on ``src`` or ``dst`` still folds into its side's relation below the
-    join, so an anchored read of this frame stays O(n)."""
+    ``block``: a Catalyst cross join of the block's rows with the
+    (block row, vec_id) local relation, each pair scored by
+    ``cosine100_pairs``. Up to ``_PAIRS_PER_TASK`` pairs the driver
+    scores them all at once, and each source row of the join carries
+    its row of scores, which the pair indexes by its block row; above
+    it an Arrow UDF scores the pairs against the block it carries.
+    Pairs are keyed by block row, so rows sharing a vec_id pair exactly
+    as the fold pairs them. A filter on ``src`` or ``dst`` still folds
+    into its side's relation below the join, so an anchored read of
+    this frame stays O(n) joined pairs."""
     n = len(block.ids)
     rows = local_frame(spark, pa.table({
         "row": pa.array(np.arange(n), pa.int64()),
         "vec_id": pa.array(block.ids, pa.int64()),
     }))
+    if n * n <= _PAIRS_PER_TASK:
+        values, valid = cosine100_pairs(block, np.arange(n)[:, None], np.arange(n)[None, :])
+        scores = pa.ListArray.from_arrays(
+            pa.array(np.arange(n + 1) * n, pa.int32()),
+            pa.array(values.reshape(-1), pa.float64(), mask=~valid.reshape(-1)),
+        )
+        sources = local_frame(spark, pa.table({
+            "src_id": pa.array(block.ids, pa.int64()), "scores": scores,
+        }))
+        pairs = sources.join(
+            rows.select(F.col("row").alias("b"), F.col("vec_id").alias("dst_id")),
+            F.col("src_id") != F.col("dst_id"),
+        )
+        return _edge_frame(pairs, F.col("scores")[F.col("b")], round_digits)
 
     @F.arrow_udf("double")
     def cos100(a: pa.Array, b: pa.Array) -> pa.Array:

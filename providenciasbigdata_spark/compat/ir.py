@@ -609,6 +609,20 @@ def find_block(
     return rows.select(keep)
 
 
+def cascade_filter(predicates: dict) -> dict | None:
+    """The filter document of ``query_cascade``'s predicates (as
+    ``documents.cascade_predicates`` gives them): each field's equality
+    under implicit AND, ``texto`` as an unstemmed ``$text`` search.
+    None when a value is a dict, which a filter document would read as
+    operators where the cascade compares it as a value."""
+    if any(isinstance(v, dict) for v in predicates.values()):
+        return None
+    return {
+        ("$text" if field == "texto" else field): ({"$search": v} if field == "texto" else v)
+        for field, v in predicates.items()
+    }
+
+
 def distinct_block(
     table: pa.Table, field: str, query: dict | None = None, default_language: str = "none"
 ) -> list | None:

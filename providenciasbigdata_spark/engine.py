@@ -50,7 +50,17 @@ include/exclude projections and sorts by fields. Every other document
 (``$regex``, ``$expr``, ``$geoWithin``, array operators, ``$text``
 phrases or stemming, a ``$meta`` or ``$slice`` projection, an operand
 of another type than its field's, any malformed one) keeps its Catalyst
-plan, as do ``query_rulings`` and the versions above the gate.
+plan, as do the versions above the gate.
+
+``query_rulings`` answers from the block too: the cascade's predicates
+(``compat.documents.cascade_predicates``) become one filter document
+(``compat.ir.cascade_filter``), and the matching rows come back as one
+``session.LocalFrame``, whose ``collect``/``toPandas`` read its Arrow
+table and make no gateway call. A stemmed texto match, a ``$text``
+phrase, an operand the block leaves to Spark and the versions above
+the gate keep the Catalyst cascade. The block's pages are snapshots:
+a ``query_mongo`` or ``query_rulings`` frame held across a version
+swap returns its own version's rows.
 """
 
 from __future__ import annotations
@@ -318,16 +328,23 @@ class ProvidenciasEngine:
     ) -> DataFrame:
         """The reference's filter dispatch (exclusive cascade by
         default; ``conjunctive=True`` for the AND extension;
-        ``stem=True`` for Spanish-stemmed texto matching)."""
-        return _docs.query_cascade(
-            self.rulings(),
-            providencia=providencia,
-            tipo=tipo,
-            anio=anio,
-            texto=texto,
-            conjunctive=conjunctive,
-            stem=stem,
-        )
+        ``stem=True`` for Spanish-stemmed texto matching). From the
+        document block the result is one local frame of the version's
+        matching rows, and the first such request of a version builds
+        the block; a stemmed texto match (which builds no block) or a
+        ``$text`` phrase keeps the Catalyst plan."""
+        from providenciasbigdata_spark.compat import ir as _ir
+
+        predicates = _docs.cascade_predicates(providencia, tipo, anio, texto, conjunctive)
+        version = self._rulings_version()
+        block = None
+        if not (stem and "texto" in predicates):
+            block = version.derived("documents", _document_block)
+        query = None if block is None else _ir.cascade_filter(predicates)
+        page = None if query is None else _ir.find_block(block, query)
+        if page is not None:
+            return local_frame(self.spark, page)
+        return _docs.apply_cascade(version.frame, predicates, stem=stem)
 
     def query_rulings_frame(self, **kwargs):
         """Presentation edge: pandas frame with the reference's

@@ -528,8 +528,8 @@ def shingle_sets(
     doc. The shared upstream of signatures AND exact-Jaccard verify;
     compute it once and persist when both consumers appear in one plan
     (Spark does not dedupe common subplans across DataFrame branches)."""
-    sh = F.array_distinct(shingles(tokenize(F.col(text_col)), ngram))
-    return df.select(F.col(id_col).alias("id"), sh.alias("__set"))
+    sh = F.array_distinct(shingles(F.col("__tokens"), ngram))
+    return _tokens(df, id_col, text_col).select("id", sh.alias("__set"))
 
 
 def shingle_hash_sets(
@@ -541,9 +541,16 @@ def shingle_hash_sets(
     cheaper: 8-byte elements shuffle/intersect instead of ~25-byte
     strings, and signature permutations hash a fixed-width long."""
     sh = F.array_distinct(
-        F.transform(shingles(tokenize(F.col(text_col)), ngram), lambda g: F.xxhash64(g))
+        F.transform(shingles(F.col("__tokens"), ngram), lambda g: F.xxhash64(g))
     )
-    return df.select(F.col(id_col).alias("id"), sh.alias("__set"))
+    return _tokens(df, id_col, text_col).select("id", sh.alias("__set"))
+
+
+def _tokens(df: DataFrame, id_col: str, text_col: str) -> DataFrame:
+    """(id, __tokens): the tokens bound as a column, which ``shingles``
+    reads once per slice; passed the ``tokenize`` expression instead,
+    it would run the tokenizer that many times per row."""
+    return df.select(F.col(id_col).alias("id"), tokenize(F.col(text_col)).alias("__tokens"))
 
 
 # XXH64 primes (public domain xxHash; the same constants Spark's

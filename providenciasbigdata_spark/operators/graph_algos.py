@@ -221,14 +221,19 @@ def connected_components(
     bounds the loop regardless).
 
     Driver finisher (the module's size gate): a normalized edge set
-    of at most ``_DRIVER_MAX_EDGES`` edges resolves with sequential
-    union-find instead. Labels are identical by construction (min id
-    of each component).
+    (self-loops included) of at most ``_DRIVER_MAX_EDGES`` edges is
+    collected first and resolves with sequential union-find instead,
+    into a local relation of every node's label. Labels are identical
+    by construction (min id of each component).
+
+    Edges with a null endpoint are dropped before either path, so a
+    null id is no node.
 
     Output: (id, component), one row per node incident to an edge.
     """
     spark = edges.sparkSession
     ckpt = _truncator(spark, checkpoint_dir)
+    edges = _non_null(edges, src, dst)
 
     def star(e: DataFrame, large: bool) -> DataFrame:
         # (node=u, neighbor=v) in both directions; m(u) = min(N(u)+{u})
@@ -252,6 +257,19 @@ def connected_components(
             F.least("v", "m").alias("u"), F.greatest("v", "m").alias("v")
         ).distinct()
 
+    # the undirected edge set, self-loops kept (their nodes are nodes),
+    # persisted: above the gate the loop reads it again
+    norm = edges.select(
+        F.least(F.col(src), F.col(dst)).alias("u"),
+        F.greatest(F.col(src), F.col(dst)).alias("v"),
+    ).distinct().persist()
+    t = collect_below(norm, _DRIVER_MAX_EDGES)
+    if t is not None:
+        norm.unpersist()
+        comp = _union_find_cc((u, v) for u, v in _pairs(t) if u != v)
+        ids = set(t["u"].to_pylist()) | set(t["v"].to_pylist())
+        labels = sorted((i, comp.get(i, i)) for i in ids)
+        return _node_frame(spark, labels, norm, "component", F.col("u"))
     nodes = (
         edges.select(F.col(src).alias("id"))
         .union(edges.select(F.col(dst).alias("id")))
@@ -260,21 +278,8 @@ def connected_components(
     # materialize the (possibly expensive) edge lineage ONCE — round 1
     # reads it twice (mins + cand); without this the upstream build
     # (e.g. a pairwise cosine join) re-executes
-    cur = ckpt(
-        edges.select(
-            F.least(F.col(src), F.col(dst)).alias("u"),
-            F.greatest(F.col(src), F.col(dst)).alias("v"),
-        )
-        .filter(F.col("u") != F.col("v"))
-        .distinct()
-    )
-    t = collect_below(cur, _DRIVER_MAX_EDGES)
-    if t is not None:
-        comp = _union_find_cc(_pairs(t))
-        labels = _node_frame(spark, sorted(comp.items()), cur, "component", F.col("u"))
-        return nodes.join(labels, "id", "left").select(
-            "id", F.coalesce("component", F.col("id")).alias("component")
-        )
+    cur = ckpt(norm.filter(F.col("u") != F.col("v")))
+    norm.unpersist()
     prev_sig = None
     for _ in range(max_iter):
         cur = star(star(cur, large=True), large=False)

@@ -10,9 +10,16 @@ stay ~128MB).
 
 It also ties persisted DataFrames to the Python object that owns them
 (``unpersist_on_collect``), so cached data lives exactly as long as its
-owner, builds every frame made on the driver as an Arrow local
-relation (``local_frame``), and decides every driver/Spark size gate
-inside one Arrow collect (``collect_below``).
+owner, builds every frame made on the driver as a ``LocalFrame``
+(``local_frame``), and decides every driver/Spark size gate inside one
+Arrow collect (``collect_below``).
+
+A ``LocalFrame`` holds its rows as an Arrow table. ``collect()``,
+``toPandas()`` and ``toArrow()`` read that table on the driver, and
+``drop`` by column names keeps it; none of them touches the JVM. The
+JVM local relation is built from the table the first time any other
+method needs the frame's ``_jdf`` (a count, a projection, a join), and
+from then on the frame behaves as an eagerly built one.
 """
 
 from __future__ import annotations
@@ -26,8 +33,15 @@ import weakref
 
 import pyarrow as pa
 from pyspark.sql import DataFrame, SparkSession
-from pyspark.sql.pandas.types import to_arrow_schema
+from pyspark.sql.classic.dataframe import DataFrame as ClassicDataFrame
+from pyspark.sql.conversion import ArrowTableToRowsConversion
+from pyspark.sql.pandas.types import (
+    _check_arrow_table_timestamps_localize,
+    from_arrow_schema,
+    to_arrow_schema,
+)
 from pyspark.sql.types import StructType, _parse_datatype_string
+from pyspark.sql.utils import is_timestamp_ntz_preferred
 
 
 def get_spark(
@@ -134,25 +148,110 @@ def _enqueue(frames: dict[str, DataFrame]) -> None:
         _RELEASED.put(df)
 
 
+class LocalFrame(ClassicDataFrame):
+    """A frame made on the driver that holds its rows as an Arrow table
+    and its ``StructType``. ``collect()``, ``toPandas()`` and
+    ``toArrow()`` read the held table through PySpark's own converters
+    and make no gateway call; ``drop`` by plain column names returns
+    another ``LocalFrame``. Every other method reads ``_jdf``, the JVM
+    local relation, which the first such read builds from the held
+    table (``createDataFrame``, as an eager frame is built), so it
+    behaves as any frame does. Two threads may both build it: each
+    builds the same relation, and either one is kept."""
+
+    def __new__(cls, *args):
+        # DataFrame.__new__ runs DataFrame.__init__, with a built relation
+        return object.__new__(cls)
+
+    def __init__(self, session: SparkSession, table: pa.Table, schema: StructType):
+        # what DataFrame.__init__ sets, but _jdf, which is built lazily
+        self._session = session
+        self._sc = session._sc
+        self.is_cached = False
+        self._support_repr_html = False
+        self._table = table
+        self._relation = None
+        self.schema = schema  # the parent's cached property, filled in
+
+    @property
+    def _jdf(self):
+        if self._relation is None:
+            self._relation = self._session.createDataFrame(self._table, self.schema)._jdf
+        return self._relation
+
+    def collect(self) -> list:
+        # binary cells as bytes: the JVM's pickled rows carry bytes too
+        return ArrowTableToRowsConversion.convert(self._table, self.schema)
+
+    def _collect_as_arrow(
+        self, split_batches: bool = False, empty_list_if_zero_records: bool = True
+    ) -> list:
+        # the held table stays whole: a self-destructing toPandas frees
+        # only its own references to these batches
+        if self._table.num_rows == 0:
+            if empty_list_if_zero_records:
+                return []
+            return [pa.RecordBatch.from_pylist([], schema=self._table.schema)]
+        return self._table.to_batches()
+
+    def drop(self, *cols):
+        fields = self.schema.fields
+        # a name that matches a column only case-insensitively, or a
+        # Column, is resolved by the JVM relation
+        if not all(isinstance(c, str) for c in cols) or any(
+            f.name != c and (f.name.lower() == c.lower() or f.name.upper() == c.upper())
+            for f in fields for c in cols
+        ):
+            return super().drop(*cols)
+        keep = [i for i, f in enumerate(fields) if f.name not in cols]
+        return LocalFrame(
+            self._session, self._table.select(keep), StructType([fields[i] for i in keep])
+        )
+
+
+def _has_timestamp(t: pa.DataType) -> bool:
+    return pa.types.is_timestamp(t) or any(
+        _has_timestamp(t.field(i).type) for i in range(t.num_fields)
+    )
+
+
 def local_frame(
     spark: SparkSession, data: "pa.Table | list", schema: "StructType | str | None" = None
-) -> DataFrame:
-    """A frame made on the driver, as an Arrow local relation: collecting
-    it, and any projection or filter Spark folds into it, runs no Spark
-    job. (``createDataFrame`` over a Python list makes an RDD of pickled
-    rows instead, whose every collect runs a Python-worker job.)
+) -> LocalFrame:
+    """A frame made on the driver, as a ``LocalFrame``: collecting it,
+    or turning it into pandas or Arrow, reads the held table, runs no
+    Spark job and makes no gateway call. The JVM local relation is
+    built the first time anything else reads the frame (a count, a
+    ``first``, a projection or filter, which Spark then folds into the
+    relation), and runs no Spark job either. (``createDataFrame`` over
+    a Python list makes an RDD of pickled rows instead, whose every
+    collect runs a Python-worker job.)
 
     ``data`` is a ``pyarrow.Table``, typed by its own schema, or a list
     of row tuples typed by ``schema``: a ``StructType`` or a DDL string,
-    whose types and nullability the frame keeps as declared.
+    whose types and nullability the frame keeps as declared. The held
+    table is the one ``createDataFrame`` sends the JVM: the schema is
+    inferred as it infers it, timestamps are localized in the session
+    time zone, and the columns are cast to the schema's Arrow types.
+    The session configuration is read only for a table with a
+    timestamp column.
     """
     if isinstance(data, pa.Table):
-        return spark.createDataFrame(data)
+        if any(_has_timestamp(t) for t in data.schema.types):
+            ntz = is_timestamp_ntz_preferred()
+            schema = from_arrow_schema(data.schema, prefer_timestamp_ntz=ntz)
+            timezone = spark._jconf.sessionLocalTimeZone()
+            data = _check_arrow_table_timestamps_localize(data, schema, True, timezone)
+        else:
+            schema = from_arrow_schema(data.schema)
+        arrow = to_arrow_schema(schema, error_on_duplicated_field_names_in_struct=True)
+        return LocalFrame(spark, data.cast(arrow), schema)
     if isinstance(schema, str):
         schema = _ddl_schema(schema)
-    arrow = to_arrow_schema(schema)
+    # rows built in the schema's Arrow types need neither localizing nor a cast
+    arrow = to_arrow_schema(schema, error_on_duplicated_field_names_in_struct=True)
     columns = [pa.array([row[i] for row in data], f.type) for i, f in enumerate(arrow)]
-    return spark.createDataFrame(pa.Table.from_arrays(columns, schema=arrow), schema)
+    return LocalFrame(spark, pa.Table.from_arrays(columns, schema=arrow), schema)
 
 
 def collect_below(df: DataFrame, max_rows: int) -> "pa.Table | None":

@@ -275,12 +275,23 @@ def test_cypher_routes_only_the_one_hop_outgoing_shape(spark, monkeypatch):
 
 
 def test_full_edge_build_matches_the_catalyst_fold(spark, gate, oracle_edges):
-    # below the gate the block kernel scores every sf0.01 pair, above it
-    # the Catalyst fold does; both give the fold's rows exactly
+    # below the gate the block kernel scores every sf0.01 pair, on the
+    # driver (its 250k pairs are one task's), above it the Catalyst fold
+    # does; both give the fold's rows exactly
+    _full_build_matches(spark, oracle_edges, gate, udf=False)
+
+
+def test_full_edge_build_in_the_udf_matches_the_catalyst_fold(spark, oracle_edges, monkeypatch):
+    # a build of more pairs than one task's scores them in an Arrow UDF
+    monkeypatch.setattr(_graph, "_PAIRS_PER_TASK", 1)
+    _full_build_matches(spark, oracle_edges, "driver", udf=True)
+
+
+def _full_build_matches(spark, oracle_edges, gate: str, udf: bool) -> None:
     eng = ProvidenciasEngine(spark, SF_ORACLE)
     edges = eng.edges()
     plan = edges._jdf.queryExecution().optimizedPlan().toString()
-    assert ("ArrowEvalPython" in plan) == (gate == "driver")
+    assert ("ArrowEvalPython" in plan) == udf
     got = sorted(edges.collect())
     assert got == sorted(r for rows in oracle_edges.values() for r in rows)
     assert eng.edges() is edges or gate == "distributed"  # one frame per version
@@ -288,6 +299,15 @@ def test_full_edge_build_matches_the_catalyst_fold(spark, gate, oracle_edges):
 
 
 def test_full_edge_build_of_degenerate_vectors(spark, tmp_path, gate):
+    _degenerate_builds_match(spark, tmp_path)
+
+
+def test_full_edge_build_of_degenerate_vectors_in_the_udf(spark, tmp_path, monkeypatch):
+    monkeypatch.setattr(_graph, "_PAIRS_PER_TASK", 1)
+    _degenerate_builds_match(spark, tmp_path)
+
+
+def _degenerate_builds_match(spark, tmp_path) -> None:
     stores = {
         "degenerate": [
             (0, [0.0, 0.0, 0.0, 0.0]),  # zero norm

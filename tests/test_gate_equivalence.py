@@ -33,6 +33,7 @@ import pytest
 from hypothesis import HealthCheck, example, given, settings, strategies as st
 from pyspark.errors import PySparkException
 
+from providenciasbigdata_spark.compat.documents import to_result_frame
 from providenciasbigdata_spark.engine import ProvidenciasEngine
 from providenciasbigdata_spark.operators import dedup, similarity
 from providenciasbigdata_spark.operators import graph_algos as G
@@ -127,6 +128,7 @@ def test_graph_finishers_match_the_distributed_loops(spark, distributed, op):
         anchor="a", other="c",
     )
     @example(rows=[("a", None, 1.0), ("b", None, 1.0)], anchor="a", other="b")
+    @example(rows=[("a", None, 1.0), ("a", "b", 1.0), (None, "c", 1.0)], anchor="a", other="c")
     def check(rows, anchor, other):
         edges = local_frame(spark, rows, "src string, dst string, w double")
         driver, spark_side = _both(
@@ -138,6 +140,16 @@ def test_graph_finishers_match_the_distributed_loops(spark, distributed, op):
             assert _close(driver, spark_side, tol), (rows, anchor, other, driver, spark_side)
 
     check()
+
+
+def test_components_drop_null_endpoints(spark, distributed):
+    """A null id names no node: ``c``, reached only from a null, is
+    not one either."""
+    edges = local_frame(
+        spark, [("a", None, 1.0), ("a", "b", 1.0), (None, "c", 1.0)], "src string, dst string, w double"
+    )
+    for rows in _both(distributed, lambda: _sorted_rows(G.connected_components(edges))):
+        assert rows == [("a", "a"), ("b", "a")]
 
 
 # ---- BM25 ----------------------------------------------------------------
@@ -365,6 +377,22 @@ def _same_page(a, b, sort, limited: bool) -> bool:
     )
 
 
+def _write_documents(tmp_path, docs) -> str:
+    """A data directory whose ``documents`` table holds ``docs``."""
+    data_dir = tmp_path / uuid.uuid4().hex
+    data_dir.mkdir()
+    ids, sources, texts = zip(*docs) if docs else ((), (), ())
+    pq.write_table(
+        pa.table({
+            "doc_id": pa.array(ids, pa.int64()),
+            "source": pa.array(sources, pa.string()),
+            "text": pa.array(texts, pa.string()),
+        }),
+        data_dir / "documents.parquet",
+    )
+    return str(data_dir)
+
+
 @settings(
     max_examples=6, deadline=None, suppress_health_check=[HealthCheck.function_scoped_fixture]
 )
@@ -391,21 +419,11 @@ def _same_page(a, b, sort, limited: bool) -> bool:
 )
 @example(docs=[], queries=[{"tipo": "auto"}, {}], field="anio", page={"projection": None, "sort": None, "limit": None})
 def test_mongo_reads_over_the_block_match_the_plans(spark, distributed, tmp_path, docs, queries, field, page):
-    data_dir = tmp_path / uuid.uuid4().hex
-    data_dir.mkdir()
-    ids, sources, texts = zip(*docs) if docs else ((), (), ())
-    pq.write_table(
-        pa.table({
-            "doc_id": pa.array(ids, pa.int64()),
-            "source": pa.array(sources, pa.string()),
-            "text": pa.array(texts, pa.string()),
-        }),
-        data_dir / "documents.parquet",
-    )
+    data_dir = _write_documents(tmp_path, docs)
     limited = bool(page["limit"])
 
     def run():
-        eng = ProvidenciasEngine(spark, str(data_dir))
+        eng = ProvidenciasEngine(spark, data_dir)
         try:
             out = []
             for q in queries:
@@ -425,3 +443,71 @@ def test_mongo_reads_over_the_block_match_the_plans(spark, distributed, tmp_path
             assert _same_page(a, b, page["sort"], limited), (docs, queries[i // 4], page, a, b)
         else:
             assert a == b, (docs, queries[i // 4], field, a, b)
+
+
+# ---- query_rulings over the document block -------------------------------
+
+# a cascade's fields, each given or not: matches, misses, the values the
+# cascade treats as not given ("" and None), a year as an int and as a
+# numeric string, a malformed year, an operand of another type, and
+# texto with bare terms, negations, a phrase, accents, punctuation and a
+# plural ("fallos") that only the stemmed match finds
+_CASCADES = st.fixed_dictionaries(
+    {},
+    optional={
+        "providencia": st.sampled_from(["P-1", "P-26", "zz", "", None]),
+        "tipo": st.sampled_from(["auto", "Tutela", "zz", "", None, 5]),
+        "anio": st.sampled_from([2001, "2001", 2002, "2027", 0, "", None, "x"]),
+        "texto": st.sampled_from(
+            ["juez", "juez -corte", "JÚEZ fallos", "-juez", '"el juez"', "¿?", '"?"', "", None]
+        ),
+        "conjunctive": st.booleans(),
+        "stem": st.booleans(),
+    },
+)
+_ALL_FIELDS = {"providencia": "P-1", "tipo": "auto", "anio": "2001", "texto": "juez"}
+
+
+def _result_frame(pdf) -> str:
+    """``to_result_frame``'s columns, dtypes and rows, in one row order."""
+    rows = sorted(map(repr, pdf.itertuples(index=False)))
+    return repr((list(pdf.columns), [str(t) for t in pdf.dtypes], rows))
+
+
+def _rulings_page(df) -> tuple:
+    return df.schema, Counter(map(_hashable, df.collect())), _result_frame(to_result_frame(df))
+
+
+@settings(
+    max_examples=6, deadline=None, suppress_health_check=[HealthCheck.function_scoped_fixture]
+)
+@given(docs=_COLLECTIONS, cascades=st.lists(_CASCADES, min_size=1, max_size=4))
+@example(
+    docs=[
+        (1, "auto", "el juez"), (26, None, None), (None, "fallo", "la corte"), (1, "auto", "el juez"),
+        (2, "Tutela", "el juez la corte fallo"),
+    ],
+    cascades=[
+        _ALL_FIELDS,  # the exclusive cascade: providencia alone applies
+        {**_ALL_FIELDS, "conjunctive": True}, {**_ALL_FIELDS, "texto": "corte", "conjunctive": True},
+        {"tipo": "Tutela", "texto": "juez -corte", "conjunctive": True},
+        {"anio": 2001}, {"anio": "2001", "tipo": ""}, {"tipo": "fallo"},
+        {"texto": "juez -corte"}, {"texto": '"el juez"'}, {"texto": "¿?"},
+        {"texto": "fallos", "stem": True}, {"texto": "fallos", "tipo": "auto", "stem": True},
+        {"anio": "x"}, {"anio": "x", "providencia": "P-1"}, {},
+    ],
+)
+@example(docs=[], cascades=[{"tipo": "auto"}, {}, {"texto": "juez", "conjunctive": True}])
+def test_query_rulings_over_the_block_match_the_cascade(spark, distributed, tmp_path, docs, cascades):
+    data_dir = _write_documents(tmp_path, docs)
+
+    def run():
+        eng = ProvidenciasEngine(spark, data_dir)
+        try:
+            return [_outcome(lambda: _rulings_page(eng.query_rulings(**c))) for c in cascades]
+        finally:
+            eng.release()
+
+    driver, spark_side = _both(distributed, run)
+    for c, a, b in zip(cascades, driver, spark_side):
+        assert a == b, (docs, c, a, b)

@@ -1,8 +1,10 @@
 """The engine's resident snapshot and the BM25 index's cache: requests
 read one in-memory version, a changed listing swaps in the next one,
 and cached data lives exactly as long as its owner. The driver state
-derived from a version (the vector block, the facet domains) is built
-once, by the first request that needs it, and goes with its version."""
+derived from a version (the vector block, the facet domains, the
+document block) is built once, by the first request that needs it, and
+goes with its version; page-1 frames cut from the document block are
+snapshots of their version."""
 
 from __future__ import annotations
 
@@ -104,10 +106,12 @@ def _scans(df) -> list:
     return leaves(df._jdf.queryExecution().executedPlan())
 
 
-def test_page1_requests_share_one_in_memory_relation(spark, tmp_path, sf_dir):
-    eng = ProvidenciasEngine(spark, _store(tmp_path, sf_dir))
-    first = eng.query_rulings(tipo="src3")
-    second = eng.query_rulings(anio=2005)
+def test_page1_requests_share_one_in_memory_relation(spark, tmp_path, sf_dir, distributed):
+    # a version built without a document block plans the cascade over the snapshot
+    with distributed():
+        eng = ProvidenciasEngine(spark, _store(tmp_path, sf_dir))
+        first = eng.query_rulings(tipo="src3")
+        second = eng.query_rulings(anio=2005)
     assert first.count() > 0 and second.count() > 0
     rdds = set()
     for df in (first, second):
@@ -116,6 +120,43 @@ def test_page1_requests_share_one_in_memory_relation(spark, tmp_path, sf_dir):
         rdds.add(scans[0].relation().cacheBuilder().cachedColumnBuffers().id())
     assert len(rdds) == 1
     assert eng.rulings() is eng.rulings()
+    eng.release()
+
+
+def test_page1_requests_read_one_document_block(spark, tmp_path, sf_dir, monkeypatch):
+    """Below the gate, page-1 requests are local relations cut from the
+    one document block of the one version they read."""
+    from providenciasbigdata_spark import engine
+
+    blocks = []
+    build = engine._document_block
+    monkeypatch.setattr(engine, "_document_block", lambda f: blocks.append(build(f)) or blocks[-1])
+    eng = ProvidenciasEngine(spark, _store(tmp_path, sf_dir))
+    # a stemmed texto match cannot use the block, so it builds none
+    assert not isinstance(eng.query_rulings(texto="merges", stem=True), session.LocalFrame)
+    assert blocks == []
+    frames = [
+        eng.query_rulings(tipo="src3"), eng.query_rulings(anio=2005), eng.query_rulings(texto="merge")
+    ]
+    v0 = eng.rulings()
+    for df in frames:
+        assert isinstance(df, session.LocalFrame)
+        assert df.count() > 0
+        assert [s.nodeName() for s in _scans(df)] == ["LocalTableScan"]
+    assert len(blocks) == 1 and eng.rulings() is v0
+    rows = {r.providencia for df in frames for r in df.collect()}
+    assert rows <= set(blocks[0].column("providencia").to_pylist())
+    eng.release()
+
+
+def test_held_pages_are_snapshots_of_their_version(spark, tmp_path, sf_dir):
+    store = _store(tmp_path, sf_dir)
+    eng = ProvidenciasEngine(spark, store)
+    held = [eng.query_rulings(tipo="src3"), eng.query_mongo({"tipo": "src3"})]
+    before = [len(df.collect()) for df in held]
+    _append(store, sf_dir, "part-1.parquet", 10_000, 40, "src3")
+    assert len(eng.query_rulings(tipo="src3").collect()) == before[0] + 40
+    assert [len(df.collect()) for df in held] == before
     eng.release()
 
 
