@@ -48,15 +48,23 @@ chain's endpoint set is driver-sized by construction, so the seeds
 collect is model-sized, not data). Both compose with further hops.
 Restrictions: hop_lo >= 1, the chain must be anchored, and var-length
 inside OPTIONAL MATCH raises.
+
+One shape also has a driver answer, ``hop_table``: a single outgoing
+hop from ``{id: $p}`` that filters on the hop's ``similitud`` and
+returns ids and the similitud. Compiled, it is a filter and a
+projection of the anchor's edges, so it can be read straight from the
+anchor's (src, dst, similitud) Arrow table.
 """
 
 from __future__ import annotations
 
 import re
 
+import pyarrow as pa
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from providenciasbigdata_spark.compat.graph import similitud_mask
 from providenciasbigdata_spark.session import local_frame
 
 
@@ -956,6 +964,64 @@ def compile_query(
             seg, nodes, edges, params, env, env_kinds, env_small
         )
     return env
+
+
+def hop_table(ast: dict, params: dict, edges: pa.Table) -> pa.Table | None:
+    """``compile_query(ast, nodes, edges_frame, params)``'s rows, read
+    from ``edges``, the (src, dst, similitud) table of every edge that
+    leaves the anchor, when ``ast`` is one outgoing hop from
+    ``(a {id: $p})`` whose WHERE atoms are ``r.similitud <op> <value>``
+    (a bound param or a literal that ``float`` reads) and whose RETURN
+    items are ``a.id``, ``b.id`` and ``r.similitud`` under distinct
+    aliases, with no DISTINCT, ORDER BY, SKIP, LIMIT or post-RETURN
+    WHERE. Such a query reads no node property, so its rows are the
+    anchor's edges that satisfy every atom, as Spark compares doubles,
+    and its columns keep the edges' types, each nullable. Any other
+    shape, and an unbound or non-numeric value, returns None: the
+    compiler answers it (or raises)."""
+    if len(ast["segments"]) != 1:
+        return None
+    seg = ast["segments"][0]
+    if (
+        seg["unwind"] or len(seg["matches"]) != 1 or seg["post_where"] or seg["order"]
+        or seg["skip"] is not None or seg["limit"] is not None or seg["distinct"]
+        or seg["project_star"]
+    ):
+        return None
+    match = seg["matches"][0]
+    if match["optional"] or len(match["pattern"]) != 2:
+        return None
+    a, (rel, b) = match["pattern"]
+    r = rel["var"]
+    if (
+        a["anchor_param"] is None or b["anchor_param"] or b["anchor_env"]
+        or rel["dir"] != ">" or rel["varlen"] is not None
+        or len({a["var"], b["var"], r}) != 3
+    ):
+        return None
+    conds = []
+    for c in match["where"]:
+        if c[0] != "cmp" or c[1:3] != (r, "similitud"):
+            return None
+        op, val = c[3], c[4]
+        if val.startswith("$"):
+            if val[1:] not in params:
+                return None
+            val = params[val[1:]]
+        elif val.startswith("'"):
+            val = val[1:-1]
+        try:
+            conds.append((op, float(val)))
+        except (TypeError, ValueError, OverflowError):
+            return None
+    column = {(a["var"], "id"): "src", (b["var"], "id"): "dst", (r, "similitud"): "similitud"}
+    items = seg["project"]
+    if any(k != "prop" or (v, p) not in column for k, v, p, _ in items):
+        return None
+    if len({alias for *_, alias in items}) != len(items):
+        return None
+    hits = edges.filter(pa.array(similitud_mask(edges["similitud"], conds)))
+    return pa.table({alias: hits[column[v, p]] for _, v, p, alias in items})
 
 
 def _pattern_items_text(items) -> str:

@@ -20,12 +20,14 @@ The edges have two exact builds with one arithmetic: the Catalyst fold
 Both cast to double, fold the dot and the squared norms left to right,
 then take ``dot / (|a| |b|) * 100``; a pair with a zero norm, a null or
 a different-length side has a null ``similitud``. The kernel serves an
-anchor's outgoing edges (``anchored_edges``: its row becomes a local
-relation that Spark rounds and filters without running a job) and the
-full build (``block_edges``: a Catalyst cross join of the block's rows,
-scored on the driver when the build is small and by an Arrow UDF
-otherwise, so a filter on ``src`` or ``dst`` still lands below the
-join). Spark's own ``round`` sets the digits in every build.
+anchor's outgoing edges (``anchored_table``: its row rounded on the
+driver by ``session.round_half_up``, which gives Spark's ``round`` bit
+for bit, and filtered there with Spark's double comparisons, so an
+anchored read makes no JVM call) and the full build (``block_edges``: a
+Catalyst cross join of the block's rows, scored on the driver when the
+build is small and by an Arrow UDF otherwise, so a filter on ``src`` or
+``dst`` still lands below the join). The full builds keep Spark's own
+``round``.
 
 Operator citations (SURVEY.md §2.2/§2.3):
   A9  list_nodes          — reference streamlit_app.py:48-53
@@ -45,7 +47,7 @@ import pyarrow.compute as pc
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from providenciasbigdata_spark.session import local_frame
+from providenciasbigdata_spark.session import local_frame, round_half_up
 
 
 def nodes_view(documents: DataFrame) -> DataFrame:
@@ -138,8 +140,7 @@ def build_similarity_edges(
 
 def _edge_frame(pairs: DataFrame, cos100: Column, round_digits: int) -> DataFrame:
     """edges(src, dst, similitud) from (src_id, dst_id) pairs and their
-    unrounded cosine x 100; Spark's own round (HALF_UP) sets the digits.
-    The ids are SQL text: one gateway call each, on the request path."""
+    unrounded cosine x 100; Spark's own round (HALF_UP) sets the digits."""
     return pairs.select(
         F.expr("concat('P-', CAST(src_id AS STRING)) AS src"),
         F.expr("concat('P-', CAST(dst_id AS STRING)) AS dst"),
@@ -273,44 +274,62 @@ def block_edges(spark: SparkSession, block: VectorBlock, round_digits: int = 4) 
     return _edge_frame(scored, F.col("cos100"), round_digits)
 
 
+# the driver's edge tables: anchored_table's, and the empty one
+EDGE_SCHEMA = pa.schema([("src", pa.string()), ("dst", pa.string()), ("similitud", pa.float64())])
+
+
+def anchored_table(block: VectorBlock, anchor_vec_id: int, round_digits: int = 4) -> pa.Table:
+    """``build_similarity_edges(embeddings, anchor_vec_id)``'s rows from
+    the driver-held ``block``, as an Arrow (src, dst, similitud) table in
+    the kernel's row order: the anchor's kernel row, each value rounded
+    as Spark's ``round`` rounds it."""
+    src, dst, values, valid = anchored_cosine100(block, int(anchor_vec_id))
+    return pa.table(
+        [_node_ids(src), _node_ids(dst), pa.array(round_half_up(values, round_digits), mask=~valid)],
+        schema=EDGE_SCHEMA,
+    )
+
+
+def _node_ids(vec_ids: np.ndarray) -> pa.Array:
+    """``concat('P-', CAST(vec_id AS STRING))`` of each int64 id."""
+    return pc.binary_join_element_wise("P-", pc.cast(pa.array(vec_ids, pa.int64()), pa.string()), "")
+
+
 def anchored_edges(
     spark: SparkSession, block: VectorBlock, anchor_vec_id: int, round_digits: int = 4
 ) -> DataFrame:
-    """``build_similarity_edges(embeddings, anchor_vec_id)`` from the
-    driver-held ``block``: the kernel's row as a local relation, so
-    rounding and any filter or projection above it fold into the
-    relation and collecting it runs no Spark job."""
-    return _edge_frame(_kernel_row(spark, block, anchor_vec_id), F.col("cos100"), round_digits)
+    """``anchored_table`` as a local frame: collecting it reads the held
+    table, and a filter or projection above it folds into its relation."""
+    return local_frame(spark, anchored_table(block, anchor_vec_id, round_digits))
 
 
-def _kernel_row(spark: SparkSession, block: VectorBlock, anchor_vec_id: int) -> DataFrame:
-    """The anchor's (src_id, dst_id, cos100) row as a local relation."""
-    src, dst, values, valid = anchored_cosine100(block, int(anchor_vec_id))
-    return local_frame(spark, pa.table({
-        "src_id": pa.array(src, pa.int64()),
-        "dst_id": pa.array(dst, pa.int64()),
-        "cos100": pa.array(values, pa.float64(), mask=~valid),
-    }))
+def similitud_mask(similitud, conds) -> np.ndarray:
+    """The rows of the double column ``similitud`` (an Arrow array) that
+    satisfy every ``(op, bound)`` of ``conds`` (op one of ``>=``, ``<=``,
+    ``>``, ``<``, ``=``, ``<>``), as Spark compares doubles: a null
+    satisfies no comparison, NaN equals NaN and is above every other
+    value, and -0.0 equals 0.0."""
+    x = pc.fill_null(similitud, 0.0).to_numpy(zero_copy_only=False)
+    valid = pc.is_valid(similitud).to_numpy(zero_copy_only=False)
+    keep = np.ones(len(x), bool)
+    xn = np.isnan(x)
+    for op, bound in conds:
+        bn = np.isnan(bound)
+        eq = (xn & bn) | (x == bound)
+        lt = (~xn & bn) | (x < bound)
+        keep &= valid & {
+            "=": eq, "<>": ~eq, "<": lt, "<=": lt | eq, ">": ~(lt | eq), ">=": ~lt,
+        }[op]
+    return keep
 
 
-def anchored_neighborhood(
-    spark: SparkSession, block: VectorBlock, anchor_vec_id: int, lo: float, hi: float,
-    round_digits: int = 4,
-) -> tuple[list[str], list[float]]:
-    """``neighborhood(anchored_edges(spark, block, anchor_vec_id), ...)``
-    collected, as (destino ids, similitudes) in the kernel's row order:
-    one local relation from the kernel's row, rounded by Spark's own
-    ``round`` and filtered by its inclusive ``between`` in one plan,
-    then collected with no Spark job. The origen of every hit is
-    ``P-<anchor_vec_id>``."""
-    sim = F.round("cos100", round_digits)
-    rows = (
-        _kernel_row(spark, block, anchor_vec_id)
-        .where(sim.between(float(lo), float(hi)))
-        .select("dst_id", sim.alias("similitud"))
-        .collect()
-    )
-    return [f"P-{r[0]}" for r in rows], [r[1] for r in rows]
+def anchored_neighborhood(edges: pa.Table, lo: float, hi: float) -> pa.Table:
+    """``neighborhood`` on the driver over ``edges``, one anchor's
+    ``anchored_table``: the (origen, destino, similitud) rows whose
+    similitud lies in [lo, hi], as Spark's inclusive ``between`` keeps
+    them, in the table's row order."""
+    keep = similitud_mask(edges["similitud"], [(">=", float(lo)), ("<=", float(hi))])
+    return edges.filter(pa.array(keep)).rename_columns(["origen", "destino", "similitud"])
 
 
 def neighborhood(edges: DataFrame, anchor: str, lo: float, hi: float) -> DataFrame:

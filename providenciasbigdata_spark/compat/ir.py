@@ -3990,10 +3990,12 @@ def cypher_run(
     nodes: DataFrame | None = None,
     edges: DataFrame | None = None,
     params: dict | None = None,
+    route: tuple[str, object] | None = None,
 ) -> DataFrame:
     """Run a Cypher query against the nodes/edges frames (SURVEY.md
     §1.4 graph representation). ``$param`` names resolve in ``params``
-    like Bolt's run(query, **params).
+    like Bolt's run(query, **params). ``route`` is
+    ``cypher_route(query)`` when the caller has already taken it.
 
     Two routes:
 
@@ -4013,16 +4015,14 @@ def cypher_run(
       raise with the parser's reason.
     """
     params = params or {}
-    flat = " ".join(query.split())
+    kind, how = route or cypher_route(query)
 
     # UNION [ALL] (round 7): compile each top-level part independently
     # (any route, so shortestPath branches compose too), then union.
     # Cypher requires identical column names across parts; UNION
     # deduplicates, UNION ALL keeps multiplicity.
-    from providenciasbigdata_spark.compat.cypher import split_union
-
-    parts, is_all = split_union(flat)
-    if len(parts) > 1:
+    if kind == "union":
+        parts, is_all = how
         frames = [cypher_run(p, nodes=nodes, edges=edges, params=params) for p in parts]
         names = frames[0].columns
         for i, f in enumerate(frames[1:], 2):
@@ -4036,8 +4036,8 @@ def cypher_run(
             out = out.unionByName(f)
         return out if is_all else out.distinct()
 
-    m = _ALL_SHORTEST_RE.match(flat)
-    if m:
+    if kind == "allShortestPaths":
+        m = how
         if edges is None:
             raise ValueError("allShortestPaths query needs the edges frame")
         src_p, dst_p = m.group(3), m.group(6)
@@ -4066,8 +4066,8 @@ def cypher_run(
             F.lit(int(hit["hops"])).cast("long").alias(out_len)
         )
 
-    m = _CHEAPEST_PATH_RE.match(flat)
-    if m:
+    if kind == "cheapestPath":
+        m = how
         if edges is None:
             raise ValueError("cheapestPath query needs the edges frame")
         src_p, dst_p = m.group(3), m.group(6)
@@ -4091,8 +4091,8 @@ def cypher_run(
             F.col("d").alias(out_cost)
         )
 
-    m = _SHORTEST_PATH_RE.match(flat)
-    if m:
+    if kind == "shortestPath":
+        m = how
         if edges is None:
             raise ValueError("shortestPath query needs the edges frame")
         src_p, dst_p, lo_p, hi_p = m.group(3), m.group(5), m.group(7), m.group(8)
@@ -4116,17 +4116,40 @@ def cypher_run(
             F.col("hops").cast("long").alias(out_len)
         )
 
+    from providenciasbigdata_spark.compat.cypher import compile_query
+
+    return compile_query(how, nodes, edges, params)
+
+
+def cypher_route(query: str) -> tuple[str, object]:
+    """The route ``cypher_run`` takes for ``query``, with what it reads,
+    decided once: ``("union", (parts, is_all))``, a path route
+    (``"allShortestPaths"``, ``"cheapestPath"``, ``"shortestPath"``)
+    with its regex match, or ``("generic", ast)`` with the parsed AST
+    that ``compat.cypher.compile_query`` compiles. A generic query
+    outside the subset raises ``ValueError``."""
     from providenciasbigdata_spark.compat.cypher import (
         CypherUnsupported,
-        compile_query,
         parse,
+        split_union,
     )
 
+    flat = " ".join(query.split())
+    parts, is_all = split_union(flat)
+    if len(parts) > 1:
+        return "union", (parts, is_all)
+    for kind, regex in (
+        ("allShortestPaths", _ALL_SHORTEST_RE),
+        ("cheapestPath", _CHEAPEST_PATH_RE),
+        ("shortestPath", _SHORTEST_PATH_RE),
+    ):
+        m = regex.match(flat)
+        if m:
+            return kind, m
     try:
-        ast = parse(flat)
+        return "generic", parse(flat)
     except CypherUnsupported as exc:
         raise ValueError(
             "query is outside the supported Cypher subset (anchored linear "
             f"paths, compat/cypher.py): {exc}; got: {flat[:120]}"
         ) from exc
-    return compile_query(ast, nodes, edges, params)

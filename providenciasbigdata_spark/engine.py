@@ -29,11 +29,14 @@ lookup), and the embeddings as a ``compat.graph.VectorBlock`` when the
 version has at most ``similarity._DRIVER_MAX_ROWS`` rows. Anchored
 edge reads (``edges(anchor_vec_id=...)``, the neighborhoods and the
 one-hop route of ``run_cypher``) then run the numpy kernel over the
-block and read its row as a local relation, with no Spark job. The
-full edge build (``edges()``, one frame per version) scores its pairs
-with the same kernel, through an Arrow UDF over a cross join that keeps
-a filter on ``src`` or ``dst`` below the join. Above the gate both keep
-the Catalyst plans over the snapshot.
+block and finish on the driver: the anchor's row is rounded by
+``session.round_half_up``, bit for bit Spark's ``round``, and filtered
+with Spark's double comparisons, and the answer is one local frame, so
+collecting it runs no Spark job and makes no gateway call. The full
+edge build (``edges()``, one frame per version) scores its pairs with
+the same kernel, through a cross join that keeps a filter on ``src``
+or ``dst`` below the join, and keeps Spark's own ``round``. Above the
+gate both keep the Catalyst plans over the snapshot.
 
 A rulings version of at most ``_DRIVER_MAX_DOCS`` rows also carries its
 document block: the view collected once into one Arrow table (about
@@ -79,7 +82,12 @@ from providenciasbigdata_spark.compat import documents as _docs
 from providenciasbigdata_spark.compat import graph as _graph
 from providenciasbigdata_spark.io import load_table
 from providenciasbigdata_spark.operators import dedup, similarity
-from providenciasbigdata_spark.session import collect_below, local_frame, unpersist_on_collect
+from providenciasbigdata_spark.session import (
+    collect_below,
+    held_table,
+    local_frame,
+    unpersist_on_collect,
+)
 
 # schema of a rulings mongodump read through the mongodump DataSource
 _DUMP_SCHEMA = "_id string, providencia string, tipo string, anio int, texto string"
@@ -146,19 +154,13 @@ def _document_block(rulings: DataFrame) -> pa.Table | None:
     return None if table is None else table.combine_chunks()
 
 
-def _hop_anchor(query: str, params: dict) -> str | None:
-    """The anchor whose outgoing edges are all the edges ``query``
-    reads: the value of ``$p`` when the query is one MATCH of a single
-    outgoing SIMILAR hop from a node bound by ``{id: $p}``, with WHERE
-    atoms on that hop and its nodes only. None for any other shape."""
-    from providenciasbigdata_spark.compat.cypher import CypherUnsupported, parse, split_union
-
-    if len(split_union(" ".join(query.split()))[0]) != 1:
-        return None
-    try:
-        segments = parse(query)["segments"]
-    except CypherUnsupported:
-        return None
+def _hop_anchor(ast: dict, params: dict) -> str | None:
+    """The anchor whose outgoing edges are all the edges the query of
+    ``ast`` reads: the value of ``$p`` when the query is one MATCH of a
+    single outgoing SIMILAR hop from a node bound by ``{id: $p}``, with
+    WHERE atoms on that hop and its nodes only. None for any other
+    shape."""
+    segments = ast["segments"]
     if len(segments) != 1 or segments[0]["unwind"] or len(segments[0]["matches"]) != 1:
         return None
     seg = segments[0]
@@ -302,9 +304,9 @@ class ProvidenciasEngine:
         """The edges an anchored read can reach: the anchor's outgoing
         ones, or none when it names no node."""
         m = _NODE_ID.fullmatch(anchor)
-        if m is None:
-            return self.edges().where(F.lit(False))  # planned away, never run
-        return self.edges(anchor_vec_id=int(m.group(1)))
+        if m is not None:
+            return self.edges(anchor_vec_id=int(m.group(1)))
+        return local_frame(self.spark, _graph.EDGE_SCHEMA.empty_table())
 
     # -- page 1: facets + text search ------------------------------------
 
@@ -438,18 +440,30 @@ class ProvidenciasEngine:
 
     def run_cypher(self, query: str, params: dict | None = None) -> DataFrame:
         """Run the reference's Cypher templates verbatim
-        (streamlit_app.py:50,60-64) against the derived graph. A single
-        outgoing hop from an anchor bound by ``{id: $p}`` reads only
-        that anchor's edges; every other shape reads all of them."""
-        from providenciasbigdata_spark.compat.ir import cypher_run
+        (streamlit_app.py:50,60-64) against the derived graph. The text
+        is parsed once. A single outgoing hop from an anchor bound by
+        ``{id: $p}`` reads only that anchor's edges; every other shape
+        reads all of them. Below the gate, the reference's neighborhood
+        shape (``compat.cypher.hop_table``: ids and ``similitud`` out,
+        ``similitud`` bounds in) is answered on the driver from the
+        anchor's rounded edge table as one local frame, with no Spark
+        job and no gateway call; every other shape is compiled."""
+        from providenciasbigdata_spark.compat.cypher import hop_table
+        from providenciasbigdata_spark.compat.ir import cypher_route, cypher_run
 
-        anchor = _hop_anchor(query, params or {})
-        return cypher_run(
-            query,
-            nodes=self.nodes(),
-            edges=self.edges() if anchor is None else self._edges_from(anchor),
-            params=params,
-        )
+        params = params or {}
+        route = cypher_route(query)
+        kind, ast = route
+        anchor = _hop_anchor(ast, params) if kind == "generic" else None
+        if anchor is None:
+            edges = self.edges()
+        else:
+            edges = self._edges_from(anchor)
+            table = held_table(edges)
+            hits = None if table is None else hop_table(ast, params, table)
+            if hits is not None:
+                return local_frame(self.spark, hits)
+        return cypher_run(query, nodes=self.nodes(), edges=edges, params=params, route=route)
 
     # -- page 2: similarity graph ----------------------------------------
 
@@ -463,32 +477,31 @@ class ProvidenciasEngine:
         """Anchored 1-hop expansion, weight in [lo, hi] inclusive
         (reference streamlit_app.py:60-64). Anchored edge build is
         O(n): only the anchor's outgoing cosines are computed. An
-        anchor that names no node has no edges."""
-        return _graph.neighborhood(self._edges_from(anchor), anchor, lo, hi)
+        anchor that names no node has no edges. Below the gate the
+        rows are one local frame, rounded and filtered on the driver."""
+        edges = self._edges_from(anchor)
+        table = held_table(edges)
+        if table is not None:
+            return local_frame(self.spark, _graph.anchored_neighborhood(table, lo, hi))
+        return _graph.neighborhood(edges, anchor, lo, hi)
 
     def neighborhood_graph(self, anchor: str, lo: float = 0.0, hi: float = 100.0):
         """(nodes_df, edges_df) for rendering — includes the singleton
         fallback (A14: the anchor renders even with zero edges). The
-        anchored read runs once: below the gate as one local relation
-        rounded and filtered by Spark (no Spark job), above it as the
-        Catalyst neighborhood. Both frames are built from its collected
-        rows, through Arrow."""
-        m = _NODE_ID.fullmatch(anchor)
-        block = None
-        if m is not None:
-            block = self._embeddings_version().derived("block", _vector_block)
-        if block is not None:
-            dst, sim = _graph.anchored_neighborhood(self.spark, block, int(m.group(1)), lo, hi)
-            src = [anchor] * len(dst)
-        else:
-            rows = self.similarity_neighborhood(anchor, lo, hi).collect()
-            src, dst, sim = ([r[i] for r in rows] for i in range(3))
-        nodes = _graph.neighborhood_nodes({"origen": src, "destino": dst}, anchor)
-        hits = pa.table({
-            "origen": pa.array(src, pa.string()),
-            "destino": pa.array(dst, pa.string()),
-            "similitud": pa.array(sim, pa.float64()),
-        })
+        anchored read runs once: below the gate on the driver, rounded
+        and filtered in numpy (no Spark job, no gateway call), above it
+        as the Catalyst neighborhood, collected. Both frames are local
+        frames of its rows."""
+        frame = self.similarity_neighborhood(anchor, lo, hi)
+        hits = held_table(frame)
+        if hits is None:
+            rows = frame.collect()
+            hits = pa.table({
+                "origen": pa.array([r[0] for r in rows], pa.string()),
+                "destino": pa.array([r[1] for r in rows], pa.string()),
+                "similitud": pa.array([r[2] for r in rows], pa.float64()),
+            })
+        nodes = _graph.neighborhood_nodes(hits.to_pydict(), anchor)
         return (
             local_frame(self.spark, pa.table({"id": pa.array(nodes, pa.string())})),
             local_frame(self.spark, hits),

@@ -179,13 +179,13 @@ def jaccard_pairs(
     Output: (left_id, right_id, jaccard) with left_id < right_id.
     """
     toks = F.array_distinct(
-        shingles(tokenize(F.col(text_col)), ngram) if ngram > 1 else tokenize(F.col(text_col))
+        shingles(F.col("__tokens"), ngram) if ngram > 1 else F.col("__tokens")
     )
-    base = df.select(F.col(id_col), toks.alias("__set"))
-    left = base.select(F.col(id_col).alias("left_id"), F.col("__set").alias("set_a"))
+    base = _tokens(df, id_col, text_col).select("id", toks.alias("__set"))
+    left = base.select(F.col("id").alias("left_id"), F.col("__set").alias("set_a"))
     if left_filter is not None:
         left = left.filter(left_filter(F.col("left_id")))
-    right = base.select(F.col(id_col).alias("right_id"), F.col("__set").alias("set_b"))
+    right = base.select(F.col("id").alias("right_id"), F.col("__set").alias("set_b"))
     pairs = left.join(right, F.col("left_id") < F.col("right_id"))
     inter = F.size(F.array_intersect("set_a", "set_b")).cast("double")
     union = (F.size("set_a") + F.size("set_b")).cast("double") - inter
@@ -228,11 +228,9 @@ def _jaccard_prefix_rows(
         tokdf = base.select("id", F.explode("__set").alias("tok"))
     else:
         toks = F.array_distinct(
-            shingles(tokenize(F.col(text_col)), ngram)
-            if ngram > 1
-            else tokenize(F.col(text_col))
+            shingles(F.col("__tokens"), ngram) if ngram > 1 else F.col("__tokens")
         )
-        sb = df.select(F.col(id_col).alias("id"), toks.alias("__set"))
+        sb = _tokens(df, id_col, text_col).select("id", toks.alias("__set"))
         tokdf = sb.select(
             "id",
             F.explode(F.transform("__set", lambda t: F.xxhash64(t))).alias("tok"),
@@ -332,9 +330,7 @@ def jaccard_join_prefix(
     if not (isinstance(salt, int) and salt >= 1):
         raise ValueError(f"salt must be an int >= 1, got {salt!r}")
     toks = F.array_distinct(
-        shingles(tokenize(F.col(text_col)), ngram)
-        if ngram > 1
-        else tokenize(F.col(text_col))
+        shingles(F.col("__tokens"), ngram) if ngram > 1 else F.col("__tokens")
     )
     # verify sets ride as xxhash64 long arrays (round 10): set
     # cardinality — hence Jaccard — is preserved up to 64-bit
@@ -344,9 +340,8 @@ def jaccard_join_prefix(
     # the verify join IS the widest shuffle (measured at the x64
     # weak-scaling point: 37M candidate pairs x two ~1KB string arrays
     # spilled past the sandbox disk; the hashed payload fits).
-    base = df.select(
-        F.col(id_col).alias("id"),
-        F.transform(toks, lambda t: F.xxhash64(t)).alias("__set"),
+    base = _tokens(df, id_col, text_col).select(
+        "id", F.transform(toks, lambda t: F.xxhash64(t)).alias("__set")
     )
     prefixes = _jaccard_prefix_rows(df, id_col, text_col, ngram, threshold)
     # prefix rows already carry xxhash64(token) keys (round 10, see

@@ -19,12 +19,14 @@ from it:
   collects the exploded tokens once (``session.collect_below``) and
   groups them with Arrow's hash aggregate into a numpy postings block
   on the driver, with no shuffle and no persist, and a search runs no
-  Spark job: numpy sums the terms' contributions, and the top k come
-  back as a local relation that Spark's own ``round`` folds into.
-  Above the gate one shuffle groups the (doc, token) rows into a
-  persisted Spark table and a search is a plan over it. Both paths share one expression for a
-  term's contribution, and the idf of a driver block comes from
-  Spark's ``log``, so each term's contribution agrees bit for bit; the
+  Spark job and makes no gateway call: numpy sums the terms'
+  contributions and rounds them as Spark's ``round`` does
+  (``session.round_half_up``), and the top k come back as a local
+  frame. Above the gate one shuffle groups the (doc, token) rows into
+  a persisted Spark table and a search is a plan over it. Both paths
+  share one expression for a term's contribution, and the idf of a
+  driver block comes from Spark's ``log``, so each term's contribution
+  agrees bit for bit; the
   rounded scores agree unless the Spark path adds three or more terms
   in an order that moves a sum's last bit across a rounding boundary.
 
@@ -45,7 +47,12 @@ import pyarrow.compute as pc
 from pyspark.sql import Column, DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from providenciasbigdata_spark.session import collect_below, local_frame, unpersist_on_collect
+from providenciasbigdata_spark.session import (
+    collect_below,
+    local_frame,
+    round_half_up,
+    unpersist_on_collect,
+)
 
 _EMPTY_HITS_SCHEMA = "doc_id bigint"
 
@@ -259,35 +266,23 @@ class _DriverPostings:
                 docs.append(self.doc_id[rows])
                 sums.append(_term_score(self.idf[i], self.tf[rows], self.dl[rows], self.avgdl, k1, b))
         if not docs:
-            return _scored(spark, [], [], round_digits)
+            return _scored(spark, [], [])
         ids, at = np.unique(np.concatenate(docs), return_inverse=True)
         score = np.zeros(len(ids))
         # each doc sums its terms in sorted-term order, from 0.0
         for at_term, sum_term in zip(np.split(at, np.cumsum([len(d) for d in docs])[:-1]), sums):
             score[at_term] += sum_term
-        order = np.argsort(-score, kind="stable")  # doc_id ascending among equal sums
-        # rounding is monotone, so only docs within ``band`` of the k-th
-        # sum can reach the top k; they keep this order unless two
-        # different sums among them may round to the same score
-        band = 2 * 10.0**-round_digits
-        s = score[order]
-        if len(s) > k:
-            order = order[: np.searchsorted(-s, band - s[k - 1], side="right")]
-        gaps = -np.diff(score[order])
-        settle = bool(np.any((gaps > 0) & (gaps < band)))
-        if not settle:
-            order = order[:k]
-        frame = _scored(spark, ids[order], score[order], round_digits)
-        return frame.orderBy(F.desc("score"), F.asc("doc_id")).limit(k) if settle else frame
+        score = round_half_up(score, round_digits)
+        order = np.lexsort((ids, -score))[:k]  # score descending, then doc_id
+        return _scored(spark, ids[order], score[order])
 
 
-def _scored(spark: SparkSession, ids, sums, round_digits: int) -> DataFrame:
-    """(doc_id, score) as a local relation, in the given row order, each
-    sum rounded by Spark's ``round``: collecting it runs no Spark job."""
+def _scored(spark: SparkSession, ids, scores) -> DataFrame:
+    """(doc_id, score) as a local frame, in the given row order."""
     return local_frame(
         spark,
-        pa.table({"doc_id": pa.array(ids, pa.int64()), "s": pa.array(sums, pa.float64())})
-    ).select("doc_id", F.round("s", round_digits).alias("score"))
+        pa.table({"doc_id": pa.array(ids, pa.int64()), "score": pa.array(scores, pa.float64())}),
+    )
 
 
 class BM25Index:
@@ -392,14 +387,14 @@ def bm25_search(
     empty (doc_id, score) frame.
 
     On a driver-held index the sums are numpy's, each doc's terms added
-    in sorted-term order, and the result is a local relation of the top
-    k with the rounding folded in: collecting it runs no Spark job. When
-    two different sums near the k-th place could round to one score, the
-    frame sorts those few candidate rows by their rounded score instead.
-    On a Spark-held index the plan filters the query terms' rows from
-    the cached table, counts each term's rows (its df) over a window on
-    that small slice, scores each row, sums per doc and keeps a
-    TakeOrdered top-k (per-partition heaps, not a global sort).
+    in sorted-term order, rounded bit for bit as Spark's ``round`` rounds
+    them (``session.round_half_up``), and ordered by rounded score and
+    doc_id in numpy; the top k are one local frame, which makes no
+    gateway call and runs no Spark job to collect. On a Spark-held
+    index the plan filters the query terms' rows from the cached table,
+    counts each term's rows (its df) over a window on that small slice,
+    scores each row, sums per doc and keeps a TakeOrdered top-k
+    (per-partition heaps, not a global sort).
     """
     if isinstance(k, bool) or not isinstance(k, numbers.Integral) or k < 0:
         raise ValueError(f"bm25_search: k must be a non-negative integer, got {k!r}")
@@ -408,7 +403,7 @@ def bm25_search(
     terms = sorted(set(terms))
     postings = index._postings
     if not terms or k == 0 or index.n_docs == 0 or index.avgdl is None:
-        return _scored(spark, [], [], round_digits)
+        return _scored(spark, [], [])
     if postings is not None:
         return postings.top(spark, terms, k, k1, b, round_digits)
     term_lit = F.array(*[F.lit(t) for t in terms])

@@ -20,6 +20,9 @@ A ``LocalFrame`` holds its rows as an Arrow table. ``collect()``,
 JVM local relation is built from the table the first time any other
 method needs the frame's ``_jdf`` (a count, a projection, a join), and
 from then on the frame behaves as an eagerly built one.
+
+``round_half_up`` is Spark's ``round`` on doubles, computed on the
+driver, so a result rounded there needs no JVM relation to be rounded.
 """
 
 from __future__ import annotations
@@ -30,7 +33,9 @@ import os
 import queue
 import threading
 import weakref
+from decimal import ROUND_HALF_UP, Context, Decimal
 
+import numpy as np
 import pyarrow as pa
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql.classic.dataframe import DataFrame as ClassicDataFrame
@@ -209,6 +214,11 @@ class LocalFrame(ClassicDataFrame):
         )
 
 
+def held_table(df: DataFrame) -> "pa.Table | None":
+    """The Arrow table ``df`` holds when it is a ``LocalFrame``, else None."""
+    return df._table if isinstance(df, LocalFrame) else None
+
+
 def _has_timestamp(t: pa.DataType) -> bool:
     return pa.types.is_timestamp(t) or any(
         _has_timestamp(t.field(i).type) for i in range(t.num_fields)
@@ -269,6 +279,47 @@ def collect_below(df: DataFrame, max_rows: int) -> "pa.Table | None":
         return None
     table = df.limit(max_rows + 1).toArrow()
     return table if table.num_rows <= max_rows else None
+
+
+# |x * 10**digits| below which numpy's floor finds Spark's digits: the
+# product's rounding error and the gap between x and its shortest
+# decimal each stay under 2.4e-7 there, inside the tie band below
+_FLOOR_EXACT = 2.0**31
+_TIE_BAND = 1e-6
+
+
+def round_half_up(values, digits: int) -> np.ndarray:
+    """Spark's ``round(x, digits)`` of each double in ``values``, bit for
+    bit: ``BigDecimal.valueOf(x).setScale(digits, HALF_UP).doubleValue()``,
+    which rounds the shortest decimal string of ``x`` half away from
+    zero. NaN and infinities pass through, and a zero result is +0.0.
+    A negative ``digits`` rounds to a multiple of ``10**-digits``, as
+    ``setScale`` does (15.0 at -1 is 20.0).
+
+    numpy computes ``floor(x * 10**digits + 0.5) / 10**digits``, which is
+    exact unless ``x * 10**digits`` lies within 1e-6 of a tie or beyond
+    2**31 in magnitude, or ``10**digits`` is not a double or not an
+    integer (``digits < 0``). Those values go through ``Decimal(repr(x)).quantize(..., ROUND_HALF_UP)``, the
+    contract ``streaming.py`` rounds by: Python's ``repr`` is the
+    shortest string that reads back as ``x``, as ``Double.toString`` is
+    meant to be (``tests/test_rounding.py`` checks both against the
+    session's JVM)."""
+    x = np.asarray(values, dtype=np.float64)
+    finite = np.isfinite(x)
+    with np.errstate(all="ignore"):
+        scale = np.float64(10.0) ** digits
+        y = x * scale
+        out = np.floor(y + 0.5) / scale + 0.0  # + 0.0 turns -0.0 into 0.0
+        slow = finite & (
+            ~(np.abs(y) < _FLOOR_EXACT) | (np.abs(y - np.floor(y) - 0.5) < _TIE_BAND)
+            | (digits > 22) | (digits < 0)
+        )
+    out = np.where(finite, out, x)
+    quantum = Decimal(1).scaleb(-digits)
+    exact = Context(prec=max(digits, 0) + 310)  # every digit of any double at this scale
+    for i in np.flatnonzero(slow):
+        out.flat[i] = float(Decimal(repr(float(x.flat[i]))).quantize(quantum, ROUND_HALF_UP, exact)) + 0.0
+    return out
 
 
 @functools.lru_cache(maxsize=256)

@@ -38,7 +38,7 @@ from providenciasbigdata_spark.engine import ProvidenciasEngine
 from providenciasbigdata_spark.operators import dedup, similarity
 from providenciasbigdata_spark.operators import graph_algos as G
 from providenciasbigdata_spark.operators.postings import bm25_search, build_bm25_index
-from providenciasbigdata_spark.session import local_frame
+from providenciasbigdata_spark.session import LocalFrame, local_frame
 
 _FEW = settings(
     max_examples=5, deadline=None, suppress_health_check=[HealthCheck.function_scoped_fixture]
@@ -170,20 +170,31 @@ _DOCS = st.lists(
     # at most two terms: a two-term sum is the same double in any order
     terms=st.lists(st.sampled_from(_VOCAB + ["nada"]), min_size=1, max_size=2, unique=True),
     k=st.sampled_from([1, 3, 10]),
+    # coarse digits (-1 rounds to tens, as Spark's ``setScale(-1)``)
+    # round different sums to one score, so the order
+    # among them, and which of them make the top k, is doc_id's
+    round_digits=st.sampled_from([-1, 0, 1, 6]),
 )
-@example(docs=[(None, ["ley"]), (1, [None, "ley"]), (1, []), (2, None)], terms=["ley"], k=3)
-def test_bm25_driver_block_matches_the_spark_table(spark, distributed, docs, terms, k):
+@example(docs=[(None, ["ley"]), (1, [None, "ley"]), (1, []), (2, None)], terms=["ley"], k=3, round_digits=6)
+# five different sums that round to 0.1: the top 2 are the lowest ids
+@example(
+    docs=[(4, ["ley"]), (1, ["ley", "pena"]), (3, ["ley", "pena", "pena"]), (2, ["ley"] + ["pena"] * 3),
+          (5, ["ley", "ley"])],
+    terms=["ley"], k=2, round_digits=1,
+)
+def test_bm25_driver_block_matches_the_spark_table(spark, distributed, docs, terms, k, round_digits):
     frame = local_frame(spark, docs, "doc_id long, tokens array<string>")
 
     def run():
         index = build_bm25_index(frame)
         try:
-            return (index.n_docs, index.avgdl, [tuple(r) for r in bm25_search(index, terms, k=k).collect()])
+            top = bm25_search(index, terms, k=k, round_digits=round_digits)
+            return (index.n_docs, index.avgdl, [tuple(r) for r in top.collect()])
         finally:
             index.release()
 
     driver, spark_side = _both(distributed, run)
-    assert driver == spark_side, (docs, terms, k)
+    assert driver == spark_side, (docs, terms, k, round_digits)
 
 
 # ---- MinHash near-dups ---------------------------------------------------
@@ -511,3 +522,137 @@ def test_query_rulings_over_the_block_match_the_cascade(spark, distributed, tmp_
     driver, spark_side = _both(distributed, run)
     for c, a, b in zip(cascades, driver, spark_side):
         assert a == b, (docs, c, a, b)
+
+
+# ---- anchored graph reads ------------------------------------------------
+
+# 2-d embeddings whose cosines x 100 round to the bounds below: (2, 4)
+# is parallel to (1, 2), (0, 0) has a zero norm, and a null embedding or
+# a null element gives null similitudes
+_VECTORS = st.sampled_from(
+    [[1.0, 0.0], [0.0, 1.0], [1.0, 1.0], [-1.0, 0.0], [1.0, 2.0], [2.0, 4.0], [0.0, 0.0], None, [1.0, None]]
+)
+# rounded similitudes of those pairs, a value between two of them,
+# int bounds, a signed zero and NaN
+_BOUNDS = st.sampled_from(
+    [-100.0, -70.7107, -0.0, 0, 44.7214, 70.7107, 70, 89.4427, 94.8683, 94.86825, 100, 100.0, math.nan]
+)
+# vec ids 0-6 and node ids 0-8: some vectors are no node, some nodes
+# have no vector
+_GRAPHS = st.fixed_dictionaries({
+    "vectors": st.dictionaries(st.integers(0, 6), _VECTORS, max_size=6),
+    "nodes": st.sets(st.integers(0, 8), max_size=6),
+})
+_EVERY_KIND = {
+    "vectors": {0: [1.0, 0.0], 1: [1.0, 1.0], 2: [1.0, 2.0], 3: [0.0, 0.0], 4: None, 5: [2.0, 4.0], 6: [1.0, None]},
+    "nodes": {0, 1, 3, 7, 8},
+}
+_HOP = "MATCH (a:Providencia {id: $p})-[r:SIMILAR]->(b:Providencia) "
+_HOP_QUERIES = [
+    # the reference's template (streamlit_app.py:60-64)
+    _HOP + "WHERE r.similitud >= $lo AND r.similitud <= $hi "
+    "RETURN a.id AS origen, b.id AS destino, r.similitud AS similitud",
+    # literal bounds, strict and negated comparisons, reordered items
+    _HOP + "WHERE r.similitud > 44.7214 AND r.similitud <> '70.7107' "
+    "RETURN r.similitud AS s, b.id AS d, a.id AS o",
+    _HOP + "WHERE r.similitud = $lo RETURN b.id AS d, b.id AS e",
+    _HOP + "WHERE r.similitud < $hi AND r.similitud >= -100 RETURN r.similitud AS s",
+    _HOP + "RETURN b.id AS d, r.similitud AS s",
+    # an unbound parameter: the same ValueError
+    _HOP + "WHERE r.similitud >= $missing RETURN b.id AS d",
+]
+# shapes the compiler answers, over the anchor's edges
+_COMPILED_HOP_QUERIES = [
+    _HOP + "WHERE r.similitud >= $lo RETURN DISTINCT r.similitud AS s",
+    _HOP + "WHERE r.similitud >= $lo RETURN b.id AS d ORDER BY d LIMIT 2",
+]
+
+
+def _write_graph(tmp_path, graph) -> str:
+    """A data directory whose nodes are ``graph["nodes"]`` (as doc ids)
+    and whose embeddings are ``graph["vectors"]``."""
+    data_dir = _write_documents(tmp_path, [(i, "auto", "el juez") for i in sorted(graph["nodes"])])
+    vectors = graph["vectors"]
+    pq.write_table(
+        pa.table({
+            "vec_id": pa.array(list(vectors), pa.int64()),
+            "embedding": pa.array(list(vectors.values()), pa.list_(pa.float64())),
+        }),
+        f"{data_dir}/embeddings.parquet",
+    )
+    return data_dir
+
+
+def _frame(df) -> tuple:
+    """A frame's schema and its multiset of rows."""
+    return df.schema, Counter(map(_hashable, df.collect()))
+
+
+@settings(
+    max_examples=6, deadline=None, suppress_health_check=[HealthCheck.function_scoped_fixture]
+)
+@given(
+    graph=_GRAPHS,
+    anchors=st.lists(st.sampled_from(["P-0", "P-1", "P-2", "P-5", "P-7", "P-007", "zz"]), min_size=1, max_size=3),
+    lo=_BOUNDS,
+    hi=_BOUNDS,
+)
+@example(graph=_EVERY_KIND, anchors=["P-0", "P-2", "P-3"], lo=44.7214, hi=100)
+@example(graph=_EVERY_KIND, anchors=["P-1", "P-4", "P-6"], lo=70.7107, hi=-100.0)
+@example(graph={"vectors": {}, "nodes": set()}, anchors=["P-0", "zz"], lo=0, hi=100.0)
+def test_the_cypher_hop_route_matches_the_compiled_query(spark, distributed, tmp_path, graph, anchors, lo, hi):
+    data_dir = _write_graph(tmp_path, graph)
+
+    def run():
+        eng = ProvidenciasEngine(spark, data_dir)
+        try:
+            return [
+                _outcome(lambda: _frame(eng.run_cypher(q, {"p": a, "lo": lo, "hi": hi})))
+                for a in anchors
+                for q in queries
+            ]
+        finally:
+            eng.release()
+
+    queries = _HOP_QUERIES + _COMPILED_HOP_QUERIES
+    driver, spark_side = _both(distributed, run)
+    for i, (a, b) in enumerate(zip(driver, spark_side)):
+        assert a == b, (graph, anchors, lo, hi, queries[i % len(queries)], a, b)
+    # at the default gate the route answers with a local frame, and only it
+    eng = ProvidenciasEngine(spark, data_dir)
+    params = {"p": anchors[0], "lo": lo, "hi": hi}
+    assert all(isinstance(eng.run_cypher(q, params), LocalFrame) for q in _HOP_QUERIES[:-1])
+    assert not any(isinstance(eng.run_cypher(q, params), LocalFrame) for q in _COMPILED_HOP_QUERIES)
+    eng.release()
+
+
+@settings(
+    max_examples=5, deadline=None, suppress_health_check=[HealthCheck.function_scoped_fixture]
+)
+@given(graph=_GRAPHS, lo=_BOUNDS, hi=_BOUNDS)
+@example(graph=_EVERY_KIND, lo=-100.0, hi=100)
+@example(graph=_EVERY_KIND, lo=70.7107, hi=94.8683)
+def test_neighborhood_graph_matches_the_catalyst_neighborhood(spark, distributed, tmp_path, graph, lo, hi):
+    data_dir = _write_graph(tmp_path, graph)
+    # every anchor kind: a vector with edges, a zero-norm, null or
+    # null-holding vector, a vector that is no node, a node with no
+    # vector, an id with a leading zero, and no id at all
+    anchors = [f"P-{i}" for i in range(9)] + ["P-007", "zz", ""]
+
+    def run():
+        eng = ProvidenciasEngine(spark, data_dir)
+        try:
+            out = []
+            for a in anchors:
+                nodes, edges = eng.neighborhood_graph(a, lo, hi)
+                out.append((
+                    [r.id for r in nodes.collect()], _frame(edges),
+                    _frame(eng.similarity_neighborhood(a, lo, hi)),
+                ))
+            return out
+        finally:
+            eng.release()
+
+    driver, spark_side = _both(distributed, run)
+    for a, x, y in zip(anchors, driver, spark_side):
+        assert x == y, (graph, a, lo, hi, x, y)

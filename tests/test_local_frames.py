@@ -8,8 +8,9 @@ relation for everything else. No module of the package builds a frame
 any other way. A size gate collects the driver path's rows in the same
 action that decides it (``session.collect_below``), and
 ``distributed()`` forces every such gate. The engine's reads over a
-warm document block run no Spark job, and the gateway calls of the
-request path's reads are pinned."""
+warm document block, its anchored graph reads over the vector block and
+a BM25 search over a driver-held index run no Spark job, and the
+gateway calls of the request path's reads are pinned."""
 
 from __future__ import annotations
 
@@ -19,6 +20,7 @@ import importlib
 import inspect
 import math
 import pathlib
+import threading
 
 import numpy as np
 import pyarrow as pa
@@ -42,6 +44,11 @@ from providenciasbigdata_spark.operators import postings
 from providenciasbigdata_spark.session import LocalFrame, collect_below, local_frame
 
 PACKAGE = pathlib.Path(providenciasbigdata_spark.__file__).parent
+_CYPHER_NEIGHBORHOOD = (
+    "MATCH (a:Providencia {id: $providencia})-[r:SIMILAR]->(b:Providencia) "
+    "WHERE r.similitud >= $rango_min AND r.similitud <= $rango_max "
+    "RETURN a.id AS origen, b.id AS destino, r.similitud AS similitud"
+)
 
 
 def _schema(*fields) -> StructType:
@@ -247,11 +254,21 @@ def test_distributed_forces_every_collect_below_gate(distributed):
 
 
 def _gateway_calls(spark, fn) -> tuple:
-    """(fn(), the number of py4j commands it sent to the JVM)."""
+    """(fn(), the number of py4j commands it sent to the JVM). Only the
+    calling thread's commands count: py4j's finalizer thread and the
+    session's unpersist thread share the client and may send theirs
+    meanwhile, for handles and frames that earlier calls dropped."""
     client = spark.sparkContext._gateway._gateway_client
+    caller = threading.get_ident()
     sent = []
     send = client.send_command
-    client.send_command = lambda *a, **k: sent.append(a) or send(*a, **k)
+
+    def counted(*args, **kwargs):
+        if threading.get_ident() == caller:
+            sent.append(args)
+        return send(*args, **kwargs)
+
+    client.send_command = counted
     try:
         out = fn()
     finally:
@@ -276,21 +293,34 @@ def test_warm_mongo_reads_run_no_job(spark, sf_dir, count_jobs):
             tipo="src3", anio=year, texto="merge", conjunctive=True
         ).collect(),
     }
+    # the anchored reads and BM25 finish on the driver: the reference's
+    # neighborhood template (streamlit_app.py:60-64) and the top 10
+    index = postings.build_bm25_index(eng.rulings())
+    params = {"providencia": "P-7", "rango_min": 20.0, "rango_max": 100.0}
+    reads |= {
+        "neighborhood_graph": lambda: [f.collect() for f in eng.neighborhood_graph("P-7", 20.0, 100.0)],
+        "run_cypher": lambda: eng.run_cypher(_CYPHER_NEIGHBORHOOD, params).collect(),
+        "bm25_search": lambda: postings.bm25_search(index, ["merge", "spark"], k=10).collect(),
+    }
+    reads["neighborhood_graph"]()  # its first anchored read builds the vector block
     for name, read in reads.items():
         out, jobs = count_jobs(read)
         assert out and jobs == 0, name
+    assert reads["run_cypher"]() == reads["neighborhood_graph"]()[1]
     # gateway calls per read on the warm engine, single-threaded: the
-    # block's answers make none; toPandas reads its configuration
+    # driver's answers make none; toPandas reads its configuration
     calls = {
         "count_documents": lambda: eng.count_documents(q),
         "query_mongo": lambda: eng.query_mongo(q, **page).collect(),
         "query_rulings": lambda: to_result_frame(eng.query_rulings(tipo="src3")),
-        "neighborhood_graph": lambda: [f.collect() for f in eng.neighborhood_graph("P-7", 20.0, 100.0)],
+        "neighborhood_graph": reads["neighborhood_graph"],
+        "run_cypher": reads["run_cypher"],
+        "bm25_search": reads["bm25_search"],
     }
-    bounds = {"count_documents": 0, "query_mongo": 0, "query_rulings": 10, "neighborhood_graph": 110}
-    calls["neighborhood_graph"]()  # its first anchored read builds the vector block
+    bounds = {name: 0 for name in calls} | {"query_rulings": 10}
     sent = {name: _gateway_calls(spark, call)[1] for name, call in calls.items()}
     assert all(sent[name] <= bound for name, bound in bounds.items()), sent
+    index.release()
     eng.release()
 
 
